@@ -1,19 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions
 import graft.hazard.Windfield
-import graft.impact.{ImpactModel, Triggers}
+import graft.impact.{ImpactModel, TriggerReport, Triggers}
 import graft.publish.Payloads
 
-/** The full forecast dataflow assembled as ONE lazy logical plan
+/** The full forecast dataflow assembled as lazy logical plans
   * (SURVEY.md §3.1): tracks → windfield → per-municipality hazard →
   * feature matrix → damage model → ensemble aggregation → triggers →
   * exposure payloads. The reference's per-storm/per-member Python loop
   * (forecast_process.py:293-395, 1505-1770) becomes partition-parallel
-  * execution over (storm_id, ens_id); actions happen only at sinks.
+  * execution: the windfield streams the centroid grid against the
+  * broadcast track nodes, so its pair work spreads over the grid's
+  * partitions rather than one task per member. Actions happen only at
+  * sinks, and at the trigger step, which collects one row per member
+  * once and returns the trigger tables as local relations.
   */
 object Forecast {
 
@@ -42,7 +46,9 @@ object Forecast {
     val cells = centroids.join(broadcast(centroidAdmin), "centroid_id")
     val dist = nodes
       .join(broadcast(cells.select(col("admin_code"), col("lat"), col("lon"))),
-        // same 5.5° pruning box as the windfield keeps the pair count sane
+        // an 11° box (twice the windfield's 5.5°) around each node keeps
+        // the pair count sane; a municipality with no cell in the box of
+        // any node gets no row
         col("lat") > col("t_lat") - Windfield.MaxDistDeg * 2 &&
         col("lat") < col("t_lat") + Windfield.MaxDistDeg * 2 &&
         col("lon") > col("t_lon") - Windfield.MaxDistDeg * 2 &&
@@ -65,13 +71,10 @@ object Forecast {
       .join(broadcast(indicators), Seq("Mun_Code"), "left")
       .na.fill(0.0)
 
-  /** Ensemble aggregation + all four trigger tables + exposure
-    * payload values, from the per-member impact table. */
-  case class TriggerReport(dref: DataFrame, cerf: DataFrame,
-                           start: DataFrame, hi: DataFrame)
-  def triggers(impact: DataFrame): TriggerReport =
-    TriggerReport(Triggers.drefTrigger(impact), Triggers.cerfTrigger(impact),
-      Triggers.startTrigger(impact), Triggers.hiTrigger(impact))
+  /** Ensemble aggregation + all four trigger tables, from the
+    * per-member impact table in one pass ([[Triggers.report]]); the
+    * tables come back as local relations. */
+  def triggers(impact: DataFrame): TriggerReport = Triggers.report(impact)
 
   /** K2 payload values: per-municipality ensemble-mean damaged houses,
     * densified to every pcode. */

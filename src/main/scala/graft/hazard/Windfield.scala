@@ -17,10 +17,14 @@ import graft.functions.ScalarFunctions
   * absence. Every physics step is a pure column expression, so the
   * whole kernel runs inside whole-stage codegen with no UDFs.
   *
-  * Scale: tracks are partitioned by (storm_id, ens_id); centroids are a
-  * small broadcast dimension (47k rows for the PH grid). The pair space
-  * is pruned FIRST by the reference's own 5.5° bounding-box rule (X1)
-  * so the expensive trig runs on ~1-2% of the cross product.
+  * Scale: the per-track node table is the small side (tracks × nodes,
+  * ~25k rows at the 52-member envelope) and is broadcast into both
+  * joins; the centroid grid (47k rows for the PH grid) streams on its
+  * own partitions. Partitioning by (storm_id, ens_id) instead would run
+  * the pair stage with one task per track, i.e. on one or two cores
+  * for a small ensemble. The pair space is pruned FIRST by the
+  * reference's own 5.5° bounding-box rule (X1) so the expensive trig
+  * runs on ~1-2% of the cross product.
   */
 object Windfield {
 
@@ -166,9 +170,10 @@ object Windfield {
   /** Compute directional 1-min sustained surface winds for every
     * (track node, centroid) pair within reach.
     *
-    * tracks: TrackPrep column contract + time_step.
-    * centroids: (centroid_id: long, lat: double, lon: double) — small,
-    * broadcast.
+    * tracks: TrackPrep column contract + time_step; its prepared nodes
+    * are broadcast.
+    * centroids: (centroid_id: long, lat: double, lon: double) — the
+    * streamed side; the pair work runs on its partitions.
     *
     * Returns (storm_id, ens_id, time, centroid_id, w_lat, w_lon, speed)
     * — rows only where the reference's masks hold (sparse by absence).
@@ -196,14 +201,14 @@ object Windfield {
     // the reference's normalize-both-around-mid-lon trick
     // (trop_cyclone.py:560-563) without the extra pass.
     val lonDiff = ((col("c_lon") - col("lon") + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
-    val reachable = nodes
-      .join(broadcast(cent),
+    val reachable = cent
+      .join(broadcast(nodes),
         col("c_lat") > col("lat") - MaxDistDeg && col("c_lat") < col("lat") + MaxDistDeg &&
         lonDiff > -MaxDistDeg && lonDiff < MaxDistDeg)
       .select("storm_id", "ens_id", "centroid_id", "c_lat", "c_lon")
       .distinct()
 
-    val pairs = nodes.join(reachable, Seq("storm_id", "ens_id"))
+    val pairs = broadcast(nodes).join(reachable, Seq("storm_id", "ens_id"))
 
     val (d, vLat, vLon) = distVtan(metric)(
       col("lat"), col("lon"), col("c_lat"), col("c_lon"))

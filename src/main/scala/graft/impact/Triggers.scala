@@ -1,21 +1,29 @@
 package graft.impact
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** The four trigger tables of one forecast, as local relations:
+  * collecting or writing them runs no further Spark job. */
+final case class TriggerReport(dref: DataFrame, cerf: DataFrame,
+                               start: DataFrame, hi: DataFrame)
 
 /** Ensemble-probability trigger evaluation (SURVEY.md §2.5 A3–A6,
   * reference forecast_process.py:1239-1502 + settings.py:58-145).
   *
   * All trigger checks share one relational shape:
   *   1. W6 dedup (keep max damage per (Mun_Code, ens_id)),
-  *   2. per-ensemble-member totals (A5),
-  *   3. for each (threshold, prob) pair: P(total > threshold) over
-  *      members, compared against prob (A6).
-  * Step 3 is computed with ONE aggregation by cross-joining the tiny
-  * threshold table against the per-member totals — no driver-side loop
-  * over thresholds, no repeated scans (the reference loops in Python;
-  * at scale one shuffle beats 5).
+  *   2. per-ensemble-member totals (A5) within a scope (all
+  *      municipalities, the CERF regions, one province),
+  *   3. for each (threshold, prob) pair: P(total > threshold) over the
+  *      members with rows in the scope, compared against prob (A6).
+  * [[report]] evaluates every scope in ONE pass: one dedup, one
+  * per-member aggregate carrying a conditional total and row count per
+  * scope (at most one row per member), collected once; step 3 then runs
+  * on the driver over those few rows. The per-table entry points are
+  * views of that pass.
   *
   * Expected input columns: Mun_Code: string, ens_id: int,
   * damage_pct: double (predicted % damaged), damage_num: double
@@ -75,58 +83,72 @@ object Triggers {
       .withColumn("triggered", col("predicted_probability") > col("prob_threshold"))
   }
 
-  /** DREF check (forecast_process.py:1282-1400): returns
-    * (threshold_label, scenario, triggered) rows for the 10%-damage
-    * rule at member-probability 50/70/90 plus the 'Average' scenario
-    * (mean damage > 10% in ≥3 municipalities). */
-  def drefTrigger(impact: DataFrame): DataFrame = {
-    val spark = impact.sparkSession
-    import spark.implicits._
-    val deduped = dedupKeepMax(impact).cache()
-    val perMember = deduped.groupBy("ens_id")
-      .agg(sum(when(col("damage_pct") > 10, 1).otherwise(0)).as("n_trig"))
-      .withColumn("trig3x10", when(col("n_trig") > 2, 1.0).otherwise(0.0))
-    val pct = perMember.agg((avg("trig3x10") * 100).as("p")).as[Double].head()
-    val avgTrig = deduped.groupBy("Mun_Code")
-      .agg(avg("damage_pct").as("avg_dmg"))
-      .agg(sum(when(col("avg_dmg") > 10, 1).otherwise(0)).as("n"))
-      .as[Long].head() > 2
-    deduped.unpersist()
-    val rows = Seq(("50", "Moderate", pct > 50), ("70", "High", pct > 70),
-      ("90", "Very High", pct > 90), ("Average", "NA", avgTrig))
-    rows.toDF("threshold_label", "scenario", "triggered")
-  }
+  /** DREF check (forecast_process.py:1282-1400): (threshold_label,
+    * scenario, triggered) rows for the 10%-damage rule at
+    * member-probability 50/70/90 plus the 'Average' scenario (mean
+    * damage > 10% in ≥3 municipalities). */
+  def drefTrigger(impact: DataFrame): DataFrame = report(impact).dref
 
   /** CERF check (forecast_process.py:1239-1278): regions PH05/08/16
     * only, per-member damaged-building totals vs the CERF table. */
-  def cerfTrigger(impact: DataFrame): DataFrame = {
-    val filtered = dedupKeepMax(impact)
-      .where(substring(col("Mun_Code"), 1, 4).isin(CerfRegions: _*))
-    val perMember = filtered.groupBy("ens_id").agg(sum("damage_num").as("total"))
-    exceedanceTable(perMember, "total", CerfProbabilities)
-  }
+  def cerfTrigger(impact: DataFrame): DataFrame = report(impact).cerf
 
   /** START/HI checks (forecast_process.py:1404-1502): per-province
     * (Mun_Code[:6] + "00000") member totals vs province-specific
-    * tables. Returns rows tagged with the province pcode. */
-  def provincialTrigger(impact: DataFrame,
-                        tables: Map[String, Seq[(String, Double, Double)]]): DataFrame = {
-    val spark = impact.sparkSession
-    import spark.implicits._
-    val thr = tables.toSeq.flatMap { case (prov, rows) =>
-      rows.map { case (l, t, p) => (prov, l, t, p) }
-    }.toDF("province", "threshold_label", "threshold", "prob_threshold")
-    val perMember = dedupKeepMax(impact)
-      .withColumn("province", concat(substring(col("Mun_Code"), 1, 6), lit("00000")))
-      .groupBy("province", "ens_id")
-      .agg(sum("damage_num").as("total"))
-    perMember.join(broadcast(thr), Seq("province"))
-      .groupBy("province", "threshold_label", "threshold", "prob_threshold")
-      .agg(avg(when(col("total") > col("threshold"), 1.0).otherwise(0.0))
-        .as("predicted_probability"))
-      .withColumn("triggered", col("predicted_probability") > col("prob_threshold"))
-  }
+    * tables, rows tagged with the province pcode. */
+  def startTrigger(impact: DataFrame): DataFrame = report(impact).start
+  def hiTrigger(impact: DataFrame): DataFrame    = report(impact).hi
 
-  def startTrigger(impact: DataFrame): DataFrame = provincialTrigger(impact, StartProbabilities)
-  def hiTrigger(impact: DataFrame): DataFrame    = provincialTrigger(impact, HiProbabilities)
+  private val DrefSchema =
+    StructType.fromDDL("threshold_label STRING, scenario STRING, triggered BOOLEAN")
+  private val CerfSchema = StructType.fromDDL("threshold_label STRING, threshold DOUBLE, " +
+    "prob_threshold DOUBLE, predicted_probability DOUBLE, triggered BOOLEAN")
+  private val ProvincialSchema = StructType(StructField("province", StringType) +: CerfSchema)
+
+  /** All four trigger tables from one pass over the impact table. */
+  def report(impact: DataFrame): TriggerReport = {
+    val spark = impact.sparkSession
+    val deduped = dedupKeepMax(impact)
+    val province = concat(substring(col("Mun_Code"), 1, 6), lit("00000"))
+    val provinces = (StartProbabilities.keys ++ HiProbabilities.keys).toSeq.distinct
+    val scopes: Seq[(String, Column)] =
+      ("cerf" -> substring(col("Mun_Code"), 1, 4).isin(CerfRegions: _*)) +:
+        provinces.map(p => p -> (province === p))
+    val scopeAggs = scopes.flatMap { case (name, in) =>
+      Seq(sum(when(in, col("damage_num").cast("double"))).as(s"${name}_total"),
+        count(when(in, 1)).as(s"${name}_rows"))
+    }
+    val perMember = deduped.groupBy("ens_id")
+      .agg(sum(when(col("damage_pct") > 10, 1).otherwise(0)).as("n_trig"), scopeAggs: _*)
+    val avgTriggered = deduped.groupBy("Mun_Code").agg(avg("damage_pct").as("avg_dmg"))
+      .agg(count(when(col("avg_dmg") > 10, 1)).as("n_avg_trig"))
+    val members = perMember.crossJoin(avgTriggered).collect().toSeq
+
+    // A6 over the members with rows in the scope; a null total (all of
+    // the scope's damage_num null) exceeds no threshold
+    def exceedance(scope: String, thresholds: Seq[(String, Double, Double)]): Seq[Seq[Any]] = {
+      val totals = members.filter(_.getAs[Long](s"${scope}_rows") > 0)
+        .map(r => Option(r.getAs[java.lang.Double](s"${scope}_total")))
+      if (totals.isEmpty) Nil
+      else thresholds.map { case (label, thr, prob) =>
+        val p = totals.count(_.exists(_ > thr)).toDouble / totals.size
+        Seq(label, thr, prob, p, p > prob)
+      }
+    }
+    def table(schema: StructType, rows: Seq[Seq[Any]]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*), schema)
+    def provincial(tables: Map[String, Seq[(String, Double, Double)]]): DataFrame =
+      table(ProvincialSchema, tables.toSeq.flatMap { case (prov, thresholds) =>
+        exceedance(prov, thresholds).map(prov +: _)
+      })
+
+    val pct = members.count(_.getAs[Long]("n_trig") > 2).toDouble / members.size * 100
+    val avgTrig = members.headOption.exists(_.getAs[Long]("n_avg_trig") > 2)
+    TriggerReport(
+      dref = table(DrefSchema, Seq(Seq("50", "Moderate", pct > 50), Seq("70", "High", pct > 70),
+        Seq("90", "Very High", pct > 90), Seq("Average", "NA", avgTrig))),
+      cerf = table(CerfSchema, exceedance("cerf", CerfProbabilities)),
+      start = provincial(StartProbabilities),
+      hi = provincial(HiProbabilities))
+  }
 }

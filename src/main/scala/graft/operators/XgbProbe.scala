@@ -37,8 +37,10 @@ object XgbProbe {
   private def fLit(x: Float): String = dLit(x.toDouble)
 
   lazy val probes: Seq[Probe] = {
-    if (!new java.io.File(ModelPath).isFile) Seq.empty
-    else {
+    if (!new java.io.File(ModelPath).isFile) {
+      System.err.println(s"[graft] probe x24_xgb_reference_model skipped: model file $ModelPath not found")
+      Seq.empty
+    } else {
       val booster = XgbBooster.load(ModelPath)
       val scales = booster.medianSplitByFeature.map(_ / EmbMedianAbs)
       val nf = booster.numFeature

@@ -108,6 +108,124 @@ class ImpactSpec extends SparkTestBase {
     assert(p37.getAs[Double]("predicted_probability") == 0.5)
   }
 
+  // The per-table formulation the one-pass report replaced: one plan
+  // per trigger table, each with its own dedup. Kept here as the
+  // reference for the equivalence property below.
+  private object PerTable {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.broadcast
+
+    def dref(impact: DataFrame): DataFrame = {
+      val deduped = Triggers.dedupKeepMax(impact).cache()
+      val perMember = deduped.groupBy("ens_id")
+        .agg(sum(when(col("damage_pct") > 10, 1).otherwise(0)).as("n_trig"))
+        .withColumn("trig3x10", when(col("n_trig") > 2, 1.0).otherwise(0.0))
+      val pct = perMember.agg((avg("trig3x10") * 100).as("p")).as[Double].head()
+      val avgTrig = deduped.groupBy("Mun_Code")
+        .agg(avg("damage_pct").as("avg_dmg"))
+        .agg(sum(when(col("avg_dmg") > 10, 1).otherwise(0)).as("n"))
+        .as[Long].head() > 2
+      deduped.unpersist()
+      Seq(("50", "Moderate", pct > 50), ("70", "High", pct > 70),
+        ("90", "Very High", pct > 90), ("Average", "NA", avgTrig))
+        .toDF("threshold_label", "scenario", "triggered")
+    }
+
+    def cerf(impact: DataFrame): DataFrame = {
+      val filtered = Triggers.dedupKeepMax(impact)
+        .where(substring(col("Mun_Code"), 1, 4).isin(Triggers.CerfRegions: _*))
+      val perMember = filtered.groupBy("ens_id").agg(sum("damage_num").as("total"))
+      Triggers.exceedanceTable(perMember, "total", Triggers.CerfProbabilities)
+    }
+
+    def provincial(impact: DataFrame,
+                   tables: Map[String, Seq[(String, Double, Double)]]): DataFrame = {
+      val thr = tables.toSeq.flatMap { case (prov, rows) =>
+        rows.map { case (l, t, p) => (prov, l, t, p) }
+      }.toDF("province", "threshold_label", "threshold", "prob_threshold")
+      val perMember = Triggers.dedupKeepMax(impact)
+        .withColumn("province", concat(substring(col("Mun_Code"), 1, 6), lit("00000")))
+        .groupBy("province", "ens_id")
+        .agg(sum("damage_num").as("total"))
+      perMember.join(broadcast(thr), Seq("province"))
+        .groupBy("province", "threshold_label", "threshold", "prob_threshold")
+        .agg(avg(when(col("total") > col("threshold"), 1.0).otherwise(0.0))
+          .as("predicted_probability"))
+        .withColumn("triggered", col("predicted_probability") > col("prob_threshold"))
+    }
+  }
+
+  test("one-pass trigger report equals the per-table formulation on 60 seeded tables") {
+    import scala.util.Random
+    import org.apache.spark.sql.DataFrame
+    // municipalities in every scope: CERF regions (PH05/08/16), the START
+    // provinces, the HI province (also in PH05) and outside all of them
+    val muns = Seq("PH166701000", "PH166702000", "PH166703000", "PH021501000",
+      "PH021502000", "PH082601000", "PH082602000", "PH050501000", "PH050502000",
+      "PH051001000", "PH080101000", "PH160201000", "PH013301000", "PH175301000")
+    val thresholds = (Triggers.CerfProbabilities ++ Triggers.StartProbabilities.values.flatten ++
+      Triggers.HiProbabilities.values.flatten).map(_._2).distinct
+    val cases = scala.collection.mutable.Set[String]()
+    def table(seed: Int): (DataFrame, Int) = {
+      val rnd = new Random(seed)
+      val members = Seq(1, 2, 17, 52)(seed % 4)
+      // every value is a small dyadic fraction, so sums are exact in any
+      // order and a total can land exactly on a threshold
+      def pct(): Double = if (rnd.nextInt(5) == 0) 10.0 else rnd.nextInt(200) / 8.0
+      def num(): Double = rnd.nextInt(4) match {
+        case 0 => thresholds(rnd.nextInt(thresholds.size))
+        case 1 => 500.0 * rnd.nextInt(20)
+        case 2 => thresholds(rnd.nextInt(thresholds.size)) / 4
+        case _ => rnd.nextInt(4000) / 4.0
+      }
+      val rows = for {
+        ens <- 0 until members
+        // members skip municipalities, so some have no rows in a scope
+        mun <- muns if rnd.nextInt(3) > 0
+        p = pct()
+        // duplicates rank strictly below the row dedup keeps
+        dup <- Seq(p) ++ (if (rnd.nextInt(6) == 0) Seq(p - 0.5) else Nil)
+      } yield (mun, ens, dup, num())
+      val long = seed % 2 == 0
+      // the cases the property must cover, derived in plain Scala
+      val kept = rows.groupBy(r => (r._1, r._2)).values.map(_.maxBy(_._3)).toSeq
+      val scopes: Seq[String => Boolean] =
+        ((m: String) => Triggers.CerfRegions.contains(m.take(4))) +:
+          (Triggers.StartProbabilities.keys ++ Triggers.HiProbabilities.keys).toSeq
+          .map(p => (m: String) => m.take(6) + "00000" == p)
+      for (in <- scopes) {
+        val totals = kept.filter(r => in(r._1)).groupBy(_._2).values
+          .map(_.map(r => if (long) math.floor(r._4) else r._4).sum)
+        if (totals.nonEmpty && totals.size < members) cases += "member without rows in a scope"
+        if (totals.exists(thresholds.contains)) cases += "total at a threshold"
+      }
+      if (kept.exists(_._3 == 10.0)) cases += "damage_pct 10"
+      cases += (if (long) "Long damage_num" else "Double damage_num")
+      val df = rows.toDF("Mun_Code", "ens_id", "damage_pct", "damage_num")
+      (if (long) df.withColumn("damage_num", floor(col("damage_num"))) else df, members)
+    }
+    def sorted(df: DataFrame): (Seq[String], Seq[Seq[Any]]) =
+      (df.columns.toSeq, df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")))
+    val seen = scala.collection.mutable.Set[String]()
+    for (seed <- 0 until 60) {
+      val (impact, members) = table(seed)
+      val rep = Triggers.report(impact)
+      val want = Seq("dref" -> PerTable.dref(impact), "cerf" -> PerTable.cerf(impact),
+        "start" -> PerTable.provincial(impact, Triggers.StartProbabilities),
+        "hi" -> PerTable.provincial(impact, Triggers.HiProbabilities))
+      val got = Seq(rep.dref, rep.cerf, rep.start, rep.hi)
+      for (((name, w), g) <- want.zip(got)) {
+        assert(sorted(g) == sorted(w), s"seed $seed ($members members, " +
+          s"damage_num ${impact.schema("damage_num").dataType}): $name differs")
+        assert(g.schema.map(f => f.name -> f.dataType) == w.schema.map(f => f.name -> f.dataType))
+        if (sorted(g)._2.nonEmpty) seen += name
+      }
+    }
+    assert(seen == Set("dref", "cerf", "start", "hi"))
+    assert(cases == Set("member without rows in a scope", "total at a threshold",
+      "damage_pct 10", "Long damage_num", "Double damage_num"))
+  }
+
   // --- ML pipeline -----------------------------------------------------
 
   test("X9 GBT damage model: train + predict + postprocess end-to-end") {

@@ -65,22 +65,62 @@ class PlanQualitySpec extends SparkTestBase {
     }
   }
 
-  test("windfield: bbox prune join broadcasts the centroid side") {
+  test("windfield: bbox prune join broadcasts the node side and streams the grid") {
     import spark.implicits._
     import java.sql.Timestamp
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
     val tracks = graft.tracks.TrackPrep.withTimeStep(Seq(
       ("S", 1, Timestamp.valueOf("2024-01-01 00:00:00"), 14.0, 125.0),
-      ("S", 1, Timestamp.valueOf("2024-01-01 06:00:00"), 14.5, 124.5))
+      ("S", 1, Timestamp.valueOf("2024-01-01 06:00:00"), 14.5, 124.5),
+      ("S", 2, Timestamp.valueOf("2024-01-01 00:00:00"), 13.5, 125.5),
+      ("S", 2, Timestamp.valueOf("2024-01-01 06:00:00"), 14.0, 125.0))
       .toDF("storm_id", "ens_id", "time", "lat", "lon"))
       .withColumn("central_pressure", lit(960.0))
       .withColumn("environmental_pressure", lit(1010.0))
       .withColumn("radius_max_wind", lit(40.0))
     val cents = graft.hazard.CentroidGrid.generate(spark, 122, 12, 126, 16, 0.5)
-    val plan = graft.hazard.Windfield.compute(tracks, cents)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin"))
+    val df = graft.hazard.Windfield.intensity(graft.hazard.Windfield.compute(tracks, cents))
+    df.collect()   // AQE finalizes the plan on execution
+    val plan = df.queryExecution.executedPlan
+
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+    // shuffles on the paths from the root (the intensity aggregate) down
+    // to the box join; None when no box join lies below `p`
+    def shufflesAboveBoxJoin(p: SparkPlan): Option[Seq[ShuffleExchangeExec]] = p match {
+      case _: BroadcastNestedLoopJoinExec => Some(Nil)
+      case _ =>
+        val below = kids(p).flatMap(shufflesAboveBoxJoin)
+        if (below.isEmpty) None
+        else Some(below.flatten ++ Some(p).collect { case e: ShuffleExchangeExec => e })
+    }
+    def names(p: SparkPlan): Set[String] = p.output.map(_.name).toSet
+
+    val boxJoins = all(plan).collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(boxJoins.size == 1, plan.toString)
+    val box = boxJoins.head
+    val (build, streamed) = if (box.buildSide == BuildRight) (box.right, box.left) else (box.left, box.right)
+    assert(Set("storm_id", "ens_id", "lat", "lon").subsetOf(names(build)) &&
+      !names(build).contains("centroid_id"), s"the node table must be the build side:\n$plan")
+    assert(names(streamed).contains("centroid_id"), s"the centroid grid must stream:\n$plan")
+    val trackKeyed = shufflesAboveBoxJoin(plan).get.filter(_.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name } == Seq("storm_id", "ens_id")
+      case _ => false
+    })
+    assert(trackKeyed.isEmpty, s"pair stage must not be partitioned per track:\n$plan")
     // the equi-join back to nodes must not be a cartesian product
-    assert(!plan.contains("CartesianProduct"))
+    assert(!plan.toString.contains("CartesianProduct"))
   }
 
   test("tumbling window agg keeps partial aggregation before the shuffle") {

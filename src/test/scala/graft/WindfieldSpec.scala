@@ -145,6 +145,34 @@ class WindfieldSpec extends SparkTestBase {
     assert(got == Set(0L))
   }
 
+  test("intensity does not depend on the centroid partitioning or AQE") {
+    // members fan out around a westward track through the PH box
+    def ensemble(members: Int) = {
+      val rows = for (m <- 0 until members; h <- 0 to 6) yield
+        ("ENS", m, Timestamp.valueOf(f"2024-01-01 $h%02d:00:00"),
+          13.0 + 0.2 * h + 0.15 * m, 126.5 - 0.5 * h - 0.1 * m, 990.0 - 4 * h - m)
+      graft.tracks.TrackPrep.withTimeStep(
+        rows.toDF("storm_id", "ens_id", "time", "lat", "lon", "central_pressure"))
+        .withColumn("environmental_pressure", lit(1010.0))
+        .withColumn("radius_max_wind", lit(0.0))
+    }
+    val cents = CentroidGrid.generate(spark, 119.0, 9.0, 127.0, 18.0, 0.25)
+    def rows(tracks: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame) =
+      Windfield.intensity(Windfield.compute(tracks, c)).collect()
+        .map(_.toSeq).sortBy(r => (r(1).asInstanceOf[Int], r(2).asInstanceOf[Long])).toSeq
+    for (members <- Seq(1, 2, 9)) {
+      val tracks = ensemble(members).cache()
+      val want = rows(tracks, cents)
+      assert(want.map(_(1)).distinct.size == members)
+      assert(rows(tracks, cents.repartition(1)) == want, s"$members tracks, 1 centroid partition")
+      assert(rows(tracks, cents.repartition(7)) == want, s"$members tracks, 7 centroid partitions")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try assert(rows(tracks, cents) == want, s"$members tracks, AQE off")
+      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      tracks.unpersist()
+    }
+  }
+
   private def trackDf(rows: Seq[(Double, Double, String)]) = {
     val base = rows.map { case (la, lo, t) =>
       ("TEST", 1, Timestamp.valueOf(t), la, lo) }
