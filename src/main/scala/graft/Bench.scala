@@ -1,6 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
+import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Times every `SparkEntry.queries` probe at `SPARK_GRAFT_SF_DIR` and
+  * prints ONE JSON line, also written to `BENCH_SELF.json` and the
+  * per-sf archive `BENCH_SELF.<sf>.json`. Env vars: `SPARK_GRAFT_SF_DIR`,
+  * `_CPUS`, `_WARM`, `_DIAG`, `_PASSES`, `_ONLY` and `_CONF` (read by
+  * `Engine.configure`). Earlier rounds' narrative is in BENCH_NOTES.md. */
 object Bench {
   /** Generated-class compilations so far (Janino compile events), from
     * Spark's own codegen metrics source. A rising count during the
@@ -34,10 +44,9 @@ object Bench {
 
   /** Prior per-probe seconds from the last BENCH_SELF.json at the SAME
     * sf — the regression baseline for the >3× history check. */
-  private def parseHistory(path: String, sfDir: String): Map[String, Double] =
+  private[graft] def parseHistory(path: String, sfDir: String): Map[String, Double] =
     try {
-      val s = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)))
+      val s = new String(Files.readAllBytes(Paths.get(path)))
       val qStart = s.indexOf("\"queries\":{")
       if (qStart < 0 || !s.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
       else {
@@ -47,150 +56,124 @@ object Bench {
       }
     } catch { case _: Exception => Map.empty }
 
+  /** `f`'s result and its wall seconds. */
+  private[graft] def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Full materialization, NOT df.count(): a count() re-optimizes with
+    * zero output columns, and Catalyst's unique-key outer-join
+    * elimination then deletes the probe's actual work — x57's count
+    * plan collapsed to a bare parquet scan (its densify tail is
+    * `docs.select(id).join(scored, "left")` with scored unique on id).
+    * toRdd runs the physical plan AS WRITTEN, every column of every row. */
+  private[graft] def force(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** Warm up the execution machinery on 100 synthetic rows: parquet
+    * scan, window, explode, join, typed groupByKey serde and sort each
+    * JIT-compile their codegen shapes on first touch — without this,
+    * those one-time costs land on whichever probe happens to exercise
+    * the path first, and its number measures class-loading, not the plan. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    spark.read.parquet(s"$sfDir/nation.parquet").count()
+    val tiny = spark.range(100).select(
+      (col("id") % 10).as("k"), col("id").cast("double").as("v"))
+    tiny.withColumn("r", row_number().over(Window.partitionBy("k").orderBy("v")))
+      .withColumn("x", explode(array(lit(1), lit(2))))
+      .join(tiny.groupBy("k").agg(sum("v").as("s")), "k")
+      .orderBy("v").count()
+    tiny.as[(Long, Double)].groupByKey(_._1)
+      .flatMapGroups((_, it) => it.map(_._2)).count()
+    tiny.select(explode(split(lit("a b c"), " ")).as("w"), col("k"))
+      .groupBy("k", "w").agg(count(lit(1)).as("c"))
+      .withColumn("r", row_number().over(Window.partitionBy("k").orderBy(col("c").desc)))
+      .where(col("r") <= 2).count()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // "inter" (default): warm each probe at sf0.001 immediately before
-    // timing it at the target SF. "suite": round-3 behavior (warm ALL
-    // probes, then time all — regressed the multi-stage probes, see
-    // note below). "off": no per-probe warmup (round-2 behavior).
+    // timing it at the target SF. "suite": warm ALL probes, then time
+    // all. "off": no per-probe warmup.
     val warmMode = sys.env.getOrElse("SPARK_GRAFT_WARM", "inter")
     val diag = sys.env.get("SPARK_GRAFT_DIAG").contains("1")
-    // codegen cache sizing for the 67-probe suite lives in
-    // Engine.configure (static conf, shared with Verify)
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-    // Warm up the execution machinery on 100 synthetic rows before
-    // timing: parquet scan, window, explode, join, typed groupByKey
-    // serde, and sort each JIT-compile their codegen shapes on first
-    // touch — without this, those one-time costs land on whichever
-    // query happens to exercise the path first and the per-query
-    // numbers measure class-loading, not the plan.
-    locally {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      spark.read.parquet(s"$sfDir/nation.parquet").count()
-      val tiny = spark.range(100).select(
-        (col("id") % 10).as("k"), col("id").cast("double").as("v"))
-      tiny.withColumn("r", row_number().over(Window.partitionBy("k").orderBy("v")))
-        .withColumn("x", explode(array(lit(1), lit(2))))
-        .join(tiny.groupBy("k").agg(sum("v").as("s")), "k")
-        .orderBy("v").count()
-      tiny.as[(Long, Double)].groupByKey(_._1)
-        .flatMapGroups((_, it) => it.map(_._2)).count()
-      tiny.select(explode(split(lit("a b c"), " ")).as("w"), col("k"))
-        .groupBy("k", "w").agg(count(lit(1)).as("c"))
-        .withColumn("r", row_number().over(Window.partitionBy("k").orderBy(col("c").desc)))
-        .where(col("r") <= 2).count()
-    }
+    val spark = Engine.local(Engine.envCores)
+    warmUp(spark, sfDir)
     // Per-probe warmup at the smallest SF: a probe's first execution
     // pays a one-time janino compile of its generated classes (~1.5s
-    // for the big multi-stage shapes — all tasks block on one
-    // compiler) plus first-touch planning, so timing cold probes
-    // measures the compiler, not the plan. Round 3 warmed ALL probes
-    // up front and then timed all ("suite" mode) — that REGRESSED the
-    // multi-stage probes 2.4-5.1x: 66 probes generate far more than
-    // the codegen cache's bounded 100 entries
-    // (spark.sql.codegen.cache.maxEntries), so by the time the timed
-    // pass reached a probe, its classes compiled during warmup had
-    // been evicted by the ~60 probes warmed after it, and it
-    // recompiled inside its timing window — paying the compile AND
-    // the eviction churn. Fix: warm each probe IMMEDIATELY before its
-    // own timed run ("inter"), so compile-to-use distance is one
-    // probe and nothing evicts in between. Warm-vs-warm remains the
-    // honest baseline comparison: BASELINE.md's DuckDB proxy numbers
-    // are warm-run timings on the same files.
+    // for the big multi-stage shapes) plus first-touch planning, so
+    // timing cold probes measures the compiler, not the plan. "suite"
+    // mode regresses the multi-stage probes 2.4-5.1x: the suite
+    // generates far more classes than the bounded codegen cache holds,
+    // so a probe's classes are evicted by the probes warmed after it
+    // and recompile inside its timing window. "inter" keeps the
+    // compile-to-use distance at one probe. Warm-vs-warm is the honest
+    // comparison: BASELINE.md's DuckDB proxy numbers are warm runs.
     val warmDir = "/root/testdata/sf0.001"
     val canWarm = new java.io.File(warmDir).isDirectory && warmDir != sfDir
-    // Full materialization, NOT df.count(): a count() re-optimizes
-    // with zero output columns, and Catalyst's unique-key outer-join
-    // elimination then deletes the probe's actual work — x57's count
-    // plan collapsed to a bare parquet scan (its densify tail is
-    // `docs.select(id).join(scored, "left")` with scored unique on id),
-    // so its bench number measured nothing. toRdd runs the physical
-    // plan AS WRITTEN, every column of every row.
-    def force(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
     if (warmMode == "suite" && canWarm)
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try force(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try force(fn(spark, warmDir)) catch { case NonFatal(_) => () }
       }
-    // Timed pass: deterministic (sorted) execution order for stable
-    // round-over-round numbers. Each probe is timed as the MIN of two
-    // back-to-back runs at the target SF: the sf0.001 warmup cannot
-    // warm the sf0.1 codegen shapes (AQE picks different join
-    // strategies at different scales → different generated code), so
-    // run 1 absorbs any remaining janino compiles and run 2 measures
-    // the plan. Adjacent runs also make the timing immune to
-    // generated-class cache eviction by OTHER probes, and min-of-2 is
-    // the honest warm-vs-warm comparison against BASELINE.md's
-    // warm-run DuckDB proxy timings.
-    // CONTENTION-PROOFING (r9, after the r8 artifact recorded 170s on
-    // a loaded box where a clean run measures ~87s): (1) a fixed
-    // calibration micro-probe runs between entries — its wall moving
-    // >2x off its quiet-start baseline means ANOTHER process owned the
-    // cores during that window; (2) a probe whose two timed runs
-    // disagree >2x re-runs (min-of-all still recorded, probe flagged);
-    // (3) a probe >3x its last BENCH_SELF number at the same sf
-    // re-runs once and is flagged if still regressed; (4) load average
-    // and the count of other live JVMs are recorded in the JSON, and
-    // the notes' headline number is GENERATED from this run's total so
-    // artifact value and notes cannot diverge.
     val loadStart = loadAvg
     val jvmsStart = otherJvms
-    // PASS-TO-PASS SPREAD (r10): three telemetry-clean r9 runs spanned
-    // 78-101s — page-cache/JIT/cgroup drift moves EVERY probe a little
-    // rather than one probe a lot, which the per-probe calibration
-    // cannot catch. The artifact now runs the FULL suite >=2 times
-    // (SPARK_GRAFT_PASSES, default 2), publishes each probe as its
-    // min across passes, and records the per-pass totals + spread so
-    // a reader can see the run-to-run noise instead of inferring it
-    // from which run happened to get recorded.
+    // Page-cache/JIT/cgroup drift moves EVERY probe a little rather
+    // than one probe a lot, which the per-probe calibration cannot
+    // catch: the FULL suite runs SPARK_GRAFT_PASSES times (default 2),
+    // each probe is published as its min across passes, and the
+    // per-pass totals and spread are recorded.
     val passes = math.max(1,
       sys.env.get("SPARK_GRAFT_PASSES").flatMap(_.toIntOption).getOrElse(2))
     val ts = (1 to passes).map { _ =>
       runProbes(spark, sfDir, warmDir, canWarm, warmMode, diag)
     }
     val t = mergePasses(ts)
-    val qs = t.results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (t.results.nonEmpty) t.results.values.sum else 0.0
-    val passTotals = ts.map(_.results.values.sum)
-    doEmit(t.results, total, qs, warmMode, sfDir, t.calibBase, t.calibWorst,
-      t.calibSpikes, loadStart, jvmsStart, t.contended, t.regressed,
-      passTotals)
+    val passTotals = ts.map(_.results.collect {
+      case (k, v) if t.results.contains(k) => v }.sum)
+    val loadEnd = loadAvg
+    emit(line(t, passTotals, warmMode, sfDir,
+      thisRunNote(t, passTotals, sfDir, loadStart, loadEnd, jvmsStart),
+      loadStart, loadEnd, jvmsStart), sfDir)
     spark.stop()
   }
 
-  /** Per-probe min across full-suite passes; telemetry unions. */
+  /** Per-probe min across full-suite passes; telemetry unions. A probe
+    * that failed in any pass is left out of `results`. */
   private def mergePasses(ts: Seq[TimedPass]): TimedPass = {
+    val failed = ts.flatMap(_.failed).distinct
     val results = ts.flatMap(_.results.toSeq).groupMapReduce(_._1)(_._2)(math.min)
-    TimedPass(results,
+    TimedPass(results -- failed,
       ts.map(_.calibBase).min, ts.map(_.calibWorst).max,
       ts.flatMap(_.contended).distinct, ts.flatMap(_.regressed).distinct,
-      ts.flatMap(_.calibSpikes).distinct)
+      ts.flatMap(_.calibSpikes).distinct, failed)
   }
 
-  private final case class TimedPass(results: Map[String, Double],
-                                     calibBase: Double, calibWorst: Double,
-                                     contended: Seq[String],
-                                     regressed: Seq[String],
-                                     calibSpikes: Seq[String])
+  private[graft] final case class TimedPass(results: Map[String, Double],
+                                            calibBase: Double, calibWorst: Double,
+                                            contended: Seq[String],
+                                            regressed: Seq[String],
+                                            calibSpikes: Seq[String],
+                                            failed: Seq[String])
 
-  // the timed pass lives out of main: scalac's cold (pre-JIT) typer
-  // overflows its stack on main's body during CLEAN builds when this
-  // block nests inside it (incremental builds, with a warmed typer,
-  // compiled fine — the nastiest kind of green)
+  // Timed pass: deterministic (sorted) order. Each probe is timed as the
+  // MIN of two back-to-back runs at the target SF: the sf0.001 warmup
+  // cannot warm the target SF's codegen shapes (AQE picks different
+  // join strategies at different scales), so run 1 absorbs the
+  // remaining compiles and run 2 measures the plan. Contention-proofing:
+  // (1) a fixed calibration micro-probe runs between entries — its wall
+  // moving >2x off its quiet-start baseline means ANOTHER process owned
+  // the cores during that window; (2) a probe whose runs disagree >2x
+  // re-runs (min-of-all recorded, probe flagged); (3) a probe >3x its
+  // last BENCH_SELF number at the same sf re-runs once and is flagged
+  // if still regressed; (4) load average and other live JVMs are
+  // recorded. A run that throws is retried once; a probe whose retry
+  // throws too is reported in `failed` and never timed.
   private def runProbes(spark: SparkSession, sfDir: String, warmDir: String,
                         canWarm: Boolean, warmMode: String,
                         diag: Boolean): TimedPass = {
-    def force(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
     val calibDf = {
       import org.apache.spark.sql.functions._
       // bounded per-row values so the ANSI sum cannot overflow Long
@@ -198,867 +181,144 @@ object Bench {
         .select(pmod(xxhash64(col("id")), lit(1000000L)).as("h"))
         .groupBy(pmod(col("h"), lit(32))).agg(sum("h"))
     }
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      force(calibDf)
-      (System.nanoTime() - t0) / 1e9
-    }
+    def calibrate(): Double = timed(force(calibDf))._2
     // history is per-sf: BENCH_SELF.json only counts when its sf
     // matches; otherwise the per-sf archive emit() also writes
-    val sfBase = new java.io.File(sfDir).getName
     val history = {
       val main = parseHistory("BENCH_SELF.json", sfDir)
       if (main.nonEmpty) main
-      else parseHistory(s"BENCH_SELF.$sfBase.json", sfDir)
+      else parseHistory(s"BENCH_SELF.${new java.io.File(sfDir).getName}.json", sfDir)
     }
     val calibBase = (1 to 3).map(_ => calibrate()).min
     var calibWorst = calibBase
     val contendedProbes = scala.collection.mutable.ArrayBuffer[String]()
     val regressedProbes = scala.collection.mutable.ArrayBuffer[String]()
     val calibSpikes = scala.collection.mutable.ArrayBuffer[String]()
+    val failedProbes = scala.collection.mutable.ArrayBuffer[String]()
     // SPARK_GRAFT_ONLY="x111,x38" → time only matching probes (comma-
-    // separated substrings) — the targeted-scale-record lever: a
-    // 100× honesty run of the join-shaped families doesn't need to
-    // drag the 150 map-only probes through 100× data to say anything
+    // separated substrings): a scale run of the join-shaped families
+    // need not drag the map-only probes through the larger data
     val only = sys.env.get("SPARK_GRAFT_ONLY").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-    val results = selected.map { case (name, fn) =>
+    val results = selected.flatMap { case (name, fn) =>
       if (warmMode == "inter" && canWarm)
-        try force(fn(spark, warmDir)) catch { case _: Throwable => () }
-      def timed(): Double = {
+        try force(fn(spark, warmDir)) catch { case NonFatal(_) => () }
+      def once(): Double = {
         val (cc0, gc0) = (compileCount, gcMillis)
-        val t0 = System.nanoTime()
-        try { force(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        val s = (System.nanoTime() - t0) / 1e9
+        val s = timed(force(fn(spark, sfDir)))._2
         if (diag) System.err.println(
           f"DIAG $name%-28s ${s}%8.3fs compiles=${compileCount - cc0}%3d gc=${gcMillis - gc0}%4dms")
         s
       }
-      var runs = Vector(timed(), timed()) // chronological order
-      // min-of-2 back-to-back runs (run 2 measures the plan; see the
-      // warmup rationale above). Disagreement >2x above the noise
-      // floor takes extra runs; it is flagged as CONTENTION only when
-      // a run AFTER the first spikes — a slow FIRST run is the
-      // expected warming shape (janino compiles at the new SF,
-      // per-corpus trained-artifact caches, at-rest index builds) and
-      // flagging it would cry wolf on every cache-bearing probe.
-      def laterSpike = runs.drop(1).exists(_ > 2.0 * runs.min)
-      var extra = 0
-      while (extra < 2 && runs.min > 0.25 &&
-        runs.max / math.max(runs.min, 1e-9) > 2.0) {
-        runs = runs :+ timed()
-        extra += 1
-      }
-      if (runs.min > 0.25 && laterSpike) contendedProbes += name
-      var sec = runs.min
-      history.get(name).foreach { h =>
-        if (sec > 3 * h && sec > 0.5) {
-          sec = math.min(sec, timed())
-          if (sec > 3 * h) regressedProbes += name
+      def run(): Double = try once() catch { case NonFatal(_) => once() }
+      val sec = try {
+        var runs = Vector(run(), run()) // chronological order
+        // Disagreement >2x above the noise floor takes extra runs; it
+        // is flagged as CONTENTION only when a run AFTER the first
+        // spikes — a slow FIRST run is the expected warming shape
+        // (janino compiles at the new SF, per-corpus trained-artifact
+        // caches, at-rest index builds).
+        def laterSpike = runs.drop(1).exists(_ > 2.0 * runs.min)
+        var extra = 0
+        while (extra < 2 && runs.min > 0.25 &&
+          runs.max / math.max(runs.min, 1e-9) > 2.0) {
+          runs = runs :+ run()
+          extra += 1
         }
+        if (runs.min > 0.25 && laterSpike) contendedProbes += name
+        var s = runs.min
+        history.get(name).foreach { h =>
+          if (s > 3 * h && s > 0.5) {
+            s = math.min(s, run())
+            if (s > 3 * h) regressedProbes += name
+          }
+        }
+        Some(s)
+      } catch { case NonFatal(e) =>
+        failedProbes += name
+        System.err.println(s"[bench] $name failed: " +
+          e.toString.linesIterator.nextOption().getOrElse(""))
+        None
       }
       val c = calibrate()
       calibWorst = math.max(calibWorst, c)
       if (c > 2 * calibBase) calibSpikes += name
-      name -> sec
+      sec.map(name -> _)
     }.toMap
     TimedPass(results, calibBase, calibWorst, contendedProbes.toSeq,
-      regressedProbes.toSeq, calibSpikes.toSeq)
+      regressedProbes.toSeq, calibSpikes.toSeq, failedProbes.toSeq)
   }
 
-  private def doEmit(results: Map[String, Double], total: Double, qs: String,
-                     warmMode: String, sfDir: String,
-                     calibBase: Double, calibWorst: Double,
-                     calibSpikes: Seq[String], loadStart: Double,
-                     jvmsStart: Long, contendedProbes: Seq[String],
-                     regressedProbes: Seq[String],
-                     passTotals: Seq[Double]): Unit = {
-    // THIS RUN's headline, generated from the measured total so the
-    // artifact's value field and the notes headline are the same
-    // number by construction; historical narrative (earlier rounds'
-    // totals, kept in notesVal) follows it.
-    val thisRun = thisRunNote(total, results.size, sfDir, calibBase,
-      calibWorst, calibSpikes, loadStart, loadAvg, jvmsStart,
-      contendedProbes, regressedProbes, passTotals)
-    val telemetry = telemetryJson(loadStart, loadAvg, jvmsStart, calibBase,
-      calibWorst, contendedProbes, regressedProbes, calibSpikes) +
-      passJson(passTotals)
-    emit(results, total, qs, warmMode, sfDir, thisRun, notesR16 + notesVal,
-      volumeNotesVal, telemetry)
+  /** This run's headline, generated from the measured total so the
+    * line's `value` and its notes are the same number by construction. */
+  private def thisRunNote(t: TimedPass, passTotals: Seq[Double], sfDir: String,
+                          loadStart: Double, loadEnd: Double, jvms: Long): String = {
+    def list(xs: Seq[String]) = if (xs.isEmpty) "none" else xs.mkString(",")
+    Seq(
+      f"THIS RUN (the artifact's value field): total ${t.results.values.sum}%.1fs " +
+        f"over ${t.results.size} probes at $sfDir — per-probe MIN across " +
+        s"${passTotals.size} full suite passes (pass totals: " +
+        s"${passTotals.map(v => f"$v%.1fs").mkString(", ")}; the spread " +
+        "is honest run-to-run noise — page-cache/JIT state — that " +
+        "per-probe calibration cannot catch).",
+      f"Contention telemetry: calibration micro-probe base ${t.calibBase}%.3fs " +
+        f"worst ${t.calibWorst}%.3fs (>2x base during a probe's window = " +
+        s"foreign load; spiked at: ${list(t.calibSpikes)}),",
+      f"load-avg $loadStart%.1f->$loadEnd%.1f, other JVMs at start $jvms.",
+      s"Probes whose two runs disagreed >2x (re-run, min recorded): " +
+        s"${list(t.contended)}.",
+      s"Probes >3x their BENCH_SELF history after re-run: ${list(t.regressed)}.")
+      .mkString(" ")
   }
 
-  /** Pass-to-pass spread: each entry is one full suite pass's
-    * sum-of-probe-seconds; spread = (max-min)/min. The published
-    * `value` is the sum of per-probe MINS across passes, so it sits
-    * at or below min(pass_totals) by construction. */
-  private def passJson(passTotals: Seq[Double]): String = {
-    val ts = passTotals.map(t => f"$t%.1f")
+  /** The bench's ONE JSON line. Key order matters: a harness that
+    * keeps only the last ~2,000 characters of output must still see the
+    * headline, so metric/value/sf go LAST and the long queries/notes go
+    * first. `value` is the sum of the per-probe mins across passes, so
+    * it sits at or below min(pass_totals); pass_spread_pct is
+    * (max-min)/min of the totals. */
+  private[graft] def line(t: TimedPass, passTotals: Seq[Double], warmMode: String,
+                          sfDir: String, notes: String, loadStart: Double,
+                          loadEnd: Double, jvms: Long): String = {
+    // ASCII only: a non-ASCII char would print as '?' on a console
+    // whose charset cannot encode it, and stdout and file would differ
+    def str(s: String): String = "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    def arr(xs: Seq[String]) = xs.map(str).mkString("[", ",", "]")
+    val qs = t.results.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
     val spread =
       if (passTotals.size < 2 || passTotals.min <= 0) 0.0
       else (passTotals.max - passTotals.min) / passTotals.min * 100
-    s""","pass_totals":${ts.mkString("[", ",", "]")},""" +
-      f""""pass_spread_pct":$spread%.1f"""
+    s"""{"queries":$qs,"warm":${str(warmMode)},"notes":${str(notes)},""" +
+      s""""volume_notes":"see BENCH_NOTES.md",""" +
+      f""""load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f,""" +
+      s""""other_jvms":$jvms,"calib_base":${t.calibBase},""" +
+      s""""calib_worst":${t.calibWorst},"contended":${arr(t.contended)},""" +
+      s""""regressed":${arr(t.regressed)},"calib_spikes":${arr(t.calibSpikes)},""" +
+      s""""failed":${arr(t.failed)},""" +
+      s""""pass_totals":${passTotals.map(v => f"$v%.1f").mkString("[", ",", "]")},""" +
+      f""""pass_spread_pct":$spread%.1f,""" +
+      s""""metric":"total","value":${t.results.values.sum},"unit":"sec",""" +
+      s""""n_queries":${t.results.size},"sf":${str(sfDir)}}"""
   }
 
-  // the r1-r8 narrative — out of main for the same typer-depth reason
-  // as notesR8/notesR8c (the expression chain overflowed the scalac
-  // typer when it lived inside main's body)
-  private lazy val notesVal = "vs the DuckDB oracle proxy (warm, 32 threads, same " +
-      "parquet, full 109-query suite at sf0.1, timed 2026-08-13 r7): " +
-      "Spark 34.7s vs DuckDB 33.6-34.8s warm on the identical oracle " +
-      "manifest = 1.00x - parity holds on the suite GROWN by the " +
-      "Unicode-prelude re-certification and four new probes (r6: " +
-      "0.87-1.22x on 98 queries; r5 1.1-1.5x on 86). The Unicode " +
-      "letter-class prelude costs nothing measurable: x50 encode stays " +
-      "0.05s, x51 train 0.32s, x55 0.30s, x56 0.30s. The r7 cleanup " +
-      "probes are sub-0.1s map-only scans in BOTH engines (x65 " +
-      "normalize 0.05s, x66 pii 0.06s, x67 html 0.05s - regex chains " +
-      "fused into single codegen projections); x68 video container " +
-      "parse+sample is 0.48s. The r6 probes widen Spark's lead on " +
-      "kernel-bearing work: x50 BPE encode 0.05s vs 0.9-1.9s (the " +
-      "DuckDB mirror pays 30 chained string replaces per document " +
-      "where the kernel is one codegen pass), x52 token chunking " +
-      "0.27s vs 1.3s, x53 token packing 0.06s vs 1.2s, x55 " +
-      "train+encode composition 0.4s vs 0.6-0.7s, x56 encode-to-ids " +
-      "0.32s vs 2.5s (the mirror re-derives the id contract by " +
-      "unnesting every token through a vocabulary join; the kernel " +
-      "resolves ids in the same single codegen pass as the encode). " +
-      "Spark wins the volume-bearing probes outright (x38 curation " +
-      "flagship 3.0-3.8s vs 5.4s, x40 countmin readout 0.2s vs 2.5s, " +
-      "x24 xgb scoring 0.1s vs 2.7s, x12 winnowing 0.3-0.5s vs 1.2s) " +
-      "while the ~60 sub-200ms probes still pay Spark's fixed " +
-      "per-query overhead, which amortizes at scale. " +
-      "The r4 perf-weak trio was reworked in r5: x35's three " +
-      "redundant passes over the eval shingles are gone (one " +
-      "localCheckpoint materialization) and it now runs within " +
-      "~0.2s of the plain x16 scan - the residual vs DuckDB is the " +
-      "multi-stage floor the whole contamination family pays at " +
-      "sf0.1, not avoidable work; x16/x25/x42 additionally gained " +
-      "the broadcast-eval plan (train shingles never shuffle, " +
-      "plan-gated), the structurally right shape at 100 TB. " +
-      "r6 contamination stage-floor attack (the r5 ask), measured with " +
-      "graft.tools.StageProfile per-stage listener timings at sf0.1: " +
-      "(1) x49 joins BOTH sides as persisted h-bucketed tables - zero " +
-      "shingle kernels and zero exchanges below the join at query time " +
-      "(plan-gated; the md5 shingling is paid once at index build). " +
-      "Warm wall 0.84-1.33s across same-session runs; per-stage task " +
-      "walls sum to 0.55-0.75s of which the 32-task join+agg stage is " +
-      "0.22-0.53s; the remaining 0.3-0.45s of wall is inter-job driver " +
-      "gaps across the 6 AQE jobs (measured from job start/end " +
-      "timestamps), i.e. per-job scheduler floor, not plan work. " +
-      "(2) The from-text probes (x16 1.2-1.4s) are bounded by storage " +
-      "parallelism, not the plan: sf0.1 documents.parquet is a single " +
-      "594KB file with ONE row group, so the kernel-bearing scan stage " +
-      "runs as 1 task (measured 1.0-1.6s single-task stage walls); " +
-      "DuckDB reads the same single row group one-threaded but with a " +
-      "lower per-thread constant on its fused pipeline. At 100 TB " +
-      "files >> cores and the scan parallelizes; the 1-task regime " +
-      "exists only at toy SF. Plan-level levers are exhausted: the " +
-      "family's shapes (broadcast-eval, bucketed index, bloom " +
-      "prefilter, both-sides-bucketed) are all gated, and the residual " +
-      "vs DuckDB at sf0.1 is scheduler floor + single-row-group scan " +
-      "granularity. " +
-      "r7 stage-floor audit of the five remaining weak probes (the r6 " +
-      "ask), measured with graft.tools.StageProfile at sf0.1 local[32], " +
-      "steady-state runs: all five carry the SAME floor signature the " +
-      "contamination family proved - per-stage task walls sum to a " +
-      "small fraction of probe wall, the remainder is inter-job driver " +
-      "gaps, and the kernel stages run as 1 task because sf0.1 tables " +
-      "are single-row-group files. x22_lsh_topk: 6 AQE jobs, every " +
-      "stage 1 task of 21-141ms, task sum 0.23s vs wall 0.77-1.04s. " +
-      "x23_ivf_topk: 9 jobs, stages 23-73ms, task sum 0.37s vs wall " +
-      "1.23s (cell-pruned join tree = more exchanges = more jobs; the " +
-      "pruning is the 100 TB design). x64_token_budget: 7 jobs, task " +
-      "sum 0.40s vs wall 0.82s - the extra jobs ARE the " +
-      "global-window-avoidance design (bucketed partial sums + driver " +
-      "boundary pick + boundary-bucket window, 3 bounded actions, " +
-      "plan-gated no global window). w01_windfield_e2e: 6 jobs, task " +
-      "sum 0.27s vs wall 0.64-1.07s; the physics itself is proven at " +
-      "volume (BenchWindfield pushes 871M pair rows in 28.2s - the " +
-      "same plan at 1800x the probe's row count costs 40x the probe " +
-      "wall, i.e. the probe measures the floor, not the kernel). " +
-      "d09_equal_timestep: 4 jobs, task sum 0.54s vs wall 0.85s with " +
-      "one 317ms single-task spline-window stage - per-(storm,member) " +
-      "partitions parallelize when the input is more than one row " +
-      "group. Per the r5-established acceptance criterion " +
-      "(task-time << wall + no dangerous shape + volume evidence " +
-      "where applicable), all five are floor-bound: no plan lever " +
-      "remains at sf0.1 that would not distort the 100 TB shape. " +
-      "r3 regression root cause: the r3 all-probes-upfront warmup " +
-      "overflowed spark.sql.codegen.cache.maxEntries (default 100), so " +
-      "multi-stage probes recompiled generated classes inside their timing " +
-      "windows (measured: 40 janino compiles during w01's timed run). " +
-      "Fixed by raising the cache bound to 2000, warming each probe " +
-      "immediately before its own timed run, and timing min-of-2 " +
-      "back-to-back runs (run 2 measures the plan: 0 compiles). " +
-      "r8 x27_pq_topk audit (the r7 ask): the r7 3.9s was " +
-      "run-structure, not plan - the probe retrained the PQ codebook " +
-      "(explode + persist + Lloyd assign/mean aggregations + " +
-      "localCheckpoint + driver collect) on EVERY run, so even " +
-      "min-of-2 paid a full training pass; StageProfile splits it as " +
-      "training-aggregation stage 2.3s cold / 0.5s steady-state, " +
-      "query side (fused pq_adc scan + TakeOrdered shortlist + 60-row " +
-      "rerank + exact-scan recall check) under 1s. r8 caches the " +
-      "collected codebook+query table keyed by (corpus, query, " +
-      "geometry) exactly like the trained-BPE table cache " +
-      "(PqIndex.trainedTables), so repeat runs measure the query " +
-      "path: steady-state wall 1.2-1.3s, back under the ~2s bar, " +
-      "values bit-identical (x27 re-certified against the DuckDB " +
-      "mirror this round). " +
-      "r8 sf1 HONESTY RUN (the r7 ask): graft.tools.ScaleData builds a " +
-      "10x corpus from sf0.1 (key-shifted copies, every table written " +
-      "as 32 parquet files so scans can actually parallelize), full " +
-      "115-probe suite run at both SFs same-session. The ex-weak five " +
-      "scale SUBLINEARLY at 10x data, closing their floor arguments " +
-      "with measurements: x22 0.57->1.59s (2.8x), x23 0.66->1.26s " +
-      "(1.9x), x64 0.63->0.81s (1.3x), w01 0.91->0.97s (1.1x), d09 " +
-      "0.51->1.04s (2.0x). The r8 two-phase percentile probes hold " +
-      "their shape (x21 1.6x, x70 1.4x at 10x data - the sf0.1 wall " +
-      "rose vs the old percentile-aggregate formulation because the " +
-      "design spends bounded extra jobs to avoid the O(group-size) " +
-      "aggregate buffer; the scaling curve is the point). The at-rest " +
-      "indexes are flat (x27 1.0x, x73 1.0x - cached codebook / " +
-      "partition-pruned cells). The contamination family grows 8-18x " +
-      "at 10x data, which is WORKLOAD, not plan: naive replication " +
-      "duplicates every text 10x on both join sides, so shingle-match " +
-      "pairs grow ~100x; StageProfile on x16 at sf1 shows the " +
-      "shingle+join stage running 32 tasks all-cores-busy (5.4-7.1s " +
-      "of a 9.1-12.4s wall) where sf0.1 ran it as 1 task - the " +
-      "single-row-group floor claim is now measured, not argued. " +
-      "Cross-engine honesty on that artifact: warm 32-thread DuckDB " +
-      "runs the same contamination mirrors on the same sf1 files in " +
-      "2.9-4.5s vs Spark's 9-15s - a pipelined in-process hash join " +
-      "streams the 100x-duplicated intermediate where Spark " +
-      "materializes it through an exchange; at organic 10x growth " +
-      "(no duplicate blowup) the intermediate grows ~10x and sf0.1 " +
-      "parity applies. The production order already avoids the shape: " +
-      "dedup runs BEFORE contamination scans, and the flagship x38 - " +
-      "which dedups first inside the probe - wins 2x at sf1 (16-17s " +
-      "vs DuckDB 32-34s on the identical mirror). " +
-      "The honesty run also caught a REAL scale-killer invisible at " +
-      "sf0.1: x54 audio decode grew 17.6x (0.32->5.5s) despite a " +
-      "fully-parallel 32-task stage; jstack showed 30/32 tasks " +
-      "BLOCKED in javax.sound's per-call provider lookup " +
-      "(SoftMidiAudioFileReader -> MidiSystem.getMidiFileReaders -> " +
-      "JDK13Services.getProviders, synchronized and uncached in " +
-      "JDK17). Fix: resolve the AudioFileReader SPI providers once " +
-      "per JVM, try the standard RIFF/AIFF/AU readers first, and gate " +
-      "the MIDI reader behind a 4-byte MThd header check. x54 at sf1 " +
-      "drops 5.5s -> 0.21s (0.9x vs sf0.1 - perfect parallel " +
-      "scaling), decode semantics unchanged (x54 re-certified, " +
-      "AudioSpec/HostileInputSpec green). x37 got the x27 treatment " +
-      "plus two structural fixes: IvfIndex.assign's per-id row_number " +
-      "window is now a partial-aggregable min(struct) argmin (map-side " +
-      "combine over corpus x nlist rows - the 100 TB shape; also " +
-      "serves x23/x41/x73 index builds), and ivfPqTopK scores " +
-      "nprobe-pruned candidates through the fused pq_adc kernel with " +
-      "the per-corpus cached codebook. sf1 wall 4.36s -> 2.4s; sf0.1 " +
-      "steady-state 1.7s with the accepted floor signature (10 " +
-      "bounded jobs, task sum 0.84s, single-task stages on the " +
-      "single-row-group file); all six IVF/PQ-family probes " +
-      "re-certified hash-equal. " + notesR8
-
-  // out-of-line (typer-depth: main's expression chain is at the limit)
-  private def thisRunNote(total: Double, n: Int, sfDir: String,
-                          calibBase: Double, calibWorst: Double,
-                          calibSpikes: Seq[String], loadStart: Double,
-                          loadEnd: Double, jvms: Long, contended: Seq[String],
-                          regressed: Seq[String],
-                          passTotals: Seq[Double]): String = {
-    def list(xs: Seq[String]) = if (xs.isEmpty) "none" else xs.mkString(",")
-    Seq(
-      f"THIS RUN (the artifact's value field): total $total%.1fs over $n " +
-        f"probes at $sfDir — per-probe MIN across ${passTotals.size} full " +
-        s"suite passes (pass totals: " +
-        s"${passTotals.map(t => f"$t%.1fs").mkString(", ")}; the spread " +
-        "is honest run-to-run noise — page-cache/JIT state — that " +
-        "per-probe calibration cannot catch).",
-      f"Contention telemetry: calibration micro-probe base $calibBase%.3fs " +
-        f"worst $calibWorst%.3fs (>2x base during a probe's window = " +
-        s"foreign load; spiked at: ${list(calibSpikes)}),",
-      f"load-avg $loadStart%.1f->$loadEnd%.1f, other JVMs at start $jvms.",
-      s"Probes whose two runs disagreed >2x (re-run, min recorded): " +
-        s"${list(contended)}.",
-      s"Probes >3x their BENCH_SELF history after re-run: ${list(regressed)}.",
-      "Every historical total below is a PRIOR round's run, not this " +
-        "artifact's value. ").mkString(" ")
-  }
-
-  private def telemetryJson(loadStart: Double, loadEnd: Double, jvms: Long,
-                            calibBase: Double, calibWorst: Double,
-                            contended: Seq[String], regressed: Seq[String],
-                            calibSpikes: Seq[String]): String = {
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    f""""load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f,""" +
-      s""""other_jvms":$jvms,"calib_base":$calibBase,""" +
-      s""""calib_worst":$calibWorst,"contended":${arr(contended)},""" +
-      s""""regressed":${arr(regressed)},"calib_spikes":${arr(calibSpikes)}"""
-  }
-
-  // r8 measurement-honesty paragraph — its own val: the cumulative
-  // notes chain grew past the scalac typer's recursion depth as one
-  // expression (StackOverflowError at compile), so it is split here.
-  private val notesR8 =
-    "r8 MEASUREMENT-HONESTY CORRECTION, supersedes every earlier " +
-      "suite-total and per-probe number in these notes: Bench timed " +
-      "probes with df.count(), which re-optimizes the plan with ZERO " +
-      "output columns - Catalyst prunes all projections and deletes " +
-      "unique-key outer joins, so every map-only probe timed a bare " +
-      "parquet scan and probes with densify tails (x57's optimized " +
-      "count plan was literally Aggregate over Relation) timed " +
-      "nothing at all. Bench/ProfileProbes/StageProfile now force " +
-      "queryExecution.toRdd.count() - the plan as written, every " +
-      "column of every row. Honest suite total at sf0.1: ~56s (the " +
-      "count() figure was ~32s); same-session warm 32-thread DuckDB " +
-      "on the identical 118-query oracle manifest (fetchall, same " +
-      "parquet): 28.5s -> ratio ~1.95x, within the 2x bar but NOT the " +
-      "1.00x parity previously reported - that parity was partly an " +
-      "artifact of measuring pruned plans. Honest timing exposed real " +
-      "bugs the fictional numbers hid, all fixed and re-certified " +
-      "this round: (1) subtrees captured inside higher-order-function " +
-      "lambdas re-evaluate PER ELEMENT (no CSE inside lambda bodies) " +
-      "- Dedup.shingles, termArray, repetitionRatio, " +
-      "topBigramFraction re-ran their O(len) split per element, " +
-      "O(len^2) per row; TextOps.bindOnce (bind through a 1-element " +
-      "transform) fixes the family (termArray 14x faster measured). " +
-      "(2) x04 fingerprint re-ran its regex normalize per CHARACTER - " +
-      "74.4s honest wall; now a one-pass codegen kernel " +
-      "(rolling_fingerprint), 0.11s, value-identical contract. " +
-      "(3) CountMin's per-token hash paid MessageDigest.getInstance " +
-      "plus per-byte hex formatting - x40 5.5s -> 0.5s with a " +
-      "thread-local digest and direct top-60-bit arithmetic, " +
-      "bit-identical. (4) PiiOps ran regexp_extract_all AND " +
-      "regexp_replace per category (8 java-regex passes/row); the " +
-      "pii_scan kernel walks each pattern once, redact+count from " +
-      "the same Matcher pass - x66 2.2s -> 1.2s. (5) q07 used the " +
-      "exact Percentile aggregate (the O(column) buffer x21/x70 " +
-      "exist to avoid) - now the two-phase exact machinery, 1.5s -> " +
-      "0.9s. (6) x70 re-derived the bigram window once per counts " +
-      "consumer; the bigram counts table (the at-rest artifact) now " +
-      "materializes once - 2.4s -> 1.5s. Remaining honest gap vs " +
-      "DuckDB decomposes as: ~60 sub-0.5s probes paying Spark's " +
-      "fixed per-query floor (jobs + AQE stage scheduling; DuckDB's " +
-      "in-process pipeline has no such floor - amortizes at scale, " +
-      "sf1 run proves sublinear), kernel/volume-bearing probes at " +
-      "parity or ahead (x38 2.4s vs 3.8s, x24 0.2s vs 2.2s, x56 " +
-      "0.8s vs 1.9s, x12 1.1s vs 1.1s, x57 1.6s vs 1.3s), and x68 " +
-      "whose mirror does not decode video (the real AVI walk + MJPEG " +
-      "decode has no DuckDB counterpart; its 'oracle' checks " +
-      "structure only). " + notesR8c
-
-  // r8 continuation (crawl/cleaning family) — its own val, same
-  // typer-depth reason as notesR8; LAZY because notesR8 (declared
-  // above) references it during object init
-  private lazy val notesR8c =
-    "r8 continuation (recorded 2026-08-14, local[32]): 134-probe " +
-      "suite, Spark 80.4s vs warm 32-thread DuckDB 45.5-46.7s on the " +
-      "identical oracle manifest = 1.74x, inside the 2x bar; the " +
-      "residual is still the fixed per-query floor (now ~75 probes " +
-      "under 0.5s, each paying job+AQE scheduling that DuckDB's " +
-      "in-process pipeline does not). The 11 new probes " +
-      "(x82-x92: C4 rules, line frequency, keyword scan, PCA, soft " +
-      "dedup, sentence chunks, WARC, phash pair, robots, crawl " +
-      "flagship) cost 5.3s combined on the Spark side, all " +
-      "floor-bound (0.15-1.27s each). Kernel-vs-mirror highlights: " +
-      "x84 Aho-Corasick 0.15s vs 1.37s DuckDB - one O(len) automaton " +
-      "pass vs the mirror's O(len x patterns) positional enumeration, " +
-      "9x and growing with dictionary size; x85 PCA 0.28s vs 0.69s " +
-      "(one moment-aggregation pass + driver loop vs the relational " +
-      "covariance join + 8 unrolled matvec CTEs); x90 phash near-dup " +
-      "1.27s carries a 97k-pair band join at sf0.1 (mirror 0.29s " +
-      "derives hashes from the image formula - it does not resample " +
-      "pixels). Caveat recorded per the x68 rule: x88/x92 mirrors " +
-      "derive fields/decisions from construction formulas while the " +
-      "Spark side PARSES the WARC bytes and robots text, so those " +
-      "per-probe ratios overstate DuckDB. sf1 honesty run for the " +
-      "new family (tools.ScaleData 10x key-shifted multi-file " +
-      "tables, same session protocol as the r8 run): every new probe " +
-      "scales SUBLINEARLY at 10x data - x82 c4 0.53s (1.1x: pure " +
-      "scan parallelism), x91 robots 0.66s (1.7x), x88 warc 0.72s " +
-      "(2.3x), x84 keywords 0.37s (2.5x), x85 pca 0.68s (2.4x), x87 " +
-      "sentences 0.99s (2.7x), x92 crawl flagship 2.0s (3.0x), x83 " +
-      "line-frequency 1.62s (3.1x), x86 soft dedup 0.79s (3.3x), " +
-      "x89 phash 3.18s (5.2x), x90 phash near-dup 9.19s (7.2x - not " +
-      "a plan problem: ScaleData's key-shifted copies repeat the " +
-      "image formula every lcm(256,15)=3840 ids, so 50k images " +
-      "contain ~13-member exact-duplicate classes whose PAIR count " +
-      "grows quadratically in the copy count; the banded join emits " +
-      "exactly those pairs, which is the operator doing its job on " +
-      "a duplicate-heavy corpus). FINAL r8 suite numbers (141 " +
-      "probes, 2026-08-14): Spark 90.1s vs warm 32-thread DuckDB " +
-      "56.3-65.2s on the identical oracle manifest = 1.60x, inside " +
-      "the 2x bar (at the interim 138-probe snapshot: 85.9s vs " +
-      "47.4-48.2s = 1.81x; the trained-tokenizer probes x96/x97, " +
-      "whose oracles re-run full hard-EM training as materialized " +
-      "Viterbi DP CTE chains, cost DuckDB more than Spark's bounded " +
-      "driver loop costs us). x93 langid was the round's one " +
-      "honest-timing catch: the first formulation fanned every " +
-      "trigram OCCURRENCE x5 languages into the model join (12.3s); " +
-      "per-document feature multiplicities now aggregate first and " +
-      "only distinct (doc, feature) rows fan out - 5.4s, " +
-      "re-certified at three scales with the mirror moved to the " +
-      "same multiplicity formulation. sf1 (10x) walls for the four: " +
-      "x93 8.8s (1.6x), x94 spans 2.26s (1.4x), x95 html 0.58s " +
-      "(0.9x - pure scan parallelism), x96 unigram 0.94s (1.0x: " +
-      "training is bounded by the word-TYPE dictionary, not corpus " +
-      "size, and segmentation is one map pass - the tokenizer cost " +
-      "model that carries to 100 TB). Operational volume for the crawl " +
-      "DAG (BenchCrawl, 2026-08-14, local[32]): 1M pages synthesized " +
-      "as concatenated per-record gzip WARC streams (352 MB gz, 50 " +
-      "pages/stream) - WARC gunzip+framing 3.6s (~280k pages/s), " +
-      "robots decisions against a 1000-host rules table 5.4s, " +
-      "stripHtml + C4 rules 12.6s, corpus-wide line dedup 3.7s with " +
-      "the universal boilerplate footer collapsing to exactly ONE " +
-      "keeper across a million pages; stage walls grow 1.3-3.5x per " +
-      "10x pages (20k/200k/1M sweep). Two matcher fixes landed from " +
-      "this bench: prefix robots rules (the overwhelming real-world " +
-      "majority) route through codegen startswith instead of regex, " +
-      "and wildcard rules evaluate through robots_glob_match - a " +
-      "linear-time glob kernel (r9; replaced the regexp_like_cached " +
-      "route so an untrusted hostile robots pattern cannot detonate " +
-      "a backtracking regex engine). " + notesR9
-
-  // r9 round notes — own val (typer depth)
-  private lazy val notesR9 =
-    "r9 additions (recorded 2026-08-14, local[32]): the bench is now " +
-      "CONTENTION-PROOFED (the r8 scored artifact recorded 170s with " +
-      "x28 at 29.9s on a box running the driver's own verify JVMs; a " +
-      "clean run measures ~87s/0.84s): a calibration micro-probe " +
-      "between entries, >2x run-disagreement and >3x history re-runs " +
-      "with flags, load-avg/other-JVM telemetry in the JSON, and the " +
-      "notes headline GENERATED from the run's measured total so the " +
-      "value field and the notes cannot diverge; per-sf history " +
-      "archives stop smoke runs clobbering the scored baseline. " +
-      "The r8 perf-weak trio is closed with kernel work, not floor " +
-      "notes: x93 langid was never join-bound - the per-gram feature " +
-      "hash ran as a Spark expression chain (md5->hex->substring->" +
-      "conv, 3.7 us/gram) on the single-row-group scan; the " +
-      "langid_score_text kernel owns trigram extraction + salted-md5 " +
-      "bucketing (thread-local digest, bit-identical: the first 7 hex " +
-      "digits of an md5 ARE the top 28 bits of its first 4 bytes) + " +
-      "the per-language fold, and x93 drops 5.4s -> 0.92s at sf0.1, " +
-      "AHEAD of its 1.31s DuckDB mirror, zero exchanges, row-for-row " +
-      "spec-equal to the join reference. x75 DSIR now routes the " +
-      "certified map-only scorer and trains its bounded ratio table " +
-      "once per corpus (the x27/x73 trained-artifact amortization): " +
-      "3.0s -> 0.88s vs 0.78s mirror. x66 pii: PiiProfile decomposed " +
-      "the kernel wall (email ~60us/row + ipv4 ~60us x2 + phone 5us, " +
-      "md5 negligible - java.util.regex bounded-quantifier attempts " +
-      "at every position); the email/IPv4 passes are now exact " +
-      "anchored linear kernels (fuzz-pinned bit-equal on ~470k " +
-      "adversarial strings), full kernel 188 -> 11.4 us/row (16x), " +
-      "probe 1.55s -> 0.32s. sf1 scaling records for the previously " +
-      "unrecorded probes (tools.ScaleData 10x multi-file tables, " +
-      "steady-state min-of-3 at both SFs): x66 0.32->0.57s (1.8x at " +
-      "10x data), x70 2.0->2.75s (1.4x), x75 0.88->0.72s (0.8x - " +
-      "multi-file scan parallelism), x93 0.92->0.68s (0.7x), x100 " +
-      "0.55->0.44s (0.8x - partition-pruned at-rest index, flat), " +
-      "x78 1.56->12.4s (7.9x - the SAME documented contamination " +
-      "workload blowup as r8's x16 family: key-shifted copies " +
-      "duplicate every text 10x on both join sides so n-gram match " +
-      "pairs grow ~100x; organic growth has no such duplication). " +
-      "New composition probe x100: truncateNormalize (16 of 64 dims) " +
-      "feeds writeInt8Index, so the at-rest codes table is 16x " +
-      "smaller than the raw floats and still partition-prunes to " +
-      "nprobe cells; bit-identical to full-scan int8 cosine within " +
-      "probed cells (integer arithmetic survives partitioning - the " +
-      "x73 argument in the truncated space). stratifiedByDecile no " +
-      "longer builds ntile over a global sort: threshold deciles via " +
-      "the two-phase exact percentile machinery + md5 keep-hash, " +
-      "plan-gated (no Percentile, no RNG, no window over the raw " +
-      "corpus). Robots wildcard rules moved off the backtracking " +
-      "regex engine to a linear glob kernel (hostile many-wildcard " +
-      "patterns bounded at O(path x pattern)), host keys normalized, " +
-      "query-only URLs match as path-and-query per RFC 9309; hostile " +
-      "robots files are also size-capped (512 KiB honored per RFC " +
-      "9309 2.5, 4096-char rules, 5000 rules/host - spec-pinned). " +
-      "r9 SUITE RATIO, measured same-box back-to-back (2026-08-14): " +
-      "Spark 87.5s over 142 probes (contention-proofed run: " +
-      "calibration base 0.049s worst 0.052s, zero spikes, load-avg " +
-      "1.8-2.2) vs warm 32-thread DuckDB 49.2s on the identical " +
-      "142-query oracle manifest (tools/time_oracle.py, min-of-2 " +
-      "warm, fetchall) = 1.78x - inside the 2x bar and matching the " +
-      "r8 judge's independent 87.4s/49.8s = 1.76x on the 141-probe " +
-      "suite. The ex-slowest probes are gone from the top of the " +
-      "table (x93 0.97s, x75 1.08s, x66 0.27s in the same run); the " +
-      "suite top is now x58 span dedup 3.25s vs its 1.81s mirror and " +
-      "x38 flagship 3.22s vs 5.20s (Spark wins), with the residual " +
-      "still the fixed per-query floor of ~75 sub-0.5s probes. " +
-      "Late-r9 operators, measured steady-state min-of-3 at both SFs: " +
-      "x101 full deterministic k-means (3 Lloyd rounds, trajectory-" +
-      "certified) 1.5-2.1s at sf0.1 -> 2.1s at sf1 (1.4x at 10x data " +
-      "- the constant-round loop of bounded broadcast+partial-agg " +
-      "jobs amortizes); x102 char-entropy signals 0.34s -> 0.43s " +
-      "(1.3x, map-only scan parallelism). CLOSING r9 suite numbers " +
-      "(148 probes after x105 connected-components, x106 dedup " +
-      "normalization, and the ImageIO fix landed, 2026-08-14): Spark " +
-      "78.4s (zero contended/regressed; one calibration spike " +
-      "honestly recorded at x49's window) vs warm 32-thread DuckDB " +
-      "48.0s on the identical 148-query manifest = 1.63x. Across five " +
-      "paired same-day runs of the growing suite the ratio ranged " +
-      "1.58-1.78x (the DuckDB side itself varies 48-55s run to run); " +
-      "every pairing is inside the 2x bar and at or below the r8 " +
-      "judge's 1.76x, and the Spark total FELL from 87.5s/142 probes " +
-      "to 78.4s/148 as the round's kernel work (langid, PII, ImageIO) " +
-      "outweighed six added probes. Interim r9 numbers " +
-      "(145 probes, 2026-08-14, after x101/x102/x103 landed): Spark " +
-      "86.2s with ZERO contention/regression/spike flags (calibration " +
-      "base 0.044s worst 0.076s - the warming-aware flag logic " +
-      "validated: the earlier run's false 'contended' flags on " +
-      "cache-bearing probes are gone) vs warm 32-thread DuckDB 52.5s " +
-      "on the identical 145-query manifest = 1.64x - better than the " +
-      "r8 judge's independent 1.76x despite 4 added probes, because " +
-      "the ex-slowest probes (x93/x75/x66) now run at or ahead of " +
-      "their mirrors. Suite head: x38 flagship 2.93s (its mirror " +
-      "5.2s), x58 span dedup 2.78s (1.8s), x68 video 2.04s (mirror " +
-      "does not decode video - documented caveat). " + notesR10
-
-  // r10 round notes — own val (typer depth)
-  private lazy val notesR10 =
-    "r10 additions (recorded 2026-08-14, local[32]): the artifact now " +
-      "publishes the PASS-TO-PASS SPREAD the r9 judge asked for - the " +
-      "full suite runs >=2 times, each probe records its min across " +
-      "passes, and pass_totals/pass_spread_pct land in the JSON (three " +
-      "telemetry-clean r9 runs had spanned 78-101s with nothing in the " +
-      "artifact admitting it; broad page-cache/JIT drift moves every " +
-      "probe a little, which per-probe calibration cannot catch). " +
-      "r10 SUITE NUMBERS, same-box back-to-back (2026-08-14, 149 " +
-      "probes after x107 staleness-stats joined): Spark 83.4s as " +
-      "per-probe min over 2 full passes (pass totals 94.7s/84.8s = " +
-      "11.7% spread, zero contended/regressed, one calibration spike " +
-      "honestly recorded at q15's window) vs warm 32-thread DuckDB " +
-      "67.2s on the identical 149-query oracle manifest " +
-      "(tools/time_oracle.py min-of-2; two independent runs both " +
-      "67.2s) = 1.24x - the best suite ratio recorded, though the " +
-      "DuckDB side itself moved vs r9 (its x38 mirror cost 7.3s this " +
-      "session vs 5.2s in r9 runs - same-box-same-session pairing is " +
-      "the only honest comparison, which is exactly why the spread " +
-      "now ships in the artifact). CLOSING r10 refresh on the final " +
-      "code (quiet box, 2026-08-14): 75.3s / pass totals 80.0s + " +
-      "77.8s = 2.9% spread, zero flags - vs the same-day DuckDB " +
-      "67.2s = 1.12x. Round work behind the numbers: " +
-      "connected components moved to hop+jump label propagation " +
-      "(O(log diameter) rounds - see the volume notes for the " +
-      "BenchDedup record), the shingle/contamination index gained the " +
-      "O(batch) marker-gated append the other at-rest artifacts got " +
-      "in r9, the append-mode ANN indexes gained the bounded per-cell " +
-      "staleness stats + rebuild trigger (x107 certifies the stats " +
-      "cross-engine; IndexStalenessSpec pins fire-on-drift/" +
-      "quiet-on-stationary), bpe_unmap nulls on damaged input like " +
-      "the media decoders, and the glob/PII linear kernels carry " +
-      "adversarial WALL-TIME pins so a regression to a backtracking " +
-      "engine fails CI by timeout. " +
-      "r10 sf1 HONESTY RUN (149 probes, fresh ScaleData 10x tables, " +
-      "same-session single-pass protocol): 240.1s vs 84.8s at sf0.1 " +
-      "= 2.8x at 10x data (r9: 2.44x on 147 - the delta is the " +
-      "contamination family's run-to-run wobble, not a new shape: " +
-      "every >5x grower is again the documented key-shifted-copy " +
-      "duplicate-blowup family - x42 17.7x, x49 16.5x, x46 11.9x, " +
-      "x78 10.8x, x16 9.5x, x29 8.9x, x35 7.8x, x38 7.4x, x103 5.6x " +
-      "- match PAIRS grow ~100x on a duplicate-saturated corpus; " +
-      "organic growth has no such blowup). The r10 operators hold " +
-      "flat-to-sublinear at 10x data: x107 staleness stats 0.19s " +
-      "(1.0x - bounded stats table, codes never re-read), x104 " +
-      "append 0.38s (1.0x), x105 hop+jump components 1.71s (1.6x), " +
-      "x101 k-means 1.66s (1.8x), x100 0.46s (1.3x); the ex-weak " +
-      "kernels keep their r9 wins (x93 0.61s and x75 0.65s BOTH " +
-      "sublinear at 0.7x, x66 0.40s, x89 0.47s, x68 0.87s, x54 " +
-      "0.53s - the r8/r9 SPI and ImageIO fixes hold). Zero " +
-      "contended/regressed flags; one calibration spike honestly " +
-      "recorded at q10's window."
-    // operational-volume evidence from the dedicated bench mains
-    // (BenchWindfield / BenchDedup, recorded 2026-08-12, local[32]):
-  // operational-volume evidence — its own val for the same typer-depth
-  // reason as notesR8
-  private val volumeNotesVal = "BenchWindfield 52 members x 47,241 centroids: " +
-      "871,410,798 pair rows, windfield 28.2s; trigger/aggregation tail " +
-      "(dedupKeepMax, per-member totals, exceedance cross-agg, " +
-      "dref/cerf/start/hi + municipality damage table) 11.4s for 1,674 " +
-      "report rows. BenchDedup 1M docs: one-pass MinHash+LSH pairs 4.8s; " +
-      "connected-components decision (DataFrame label propagation) " +
-      "converged in 2 rounds, 17.2s (25.7s before folding the " +
-      "convergence check into the checkpointed update - one big join " +
-      "per round instead of two), collapsing all 19,998 planted " +
-      "near-dup pairs; ingest-time incremental dedup of a 10k-doc " +
-      "batch against the persisted 1M-doc signature index 2.7s " +
-      "(index build 1.3s, amortized across ingests) finding exactly " +
-      "the 100 planted copies - the batch joins signatures, not " +
-      "documents, so per-ingest cost is O(batch), not O(corpus); " +
-      "C4-style line-level dedup over the same 1M docs as 5M lines " +
-      "(30% sharing one hot boilerplate line) 3.7s, all 359,999 " +
-      "planted duplicate lines dropped - first-occurrence is " +
-      "min(struct(doc_id,pos)) per line, an aggregation whose " +
-      "map-side combine collapses the hot line to one candidate per " +
-      "partition (2.5x faster than the window formulation it " +
-      "replaced, and skew-immune where the window was not); " +
-      "Misra-Gries heavy hitters over the same 1M docs (~43M tokens) " +
-      "1.2s with all planted heavies surfaced - at parity with the " +
-      "exact token groupBy (1.1s) on this 10k-word vocabulary, and " +
-      "the sketch's O(capacity) state is what survives when the " +
-      "vocabulary is billions of distinct tokens and exact counting " +
-      "cannot. " +
-      "BenchTrain (from-scratch xgboost-hist trainer, " +
-      "10 rounds x depth 6 x 10 features, 5% missing): 2M rows in " +
-      "21.8s vs 200k rows in 17.7s - 10x the rows costs 1.23x the " +
-      "wall time because each tree level is ONE aggregation whose " +
-      "shuffle is O(nodes x features x bins), independent of rows. " +
-      "r5 additions (recorded 2026-08-13, local[32]): BenchDedup " +
-      "hot-bucket guard - 100k planted identical-template pages " +
-      "(survive exact dedup, would emit ~5e8 candidate pairs from one " +
-      "LSH bucket) complete in 14.8s with maxBucket=1000, all 19,998 " +
-      "organic near-dup pairs intact. BenchAnn IVF-PQ at rest over 1M " +
-      "hierarchically-clustered 64-dim vectors: one-off build+write " +
-      "124s (codes partitioned by IVF cell), then per-query 2.2s warm " +
-      "at recall@10=1.0 vs 7.7s brute-force scan in the same session " +
-      "- the query reads nprobe/nlist (~6%) of a codes table 16x " +
-      "smaller than the raw vectors, the ratio that carries to 100 TB. " +
-      "CCNet LM scoring over the same 1M docs (~43M tokens): add-k " +
-      "bigram statistics trained AND every document scored in 28.6s - " +
-      "one window for pairing plus keyed joins against the counts " +
-      "tables, nothing quadratic. " +
-      "r6 additions (recorded 2026-08-13, local[32]): label-propagation " +
-      "WORST CASE - 1000 planted diameter-20 chains across the 1M-vertex " +
-      "corpus converge in exactly 21 rounds (diameter + fixpoint check) " +
-      "at 0.42s/round, 8.8s total; rounds track the minimum label's " +
-      "eccentricity (spec-verified), and the organic LSH shapes stay at " +
-      "2 rounds - the O(diameter) claim now carries measured evidence on " +
-      "the adversarial shape. Real-BPE tokenizer at volume: 200 merges " +
-      "trained on the full 1M-doc corpus in 7.2s (one distributed " +
-      "word-type aggregation + the driver merge loop over the ~10k-type " +
-      "dictionary), then all 1M documents re-counted under the trained " +
-      "table - 96.7M real tokens - in 6.0s: the encode is one map-only " +
-      "codegen scan (~16M tokens/s end-to-end), so token accounting at " +
-      "100 TB is scan-bound, not tokenizer-bound. Encode-to-vocabulary-" +
-      "ids over the same corpus: 96.7M ids in 4.9-5.2s across solo " +
-      "runs - id resolution rides the same codegen pass, measurably " +
-      "free (within noise of the count-only encode, 5.6-5.8s). " +
-      "ExactSubstr span dedup at volume: the 1M-doc planted-" +
-      "boilerplate corpus (300k copies of one hot line, so every one " +
-      "of its k-grams duplicates 300k-fold) excises 3.0M duplicated " +
-      "tokens in 19.6-21.1s - the hot gram collapses in the map-side " +
-      "partial of the first-occurrence aggregation, interval merging " +
-      "runs in per-doc windows (high-cardinality, unskewed). " +
-      "Trained quality classifier at volume: NB over ~86M hashed " +
-      "word+bigram term occurrences, trained AND all 1M docs scored in " +
-      "66-70s on the certified md5 feature-hash path; the fastHash " +
-      "(xxhash64 codegen) deployment path measures 57.4s same-run " +
-      "(~18% - the term explode + count aggregation dominates, not the " +
-      "hash). The model stays numBuckets-bounded (65k rows) and " +
-      "broadcasts either way, so the cost is the term scan, not the " +
-      "model - the shape that holds at 100 TB. " +
-      "r7 additions (recorded 2026-08-13, local[32]): BPE driver-dict " +
-      "honesty under the Unicode prelude (graft.tools.BpeDictProfile, " +
-      "synthetic wide-unicode corpus of 3-codepoint CJK words - every " +
-      "word a fresh type, the worst case the new prelude exposes): at " +
-      "7.75M true word types the 2^20 cap trips and the collected " +
-      "dictionary costs 84.5 MB of driver heap (~80 B/type) after a " +
-      "10.4s distributed count - bounded and safe on any real driver. " +
-      "The binding constraint is the merge LOOP, not the collect: " +
-      "0.63 s/merge at the 2^20-capped dict vs 0.14 s/merge at 250k " +
-      "types vs 3 ms/merge at 14k (each round recounts pairs over the " +
-      "dict), so wide-unicode large-vocab training should trim the " +
-      "dict via maxWordTypes/minPairCount - documented on Bpe.train " +
-      "and spec-tested (the cap warning path included). GPT-2 " +
-      "byte-level mode at volume (BenchDedup same-run controlled " +
-      "comparison - the ASCII corpus makes the token streams " +
-      "identical, so the delta IS the bytes_to_unicode mapping): 1M " +
-      "docs / 96.7M tokens encode in 1.54s byte-level vs 1.56s " +
-      "char-level - the mapping is free, and byte-level token " +
-      "accounting at 100 TB stays scan-bound. " +
-      "r8 additions (recorded 2026-08-14, local[32]): the BPE merge " +
-      "loop is now INCREMENTAL (global pair-count map + pair->word " +
-      "index, per-merge deltas over only the words containing the " +
-      "chosen pair - bit-identical tables, spec-pinned): BpeDictProfile " +
-      "on the same 7.7M-type wide-unicode corpus at the 2^20 cap runs " +
-      "200 merges in 2.65s = 13 ms/merge vs the r7 recount loop's " +
-      "0.63 s/merge - 48x, so a GPT-2-scale 32k-merge vocabulary costs " +
-      "~7 min of driver loop instead of ~6 h, with the same bounded " +
-      "84.4 MB dict heap and one distributed aggregation over the text. " +
-      "r9 additions (recorded 2026-08-14, local[32]): FULL k-means at " +
-      "volume (BenchAnn, 1M hierarchically-clustered 64-dim vectors, " +
-      "nlist=64): 3 Lloyd rounds - each round 64M argmin pair rows " +
-      "through the partial-aggregable min(struct) plus a bounded " +
-      "centroid agg - complete in 9.6s including the inertia " +
-      "aggregation (1 round: 4.6s), inertia 5.75M -> 1.47M (3.9x " +
-      "tighter cells than the one-step quantizer), 56 of 64 cells " +
-      "survive; rounds-linear and row-linear, the certified x101 " +
-      "trajectory at 200x the probe's corpus. BenchCrawl re-run on " +
-      "the r9 hardened matcher (1M real gzip WARC pages, same " +
-      "protocol as r8): WARC parse 2.4s, robots decisions vs the " +
-      "1000-host rules table 4.3s (r8 regexp_like_cached route: " +
-      "5.4s - the linear glob kernel with the RFC size caps is both " +
-      "safer AND faster at volume), stripHtml+C4 11.0s, line dedup " +
-      "3.2s with the universal footer still collapsing to ONE keeper. " +
-      "r9 FULL-SUITE sf1 HONESTY RUN (147 probes, ScaleData 10x " +
-      "multi-file tables, steady-state min-of-2): total 264s vs 87.3s " +
-      "at sf0.1 = 3.0x at 10x data, strongly sublinear; the top " +
-      "growers are the documented key-shifted-copy workload families " +
-      "(contamination x16/x42/x46/x49/x35/x78/x38 at 6-16x and " +
-      "semantic dedup x29/x103 at 8-9x: duplicated texts/embeddings " +
-      "grow match PAIRS ~100x - the operator doing its job on a " +
-      "duplicate-saturated corpus; organic growth has no such " +
-      "blowup). The run also caught a REAL scale-killer, the r9 " +
-      "sibling of r8's x54 SPI find: ImageIO's default useCache=true " +
-      "backs every createImageInputStream with a FileCache stream " +
-      "that WRITES A TEMP FILE PER DECODE - pure disk churn for " +
-      "in-memory payloads, and the cost tracks tmp-filesystem state " +
-      "(it is what drifted x89 0.6s->1.9s at sf0.1 and put x68 video " +
-      "at 23.5s at sf1). ImageIO.setUseCache(false) (memory-backed " +
-      "streams, values bit-identical): x89 sf1 10.9s -> 0.68s (16x), " +
-      "x68 sf1 23.5s -> 0.78s (30x), x90 6.8s -> 3.0s; at sf0.1 x89 " +
-      "0.62s, x68 0.54s, x90 0.97s - all back at or under their r8 " +
-      "records, media specs green. Post-fix sf1 rerun of the FULL " +
-      "147-probe suite: 208.2s vs 85.4s = 2.44x at 10x data (the " +
-      "pre-fix 264s run that caught the issue carried ~56s of " +
-      "ImageIO temp-file churn); the only >5x growers left are the " +
-      "documented duplicate-blowup contamination/semantic families, " +
-      "and the r9 operators hold flat-to-sublinear (x101 k-means " +
-      "1.59s, x105 components 1.7s, x104 append-index 0.62s, x100 " +
-      "0.44s at sf1). " +
-      "r10 connected-components record (BenchDedup, 2026-08-14, 1M " +
-      "docs): the hop+jump loop (closed-neighborhood min HOP + " +
-      "pointer JUMP label(u) <- label(label(u)) each round, " +
-      "convergence folded into the checkpoint job via accumulator) " +
-      "converges the 1000 planted diameter-20 chains in 5 rounds / " +
-      "4.55s where the r6 O(diameter) loop took 21 rounds / 8.8s - " +
-      "measured log behavior, and the 50-round budget now covers " +
-      "diameter ~2^49 instead of hard-failing a 51-hop " +
-      "templated-page chain; the organic LSH shapes still converge " +
-      "in 2 rounds (15.8s over 19,998 planted pairs, all collapsed), " +
-      "and MinHashKernelSpec adds a diameter-200 chain the old loop " +
-      "would have thrown on. " +
-      "r10 BenchAnn RECALL HONESTY (supersedes the r5 'recall@10=1.0' " +
-      "claim, which predates the r8 hierarchical corpus): at 1M " +
-      "vectors the (nprobe=4, shortlist=200) defaults measure " +
-      "recall@10=0.3 - and the r9 run already did too, unnoticed. " +
-      "The binder is the ADC SHORTLIST, not cell selection: both " +
-      "quantizers (deterministic hash-init AND trained k-means cells " +
-      "via the new BenchAnn quantizer arg) score the same 0.3 at " +
-      "(4,200), because the query's ~300-vector subcluster of " +
-      "near-ties exceeds the 200-row rerank budget and int8 ADC " +
-      "cannot order near-ties. shortlist=2000 at the same nprobe=4 " +
-      "restores recall 1.0 at 1.25s warm, while the nprobe lever " +
-      "needed 32 of 64 cells (8x the partitions read) and 1.94s for " +
-      "the same 1.0. The 100 TB sizing rule this measures: grow the " +
-      "rerank shortlist with the corpus's near-tie density (it rides " +
-      "partitions already read - 1.0s -> 1.25s for 10x shortlist); " +
-      "widen nprobe only when neighbors genuinely straddle cells " +
-      "(it multiplies partitions READ). Build+write at 1M with the " +
-      "r10 staleness-stats pass folded in: 119.4s hash / 121.9s " +
-      "k-means (r9 recorded 114.5s without stats - within noise)."
-
-  // ONE JSON line per the driver contract. Key order matters beyond
-  // style: the round driver keeps only the LAST ~2000 characters of
-  // output (BENCH_r*.json "tail"), so the headline metric/value/sf
-  // go LAST in the object — the tail window then always contains
-  // them — while the long notes/queries live up front.
-  //
-  // r16 parse-fragility fix (the r15 verdict's item 8: the r14
-  // artifact stored a tail truncated MID-NOTES and the driver's
-  // JSON-line extraction got `parsed: null`, costing that round its
-  // official speedup record): the ~20 KB r1–r15 historical narrative
-  // no longer rides the STDOUT line at all. The stdout line carries
-  // this run's generated headline + the current round's notes and a
-  // pointer; the COMPLETE line (full narrative, identical queries/
-  // telemetry/value) is persisted to BENCH_SELF.json and the per-sf
-  // archive, where nothing truncates it. Queries/telemetry/metric/
-  // value are byte-identical between the two emits — only the
-  // free-text history moved off the fragile surface.
-  private def emit(results: Map[String, Double], total: Double, qs: String,
-                   warmMode: String, sfDir: String, thisRunNotes: String,
-                   historyNotes: String, volumeNotes: String,
-                   telemetry: String): Unit = {
-    // JSON-escape the free-text fields — a stray backslash or quote in
-    // builder-authored notes must not invalidate the metric line
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    def mkLine(notes: String, vol: String): String =
-      s"""{"queries":$qs,"warm":"$warmMode","notes":"${esc(notes)}","volume_notes":"${esc(vol)}",$telemetry,"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir"}"""
-    val fullLine = mkLine(thisRunNotes + historyNotes, volumeNotes)
-    val stdoutLine = mkLine(
-      thisRunNotes + notesR16 +
-        "Full r1-r15 narrative + volume notes: BENCH_SELF.json (same " +
-        "queries/telemetry/value, complete notes).",
-      "see BENCH_SELF.json")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SELF.json"), fullLine + "\n")
-    catch { case _: Exception => () }
-    // per-sf archive: a smoke run at another sf must not clobber the
-    // regression-history baseline of the scored sf
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        s"BENCH_SELF.${new java.io.File(sfDir).getName}.json"), fullLine + "\n")
-    catch { case _: Exception => () }
-    println(stdoutLine)
+  /** Print the line and persist the same bytes to BENCH_SELF.json and
+    * the per-sf archive: a smoke run at another sf must not clobber the
+    * regression-history baseline of the scored sf. */
+  private def emit(line: String, sfDir: String): Unit = {
+    Seq("BENCH_SELF.json", s"BENCH_SELF.${new java.io.File(sfDir).getName}.json")
+      .foreach { p =>
+        try Files.writeString(Paths.get(p), line + "\n")
+        catch { case NonFatal(_) => () }
+      }
+    println(line)
     System.out.flush()
   }
-
-  // r16 round notes — this round's measurements (rides BOTH the
-  // stdout line and the full artifact).
-  private lazy val notesR16 =
-    "r16 additions (recorded 2026-08-18, local[32]): the stdout JSON " +
-      "line no longer carries the r1-r15 narrative (the r14 artifact " +
-      "was tail-truncated mid-notes and parsed null, costing that " +
-      "round its speedup record); the COMPLETE line persists to " +
-      "BENCH_SELF.json with byte-identical queries/telemetry/value. " +
-      "Round work, same-session before/after at sf0.1 (min-of-2 x 2 " +
-      "passes, quiet box, zero contended/regressed both runs): " +
-      "104.3s -> 97.7s over 196 probes. x144 daily-decisions " +
-      "flagship 2.66 -> 1.42s (1.87x): the 4 marker-gated appends " +
-      "and the 5 decision branches are independent reads of frozen " +
-      "artifacts, now submitted concurrently from a daemon pool " +
-      "(plan: 34 Exchange / 23.6KB -> 2 Exchange / 1.9KB, values " +
-      "hash-identical). x70 ccnet buckets 1.86 -> 1.57s: the bounded " +
-      "per-lang threshold table materializes once instead of " +
-      "re-instantiating the 74-exchange two-phase-percentile subplan " +
-      "into the label plan (74 -> 4 Exchange). The two CORPUS-SIZED " +
-      "localCheckpoints the r15 verdict flagged (x38 filtered " +
-      "corpus, x72 normalized corpus) now materialize through " +
-      "run-scoped at-rest parquet writes (Materialize.toParquet - " +
-      "schema-pinned read-back, fresh dir per call, deleted on JVM " +
-      "exit): nothing corpus-sized in executor block storage, cost " +
-      "at sf0.1 within noise (x38 1.82->1.91s, x72 0.65->0.69s - " +
-      "two job commits). Honest negatives, measured and reverted: " +
-      "materializing the media fingerprint relations " +
-      "(x127/x128/x129/x90 - AQE exchange reuse already dedupes the " +
-      "typed decode pipelines at runtime; the 8-16 duplicated " +
-      "instances in the INITIAL plan are not evidence of " +
-      "re-execution) and the map-only bigram pairing on the trainer " +
-      "(x43 0.96->1.22s, x70 1.94->2.38s paired runs: the window's " +
-      "exchange is what parallelizes the single-row-group scan at " +
-      "sf0.1; map-only wins only when files >> cores). " +
-      "FRESH ORACLE-PROXY RATIO (same box, same session, full " +
-      "196-query manifest - first timing for the 19 r15-inherited " +
-      "probes): warm 32-thread DuckDB (tools/time_oracle.py, " +
-      "min-of-2, fetchall) 626.5s vs Spark 97.7s = 0.16x - Spark is " +
-      "6.4x FASTER than the proxy (bar <=2x; r10's 1.12-1.24x " +
-      "predates the training-trajectory mirrors: the " +
-      "x77/x81/x96/x97/x110-class oracles re-run full training as " +
-      "materialized CTE chains, and the inherited packing mirrors " +
-      "alone cost DuckDB 131.3s for 19 queries vs Spark's ~8s - " +
-      "x151 48.6s, x152 49.1s, x153 29.3s vs 0.54/0.30/0.92s). " +
-      "r16 sf1 HONESTY RUN (fresh ScaleData 10x multi-file tables, " +
-      "196 probes, single pass, zero flags): 293.7s vs 97.7s = 3.0x " +
-      "at 10x data; every r15/r16-rewritten probe sublinear (x123 " +
-      "3.2x, x121 2.6x, x38 4.7x, x72 2.3x, x58 2.7x, x94 2.4x, " +
-      "x144 2.7x, x70 1.7x); only the documented key-shifted-copy " +
-      "duplicate-blowup families exceed 5x (contamination 10-18x, " +
-      "semantic dedup 7-13x - match pairs grow ~100x, workload not " +
-      "plan). 8-vs-32-core at sf1 on the volume-bearing subset: the " +
-      "contamination family parallelizes 2.2-3.7x (x49 40.6->11.1s, " +
-      "x42 40.2->13.5s, x16 31.4->12.3s) where sf0.1 ratios sit at " +
-      "~1.0 - the single-row-group floor claim now has direct " +
-      "8-vs-32 evidence above the floor. sf10 (100x, 64-file " +
-      "tables) for the ANN/mmr/span/packing families: x58 14.4s " +
-      "(11x at 100x data), x94 12.4s (15x), x121 14.1s (12x), x123 " +
-      "57.9s (31x), x111 11.1s (23x), x112 19.4s (25x), x115 48.1s " +
-      "(41x), x118 33.2s (29x), packing 0.23-3.6s (1.1-5.5x) - all " +
-      "strongly sublinear at 100x data on a corpus carrying the " +
-      "documented 100x duplicate saturation. "
 }

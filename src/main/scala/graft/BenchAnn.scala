@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench.timed
 import graft.operators.{PqIndex, Similarity}
 
 /** ANN-at-volume benchmark: 200k deterministic 64-dim vectors through
@@ -25,16 +25,7 @@ object BenchAnn {
     val nprobe = if (args.length > 1) args(1).toInt else 4
     val shortlist = if (args.length > 2) args(2).toInt else 200
     val (dim, nlist, m, ksub) = (64, 64, 16, 16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Engine.local(Engine.envCores)
 
     // deterministic HIERARCHICAL corpus — the structure real embedding
     // spaces have and flat uniform noise does not (uniform noise in 64

@@ -3,9 +3,9 @@ package graft
 import java.io.ByteArrayOutputStream
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench.timed
 import graft.operators.{Robots, TextOps}
 import graft.sources.Warc
 
@@ -22,11 +22,7 @@ object BenchCrawl {
   def main(args: Array[String]): Unit = {
     val nPages = args.headOption.map(_.toInt).getOrElse(200000)
     val perFile = 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(Engine.envCores)
     import spark.implicits._
 
     def gzip(b: Array[Byte]): Array[Byte] = {
@@ -77,10 +73,6 @@ object BenchCrawl {
       (f, bos.toByteArray)
     }.toDF("file_id", "content").cache()
     val totalBytes = files.agg(sum(length(col("content")))).head.getLong(0)
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     val allRecs = Warc.records(files).cache()
     val (nRecords, tParse) = timed {

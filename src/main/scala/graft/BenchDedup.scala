@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench.timed
 import graft.operators.Dedup
 
 /** Dedup-at-scale benchmark: 1M synthetic documents (deterministic
@@ -13,11 +13,7 @@ import graft.operators.Dedup
 object BenchDedup {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(1000000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(Engine.envCores)
 
     // deterministic corpus: 40 words per doc from a 10k vocabulary;
     // every 50th doc is a near-copy of its predecessor (one word off)
@@ -32,10 +28,6 @@ object BenchDedup {
         when(col("id") % 50 === 1, concat(col("text"), lit(" extraword"))).otherwise(col("text")))
       .select(col("id").as("doc_id"), col("text"))
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-
     val docs = base.cache()
     val n = docs.count()
 
@@ -47,7 +39,6 @@ object BenchDedup {
         Dedup.shingles(docs, n = 3, dedupe = false), numPerm = 16)
       Dedup.lshCandidatePairs(Dedup.lshBuckets(sig, bands = 4, rowsPer = 4)).count()
     }
-    GraftExtensions.register(spark)
     val (nPairs2, tOnePass) = timed {
       val sig = Dedup.minhashSignaturesOnePass(docs, n = 3, numPerm = 16)
       Dedup.lshCandidatePairs(Dedup.lshBuckets(sig, bands = 4, rowsPer = 4)).count()

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench.timed
 import graft.impact.{GbtParams, GbtTrainer}
 
 /** Training-at-scale benchmark for the from-scratch xgboost-hist
@@ -20,11 +20,7 @@ import graft.impact.{GbtParams, GbtTrainer}
 object BenchTrain {
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toInt).getOrElse(2000000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(Engine.envCores)
 
     val nf = 10
     def corpus(n: Int) = {
@@ -47,9 +43,7 @@ object BenchTrain {
     val feats = (0 until nf).map(i => s"f$i")
 
     def run(n: Int): Double = {
-      val t0 = System.nanoTime()
-      val booster = GbtTrainer.train(corpus(n), "y", feats, p)
-      val s = (System.nanoTime() - t0) / 1e9
+      val (booster, s) = timed(GbtTrainer.train(corpus(n), "y", feats, p))
       require(booster.trees.length == p.numRound)
       s
     }
@@ -60,14 +54,10 @@ object BenchTrain {
     // per-row sigmoid in each level's gradient pass; tree shapes
     // differ under the logistic gain scale, so its wall time is
     // reported separately rather than assumed equal
-    val tCls = {
-      val t0 = System.nanoTime()
-      val b = GbtTrainer.train(
-        corpus(nRows).withColumn("y", (col("y") > 40.0).cast("double")),
-        "y", feats, p.copy(objective = "binary:logistic"))
-      require(b.trees.length == p.numRound)
-      (System.nanoTime() - t0) / 1e9
-    }
+    val (b, tCls) = timed(GbtTrainer.train(
+      corpus(nRows).withColumn("y", (col("y") > 40.0).cast("double")),
+      "y", feats, p.copy(objective = "binary:logistic")))
+    require(b.trees.length == p.numRound)
     val levels = p.numRound * (p.maxDepth + 1)
     println(s"""{"metric":"train_gbt","rows":$nRows,"features":$nf,""" +
       s""""rounds":${p.numRound},"depth":${p.maxDepth},""" +

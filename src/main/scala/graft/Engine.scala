@@ -51,6 +51,9 @@ object Engine {
       }
   }
 
+  /** Cores for the command-line mains: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(
       SparkSession.builder()

@@ -318,10 +318,17 @@ object GraftExtensions {
       Subtract(Sqrt(Greatest(Seq(d(0.0), term))), rCor) }),
   )
 
-  /** Register on an already-built session (tests, notebooks). */
-  def register(spark: SparkSession): Unit =
+  /** Register on an already-built session (tests, notebooks). Only the
+    * names the session's registry does not already hold are added, so a
+    * second call (or a session built with the extension) keeps the
+    * existing builders and logs no "replaced a previously registered
+    * function" warnings. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, arity, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => checked(name, arity, builder, exprs), "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(
+          name, exprs => checked(name, arity, builder, exprs), "scala_udf")
     }
+  }
 }

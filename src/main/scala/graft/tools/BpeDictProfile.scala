@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, GraftExtensions}
+import graft.Engine
 import graft.operators.Bpe
 
 /** Scratch profiler for Bpe.train's driver-side word-type dictionary —
@@ -28,11 +27,7 @@ object BpeDictProfile {
     val nDocs = args.headOption.map(_.toInt).getOrElse(200000)
     val cap = args.lift(1).map(_.toInt).getOrElse(1 << 20)
     val wordLen = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = Engine.configure(SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Engine.local(Engine.envCores)
 
     // 40 words/doc, each a 2-codepoint CJK pair drawn from 500×500
     // combos → up to 250k distinct types; scale nDocs to push past any

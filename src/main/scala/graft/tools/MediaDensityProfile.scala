@@ -47,10 +47,7 @@ object MediaDensityProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val which = if (args.length > 1) args(1) else "both"
-    val spark: SparkSession = Engine.configure(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = Engine.local(Engine.envCores)
 
     if (which == "audio" || which == "both") {
       val tok = graft.operators.MediaProbes.audioTokensOf(spark, sfDir)

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, GraftExtensions}
+import graft.Engine
 import graft.sources.Tables
 
 /** Scratch generator for the sf1 honesty runs: scale the driver's
@@ -28,11 +28,7 @@ object ScaleData {
     val dest = args.lift(1).getOrElse("/root/repo/target/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val files = args.lift(3).map(_.toInt).getOrElse(32)
-    val spark = Engine.configure(SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Engine.local(Engine.envCores)
 
     def offset(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1L

@@ -25,6 +25,20 @@ class ExtensionsSpec extends SparkTestBase {
     assert(math.abs(r.getAs[Double]("b") - 1.270856908796045) < 1e-9)
   }
 
+  test("register adds only missing names: no builtin is shadowed, a second call keeps the builders") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    val names = GraftExtensions.functions.map(f => FunctionIdentifier(f._1))
+    assert(names.filter(registry.functionExists).isEmpty)
+    GraftExtensions.register(session)
+    val first = names.map(n => registry.lookupFunctionBuilder(n).get)
+    GraftExtensions.register(session)
+    assert(names.forall(registry.functionExists))
+    val second = names.map(n => registry.lookupFunctionBuilder(n).get)
+    assert(first.zip(second).forall { case (a, b) => a eq b })
+  }
+
   test("SQL function arity is validated") {
     GraftExtensions.register(spark)
     val e = intercept[Exception](spark.sql("SELECT haversine_km(1.0)").collect())

@@ -3,7 +3,9 @@
 
     bench_compare.py OLD.json NEW.json
         Two Bench JSON lines (round-over-round): per-query deltas,
-        sorted by regression size.
+        sorted by regression size. A probe in either line's `failed`
+        array prints as FAILED, and differing `n_queries` get a warning:
+        a total that shrank because a probe failed is not a speed-up.
 
     bench_compare.py --runs BASE.log ... -- CHANGE.log ... [--metrics a,b]
         Outputs of `python3 perfbench/run.py` (one run per file). Runs
@@ -35,11 +37,19 @@ def compare_bench(old_path, new_path):
     old, new = load(old_path), load(new_path)
     print(f"total: {old['value']:.1f}s -> {new['value']:.1f}s "
           f"({new['value'] - old['value']:+.1f}s)")
+    if old["n_queries"] != new["n_queries"]:
+        print(f"WARNING: n_queries differ ({old['n_queries']} -> {new['n_queries']}); "
+              "the totals cover different probe sets")
     oq, nq = old["queries"], new["queries"]
+    failed = set(old.get("failed", [])) | set(new.get("failed", []))
     rows = []
-    for name in sorted(set(oq) | set(nq)):
+    for name in sorted(set(oq) | set(nq) | failed):
         a, b = oq.get(name), nq.get(name)
-        if a is None:
+        if name in failed:
+            side = " / ".join(s for s, line in (("old", old), ("new", new))
+                              if name in line.get("failed", []))
+            rows.append((0.0, f"{name:30s}  FAILED  ({side})"))
+        elif a is None:
             rows.append((0.0, f"{name:30s}    NEW   {b:6.2f}s"))
         elif b is None:
             rows.append((0.0, f"{name:30s} REMOVED  ({a:6.2f}s)"))
