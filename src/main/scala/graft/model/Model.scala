@@ -1,34 +1,5 @@
 package graft.model
 
-import java.sql.Timestamp
-
-/** Typed row models for the engine's core tables (SURVEY.md §1.1) —
-  * `Dataset[T]` views where compile-time field checks help (track
-  * processing, hazard rows); `DataFrame` stays the currency where the
-  * schema is dynamic (feature matrices, probe outputs).
-  */
-
-/** One node of one storm track member (the reference's xarray Dataset
-  * row; tc_tracks_forecast.py:296-329). */
-case class TrackPoint(
-    storm_id: String, ens_id: Int, time: Timestamp,
-    lat: Double, lon: Double,
-    max_sustained_wind: Option[Double], central_pressure: Option[Double],
-    environmental_pressure: Option[Double], radius_max_wind: Option[Double])
-
-/** One raster grid point (centr.py:289-310). */
+/** One raster grid point (centr.py:289-310) — the typed `Dataset[T]`
+  * view of a centroid row. */
 case class CentroidCell(centroid_id: Long, lat: Double, lon: Double)
-
-/** One directional wind sample (trop_cyclone.py compute_windfields
-  * output row). */
-case class WindSample(
-    storm_id: String, ens_id: Int, time: Timestamp, centroid_id: Long,
-    d_centr: Double, w_lat: Double, w_lon: Double, speed: Double)
-
-/** Per-municipality per-member hazard (windfieldDataHRS output). */
-case class MunicipalHazard(
-    storm_id: String, ens_id: Int, Mun_Code: String,
-    HAZ_dis_track_min: Double, HAZ_v_max: Double, n_cells: Long)
-
-/** One exposure payload entry (dynamicDataDb upload contract). */
-case class ExposureEntry(placeCode: String, amount: Double)

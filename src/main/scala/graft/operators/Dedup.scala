@@ -14,6 +14,17 @@ import org.apache.spark.sql.functions._
   * Hash functions are md5-prefix-derived so the same values can be
   * recomputed in any engine (for the oracle gate) and on any cluster
   * (no JVM hashCode dependence).
+  *
+  * Contamination family: every train/eval overlap entry point
+  * ([[contamination]], [[contaminationFromShingles]],
+  * [[contaminationFromShingleIndexes]], [[contaminationBloomPruned]],
+  * [[contaminationFraction]], the two removals, the shingle index and
+  * `ForecastStream.contaminationStream`) only picks its gram source —
+  * inline text, the persisted index, or a bloom-filtered scan — and
+  * shares one core: [[shingleRows]] builds the (id, h) rows,
+  * [[dropHotKeys]] is the train-side document-frequency skew guard,
+  * and [[overlapCounts]] is the equi-join on h with the pair count and
+  * the `minOverlap` threshold.
   */
 object Dedup {
 
@@ -143,14 +154,22 @@ object Dedup {
     * table — no exploded-shingle shuffle. 60-bit hashes make a
     * string-set vs hash-set count divergence ~1e-15 per document. */
   def ngramJaccardFromSets(shingleSets: DataFrame, pairs: DataFrame,
-                           idCol: String = "doc_id"): DataFrame = {
-    val a = shingleSets.select(col(idCol).as("id_a"), col("sh_hashes").as("ha"))
-    val b = shingleSets.select(col(idCol).as("id_b"), col("sh_hashes").as("hb"))
-    pairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
+                           idCol: String = "doc_id"): DataFrame =
+    pairJaccard(pairs, "id_a", shingleSets, "id_b", shingleSets, idCol)
+
+  /** (idA, idB, jaccard) for every pair in `pairs`: each side's
+    * (idCol, sh_hashes) set joined on its pair column, |A∩B| by
+    * sorted-array merge, |A∪B| = |A| + |B| − |A∩B|. */
+  private def pairJaccard(pairs: DataFrame, idA: String, setsA: DataFrame,
+                          idB: String, setsB: DataFrame,
+                          idCol: String): DataFrame = {
+    val a = setsA.select(col(idCol).as(idA), col("sh_hashes").as("ha"))
+    val b = setsB.select(col(idCol).as(idB), col("sh_hashes").as("hb"))
+    pairs.join(a, Seq(idA)).join(b, Seq(idB))
       .withColumn("n_inter", call_function("sorted_intersect_count", col("ha"), col("hb")))
       .withColumn("jaccard", col("n_inter").cast("double") /
         (size(col("ha")) + size(col("hb")) - col("n_inter")))
-      .select("id_a", "id_b", "jaccard")
+      .select(idA, idB, "jaccard")
   }
 
   /** LSH banding: split the signature into `bands` bands of `rowsPer`
@@ -170,32 +189,19 @@ object Dedup {
 
   /** Candidate near-duplicate pairs (a < b) from shared LSH buckets.
     *
-    * `maxBucket` is the SKEW GUARD (the [[contamination]] `maxShingleDf`
-    * pattern applied to buckets): a bucket with B members emits
-    * B(B−1)/2 pairs, so one band bucket full of boilerplate-identical
-    * template pages — the kind that survives *exact* dedup — turns the
-    * self-join quadratic on a single key. Buckets larger than the cap
-    * are dropped BEFORE the join: the over-cap set is tiny (at most
-    * |bucket rows| / maxBucket buckets), so it broadcasts, and the
-    * prune is a broadcast left-anti join — no extra shuffle of the
-    * bucket table. Recall cost is bounded: a genuine near-dup pair
+    * `maxBucket` is the [[dropHotKeys]] skew guard on the bucket key: a
+    * bucket with B members emits B(B−1)/2 pairs, so one band bucket
+    * full of boilerplate-identical template pages — the kind that
+    * survives *exact* dedup — turns the self-join quadratic on a
+    * single key. Recall cost is bounded: a genuine near-dup pair
     * collides independently in each of the `bands` bands, so it
     * survives unless EVERY shared bucket is over the cap — and a
     * bucket that big is template boilerplate, which the downstream
-    * exact-Jaccard verify would mostly reject anyway. Default keeps
-    * every bucket (exact semantics, no extra pass). */
+    * exact-Jaccard verify would mostly reject anyway. */
   def lshCandidatePairs(buckets: DataFrame, idCol: String = "doc_id",
                         maxBucket: Long = Long.MaxValue): DataFrame = {
-    val pruned =
-      if (maxBucket == Long.MaxValue) buckets
-      else {
-        require(maxBucket >= 2, s"maxBucket must be >= 2: $maxBucket")
-        val hot = buckets.groupBy("band_idx", "band_hash")
-          .agg(count(lit(1)).as("bucket_n"))
-          .where(col("bucket_n") > maxBucket)
-          .select("band_idx", "band_hash")
-        buckets.join(broadcast(hot), Seq("band_idx", "band_hash"), "left_anti")
-      }
+    require(maxBucket >= 2, s"maxBucket must be >= 2: $maxBucket")
+    val pruned = dropHotKeys(buckets, Seq("band_idx", "band_hash"), maxBucket)
     val l = pruned.select(col("band_idx"), col("band_hash"), col(idCol).as("id_a"))
     val r = pruned.select(col("band_idx"), col("band_hash"), col(idCol).as("id_b"))
     l.join(r, Seq("band_idx", "band_hash"))
@@ -231,17 +237,10 @@ object Dedup {
       .select(col("band_idx"), col("band_hash"), col(idCol).as("corpus_id"))
     val cands = newBuckets.join(corpusBuckets, Seq("band_idx", "band_hash"))
       .select("new_id", "corpus_id").distinct()
-    val a = shingleHashSets(newDocs, n, idCol, textCol)
-      .select(col(idCol).as("new_id"), col("sh_hashes").as("ha"))
-    val b = corpusShingleSets
-      .select(col(idCol).as("corpus_id"), col("sh_hashes").as("hb"))
-    cands.join(a, Seq("new_id")).join(b, Seq("corpus_id"))
-      .withColumn("n_inter",
-        call_function("sorted_intersect_count", col("ha"), col("hb")))
-      .withColumn("jaccard", round(col("n_inter").cast("double") /
-        (size(col("ha")) + size(col("hb")) - col("n_inter")), 6))
+    pairJaccard(cands, "new_id", shingleHashSets(newDocs, n, idCol, textCol),
+        "corpus_id", corpusShingleSets, idCol)
+      .withColumn("jaccard", round(col("jaccard"), 6))
       .where(col("jaccard") >= threshold)
-      .select("new_id", "corpus_id", "jaccard")
   }
 
   /** Exact n-gram Jaccard similarity for given candidate pairs,
@@ -264,34 +263,61 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
+  // ---- contamination core ----------------------------------------------
+
+  /** (outId, h) rows: one row per distinct 60-bit shingle hash of each
+    * document — the gram relation every contamination path joins. */
+  private[graft] def shingleRows(df: DataFrame, n: Int, idCol: String,
+                                 textCol: String, outId: String): DataFrame =
+    shingleHashSets(df, n, idCol, textCol)
+      .select(col(idCol).as(outId), explode(col("sh_hashes")).as("h"))
+
+  /** SKEW GUARD: drop every row whose `keys` value occurs in more than
+    * `cap` rows (its document frequency, when rows are distinct per
+    * (id, key)). A stopword-like shingle ("of the and"…) in df train
+    * docs and e eval docs contributes df×e join rows, so one hot key
+    * makes a single partition quadratic over a web-scale corpus;
+    * ubiquitous keys carry no signal, and pruning bounds every key's
+    * fan-out at cap×e. The hot set has at most |rows| / cap members, so
+    * it broadcasts and the prune is a broadcast LEFT ANTI join — no
+    * extra shuffle of the big side. `cap = Long.MaxValue` keeps every
+    * row without the extra pass. */
+  private def dropHotKeys(rows: DataFrame, keys: Seq[String],
+                          cap: Long): DataFrame =
+    if (cap == Long.MaxValue) rows
+    else {
+      val hot = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
+        .where(col("df") > cap).select(keys.map(col): _*)
+      rows.join(broadcast(hot), keys, "left_anti")
+    }
+
+  /** (eval_id, train_id, n_shared) for every pair sharing at least
+    * `minOverlap` hashes: the equi-join of (train_id, h) and
+    * (eval_id, h) rows on h, keyed by shingle hash, so at 100 TB an
+    * ordinary shuffle join (or map-side, when the caller hints the
+    * eval side broadcast). Rows must be distinct per (id, h), so the
+    * count is the number of shared shingles. */
+  private[graft] def overlapCounts(trainH: DataFrame, evalH: DataFrame,
+                                   minOverlap: Long): DataFrame =
+    trainH.join(evalH, Seq("h"))
+      .groupBy("eval_id", "train_id")
+      .agg(count(lit(1)).as("n_shared"))
+      .where(col("n_shared") >= minOverlap)
+
   /** Train/eval CONTAMINATION check — the benchmark-leakage scan every
     * training-data pipeline needs: all (eval doc, train doc) pairs
-    * sharing at least `minOverlap` word n-gram shingles. Built on the
-    * one-pass shingle-hash sets: explode each side to (hash, id) rows
-    * and equi-join on the 60-bit hash — the join is keyed by shingle
-    * hash, so at 100 TB it is an ordinary shuffle join.
-    *
-    * `maxShingleDf` is the SKEW GUARD: a stopword-like shingle ("of the
-    * and"…) appearing in df train docs and e eval docs contributes
-    * df×e join rows — one hot key can make a single bucket quadratic
-    * over a web-scale corpus. Shingles whose TRAIN-side document
-    * frequency exceeds the cutoff are dropped before the join (they
-    * carry no leakage signal — ubiquitous phrases are not evidence of
-    * contamination), bounding every join key's fan-out at
-    * maxShingleDf×e. The hot set has at most |train shingle rows| /
-    * cutoff members, so it broadcasts; pruning is a broadcast
-    * LEFT ANTI join, no extra shuffle of the big side. Default keeps
+    * sharing at least `minOverlap` word n-gram shingles, both sides
+    * shingled from text. `maxShingleDf` prunes shingles whose TRAIN-side
+    * document frequency exceeds it ([[dropHotKeys]]); the default keeps
     * every shingle (exact semantics). Requires GraftExtensions. */
   def contamination(train: DataFrame, eval: DataFrame, n: Int = 3,
                     minOverlap: Long = 3, idCol: String = "doc_id",
                     textCol: String = "text",
-                    maxShingleDf: Long = Long.MaxValue,
-                    broadcastEval: Boolean = true): DataFrame = {
-    val th = shingleHashSets(train, n, idCol, textCol)
-      .select(col(idCol).as("train_id"), explode(col("sh_hashes")).as("h"))
-    contaminationFromShingles(th, eval, n, minOverlap, idCol, textCol,
-      maxShingleDf, broadcastEval)
-  }
+                    maxShingleDf: Long = Long.MaxValue): DataFrame =
+    contaminationFromShingles(
+      dropHotKeys(shingleRows(train, n, idCol, textCol, "train_id"),
+        Seq("h"), maxShingleDf),
+      eval, n, minOverlap, idCol, textCol)
 
   /** FRACTIONAL-overlap contamination — the GPT-3/PaLM-style
     * decontamination rule stated as "drop a train document if ≥
@@ -308,12 +334,10 @@ object Dedup {
     * minOverlap=1 plus one broadcast join against the
     * dimension-sized per-eval-doc totals — the totals come free from
     * the shingle-set ARRAY SIZE, no extra aggregation over the
-    * corpus). Same skew guard. Requires GraftExtensions. */
+    * corpus). Requires GraftExtensions. */
   def contaminationFraction(train: DataFrame, eval: DataFrame, n: Int = 3,
                             minFrac: Double = 0.5, idCol: String = "doc_id",
-                            textCol: String = "text",
-                            maxShingleDf: Long = Long.MaxValue,
-                            broadcastEval: Boolean = true): DataFrame = {
+                            textCol: String = "text"): DataFrame = {
     require(minFrac > 0.0 && minFrac <= 1.0,
       s"minFrac must lie in (0,1]: $minFrac")
     val totals = shingleHashSets(eval, n, idCol, textCol)
@@ -321,8 +345,7 @@ object Dedup {
         size(col("sh_hashes")).cast("long").as("eval_total"))
     val frac = col("n_shared").cast("double") / col("eval_total")
     contamination(train, eval, n, minOverlap = 1L, idCol = idCol,
-        textCol = textCol, maxShingleDf = maxShingleDf,
-        broadcastEval = broadcastEval)
+        textCol = textCol)
       .join(broadcast(totals), Seq("eval_id"))
       .where(frac >= minFrac)
       .select(col("eval_id"), col("train_id"), col("n_shared"),
@@ -376,14 +399,17 @@ object Dedup {
                         expectedItems: Option[Long] = None,
                         idCol: String = "doc_id",
                         textCol: String = "text"): Array[Byte] = {
-    val rh = shingleHashSets(ref, n, idCol, textCol)
-      .select(explode(col("sh_hashes")).as("h"))
-    // duplicate insertions don't change a bloom; sizing by the
-    // non-distinct row count only buys a lower fpp
-    val items = expectedItems.getOrElse(rh.count())
-    val bloom = rh.stat.bloomFilter("h", math.max(items, 1L), fpp)
+    val rh = shingleRows(ref, n, idCol, textCol, idCol)
+    bloomBytes(rh, expectedItems.getOrElse(rh.count()), fpp)
+  }
+
+  /** Serialized Bloom filter over the `h` column of `rows`, sized for
+    * `items` insertions. Duplicate insertions don't change a bloom, so
+    * sizing by a non-distinct row count only buys a lower fpp and the
+    * build is a plain map-side aggregation with no exchange. */
+  private def bloomBytes(rows: DataFrame, items: Long, fpp: Double): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
+    rows.stat.bloomFilter("h", math.max(items, 1L), fpp).writeTo(bos)
     bos.toByteArray
   }
 
@@ -455,61 +481,31 @@ object Dedup {
     * persisted (ideally bucketed by h), and reused across every
     * benchmark scan instead of re-shingling the corpus per scan. Same
     * semantics as `contamination`; the streaming twin
-    * (ForecastStream.contaminationStream) takes the same input. */
+    * (ForecastStream.contaminationStream) takes the same input.
+    *
+    * The eval side is dimension-sized by contract (benchmark sets), but
+    * Spark cannot SEE that through the kernel+explode (unknown size
+    * estimate → sort-merge join, shuffling the ENTIRE train shingle
+    * relation), so it is hinted broadcast: train shingles never
+    * shuffle, and the only exchange left is the pair aggregation. For
+    * an eval set too big to broadcast use [[contaminationBloomPruned]]
+    * or [[contaminationFromShingleIndexes]]. */
   def contaminationFromShingles(trainShingles: DataFrame, eval: DataFrame,
                                 n: Int = 3, minOverlap: Long = 3,
                                 idCol: String = "doc_id",
-                                textCol: String = "text",
-                                maxShingleDf: Long = Long.MaxValue,
-                                broadcastEval: Boolean = true): DataFrame = {
-    // the shingle table is distinct per (train_id, h), so count(1)
-    // per hash = document frequency on the train side.
-    val thKept =
-      if (maxShingleDf == Long.MaxValue) trainShingles
-      else {
-        val hot = trainShingles.groupBy("h").agg(count(lit(1)).as("df"))
-          .where(col("df") > maxShingleDf).select("h")
-        trainShingles.join(broadcast(hot), Seq("h"), "left_anti")
-      }
-    val eh = shingleHashSets(eval, n, idCol, textCol)
-      .select(col(idCol).as("eval_id"), explode(col("sh_hashes")).as("h"))
-    // the eval side is dimension-sized by contract (benchmark sets),
-    // but Spark cannot SEE that through the kernel+explode (unknown
-    // size estimate → sort-merge join, shuffling the ENTIRE train
-    // shingle relation). The explicit broadcast makes the join
-    // map-side: train shingles never shuffle, and the only exchange
-    // left is the (matched-rows-only) pair aggregation. Disable for
-    // an eval set too big to broadcast — or use
-    // [[contaminationBloomPruned]], which is built for that regime.
-    val joined =
-      if (broadcastEval) thKept.join(broadcast(eh), Seq("h"))
-      else eh.join(thKept, Seq("h"))
-    joined
-      .groupBy("eval_id", "train_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minOverlap)
-  }
+                                textCol: String = "text"): DataFrame =
+    overlapCounts(trainShingles,
+      broadcast(shingleRows(eval, n, idCol, textCol, "eval_id")), minOverlap)
 
   /** DECONTAMINATE: the removal step over the detection scan — drop
     * every train document sharing at least `minOverlap` shingles with
-    * any eval/benchmark document, returning the cleaned corpus. The
-    * hit list is contamination-sized (tiny against a clean corpus), so
-    * the final anti-join broadcasts; all scale properties are
-    * [[contamination]]'s. */
+    * any eval/benchmark document, returning the cleaned corpus.
+    * [[decontaminateFromShingles]] over train's own shingle rows. */
   def decontaminate(train: DataFrame, eval: DataFrame, n: Int = 3,
                     minOverlap: Long = 3, idCol: String = "doc_id",
-                    textCol: String = "text",
-                    maxShingleDf: Long = Long.MaxValue): DataFrame = {
-    val hits = contamination(train, eval, n, minOverlap, idCol, textCol,
-        maxShingleDf)
-      .select(col("train_id").as(idCol)).distinct()
-    // no broadcast hint: the hit list is contamination-sized against a
-    // clean corpus, but a pathological eval overlap makes it
-    // corpus-sized — AQE sees the runtime size and picks broadcast
-    // exactly when it actually fits (an unconditional hint would OOM
-    // the driver on the pathological case)
-    train.join(hits, Seq(idCol), "left_anti")
-  }
+                    textCol: String = "text"): DataFrame =
+    decontaminateFromShingles(shingleRows(train, n, idCol, textCol, "train_id"),
+      train, eval, n, minOverlap, idCol, textCol)
 
   /** SPAN-level decontamination: excise every k-token span of a train
     * document that appears verbatim (case-insensitive per token) in
@@ -591,12 +587,15 @@ object Dedup {
                                 eval: DataFrame, n: Int = 3,
                                 minOverlap: Long = 3,
                                 idCol: String = "doc_id",
-                                textCol: String = "text",
-                                maxShingleDf: Long = Long.MaxValue): DataFrame = {
+                                textCol: String = "text"): DataFrame = {
     val hits = contaminationFromShingles(trainShingles, eval, n, minOverlap,
-        idCol, textCol, maxShingleDf)
+        idCol, textCol)
       .select(col("train_id").as(idCol)).distinct()
-    // AQE sizes the anti-join at runtime (see decontaminate)
+    // no broadcast hint: the hit list is contamination-sized against a
+    // clean corpus, but a pathological eval overlap makes it
+    // corpus-sized — AQE sees the runtime size and picks broadcast
+    // exactly when it actually fits (an unconditional hint would OOM
+    // the driver on the pathological case)
     train.join(hits, Seq(idCol), "left_anti")
   }
 
@@ -621,8 +620,7 @@ object Dedup {
       s"invalid table identifier: $table")
     val spark = train.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    shingleHashSets(train, n, idCol, textCol)
-      .select(col(idCol).as(outIdCol), explode(col("sh_hashes")).as("h"))
+    shingleRows(train, n, idCol, textCol, outIdCol)
       .write.format("parquet").option("path", path)
       .bucketBy(buckets, "h")
       .mode("overwrite").saveAsTable(table)
@@ -698,8 +696,7 @@ object Dedup {
     def fsOf(p: org.apache.hadoop.fs.Path) =
       p.getFileSystem(spark.sessionState.newHadoopConf())
     if (marker.exists(m => fsOf(m).exists(m))) return
-    shingleHashSets(batch, n, idCol, textCol)
-      .select(col(idCol).as(outIdCol), explode(col("sh_hashes")).as("h"))
+    shingleRows(batch, n, idCol, textCol, outIdCol)
       .write.format("parquet")
       .bucketBy(spec.numBuckets, "h")
       .mode("append").saveAsTable(table)
@@ -781,20 +778,8 @@ object Dedup {
     * eval shingling too. Same semantics as [[contamination]]. */
   def contaminationFromShingleIndexes(trainShingles: DataFrame,
                                       evalShingles: DataFrame,
-                                      minOverlap: Long = 3,
-                                      maxShingleDf: Long = Long.MaxValue): DataFrame = {
-    val thKept =
-      if (maxShingleDf == Long.MaxValue) trainShingles
-      else {
-        val hot = trainShingles.groupBy("h").agg(count(lit(1)).as("df"))
-          .where(col("df") > maxShingleDf).select("h")
-        trainShingles.join(broadcast(hot), Seq("h"), "left_anti")
-      }
-    evalShingles.join(thKept, Seq("h"))
-      .groupBy("eval_id", "train_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minOverlap)
-  }
+                                      minOverlap: Long = 3): DataFrame =
+    overlapCounts(trainShingles, evalShingles, minOverlap)
 
   /** The persisted shingle index as a DataFrame (bucket metadata
     * intact — reads must go through the catalog, not the path, for
@@ -825,26 +810,11 @@ object Dedup {
     // and the count over the checkpointed partitions is near-free.
     // The eval side is dimension-sized by contract, so the
     // materialized rows are small.
-    val eh = shingleHashSets(eval, n, idCol, textCol)
-      .select(col(idCol).as("eval_id"), explode(col("sh_hashes")).as("h"))
-      .localCheckpoint()
-    // no distinct() before the build: duplicate insertions don't
-    // change a bloom, and sizing by the row count (an overestimate of
-    // the distinct count) only buys a LOWER false-positive rate — so
-    // the build is a plain map-side aggregation with no exchange.
-    val bloom = eh.stat.bloomFilter("h", math.max(eh.count(), 1L), fpp)
-    val bytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      bos.toByteArray
-    }
-    val th = shingleHashSets(train, n, idCol, textCol)
-      .select(col(idCol).as("train_id"), explode(col("sh_hashes")).as("h"))
+    val eh = shingleRows(eval, n, idCol, textCol, "eval_id").localCheckpoint()
+    val bytes = bloomBytes(eh, eh.count(), fpp)
+    val th = shingleRows(train, n, idCol, textCol, "train_id")
       .where(call_function("bloom_might_contain", lit(bytes), col("h")))
-    eh.join(th, Seq("h"))
-      .groupBy("eval_id", "train_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minOverlap)
+    overlapCounts(th, eh, minOverlap)
   }
 
   /** Dedup DECISION: collapse near-duplicate pairs into groups via
@@ -1029,10 +999,6 @@ object Dedup {
         (0 until bits).map(i => when(col(s"s_$i") > 0, 1L << i).otherwise(0L))
           .reduce(_ + _).as("simhash"))
   }
-
-  /** Hamming distance between two simhash values. */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   // ---- embedding near-dup ----------------------------------------------
 

@@ -14,19 +14,19 @@ object ExtensionProbes {
 
   private val P = Dedup.MinhashPrime
 
-  /** Build (or reuse) the persisted train-side shingle index for the
-    * even-id half of `documents` — shared by x42 (detection) and x46
-    * (removal): the corpus is shingled ONCE per session+corpus and
-    * every contamination-family pass joins the same bucketed table.
-    * Keyed by the sf dir AND the x41-style corpus fingerprint
-    * (count + id sum) so regenerated testdata never serves a stale
-    * index. Returns the catalog table name. */
+  /** Build (or reuse) the persisted shingle index of one side of
+    * `documents` — shared by x42 (detection), x46 (removal) and x49
+    * (both sides at rest): the corpus is shingled ONCE per
+    * session+corpus and every contamination-family pass joins the same
+    * bucketed table. Keyed by the sf dir AND the x41-style corpus
+    * fingerprint (`rows` + `idSum`) so regenerated testdata never
+    * serves a stale index. Returns the catalog table name. */
   private def shingleIndexTable(s: org.apache.spark.sql.SparkSession,
-                                d: String,
+                                d: String, side: String, rows: Long,
+                                idSum: Long,
                                 docs: org.apache.spark.sql.DataFrame,
-                                side: String, outIdCol: String): String = {
-    val fp = docs.agg(count(lit(1)), sum(col("doc_id"))).collect()(0)
-    val tag = s"${d.replaceAll("[^A-Za-z0-9]", "_")}_${fp.getLong(0)}_${fp.getLong(1)}"
+                                outIdCol: String): String = {
+    val tag = s"${d.replaceAll("[^A-Za-z0-9]", "_")}_${rows}_$idSum"
     val table = s"graft_x42_${side}_shingles_$tag"
     val dir =
       s"${System.getProperty("java.io.tmpdir")}/graft_x42_shingle_index_${side}_$tag"
@@ -38,13 +38,13 @@ object ExtensionProbes {
 
   private def trainShingleTable(s: org.apache.spark.sql.SparkSession,
                                 d: String,
-                                train: org.apache.spark.sql.DataFrame): String =
-    shingleIndexTable(s, d, train, "train", "train_id")
+                                train: org.apache.spark.sql.DataFrame): String = {
+    val fp = train.agg(count(lit(1)), sum(col("doc_id"))).collect()(0)
+    shingleIndexTable(s, d, "train", fp.getLong(0), fp.getLong(1), train, "train_id")
+  }
 
   /** Both contamination index tables (train + eval) with their
-    * staleness fingerprints computed in ONE pass over the corpus —
-    * the per-side tags (and thus table names) are identical to what
-    * [[shingleIndexTable]] derives for each half. */
+    * staleness fingerprints computed in ONE pass over the corpus. */
   private def contaminationIndexTables(s: org.apache.spark.sql.SparkSession,
                                        d: String,
                                        docs: org.apache.spark.sql.DataFrame,
@@ -56,20 +56,8 @@ object ExtensionProbes {
       sum(when(even, col("doc_id")).otherwise(0L)),
       sum(when(!even, 1L).otherwise(0L)),
       sum(when(!even, col("doc_id")).otherwise(0L))).collect()(0)
-    val dTag = d.replaceAll("[^A-Za-z0-9]", "_")
-    def ensure(side: String, n0: Long, s0: Long,
-               src: org.apache.spark.sql.DataFrame, outIdCol: String): String = {
-      val tag = s"${dTag}_${n0}_$s0"
-      val table = s"graft_x42_${side}_shingles_$tag"
-      val dir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_x42_shingle_index_${side}_$tag"
-      if (!s.catalog.tableExists(table))
-        Dedup.writeShingleIndex(src, dir, table = table, n = 3,
-          outIdCol = outIdCol)
-      table
-    }
-    (ensure("train", fp.getLong(0), fp.getLong(1), train, "train_id"),
-      ensure("eval", fp.getLong(2), fp.getLong(3), eval, "eval_id"))
+    (shingleIndexTable(s, d, "train", fp.getLong(0), fp.getLong(1), train, "train_id"),
+      shingleIndexTable(s, d, "eval", fp.getLong(2), fp.getLong(3), eval, "eval_id"))
   }
 
   // SQL fragment: shingle rows (doc_id, shingle) for word 3-grams,

@@ -59,10 +59,6 @@ object Landfall {
         min(when(col("dist_to_land_km") === col("min_dist"), col("time"))).over(byStorm))
       .withColumn("closest_to_land", col("time") === col("closest_time"))
 
-    val rawHours = (unix_timestamp(coalesce(col("first_land_time"), col("closest_time"))) -
-      unix_timestamp(lit(forecastTime))) / 3600
-    val hours0 = floor(rawHours).cast("int") - LatencyCorrectionH
-
     val state = annotated0
       .groupBy("storm_id")
       .agg(

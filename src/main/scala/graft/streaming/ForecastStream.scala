@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.operators.Dedup
+
 /** Streaming/incremental semantics (SURVEY.md §2.11).
   *
   * The reference is micro-batch by cron (4×/day): each cycle lands new
@@ -91,21 +93,17 @@ object ForecastStream {
     * stream-static equi-join on the 60-bit hash (no state store — the
     * static side is just a table, re-broadcast or shuffled per
     * micro-batch), then a count aggregation (state = one counter per
-    * surviving (eval, train) pair). Run in update/complete mode.
-    * `trainShingles` must be (train_id, h) — e.g. the exploded
-    * `Dedup.shingleHashSets` output, optionally df-pruned. Requires
+    * surviving (eval, train) pair) — the batch core's
+    * `Dedup.overlapCounts` over the stream's `Dedup.shingleRows`. Run in
+    * update/complete mode. `trainShingles` must be (train_id, h) — e.g.
+    * a persisted `Dedup.writeShingleIndex` table. Requires
     * GraftExtensions. */
   def contaminationStream(evalDocs: DataFrame, trainShingles: DataFrame,
                           n: Int = 3, minOverlap: Long = 3,
                           idCol: String = "doc_id",
                           textCol: String = "text"): DataFrame =
-    evalDocs
-      .select(col(idCol).as("eval_id"),
-        explode(call_function("shingle_hashes", col(textCol), lit(n))).as("h"))
-      .join(trainShingles, Seq("h"))
-      .groupBy("eval_id", "train_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minOverlap)
+    Dedup.overlapCounts(trainShingles,
+      Dedup.shingleRows(evalDocs, n, idCol, textCol, "eval_id"), minOverlap)
 
   def windowedRainfall(cube: DataFrame, hours: Int,
                        watermark: String = "12 hours"): DataFrame =
