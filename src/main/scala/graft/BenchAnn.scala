@@ -70,9 +70,8 @@ object BenchAnn {
     // layout, same reader. Running both at the same nVecs/nprobe
     // measures what the trained quantizer buys in recall-per-probe.
     val quantizer = if (args.length > 3) args(3) else "hash"
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_bench_ann_${quantizer}_$tag"
-    val (_, tBuild) = timed {
-      graft.operators.IndexCache.ensureBuilt(dir) {
+    val (dir, tBuild) = timed {
+      graft.operators.IndexCache.built(s"bench_ann_${quantizer}_$tag") { dir =>
         if (quantizer == "kmeans")
           PqIndex.writeIndexKMeans(embs, dir, nlist = nlist, m = m,
             ksub = ksub, dim = dim)

@@ -22,10 +22,9 @@ object CleaningProbes {
     val fp = signals.agg(count(lit(1)), sum(col("doc_id"))).collect()(0)
     val tag = s"${d.replaceAll("[^A-Za-z0-9]", "_")}_${fp.getLong(0)}_${fp.getLong(1)}"
     val table = s"graft_x98_clean_$tag"
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_x98_artifact_$tag"
     if (!s.catalog.tableExists(table))
-      CorpusArtifact.write(signals, dir, table, nShards = 8)
+      CorpusArtifact.write(signals, IndexCache.dir(s"x98_artifact_$tag"),
+        table, nShards = 8)
     table
   }
 

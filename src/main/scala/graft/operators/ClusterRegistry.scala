@@ -232,25 +232,18 @@ object ClusterRegistry {
     * layout preserved), then the alias dir collapses to empty. Crash
     * between the two swaps is safe: resolving already-resolved labels
     * through the stale aliases is a no-op (the old labels no longer
-    * appear on any row). */
+    * appear on any row). Both swaps go through [[Compaction]], so a
+    * crashed ingest's staging refuses the compaction before any label
+    * is rewritten. */
   def compact(spark: SparkSession, path: String): Unit = {
-    val resolved = spark.read.parquet(s"$path/labels")
-      .join(broadcast(resolvedAliases(spark, path)),
-        col("label") === col("old_label"), "left")
-      .select(col("id"),
-        coalesce(col("new_label"), col("label")).as("label"),
-        col("lb"))
-    val target = new org.apache.hadoop.fs.Path(s"$path/labels")
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/labels__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$path/labels__compact_old")
-    require(!fs.exists(old),
-      s"$old left by an interrupted compaction — rename it back over " +
-        s"$target (or delete it if the labels are intact) first")
-    fs.delete(tmp, true)
-    resolved.repartition(col("lb"))
-      .write.partitionBy("lb").mode("overwrite").parquet(tmp.toString)
-    Compaction.swapInto(fs, target, tmp, old)
+    Compaction.compactPartitionedValueDir(spark, s"$path/labels", Seq("lb")) {
+      spark.read.parquet(s"$path/labels")
+        .join(broadcast(resolvedAliases(spark, path)),
+          col("label") === col("old_label"), "left")
+        .select(col("id"),
+          coalesce(col("new_label"), col("label")).as("label"),
+          col("lb"))
+    }
     Compaction.compactValueDir(spark, s"$path/aliases")(
       emptyAliases(spark))
   }

@@ -4,26 +4,38 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Small-file compaction for the append-mode at-rest artifacts.
+/** The one commit path for every at-rest artifact: marked batch
+  * appends ([[appendWithMarker]]) and compact-and-swap ([[swap]] and
+  * its thin forms [[compactValueDir]], [[compactPartitionedValueDir]],
+  * [[compactPartitionedDir]]). No other code knows the staging, marker
+  * or swap names. The families on it:
+  *   - sketches: Count-Min cells, Misra-Gries summaries, histogram bins
+  *     (flat and grouped), HLL registers, bottom-k and stratified
+  *     samples, keyed rollups;
+  *   - indexes: int8 IVF codes, IVF-PQ vectors+codes, BM25
+  *     postings+stats, constellation tokens+stats, the bucketed shingle
+  *     index (`Dedup.appendToShingleIndex` / `compactShingleIndex`);
+  *   - corpus state: the cleaned-corpus artifact (`CorpusArtifact`),
+  *     the cluster registry (`ClusterRegistry`), the packed-stream
+  *     ledger and the version manifest.
   *
-  * Every O(batch) incremental append (int8 IVF codes, IVF-PQ
-  * vectors+codes, the cleaned-corpus artifact, the bucketed shingle
-  * index) lands the batch as ADDITIONAL files next to the existing
-  * ones — the right ingest-time trade (the existing corpus is never
-  * read), but after thousands of micro-batches each partition
-  * directory holds thousands of tiny parquet files, and at 100 TB the
-  * scan's file-listing + per-file open overhead starts to dominate the
-  * very partition pruning the layout exists for. Compaction is the
-  * LSM-style maintenance pass that pays one keyed rewrite to restore
-  * few-large-files reads: VALUE-PRESERVING (rows are read as-is and
-  * rewritten — centroids, codebooks, quantized codes, curation
-  * decisions and shard hashes are never recomputed, so queries are
-  * bit-identical before/after), layout-preserving (the same partition
-  * directories come back, so `PartitionFilters` pruning and catalog
-  * partition registrations survive), and O(artifact) with exactly one
-  * shuffle keyed on the partition columns — each reducer holds whole
-  * partition values, so every directory ends up with one file (plus
-  * `maxRecordsPerFile` re-splits for jumbo cells).
+  * Every O(batch) incremental append lands the batch as ADDITIONAL
+  * files next to the existing ones — the right ingest-time trade (the
+  * existing corpus is never read), but after thousands of
+  * micro-batches each partition directory holds thousands of tiny
+  * parquet files, and at 100 TB the scan's file-listing + per-file
+  * open overhead starts to dominate the very partition pruning the
+  * layout exists for. Compaction is the LSM-style maintenance pass
+  * that pays one keyed rewrite to restore few-large-files reads:
+  * VALUE-PRESERVING (rows are read as-is and rewritten — centroids,
+  * codebooks, quantized codes, curation decisions and shard hashes
+  * are never recomputed, so queries are bit-identical before/after),
+  * layout-preserving (the same partition directories come back, so
+  * `PartitionFilters` pruning and catalog partition registrations
+  * survive), and O(artifact) with exactly one shuffle keyed on the
+  * partition columns — each reducer holds whole partition values, so
+  * every directory ends up with one file (plus `maxRecordsPerFile`
+  * re-splits for jumbo cells).
   *
   * Crash stance: the rewrite lands in a `__compact_tmp` sibling and is
   * swapped in with two renames, so the artifact is never truncated
@@ -37,7 +49,7 @@ import org.apache.spark.sql.functions._
   * the swap, so marker-gated replay semantics survive compaction.
   *
   * Concurrency stance: compaction and appends on one artifact must be
-  * mutually excluded. Both compact helpers REFUSE loudly when a marked
+  * mutually excluded. Every compaction REFUSES loudly when a marked
   * `_append_<id>_staging` directory exists at the compacted directory
   * or its parent (the artifact root) — folding a crashed marked
   * append's partially-moved `ap-<id>__` files into unprefixed part
@@ -110,9 +122,8 @@ object Compaction {
   }
 
   /** Marker-gated, CRASH-ATOMIC batch append — the one shared commit
-    * protocol behind every at-rest artifact family (Count-Min cells,
-    * Misra-Gries summaries, histogram bins, HLL registers, BM25
-    * postings+stats, constellation tokens+stats). `stage(stagingDir)`
+    * protocol behind every at-rest artifact family (see the object
+    * Scaladoc). `stage(stagingDir)`
     * writes the batch's output under `stagingDir` mirroring the
     * artifact layout (e.g. `$staging/cells`, `$staging/postings` with
     * the same partitionBy); the helper then moves every staged data
@@ -202,30 +213,11 @@ object Compaction {
 
   /** Compact-and-swap for a FLAT (unpartitioned) artifact directory:
     * rewrite `dir` as `rewrite`'s rows (the artifact's value-merge —
-    * summed cells, max-merged registers, re-pruned summaries), staged
-    * in a `__compact_tmp` sibling and swapped in with the two-rename
-    * protocol ([[swapInto]]); `__compact_old` left by an interrupted
-    * earlier run is refused loudly, as is a marked append's
-    * in-flight/crashed staging directory (see the object Scaladoc's
-    * concurrency stance). The partitioned analogue is
-    * [[compactPartitionedDir]]. */
+    * summed cells, max-merged registers, re-pruned summaries) through
+    * [[swap]]. The partitioned analogue is [[compactPartitionedDir]]. */
   def compactValueDir(spark: SparkSession, dir: String)
-                     (rewrite: => DataFrame): Unit = {
-    val target0 = new Path(dir)
-    val fs = target0.getFileSystem(spark.sessionState.newHadoopConf())
-    val target = fs.makeQualified(target0)
-    require(fs.exists(target), s"no artifact directory at $dir")
-    warnIfNonAtomicRename(target)
-    checkNoInFlightAppends(fs, target)
-    val tmp = new Path(dir + "__compact_tmp")
-    val old = new Path(dir + "__compact_old")
-    require(!fs.exists(old),
-      s"$old left by an interrupted compaction — rename it back over " +
-        s"$dir (or delete it if $dir is intact) before compacting again")
-    fs.delete(tmp, true)
-    rewrite.write.mode("overwrite").parquet(tmp.toString)
-    swapInto(fs, target, tmp, old)
-  }
+                     (rewrite: => DataFrame): Unit =
+    swap(spark, dir)(tmp => rewrite.write.mode("overwrite").parquet(tmp))
 
   /** Rewrite the partitioned parquet directory `dir` with identical
     * rows in one file per partition directory (re-split at
@@ -248,30 +240,43 @@ object Compaction {
                                  maxRecordsPerFile: Long = 0L)
                                 (rewrite: => DataFrame): Unit = {
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
+    swap(spark, dir) { tmp =>
+      val data = rewrite
+      val missing = partitionCols.filterNot(data.columns.contains)
+      require(missing.isEmpty,
+        s"$dir has no partition column(s) ${missing.mkString(", ")} — " +
+          s"columns: ${data.columns.mkString(", ")}")
+      // ONE shuffle keyed on the partition columns: a reducer holds
+      // whole partition values, so each directory is rewritten as one file
+      val writer = data.repartition(partitionCols.map(col): _*)
+        .write.partitionBy(partitionCols: _*).mode("overwrite")
+      (if (maxRecordsPerFile > 0L)
+         writer.option("maxRecordsPerFile", maxRecordsPerFile)
+       else writer).parquet(tmp)
+    }
+  }
+
+  /** The one compact-and-swap protocol: `write(tmp)` lands the full
+    * rewrite of `dir` in its `__compact_tmp` sibling, which is then
+    * swapped in with two renames ([[swapInto]]). Refuses a leftover
+    * `__compact_old` from an interrupted earlier swap and a marked
+    * append's in-flight/crashed staging directory (see the object
+    * Scaladoc); a half-written tmp from a crashed rewrite is dropped. */
+  private[operators] def swap(spark: SparkSession, dir: String)
+                             (write: String => Unit): Unit = {
     val target0 = new Path(dir)
     val fs = target0.getFileSystem(spark.sessionState.newHadoopConf())
     val target = fs.makeQualified(target0)
     require(fs.exists(target), s"no artifact directory at $dir")
     warnIfNonAtomicRename(target)
     checkNoInFlightAppends(fs, target)
-    val tmp = new Path(dir + "__compact_tmp")
-    val old = new Path(dir + "__compact_old")
+    val tmp = new Path(target.toString + "__compact_tmp")
+    val old = new Path(target.toString + "__compact_old")
     require(!fs.exists(old),
       s"$old left by an interrupted compaction — rename it back over " +
         s"$dir (or delete it if $dir is intact) before compacting again")
-    fs.delete(tmp, true) // a half-written tmp from a crashed REWRITE is safe to drop
-    val data = rewrite
-    val missing = partitionCols.filterNot(data.columns.contains)
-    require(missing.isEmpty,
-      s"$dir has no partition column(s) ${missing.mkString(", ")} — " +
-        s"columns: ${data.columns.mkString(", ")}")
-    // ONE shuffle keyed on the partition columns: a reducer holds whole
-    // partition values, so each directory is rewritten as one file
-    val writer = data.repartition(partitionCols.map(col): _*)
-      .write.partitionBy(partitionCols: _*).mode("overwrite")
-    (if (maxRecordsPerFile > 0L)
-       writer.option("maxRecordsPerFile", maxRecordsPerFile)
-     else writer).parquet(tmp.toString)
+    fs.delete(tmp, true)
+    write(tmp.toString)
     swapInto(fs, target, tmp, old)
   }
 
@@ -281,7 +286,7 @@ object Compaction {
     * `_graft_nshards`) are carried across (files the rewrite already
     * produced, e.g. `_SUCCESS`, win). Callers must have pre-checked
     * that `old` does not exist. */
-  private[operators] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
+  private def swapInto(fs: org.apache.hadoop.fs.FileSystem,
                                   target: Path, tmp: Path, old: Path): Unit = {
     require(fs.rename(target, old), s"could not move $target aside to $old")
     require(fs.rename(tmp, target),

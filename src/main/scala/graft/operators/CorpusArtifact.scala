@@ -21,19 +21,6 @@ object CorpusArtifact {
     conv(substring(md5(concat(lit("shard_"), id.cast("string"))), 1, 7), 16, 10)
       .cast("long") % nShards
 
-  /** Hadoop-FS marker helpers — markers must live on the SAME
-    * filesystem as the artifact (a java.nio local path silently never
-    * engages for hdfs://s3a:// artifacts), and the marker name is
-    * sanitized so a hostile batch id cannot escape the artifact dir. */
-  private def markerPath(spark: SparkSession, path: String,
-                         mk: String): org.apache.hadoop.fs.Path = {
-    require(mk.matches("[A-Za-z0-9._-]+"), s"invalid marker id: $mk")
-    new org.apache.hadoop.fs.Path(path, s"_append_${mk}_ok")
-  }
-  private def fsOf(spark: SparkSession,
-                   p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private val NShardsFile = "_graft_nshards"
 
   /** Write the artifact: all input columns + `shard`, partitioned by
@@ -54,7 +41,7 @@ object CorpusArtifact {
       .partitionBy(keepCol, "shard")
       .mode("overwrite").saveAsTable(table)
     val meta = new org.apache.hadoop.fs.Path(path, NShardsFile)
-    val fs = fsOf(spark, meta)
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(meta, true)
     try out.write(nShards.toString.getBytes("UTF-8")) finally out.close()
   }
@@ -74,13 +61,15 @@ object CorpusArtifact {
     * partition discovery re-lists the whole artifact on every
     * micro-batch.
     *
-    * Replay semantics (stated honestly): with `doneMarker` (e.g. the
-    * micro-batch id) a replay AFTER the marker landed is a no-op; a
-    * crash in the window between the data commit and the marker write
-    * can still duplicate that one batch — the classic
-    * non-transactional-sink gap. Readers that cannot tolerate it
-    * dedup by id downstream (one exact-dedup groupBy — the documents
-    * are keyed). */
+    * Commit: the batch is staged and moved into place by
+    * [[Compaction.appendWithMarker]], and its partitions are
+    * registered inside the stage, so the replay marker still lands
+    * last (`ADD IF NOT EXISTS` is idempotent, and a registered
+    * partition with no files yet reads as zero rows). With
+    * `doneMarker` (e.g. the micro-batch id) a replay after the marker
+    * landed is a no-op, and a retry after a crash mid-commit first
+    * sweeps the files that crash already moved, so each marked batch
+    * lands exactly once. */
   def append(docs: DataFrame, path: String, table: String,
              keepCol: String = "keep", idCol: String = "doc_id",
              doneMarker: Option[String] = None): Unit = {
@@ -89,49 +78,48 @@ object CorpusArtifact {
     require(keepCol.matches("[A-Za-z0-9_]+"),
       s"invalid partition column identifier: $keepCol")
     val spark = docs.sparkSession
-    val marker = doneMarker.map(markerPath(spark, path, _))
-    if (marker.exists(m => fsOf(spark, m).exists(m))) return
-    val meta = new org.apache.hadoop.fs.Path(path, NShardsFile)
-    val metaFs = fsOf(spark, meta)
-    require(metaFs.exists(meta),
-      s"no $NShardsFile at $path — append targets an artifact written " +
-        "by CorpusArtifact.write")
-    val nShards = {
-      val in = metaFs.open(meta)
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8").trim.toInt
-      finally in.close()
-    }
-    val withShard = docs.withColumn("shard", shardOf(col(idCol), nShards))
-    // the batch's partition set, collected BEFORE the data write:
-    // bounded (≤ 2·nShards values × decisions), and a null decision
-    // fails HERE — before anything commits — because ALTER TABLE ADD
-    // PARTITION cannot express the null (__HIVE_DEFAULT_PARTITION__)
-    // spec, so a null row would land data that never registers and
-    // leave the batch half-committed
-    val parts = withShard
-      .select(col(keepCol).cast("string"), col("shard").cast("string"))
-      .distinct().collect()
-    require(parts.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
-      s"append batch contains null $keepCol or null $idCol (→ null " +
-        "shard) values — nulls are not registrable partitions; filter " +
-        "or default them before appending")
-    withShard.write.format("parquet")
-      .partitionBy(keepCol, "shard")
-      .mode("append").save(path)
-    // register only the batch's partitions — bounded, O(batch)
-    // partition VALUES are data-derived (a non-boolean keep column is
-    // arbitrary text) — escape single quotes so a value can't break
-    // out of the literal or inject into the ALTER statement
-    def q(v: String): String =
-      "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    parts.foreach { r =>
-      spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS PARTITION " +
-        s"($keepCol=${q(r.getString(0))}, shard=${q(r.getString(1))})")
+    Compaction.appendWithMarker(spark, path, doneMarker) { staging =>
+      val meta = new org.apache.hadoop.fs.Path(path, NShardsFile)
+      val metaFs = meta.getFileSystem(spark.sessionState.newHadoopConf())
+      require(metaFs.exists(meta),
+        s"no $NShardsFile at $path — append targets an artifact written " +
+          "by CorpusArtifact.write")
+      val nShards = {
+        val in = metaFs.open(meta)
+        try new String(
+          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+          "UTF-8").trim.toInt
+        finally in.close()
+      }
+      val withShard = docs.withColumn("shard", shardOf(col(idCol), nShards))
+      // the batch's partition set, collected BEFORE the data write:
+      // bounded (≤ 2·nShards values × decisions), and a null decision
+      // fails HERE — before anything commits — because ALTER TABLE ADD
+      // PARTITION cannot express the null (__HIVE_DEFAULT_PARTITION__)
+      // spec, so a null row would land data that never registers and
+      // leave the batch half-committed
+      val parts = withShard
+        .select(col(keepCol).cast("string"), col("shard").cast("string"))
+        .distinct().collect()
+      require(parts.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+        s"append batch contains null $keepCol or null $idCol (→ null " +
+          "shard) values — nulls are not registrable partitions; filter " +
+          "or default them before appending")
+      withShard.write.format("parquet")
+        .partitionBy(keepCol, "shard")
+        .mode("overwrite").save(staging)
+      // register only the batch's partitions — bounded, O(batch)
+      // partition VALUES are data-derived (a non-boolean keep column is
+      // arbitrary text) — escape single quotes so a value can't break
+      // out of the literal or inject into the ALTER statement
+      def q(v: String): String =
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+      parts.foreach { r =>
+        spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS PARTITION " +
+          s"($keepCol=${q(r.getString(0))}, shard=${q(r.getString(1))})")
+      }
     }
     spark.catalog.refreshTable(table)
-    marker.foreach(m => fsOf(spark, m).create(m, true).close())
   }
 
   /** The training reader: surviving documents only — `keep=true`

@@ -334,8 +334,7 @@ object CurationProbes {
         // completion marker gating BOTH outputs (IndexCache doc)
         val tag = IndexCache.corpusTag("x73", d, embs,
           Seq("vec_id", "embedding"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x73_int8_index_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x73_int8_index_$tag") { dir =>
           Similarity.writeInt8Index(embs, dir, nlist = 8)
         }
         // (x104 below certifies the INCREMENTAL append path against
@@ -416,8 +415,7 @@ object CurationProbes {
         val embs = Tables.embeddings(s, d)
         val tag = IndexCache.corpusTag("x104", d, embs,
           Seq("vec_id", "embedding"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x104_append_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x104_append_$tag") { dir =>
           Similarity.writeInt8Index(embs.where(col("vec_id") % 2 === 0),
             dir, nlist = 8)
           Similarity.appendToInt8Index(embs.where(col("vec_id") % 2 =!= 0),
@@ -501,8 +499,7 @@ object CurationProbes {
         val embs = Tables.embeddings(s, d)
         val tag = IndexCache.corpusTag("x107", d, embs,
           Seq("vec_id", "embedding"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x107_stats_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x107_stats_$tag") { dir =>
           Similarity.writeInt8Index(embs.where(col("vec_id") % 2 === 0),
             dir, nlist = 8)
           Similarity.appendToInt8Index(embs.where(col("vec_id") % 2 =!= 0),
@@ -562,8 +559,7 @@ object CurationProbes {
         val embs = Tables.embeddings(s, d)
         val tag = IndexCache.corpusTag("x109", d, embs,
           Seq("vec_id", "embedding"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x109_compact_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x109_compact_$tag") { dir =>
           Similarity.writeInt8Index(embs.where(col("vec_id") % 2 === 0),
             dir, nlist = 8)
           Similarity.appendToInt8Index(embs.where(col("vec_id") % 4 === 1),
@@ -646,13 +642,7 @@ object CurationProbes {
       (s, d) => {
         graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
-        val tag = IndexCache.corpusTag("x111", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x111_annjoin_${tag}_n$nlist"
-        IndexCache.ensureBuilt(dir) {
-          Similarity.writeInt8Index(embs, dir, nlist = nlist)
-        }
+        val dir = IndexCache.annInt8Index(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
           .select(col("vec_id").as("q_id"), col("embedding"))
         Similarity.annJoinInt8FromIndex(queries, dir, k = 5, nprobe = 4)
@@ -732,13 +722,7 @@ object CurationProbes {
       (s, d) => {
         graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
-        val tag = IndexCache.corpusTag("x111", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x111_annjoin_${tag}_n$nlist"
-        IndexCache.ensureBuilt(dir) {
-          Similarity.writeInt8Index(embs, dir, nlist = nlist)
-        }
+        val dir = IndexCache.annInt8Index(s, d)
         val anchors = embs.where(col("vec_id") % 40 === 5)
           .select(col("vec_id").as("q_id"), col("embedding"), col("label"))
         Similarity.mineTriplets(anchors, embs, dir, negK = 3, nprobe = 4)
@@ -1011,19 +995,8 @@ object CurationProbes {
       (s, d) => {
         graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
-        val tag8 = IndexCache.corpusTag("x111", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir8 = s"${System.getProperty("java.io.tmpdir")}/graft_x111_annjoin_${tag8}_n$nlist"
-        IndexCache.ensureBuilt(dir8) {
-          Similarity.writeInt8Index(embs, dir8, nlist = nlist)
-        }
-        val tagP = IndexCache.corpusTag("x41", d, embs,
-          Seq("vec_id", "embedding"))
-        val dirP = s"${System.getProperty("java.io.tmpdir")}/graft_x41_pq_index_${tagP}_n$nlist"
-        IndexCache.ensureBuilt(dirP) {
-          PqIndex.writeIndex(embs, dirP, nlist = nlist, m = 32, ksub = 16, dim = 64)
-        }
+        val dir8 = IndexCache.annInt8Index(s, d)
+        val dirP = IndexCache.annPqIndex(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
           .select(col("vec_id").as("q_id"), col("embedding"))
         val a = Similarity.annJoinInt8FromIndex(queries, dir8, k = 5, nprobe = 4)
@@ -1179,13 +1152,7 @@ object CurationProbes {
       (s, d) => {
         graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
-        val tag8 = IndexCache.corpusTag("x111", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir8 = s"${System.getProperty("java.io.tmpdir")}/graft_x111_annjoin_${tag8}_n$nlist"
-        IndexCache.ensureBuilt(dir8) {
-          Similarity.writeInt8Index(embs, dir8, nlist = nlist)
-        }
+        val dir8 = IndexCache.annInt8Index(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
           .select(col("vec_id").as("q_id"), col("embedding"))
         val ranking = Similarity.annJoinInt8FromIndex(
@@ -1306,13 +1273,7 @@ object CurationProbes {
       (s, d) => {
         graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
-        val tag8 = IndexCache.corpusTag("x111", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir8 = s"${System.getProperty("java.io.tmpdir")}/graft_x111_annjoin_${tag8}_n$nlist"
-        IndexCache.ensureBuilt(dir8) {
-          Similarity.writeInt8Index(embs, dir8, nlist = nlist)
-        }
+        val dir8 = IndexCache.annInt8Index(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
           .select(col("vec_id").as("q_id"), col("embedding"))
         val cands = Similarity.annJoinInt8FromIndex(
@@ -1449,20 +1410,8 @@ object CurationProbes {
       (s, d) => {
         graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
-        val tag8 = IndexCache.corpusTag("x111", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir8 = s"${System.getProperty("java.io.tmpdir")}/graft_x111_annjoin_${tag8}_n$nlist"
-        IndexCache.ensureBuilt(dir8) {
-          Similarity.writeInt8Index(embs, dir8, nlist = nlist)
-        }
-        val tagP = IndexCache.corpusTag("x41", d, embs,
-          Seq("vec_id", "embedding"))
-        val dirP = s"${System.getProperty("java.io.tmpdir")}/graft_x41_pq_index_${tagP}_n$nlist"
-        IndexCache.ensureBuilt(dirP) {
-          PqIndex.writeIndex(embs, dirP, nlist = nlist, m = 32, ksub = 16,
-            dim = 64)
-        }
+        val dir8 = IndexCache.annInt8Index(s, d)
+        val dirP = IndexCache.annPqIndex(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
           .select(col("vec_id").as("q_id"), col("embedding"))
         val a = Similarity.annJoinInt8FromIndex(queries, dir8, k = 5,

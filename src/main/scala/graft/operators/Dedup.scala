@@ -282,7 +282,7 @@ object Dedup {
     * it broadcasts and the prune is a broadcast LEFT ANTI join — no
     * extra shuffle of the big side. `cap = Long.MaxValue` keeps every
     * row without the extra pass. */
-  private def dropHotKeys(rows: DataFrame, keys: Seq[String],
+  private[graft] def dropHotKeys(rows: DataFrame, keys: Seq[String],
                           cap: Long): DataFrame =
     if (cap == Long.MaxValue) rows
     else {
@@ -296,11 +296,14 @@ object Dedup {
     * (eval_id, h) rows on h, keyed by shingle hash, so at 100 TB an
     * ordinary shuffle join (or map-side, when the caller hints the
     * eval side broadcast). Rows must be distinct per (id, h), so the
-    * count is the number of shared shingles. */
+    * count is the number of shared shingles. Any further per-doc
+    * column on either side (e.g. `eval_total`) is carried through the
+    * grouping, after its side's id. */
   private[graft] def overlapCounts(trainH: DataFrame, evalH: DataFrame,
                                    minOverlap: Long): DataFrame =
     trainH.join(evalH, Seq("h"))
-      .groupBy("eval_id", "train_id")
+      .groupBy((evalH.columns ++ trainH.columns).filterNot(_ == "h")
+        .distinct.map(col): _*)
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minOverlap)
 
@@ -331,22 +334,22 @@ object Dedup {
     * quotient, rounded to 6 decimals for display).
     *
     * Scale shape: identical to [[contamination]] (its pair scan at
-    * minOverlap=1 plus one broadcast join against the
-    * dimension-sized per-eval-doc totals — the totals come free from
-    * the shingle-set ARRAY SIZE, no extra aggregation over the
-    * corpus). Requires GraftExtensions. */
+    * minOverlap=1). The eval text is shingled ONCE: each (eval_id, h)
+    * row carries its doc's shingle-set ARRAY SIZE as `eval_total`,
+    * which rides the grouping of [[overlapCounts]] — no second eval
+    * scan and no extra aggregation. Requires GraftExtensions. */
   def contaminationFraction(train: DataFrame, eval: DataFrame, n: Int = 3,
                             minFrac: Double = 0.5, idCol: String = "doc_id",
                             textCol: String = "text"): DataFrame = {
     require(minFrac > 0.0 && minFrac <= 1.0,
       s"minFrac must lie in (0,1]: $minFrac")
-    val totals = shingleHashSets(eval, n, idCol, textCol)
+    val evalH = shingleHashSets(eval, n, idCol, textCol)
       .select(col(idCol).as("eval_id"),
-        size(col("sh_hashes")).cast("long").as("eval_total"))
+        size(col("sh_hashes")).cast("long").as("eval_total"),
+        explode(col("sh_hashes")).as("h"))
     val frac = col("n_shared").cast("double") / col("eval_total")
-    contamination(train, eval, n, minOverlap = 1L, idCol = idCol,
-        textCol = textCol)
-      .join(broadcast(totals), Seq("eval_id"))
+    overlapCounts(shingleRows(train, n, idCol, textCol, "train_id"),
+        broadcast(evalH), 1L)
       .where(frac >= minFrac)
       .select(col("eval_id"), col("train_id"), col("n_shared"),
         col("eval_total"), round(frac, 6).as("overlap_frac"))
@@ -634,6 +637,38 @@ object Dedup {
   /** Table property carrying the index's shingle size. */
   private[graft] val ShingleNProp = "graft.shingle.n"
 
+  /** Catalog metadata of a shingle index written by
+    * [[writeShingleIndex]], with its bucket count — refuses anything
+    * else. */
+  private def shingleIndexMeta(spark: SparkSession, table: String) = {
+    require(table.matches("[A-Za-z0-9_]+(\\.[A-Za-z0-9_]+)?"),
+      s"invalid table identifier: $table")
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    val meta = spark.sessionState.catalog.getTableMetadata(ident)
+    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
+      s"$table has no bucket spec — not an index written by writeShingleIndex"))
+    require(spec.bucketColumnNames == Seq("h"),
+      s"$table is bucketed on ${spec.bucketColumnNames.mkString(",")}, expected h")
+    (meta, spec.numBuckets)
+  }
+
+  /** Write `rows` as files bucketed on `h` under `path`, outside the
+    * live index: bucket metadata requires `saveAsTable`, so the files
+    * land through a throwaway EXTERNAL table that is dropped again
+    * (dropping an external table keeps its files). The bucket id is
+    * the file name's numeric suffix, so it survives a renaming prefix
+    * such as the marked-append `ap-<id>__`. */
+  private def writeBucketedFiles(rows: DataFrame, table: String,
+                                 path: String, buckets: Int): Unit = {
+    val spark = rows.sparkSession
+    val scratch = s"${table}__bucket_write"
+    spark.sql(s"DROP TABLE IF EXISTS $scratch")
+    rows.write.format("parquet").option("path", path)
+      .bucketBy(buckets, "h")
+      .mode("overwrite").saveAsTable(scratch)
+    spark.sql(s"DROP TABLE $scratch")
+  }
+
   /** Append a BATCH to the persisted shingle index — the incremental-
     * ingest contract of the at-rest artifact family (int8 index,
     * IVF-PQ, corpus artifact, novelty bloom) applied to the one
@@ -656,26 +691,18 @@ object Dedup {
     * hashes into an m-gram index, corrupting every later overlap
     * count; deriving all three removes the footguns entirely.
     *
-    * Replay semantics (same stance as [[CorpusArtifact.append]]):
-    * with `doneMarker` (e.g. the micro-batch id) a replay AFTER the
-    * marker landed is a no-op; a crash between the data commit and
-    * the marker write can duplicate that one batch. Duplicate
-    * (train_id, h) rows never flip a contamination DECISION — they
-    * inflate `n_shared` counts, so exactly-once consumers dedup by
-    * (train_id, h) downstream or rebuild the affected partition. */
+    * Commit: the batch's bucket files are staged and moved into the
+    * index location by [[Compaction.appendWithMarker]]. With
+    * `doneMarker` (e.g. the micro-batch id) a replay after the marker
+    * landed is a no-op, and a retry after a crash mid-commit first
+    * sweeps the files that crash already moved, so each marked batch
+    * lands exactly once and `n_shared` counts are never inflated. */
   def appendToShingleIndex(batch: DataFrame, table: String,
                            idCol: String = "doc_id",
                            textCol: String = "text",
                            doneMarker: Option[String] = None): Unit = {
-    require(table.matches("[A-Za-z0-9_]+(\\.[A-Za-z0-9_]+)?"),
-      s"invalid table identifier: $table")
     val spark = batch.sparkSession
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table has no bucket spec — not an index written by writeShingleIndex"))
-    require(spec.bucketColumnNames == Seq("h"),
-      s"$table is bucketed on ${spec.bucketColumnNames.mkString(",")}, expected h")
+    val (meta, buckets) = shingleIndexMeta(spark, table)
     val n = meta.properties.getOrElse(ShingleNProp,
       throw new IllegalArgumentException(
         s"$table carries no '$ShingleNProp' property — not an index " +
@@ -687,20 +714,11 @@ object Dedup {
         s"$table schema (${meta.schema.fieldNames.mkString(", ")}) is not " +
           "the (id, h) shingle-index shape")
     }
-    // marker lives on the SAME filesystem as the index data
-    val marker = doneMarker.map { mk =>
-      require(mk.matches("[A-Za-z0-9._-]+"), s"invalid marker id: $mk")
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(meta.location), s"_append_${mk}_ok")
+    Compaction.appendWithMarker(spark, meta.location.toString, doneMarker) {
+      writeBucketedFiles(shingleRows(batch, n, idCol, textCol, outIdCol),
+        table, _, buckets)
     }
-    def fsOf(p: org.apache.hadoop.fs.Path) =
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (marker.exists(m => fsOf(m).exists(m))) return
-    shingleRows(batch, n, idCol, textCol, outIdCol)
-      .write.format("parquet")
-      .bucketBy(spec.numBuckets, "h")
-      .mode("append").saveAsTable(table)
-    marker.foreach(m => fsOf(m).create(m, true).close())
+    spark.catalog.refreshTable(table)
   }
 
   /** Compact the bucketed shingle index after an append schedule:
@@ -711,35 +729,20 @@ object Dedup {
     * sweep's scan cost is open()-bound. The rewrite repartitions on
     * the bucket hash itself (`repartition(numBuckets, h)` uses the
     * same Murmur3-pmod assignment as the bucketed write, so every
-    * task holds exactly one bucket's rows → ONE file per bucket),
-    * lands in a sibling `__compact_tmp` TABLE at a sibling path, and
-    * swaps directories under the ORIGINAL table — which is never
-    * dropped, so its bucket spec, the `graft.shingle.n` property, and
-    * catalog identity all survive untouched; bucket-id filename
-    * suffixes survive the rename, so the exchange-free bucketed join
+    * task holds exactly one bucket's rows → ONE file per bucket) and
+    * is swapped in under the ORIGINAL table by [[Compaction.swap]] —
+    * the table is never dropped, so its bucket spec, the
+    * `graft.shingle.n` property, and catalog identity all survive
+    * untouched; bucket-id filename suffixes survive the rename, so
+    * the exchange-free bucketed join
     * ([[contaminationFromShingleIndexes]]) holds after compaction.
     * Append replay markers at the table location are carried across
-    * the swap. Value-preserving: rows are read and rewritten as-is
-    * (no re-shingling). See [[Compaction]] for the crash stance. */
+    * the swap, and a crashed marked append's staging refuses the
+    * compaction. Value-preserving: rows are read and rewritten as-is
+    * (no re-shingling). */
   def compactShingleIndex(spark: SparkSession, table: String): Unit = {
-    require(table.matches("[A-Za-z0-9_]+(\\.[A-Za-z0-9_]+)?"),
-      s"invalid table identifier: $table")
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table has no bucket spec — not an index written by writeShingleIndex"))
-    require(spec.bucketColumnNames == Seq("h"),
-      s"$table is bucketed on ${spec.bucketColumnNames.mkString(",")}, expected h")
-    val target = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(target.toString + "__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(target.toString + "__compact_old")
-    require(!fs.exists(old),
-      s"$old left by an interrupted compaction — rename it back over " +
-        s"$target (or delete it if the index is intact) before compacting again")
-    val tmpTable = table + "__compact_tmp"
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    fs.delete(tmp, true)
+    val (meta, buckets) = shingleIndexMeta(spark, table)
+    val location = meta.location.toString
     // Read the index by PATH, not spark.table: the catalog relation
     // advertises the bucket spec, and the planner then elides the
     // repartition below (satisfied-by-bucketing) while ALSO auto-
@@ -752,17 +755,11 @@ object Dedup {
     // IDENTICAL function the bucketed writer assigns bucket ids
     // with — so write task i holds exactly bucket i: one file per
     // bucket. Parallelism = numBuckets (size buckets at build time
-    // accordingly). The rewrite lands as a BUCKETED sibling table
-    // (bucket metadata requires saveAsTable), never touching the
-    // live index.
-    spark.read.parquet(target.toString)
-      .repartition(spec.numBuckets, col("h"))
-      .write.format("parquet").option("path", tmp.toString)
-      .bucketBy(spec.numBuckets, "h")
-      .mode("overwrite").saveAsTable(tmpTable)
-    // external table: dropping it keeps the files for the swap
-    spark.sql(s"DROP TABLE $tmpTable")
-    Compaction.swapInto(fs, target, tmp, old)
+    // accordingly).
+    Compaction.swap(spark, location) {
+      writeBucketedFiles(spark.read.parquet(location)
+        .repartition(buckets, col("h")), table, _, buckets)
+    }
     spark.catalog.refreshTable(table)
   }
 
@@ -817,24 +814,6 @@ object Dedup {
     overlapCounts(th, eh, minOverlap)
   }
 
-  /** Dedup DECISION: collapse near-duplicate pairs into groups via
-    * connected components (GraphX) and keep the smallest id per group.
-    * Returns (id, group_id, keep) for every id in `allIds` — singletons
-    * keep themselves. Deterministic (GraphX CC labels components with
-    * their minimum vertex id). */
-  def nearDupGroups(pairs: DataFrame, allIds: DataFrame,
-                    idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val edges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .as[(Long, Long)].rdd.map { case (a, b) => Edge(a, b, ()) }
-    val vertices = allIds.select(col(idCol).cast("long")).as[Long].rdd.map((_, ()))
-    val cc = Graph(vertices, edges).connectedComponents().vertices
-    val groups = cc.toDF(idCol, "group_id")
-    groups.withColumn("keep", col(idCol) === col("group_id"))
-  }
-
   /** DataFrame-native connected components — the scale path for
     * near-dup group resolution. Each round combines one min-label HOP
     * (every vertex takes the minimum label in its closed neighborhood)
@@ -846,7 +825,7 @@ object Dedup {
     * (page A≈B≈C≈…) are exactly where long diameters appear at 100 TB,
     * and the default `maxRounds = 50` now covers diameter ~2^49
     * instead of 49 hops. Labels converge to the component's minimum id
-    * (same contract as the GraphX variant): labels are monotone
+    * (the union-find contract): labels are monotone
     * non-increasing, always the id of a vertex in the same component
     * (hop propagates along edges, jump through a component-mate), and
     * the component minimum keeps its own label — so the hop fixpoint

@@ -201,8 +201,7 @@ object EmbeddingProbes {
         // completion marker gates BOTH index outputs (IndexCache doc)
         val tag = IndexCache.corpusTag("x100", d,
           Tables.embeddings(s, d), Seq("vec_id", "embedding"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x100_mat_index_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x100_mat_index_$tag") { dir =>
           Similarity.writeInt8Index(t, dir, nlist = 8,
             vecCol = "embedding_t")
         }

@@ -28,11 +28,9 @@ object ExtensionProbes {
                                 outIdCol: String): String = {
     val tag = s"${d.replaceAll("[^A-Za-z0-9]", "_")}_${rows}_$idSum"
     val table = s"graft_x42_${side}_shingles_$tag"
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_x42_shingle_index_${side}_$tag"
     if (!s.catalog.tableExists(table))
-      Dedup.writeShingleIndex(docs, dir, table = table, n = 3,
-        outIdCol = outIdCol)
+      Dedup.writeShingleIndex(docs, IndexCache.dir(s"x42_shingle_index_${side}_$tag"),
+        table = table, n = 3, outIdCol = outIdCol)
     table
   }
 
@@ -1216,9 +1214,7 @@ object ExtensionProbes {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val tag = IndexCache.corpusTag("x124", d, docs, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x124_hll_sketch_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x124_hll_sketch_$tag") { dir =>
           Hll.writeSketch(docs.where(col("doc_id") % 2 === 0), "text",
             Seq("lang"), dir, p = 8)
           Hll.appendToSketch(docs.where(col("doc_id") % 2 === 1), dir,
@@ -1658,13 +1654,7 @@ object ExtensionProbes {
         // serve a stale index for regenerated data with the same ids,
         // and codes/_SUCCESS alone trusts a build that crashed before
         // the other outputs landed.
-        val tag = IndexCache.corpusTag("x41", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x41_pq_index_${tag}_n$nlist"
-        IndexCache.ensureBuilt(dir) {
-          PqIndex.writeIndex(embs, dir, nlist = nlist, m = 32, ksub = 16, dim = 64)
-        }
+        val dir = IndexCache.annPqIndex(s, d)
         val q = embs.where(col("vec_id") === 3)
           .select("embedding").head().getSeq[Float](0).map(_.toDouble)
         PqIndex.topKFromIndex(s, dir, q, k = 10, nprobe = 6, shortlist = 60,
@@ -1770,13 +1760,7 @@ object ExtensionProbes {
       (s, d) => {
         graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
-        val tag = IndexCache.corpusTag("x41", d, embs,
-          Seq("vec_id", "embedding"))
-        val nlist = IndexCache.probeNlist(d, embs)
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_x41_pq_index_${tag}_n$nlist"
-        IndexCache.ensureBuilt(dir) {
-          PqIndex.writeIndex(embs, dir, nlist = nlist, m = 32, ksub = 16, dim = 64)
-        }
+        val dir = IndexCache.annPqIndex(s, d)
         val queries = embs.where(col("vec_id") % 50 === 7)
           .select(col("vec_id").as("q_id"), col("embedding"))
         PqIndex.annJoinFromIndex(queries, dir, k = 5, nprobe = 4,

@@ -448,9 +448,7 @@ object MediaProbes {
           m.media_id % 2 == 1)
         val tag = IndexCache.corpusTag("x129", d, Tables.documents(s, d),
           Seq("doc_id"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x129_tokidx_v3_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x129_tokidx_v3_$tag") { dir =>
           val ct = AudioFingerprint.tokens(corpus).toDF()
           Constellation.writeTokenIndex(
             ct.where(col("media_id") % 4 === 0), dir, "audio_dft32_v1")

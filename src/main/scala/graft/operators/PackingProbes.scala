@@ -31,9 +31,7 @@ object PackingProbes {
   private def ensureLedger(s: SparkSession, d: String): String = {
     val docs = Tables.documents(s, d)
     val tag = IndexCache.corpusTag("x149", d, docs, Seq("doc_id", "text"))
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_x149_ledger_$tag"
-    IndexCache.ensureBuilt(dir) {
+    val dir = IndexCache.built(s"x149_ledger_$tag") { dir =>
       Packing.writeLedger(docs.where(col("doc_id") % 2 === 0),
         "text", "doc_id", dir, N_SHARDS, SEQ_LEN, Seq("source"))
       Packing.appendToLedger(docs.where(col("doc_id") % 2 === 1),
@@ -274,17 +272,7 @@ object PackingProbes {
     Probe("x153_sft_assembly_flagship",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val tag = IndexCache.corpusTag("x130", d, docs, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x130_hist_$tag"
-        IndexCache.ensureBuilt(dir) {
-          val lens = docs.select(col("doc_id"),
-            length(col("text")).as("len"))
-          HistogramSketch.writeSketch(lens.where(col("doc_id") % 2 === 0),
-            "len", dir, lo = 0.0, hi = 4096.0, nBins = 256)
-          HistogramSketch.appendToSketch(lens.where(col("doc_id") % 2 === 1),
-            dir, doneMarker = Some("b1"))
-        }
+        val dir = IndexCache.lengthHistogram(s, d)
         val withLen = docs.select(col("doc_id"), col("text"),
           col("source"), length(col("text")).cast("long").as("len"))
         val kept = HistogramSketch.curateByQuantile(withLen, dir, q = 0.5)

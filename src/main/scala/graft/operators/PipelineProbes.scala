@@ -71,27 +71,7 @@ object PipelineProbes {
     // incremental-with-aliases ≡ from-scratch, id for id ---------------
     Probe("x133_cluster_registry",
       (s, d) => {
-        val docs = Tables.documents(s, d).select(col("doc_id"))
-        val edges = docs.where(col("doc_id") % 5 =!= 0 && col("doc_id") > 0)
-          .select(col("doc_id").as("id_a"), (col("doc_id") - 1).as("id_b"))
-        val tag = IndexCache.corpusTag("x133", d, docs, Seq("doc_id"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x133_creg_$tag"
-        IndexCache.ensureBuilt(dir) {
-          val initIds = docs.where(col("doc_id") % 3 =!= 2)
-          val initEdges = edges
-            .where(col("id_a") % 3 =!= 2 && col("id_b") % 3 =!= 2)
-          ClusterRegistry.write(
-            Dedup.nearDupGroupsDF(initEdges, initIds)
-              .select(col("doc_id"), col("group_id")), dir, nBuckets = 16)
-          val batch = docs.where(col("doc_id") % 3 === 2)
-          val batchEdges = edges
-            .where(col("id_a") % 3 === 2 || col("id_b") % 3 === 2)
-          ClusterRegistry.ingestBatch(batch, batchEdges, dir,
-            doneMarker = Some("b1"))
-          ClusterRegistry.ingestBatch(batch, batchEdges, dir,
-            doneMarker = Some("b1")) // replay — gated no-op
-        }
+        val dir = IndexCache.clusterRegistry(s, d)
         ClusterRegistry.readLabels(s, dir).orderBy("doc_id")
       },
       Some {
@@ -126,25 +106,7 @@ object PipelineProbes {
     // the Spark side ----------------------------------------------------
     Probe("x135_registry_keepers",
       (s, d) => {
-        val docs = Tables.documents(s, d).select(col("doc_id"))
-        val edges = docs.where(col("doc_id") % 5 =!= 0 && col("doc_id") > 0)
-          .select(col("doc_id").as("id_a"), (col("doc_id") - 1).as("id_b"))
-        val tag = IndexCache.corpusTag("x133", d, docs, Seq("doc_id"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x133_creg_$tag"
-        IndexCache.ensureBuilt(dir) {
-          val initIds = docs.where(col("doc_id") % 3 =!= 2)
-          val initEdges = edges
-            .where(col("id_a") % 3 =!= 2 && col("id_b") % 3 =!= 2)
-          ClusterRegistry.write(
-            Dedup.nearDupGroupsDF(initEdges, initIds)
-              .select(col("doc_id"), col("group_id")), dir, nBuckets = 16)
-          val batch = docs.where(col("doc_id") % 3 === 2)
-          val batchEdges = edges
-            .where(col("id_a") % 3 === 2 || col("id_b") % 3 === 2)
-          ClusterRegistry.ingestBatch(batch, batchEdges, dir,
-            doneMarker = Some("b1"))
-        }
+        val dir = IndexCache.clusterRegistry(s, d)
         ClusterRegistry.keepers(s, dir,
             Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
             qualityCol = "n_chars")
@@ -205,9 +167,7 @@ object PipelineProbes {
         val w0 = docs.where(col("doc_id") % 3 =!= 2)
         val w1 = docs.where(col("doc_id") % 3 === 2)
         val tag = IndexCache.corpusTag("x134", d, docs, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x134_creg_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x134_creg_$tag") { dir =>
           def internalPairs(part: org.apache.spark.sql.DataFrame) = {
             val sigs = Dedup.minhashSignaturesOnePass(part, n = 3, numPerm = 8)
             val cands = Dedup.lshCandidatePairs(
@@ -422,17 +382,14 @@ object PipelineProbes {
         val docs = Tables.documents(s, d)
           .where(col("text").isNotNull).select("doc_id", "text")
         val tag = IndexCache.corpusTag("x141", d, docs, Seq("doc_id"))
-        val base = System.getProperty("java.io.tmpdir")
-        val aDir = s"$base/graft_x141_ma_$tag"
-        val bDir = s"$base/graft_x141_mb_$tag"
-        IndexCache.ensureBuilt(aDir) {
+        val aDir = IndexCache.built(s"x141_ma_$tag") { aDir =>
           Manifest.writeManifest(docs.where(col("doc_id") % 2 === 0), aDir)
           Manifest.appendToManifest(docs.where(col("doc_id") % 2 === 1),
             aDir, Some("b1"))
           Manifest.appendToManifest(docs.where(col("doc_id") % 2 === 1),
             aDir, Some("b1")) // replay — gated no-op
         }
-        IndexCache.ensureBuilt(bDir) {
+        val bDir = IndexCache.built(s"x141_mb_$tag") { bDir =>
           val kept = docs.where(col("doc_id") % 97 =!= 0)
             .withColumn("text", when(col("doc_id") % 31 === 0,
               concat(col("text"), lit("_v2"))).otherwise(col("text")))
@@ -512,10 +469,10 @@ object PipelineProbes {
         // cell²); 8 at both certified gate scales, so oracle hashes
         // stand, and the SQL derives the SAME value
         val nlist = IndexCache.probeNlist(d, embs)
-        val base = System.getProperty("java.io.tmpdir")
-        val ixDir = s"$base/graft_x142_ix_${nlist}_$tag"
-        val regDir = s"$base/graft_x142_reg_${nlist}_$tag"
-        IndexCache.ensureBuilt(regDir) {
+        // the build-time int8 index lives inside the registry's estate
+        // (the registry reads only its own labels/aliases/meta dirs)
+        val regDir = IndexCache.built(s"x142_reg_${nlist}_$tag") { regDir =>
+          val ixDir = s"$regDir/ix"
           Similarity.writeInt8Index(w0, ixDir, nlist = nlist)
           // build batch = build corpus → cross ≡ internal, dedup'd
           val internal0 = Similarity.cosinePairsInt8FromIndex(

@@ -596,9 +596,7 @@ object SelectionProbes {
         import s.implicits._
         val docs = Tables.documents(s, d)
         val tag = IndexCache.corpusTag("x122", d, docs, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x122_bm25_index_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x122_bm25_index_$tag") { dir =>
           Bm25.writeIndex(docs.where(col("doc_id") % 2 === 0), dir,
             nBuckets = 16)
           Bm25.appendToIndex(docs.where(col("doc_id") % 2 === 1), dir,

@@ -20,20 +20,45 @@ import graft.sources.Tables
   */
 object SketchProbes {
 
-  /** Shared pool for overlapping a probe's INDEPENDENT artifact
-    * branches (guide §2.6: actions are only sequential because the
-    * driver calls them sequentially; concurrent jobs back-fill the
-    * tail of each other's stages). Daemon threads so the pool never
-    * blocks JVM exit; sized for the widest branch fan-out (x144's 5
-    * decision branches). */
-  private[operators] lazy val branchPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(5,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-branch")
-          t.setDaemon(true)
-          t
-        }))
+  /** How long one overlapped fan-out may run: a branch still running
+    * after this is hung, not slow. */
+  private val BranchTimeoutMin = 30L
+
+  /** Run a probe's INDEPENDENT artifact branches concurrently (guide
+    * §2.6: actions are only sequential because the driver calls them
+    * sequentially; concurrent jobs back-fill the tail of each other's
+    * stages) and return their results in order. The pool is sized to
+    * the branches and made per call, so its daemon threads inherit the
+    * caller's Spark local properties. The first failure, or
+    * [[BranchTimeoutMin]] minutes, cancels the branches still running
+    * and is rethrown. */
+  private def overlap[T](branches: (() => T)*): Seq[T] = {
+    import java.util.concurrent._
+    val pool = Executors.newFixedThreadPool(branches.size,
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-branch")
+        t.setDaemon(true)
+        t
+      })
+    val done = new ExecutorCompletionService[T](pool)
+    val futures = branches.map(b =>
+      done.submit(new Callable[T] { def call(): T = b() }))
+    val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(BranchTimeoutMin)
+    try {
+      futures.foreach { _ =>
+        val f = done.poll(deadline - System.nanoTime(), TimeUnit.NANOSECONDS)
+        if (f == null) throw new TimeoutException(
+          s"overlapped branches still running after $BranchTimeoutMin min")
+        f.get()
+      }
+      futures.map(_.get())
+    } catch {
+      case e: ExecutionException => throw e.getCause
+    } finally {
+      futures.foreach(_.cancel(true))
+      pool.shutdownNow()
+    }
+  }
 
   private val augSql =
     "SELECT doc_id, text || repeat(' u' || doc_id, 20) AS aug FROM documents"
@@ -59,9 +84,7 @@ object SketchProbes {
         val aug = Tables.documents(s, d).withColumn("aug",
           concat(col("text"), expr("repeat(concat(' u', doc_id), 20)")))
         val tag = IndexCache.corpusTag("x125", d, aug, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x125_cms_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x125_cms_$tag") { dir =>
           CountMin.writeSketch(aug.where(col("doc_id") % 2 === 0), "aug",
             dir, width = 8192, depth = 4)
           CountMin.appendToSketch(aug.where(col("doc_id") % 2 === 1), dir,
@@ -114,9 +137,7 @@ object SketchProbes {
         val aug = Tables.documents(s, d).withColumn("aug",
           concat(col("text"), expr("repeat(concat(' u', doc_id), 20)")))
         val tag = IndexCache.corpusTag("x126", d, aug, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x126_mg_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x126_mg_$tag") { dir =>
           HeavyHitters.writeSummary(aug.where(col("doc_id") % 2 === 0),
             "aug", dir, capacity = 64)
           HeavyHitters.appendToSummary(aug.where(col("doc_id") % 2 === 1),
@@ -166,19 +187,7 @@ object SketchProbes {
     Probe("x130_histogram_quantile_at_rest",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val tag = IndexCache.corpusTag("x130", d, docs, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x130_hist_$tag"
-        IndexCache.ensureBuilt(dir) {
-          val lens = docs.select(col("doc_id"),
-            length(col("text")).as("len"))
-          HistogramSketch.writeSketch(lens.where(col("doc_id") % 2 === 0),
-            "len", dir, lo = 0.0, hi = 4096.0, nBins = 256)
-          HistogramSketch.appendToSketch(lens.where(col("doc_id") % 2 === 1),
-            dir, doneMarker = Some("b1"))
-          HistogramSketch.appendToSketch(lens.where(col("doc_id") % 2 === 1),
-            dir, doneMarker = Some("b1")) // replay — marker-gated no-op
-        }
+        val dir = IndexCache.lengthHistogram(s, d)
         HistogramSketch.quantilesFromSketch(s, dir,
             Seq(0.25, 0.5, 0.75, 0.9, 0.99))
           .orderBy("q")
@@ -226,11 +235,9 @@ object SketchProbes {
           concat(col("text"), expr("repeat(concat(' u', doc_id), 20)")))
         val lens = docs.select(col("doc_id"), length(col("text")).as("len"))
         val tag = IndexCache.corpusTag("x131", d, docs, Seq("doc_id", "text"))
-        val root =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x131_profile_$tag"
         val even = col("doc_id") % 2 === 0
         val odd = col("doc_id") % 2 === 1
-        IndexCache.ensureBuilt(root) {
+        val root = IndexCache.built(s"x131_profile_$tag") { root =>
           Hll.writeSketch(docs.where(even), "text", Seq("lang"),
             s"$root/hll", p = 8)
           Hll.appendToSketch(docs.where(odd), s"$root/hll", Some("b1"))
@@ -380,9 +387,7 @@ object SketchProbes {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val tag = IndexCache.corpusTag("x132", d, docs, Seq("doc_id"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x132_bks_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x132_bks_$tag") { dir =>
           BottomKSample.writeSample(docs.where(col("doc_id") % 2 === 0),
             dir, k = 200, idCol = "doc_id", payloadCols = Seq("lang"))
           BottomKSample.appendToSample(docs.where(col("doc_id") % 2 === 1),
@@ -415,9 +420,7 @@ object SketchProbes {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val tag = IndexCache.corpusTag("x136", d, docs, Seq("doc_id"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x136_ro_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x136_ro_$tag") { dir =>
           Rollup.writeRollup(docs.where(col("doc_id") % 2 === 0), dir,
             Seq("lang"), "n_chars", nBuckets = 16)
           Rollup.appendToRollup(docs.where(col("doc_id") % 2 === 1), dir,
@@ -457,9 +460,7 @@ object SketchProbes {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val tag = IndexCache.corpusTag("x137", d, docs, Seq("doc_id"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x137_sts_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x137_sts_$tag") { dir =>
           StratifiedSample.writeSample(docs.where(col("doc_id") % 2 === 0),
             dir, k = 60, strataCol = "lang", payloadCols = Seq("source"))
           StratifiedSample.appendToSample(
@@ -494,16 +495,13 @@ object SketchProbes {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val tag = IndexCache.corpusTag("x138", d, docs, Seq("doc_id"))
-        val base = System.getProperty("java.io.tmpdir")
-        val roDir = s"$base/graft_x138_ro_$tag"
-        val stDir = s"$base/graft_x138_st_$tag"
-        IndexCache.ensureBuilt(roDir) {
+        val roDir = IndexCache.built(s"x138_ro_$tag") { roDir =>
           Rollup.writeRollup(docs.where(col("doc_id") % 2 === 0), roDir,
             Seq("lang"), "n_chars")
           Rollup.appendToRollup(docs.where(col("doc_id") % 2 === 1),
             roDir, Some("b1"))
         }
-        IndexCache.ensureBuilt(stDir) {
+        val stDir = IndexCache.built(s"x138_st_$tag") { stDir =>
           StratifiedSample.writeSample(docs.where(col("doc_id") % 2 === 0),
             stDir, k = 150, strataCol = "lang")
           StratifiedSample.appendToSample(
@@ -548,16 +546,14 @@ object SketchProbes {
         val even = docs.where(col("doc_id") % 2 === 0)
         val odd = docs.where(col("doc_id") % 2 === 1)
         val tag = IndexCache.corpusTag("x143", d, docs, Seq("doc_id"))
-        val base = System.getProperty("java.io.tmpdir")
-        val cmDir = s"$base/graft_x143_cm_$tag"
-        val hDir = s"$base/graft_x143_h_$tag"
-        val roDir = s"$base/graft_x143_ro_$tag"
-        IndexCache.ensureBuilt(roDir) {
+        val cmDir = IndexCache.built(s"x143_cm_$tag") { cmDir =>
           CountMin.writeSketch(even, "text", cmDir,
             width = 8192, depth = 4)
           CountMin.appendToSketch(odd, cmDir, doneMarker = Some("b1"))
           CountMin.retractFromSketch(odd, cmDir, doneMarker = Some("rt1"))
           CountMin.retractFromSketch(odd, cmDir, doneMarker = Some("rt1"))
+        }
+        val hDir = IndexCache.built(s"x143_h_$tag") { hDir =>
           val lens = docs.select(col("doc_id"),
             length(col("text")).as("len"))
           HistogramSketch.writeSketch(lens.where(col("doc_id") % 2 === 0),
@@ -566,6 +562,8 @@ object SketchProbes {
             lens.where(col("doc_id") % 2 === 1), hDir, Some("b1"))
           HistogramSketch.retractFromSketch(
             lens.where(col("doc_id") % 2 === 1), hDir, Some("rt1"))
+        }
+        val roDir = IndexCache.built(s"x143_ro_$tag") { roDir =>
           Rollup.writeRollup(even, roDir, Seq("lang"), "n_chars")
           Rollup.appendToRollup(odd, roDir, Some("b1"))
           Rollup.retractFromRollup(odd, roDir, Some("rt1"))
@@ -665,29 +663,25 @@ object SketchProbes {
         val day0 = docs.where(col("doc_id") % 3 =!= 2)
         val batch = docs.where(col("doc_id") % 3 === 2)
         val tag = IndexCache.corpusTag("x144", d, docs, Seq("doc_id"))
-        val base = System.getProperty("java.io.tmpdir")
-        val roDir = s"$base/graft_x144_ro_$tag"
-        val stDir = s"$base/graft_x144_st_$tag"
-        val hDir = s"$base/graft_x144_h_$tag"
-        val h0Dir = s"$base/graft_x144_h0_$tag"
-        val maDir = s"$base/graft_x144_ma_$tag"
-        val mbDir = s"$base/graft_x144_mb_$tag"
         val lens = (df: org.apache.spark.sql.DataFrame) => df.select(
           col("doc_id"), col("lang"), length(col("text")).as("len"))
-        IndexCache.ensureBuilt(roDir) {
-          Rollup.writeRollup(day0, roDir, Seq("lang"), "n_chars")
-          StratifiedSample.writeSample(day0, stDir, k = 150,
-            strataCol = "lang")
-          HistogramSketch.writeSketch(lens(day0), "len", hDir,
-            lo = 0.0, hi = 4096.0, nBins = 256)
-          // the FROZEN day-0 snapshot the drift gate compares against
-          // (ingest never touches it — so the gate's answer is stable
-          // under re-runs and marker-gated replay of the ingest)
-          HistogramSketch.writeSketch(lens(day0), "len", h0Dir,
-            lo = 0.0, hi = 4096.0, nBins = 256)
-          Manifest.writeManifest(day0, maDir)
-          Manifest.writeManifest(day0, mbDir)
-        }
+        val roDir = IndexCache.built(s"x144_ro_$tag")(
+          Rollup.writeRollup(day0, _, Seq("lang"), "n_chars"))
+        val stDir = IndexCache.built(s"x144_st_$tag")(
+          StratifiedSample.writeSample(day0, _, k = 150, strataCol = "lang"))
+        val hDir = IndexCache.built(s"x144_h_$tag")(
+          HistogramSketch.writeSketch(lens(day0), "len", _,
+            lo = 0.0, hi = 4096.0, nBins = 256))
+        // the FROZEN day-0 snapshot the drift gate compares against
+        // (ingest never touches it — so the gate's answer is stable
+        // under re-runs and marker-gated replay of the ingest)
+        val h0Dir = IndexCache.built(s"x144_h0_$tag")(
+          HistogramSketch.writeSketch(lens(day0), "len", _,
+            lo = 0.0, hi = 4096.0, nBins = 256))
+        val maDir = IndexCache.built(s"x144_ma_$tag")(
+          Manifest.writeManifest(day0, _))
+        val mbDir = IndexCache.built(s"x144_mb_$tag")(
+          Manifest.writeManifest(day0, _))
         // the drift GATE runs against the day-0 snapshot, before
         // anything lands (check-then-ingest)
         val drift = HistogramSketch.driftFromSketch(h0Dir,
@@ -699,16 +693,12 @@ object SketchProbes {
         // §2.6); each is marker-gated, so values are unaffected and a
         // replay stays a no-op. The barrier below keeps check-then-
         // ingest ordering: no decision reads an artifact mid-append.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = branchPool
-        Await.result(Future.sequence(Seq(
-          Future(Rollup.appendToRollup(batch, roDir, Some("day1"))),
-          Future(StratifiedSample.appendToSample(batch, stDir, Some("day1"))),
-          Future(HistogramSketch.appendToSketch(lens(batch), hDir,
-            Some("day1"))),
-          Future(Manifest.appendToManifest(batch, mbDir, Some("day1"))))),
-          Duration.Inf)
+        overlap(
+          () => Rollup.appendToRollup(batch, roDir, Some("day1")),
+          () => StratifiedSample.appendToSample(batch, stDir, Some("day1")),
+          () => HistogramSketch.appendToSketch(lens(batch), hDir,
+            Some("day1")),
+          () => Manifest.appendToManifest(batch, mbDir, Some("day1")))
         // decisions off the PERSISTED estate: five independent
         // branches over five frozen artifacts — each was a sequential
         // run of bounded AQE stages (59 jobs end to end), so they run
@@ -716,7 +706,7 @@ object SketchProbes {
         // (≤ |langs| + a few) via localCheckpoint; the union of the
         // materialized branches is row-identical to the sequential
         // union it replaces.
-        val fSel = Future(MixturePlan.planAndSelect(s, roDir, stDir,
+        val fSel = () => MixturePlan.planAndSelect(s, roDir, stDir,
             targetTotal = 120)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_sel"),
@@ -724,8 +714,8 @@ object SketchProbes {
           .select(lit("mixture").as("metric"), col("lang").as("key"),
             col("n_sel").cast("double").as("v1"),
             col("id_sum").cast("double").as("v2"))
-          .localCheckpoint())
-        val fKept = Future {
+          .localCheckpoint()
+        val fKept = () => {
           val thr = HistogramSketch.thresholdFromSketch(s, hDir, 0.5)
           HistogramSketch.curateByQuantile(lens(batch), hDir,
               q = 0.5, precomputedThr = Some(thr))
@@ -734,20 +724,17 @@ object SketchProbes {
               col("n_kept").cast("double").as("v1"), lit(thr).as("v2"))
             .localCheckpoint()
         }
-        val fStats = Future(Rollup.readRollup(s, roDir)
+        val fStats = () => Rollup.readRollup(s, roDir)
           .select(lit("corpus").as("metric"), col("lang").as("key"),
             col("n").cast("double").as("v1"),
             col("sum_v").cast("double").as("v2"))
-          .localCheckpoint())
-        val fAudit = Future(Manifest.diff(s, maDir, mbDir)
+          .localCheckpoint()
+        val fAudit = () => Manifest.diff(s, maDir, mbDir)
           .groupBy("status").agg(count(lit(1)).as("n"))
           .select(lit("audit").as("metric"), col("status").as("key"),
             col("n").cast("double").as("v1"), lit(0.0).as("v2"))
-          .localCheckpoint())
-        val fDrift = Future(drift.localCheckpoint())
-        Await.result(
-          Future.sequence(Seq(fDrift, fSel, fKept, fStats, fAudit)),
-          Duration.Inf)
+          .localCheckpoint()
+        overlap(() => drift.localCheckpoint(), fSel, fKept, fStats, fAudit)
           .reduce(_.unionAll(_)).orderBy("metric", "key")
       },
       Some("""WITH d0 AS (
@@ -847,9 +834,7 @@ object SketchProbes {
         val lens = docs.select(col("doc_id"), col("lang"),
           length(col("text")).as("len"))
         val tag = IndexCache.corpusTag("x145", d, docs, Seq("doc_id"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x145_gh_$tag"
-        IndexCache.ensureBuilt(dir) {
+        val dir = IndexCache.built(s"x145_gh_$tag") { dir =>
           HistogramSketch.writeGroupedSketch(
             lens.where(col("doc_id") % 2 === 0), "len", "lang", dir,
             lo = 0.0, hi = 4096.0, nBins = 256)
@@ -946,17 +931,7 @@ object SketchProbes {
     Probe("x139_drift_from_histogram",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val tag = IndexCache.corpusTag("x130", d, docs, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x130_hist_$tag"
-        IndexCache.ensureBuilt(dir) {
-          val lens = docs.select(col("doc_id"),
-            length(col("text")).as("len"))
-          HistogramSketch.writeSketch(lens.where(col("doc_id") % 2 === 0),
-            "len", dir, lo = 0.0, hi = 4096.0, nBins = 256)
-          HistogramSketch.appendToSketch(lens.where(col("doc_id") % 2 === 1),
-            dir, doneMarker = Some("b1"))
-        }
+        val dir = IndexCache.lengthHistogram(s, d)
         val batch = docs.where(col("doc_id") % 7 === 0)
           .select((length(col("text")) + 256).as("len"))
         HistogramSketch.driftFromSketch(dir, batch, threshold = 0.1)
@@ -999,17 +974,7 @@ object SketchProbes {
     Probe("x140_curate_by_quantile",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val tag = IndexCache.corpusTag("x130", d, docs, Seq("doc_id", "text"))
-        val dir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x130_hist_$tag"
-        IndexCache.ensureBuilt(dir) {
-          val lens = docs.select(col("doc_id"),
-            length(col("text")).as("len"))
-          HistogramSketch.writeSketch(lens.where(col("doc_id") % 2 === 0),
-            "len", dir, lo = 0.0, hi = 4096.0, nBins = 256)
-          HistogramSketch.appendToSketch(lens.where(col("doc_id") % 2 === 1),
-            dir, doneMarker = Some("b1"))
-        }
+        val dir = IndexCache.lengthHistogram(s, d)
         HistogramSketch.curateByQuantile(
             docs.select(col("doc_id"),
               length(col("text")).cast("long").as("len")),

@@ -40,19 +40,13 @@ class DedupSkewSpec extends SparkTestBase {
     }.toDF("doc_id", "text")
     val eval = Seq((100L, s"$real tail")).toDF("doc_id", "text")
 
-    // per-shingle-hash fan-out on the train side of the join
-    def fanOut(maxDf: Long): Long = {
-      val th = Dedup.shingleHashSets(train, 3)
-        .select(col("doc_id").as("train_id"), explode(col("sh_hashes")).as("h"))
-      val kept =
-        if (maxDf == Long.MaxValue) th
-        else {
-          val hotH = th.groupBy("h").agg(count(lit(1)).as("df"))
-            .where(col("df") > maxDf).select("h")
-          th.join(broadcast(hotH), Seq("h"), "left_anti")
-        }
-      kept.groupBy("h").count().agg(max("count")).head().getLong(0)
-    }
+    // per-shingle-hash fan-out on the train side of the join, after
+    // the production prune
+    def fanOut(maxDf: Long): Long =
+      Dedup.dropHotKeys(
+          Dedup.shingleRows(train, 3, "doc_id", "text", "train_id"),
+          Seq("h"), maxDf)
+        .groupBy("h").count().agg(max("count")).head().getLong(0)
     assert(fanOut(Long.MaxValue) === 40L)  // unguarded: hot key fans out to all docs
     assert(fanOut(5L) <= 5L)               // guarded: every key bounded by cutoff
 

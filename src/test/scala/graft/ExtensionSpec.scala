@@ -301,7 +301,7 @@ class ExtensionSpec extends SparkTestBase {
   test("near-dup groups: connected components collapse chains, keep min id") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val all = Seq(1L, 2L, 3L, 10L, 11L, 99L).toDF("doc_id")
-    val got = Dedup.nearDupGroups(pairs, all)
+    val got = Dedup.nearDupGroupsDF(pairs, all)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(got(1L) == (1L, true) && got(2L) == (1L, false) && got(3L) == (1L, false))
     assert(got(10L) == (10L, true) && got(11L) == (10L, false))

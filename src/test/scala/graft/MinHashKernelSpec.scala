@@ -95,7 +95,7 @@ class MinHashKernelSpec extends SparkTestBase {
     assert(!hits.keys.exists(_._1 == 11L), "clean doc flagged")
   }
 
-  test("DataFrame-native connected components == GraphX on real LSH pairs + chains") {
+  test("DataFrame-native connected components == union-find on LSH pairs + chains") {
     val pairs = Dedup.lshCandidatePairs(Dedup.lshBuckets(
         Dedup.minhashSignaturesOnePass(docs, n = 3, numPerm = 8),
         bands = 4, rowsPer = 2))
@@ -104,11 +104,12 @@ class MinHashKernelSpec extends SparkTestBase {
         (900003L, 900004L), (900004L, 900005L)).toDF("id_a", "id_b"))
     val ids = docs.select("doc_id")
       .unionByName((900001L to 900005L).toDF("doc_id"))
-    val viaGraphX = Dedup.nearDupGroups(pairs, ids)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaUnionFind = UnionFind.components(
+      ids.collect().map(_.getLong(0)),
+      pairs.collect().map(r => (r.getLong(0), r.getLong(1))))
     val viaDF = Dedup.nearDupGroupsDF(pairs, ids)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaDF == viaGraphX)
+    assert(viaDF == viaUnionFind)
     assert(viaDF(900005L) == 900001L) // chain collapsed to min id
   }
 

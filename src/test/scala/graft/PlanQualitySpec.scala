@@ -556,20 +556,8 @@ class PlanQualitySpec extends SparkTestBase {
     GraftExtensions.register(spark)
     import graft.operators.{IndexCache, PqIndex, Ranking, Similarity}
     val embs = Tables.embeddings(spark, sfDir)
-    val tag8 = IndexCache.corpusTag("x111", sfDir, embs,
-      Seq("vec_id", "embedding"))
-    val nlist = IndexCache.probeNlist(sfDir, embs)
-    val dir8 = s"${System.getProperty("java.io.tmpdir")}/graft_x111_annjoin_${tag8}_n$nlist"
-    IndexCache.ensureBuilt(dir8) {
-      Similarity.writeInt8Index(embs, dir8, nlist = nlist)
-    }
-    val tagP = IndexCache.corpusTag("x41", sfDir, embs,
-      Seq("vec_id", "embedding"))
-    val dirP = s"${System.getProperty("java.io.tmpdir")}/graft_x41_pq_index_${tagP}_n$nlist"
-    IndexCache.ensureBuilt(dirP) {
-      PqIndex.writeIndex(embs, dirP, nlist = nlist, m = 32, ksub = 16,
-        dim = 64)
-    }
+    val dir8 = IndexCache.annInt8Index(spark, sfDir)
+    val dirP = IndexCache.annPqIndex(spark, sfDir)
     val queries = embs.where(col("vec_id") % 50 === 3)
       .select(col("vec_id").as("q_id"), col("embedding"))
     val a = Similarity.annJoinInt8FromIndex(queries, dir8, k = 5, nprobe = 4)
