@@ -10,12 +10,14 @@ import graft.impact.{GbtParams, GbtTrainer}
   * rows x 10 features with 5% missing values, trained 10 rounds at
   * depth 6 with the reference's subsample/regularization settings.
   *
-  * The scale claim under test: each tree level is ONE distributed
-  * aggregation whose shuffle is O(frontier nodes x features x bins) —
-  * a few thousand (slot, g, h) triples per partition regardless of row
-  * count — so doubling the rows doubles only the map-side scan, never
-  * the exchange. The run prints both corpus sizes' wall times so the
-  * ratio is visible next to the 10x row ratio.
+  * The scale claim under test: each tree level is ONE collect of every
+  * partition's nonzero (slot, g, h) histogram triples, summed on the
+  * driver in partition-index order — O(partitions x nonzero slots) per
+  * level, at most frontier nodes x features x bins per partition
+  * regardless of row count — so growing the rows grows only the
+  * per-partition scan, never the driver's reduction. The run prints
+  * both corpus sizes' wall times so the ratio is visible next to the
+  * 10x row ratio.
   */
 object BenchTrain {
   def main(args: Array[String]): Unit = {
@@ -61,7 +63,7 @@ object BenchTrain {
     val levels = p.numRound * (p.maxDepth + 1)
     println(s"""{"metric":"train_gbt","rows":$nRows,"features":$nf,""" +
       s""""rounds":${p.numRound},"depth":${p.maxDepth},""" +
-      s""""level_aggregations":$levels,""" +
+      s""""level_collects":$levels,""" +
       s""""sec":${f"$big%.1f"},"sec_tenth_corpus":${f"$small%.1f"},""" +
       s""""logistic_sec":${f"$tCls%.1f"},""" +
       s""""rows_per_sec":${(nRows / big).toLong}}""")

@@ -1,7 +1,11 @@
 package graft.impact
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** X9 TRAIN-HERE, from scratch: the Python reference retrains an
   * XGBoost regressor on every forecast run
@@ -16,11 +20,15 @@ import org.apache.spark.sql.functions._
   *  - **objective reg:squarederror**: per-row gradient g = pred − y,
   *    hessian h = 1.
   *  - **histogram split finding**: features are quantized once into at
-  *    most `maxBin` bins; per tree level, ONE distributed aggregation
-  *    computes (Σg, Σh) per (node, feature, bin) — partial aggregation
-  *    makes the shuffle O(nodes × features × bins), independent of row
-  *    count, which is what makes depth-8 × 100-round training viable at
-  *    100 TB (the same design as xgboost's own AllReduce histograms).
+  *    most `maxBin` bins; per tree level, ONE Spark job (a collect, no
+  *    shuffle) returns each partition's nonzero (Σg, Σh) slots per
+  *    (node, feature, bin), and the driver adds them from 0.0 in
+  *    partition-index order — a fixed summation order for a given
+  *    partitioning. The driver's cost per level is O(partitions ×
+  *    nonzero slots), bounded by rows × features; the reduction is the
+  *    one xgboost's own AllReduce histograms do. A boosting round runs
+  *    at most maxDepth + 2 jobs: one per level plus the early-stopping
+  *    metric; the prediction update rides on the next round's first pass.
   *  - **gain** (xgboost param.h CalcSplitGain, λ = reg_lambda = 1):
   *    ½·[G_L²/(H_L+λ) + G_R²/(H_R+λ) − G²/(H+λ)] − γ, split accepted
   *    iff gain > 0 and both children satisfy min_child_weight.
@@ -63,7 +71,8 @@ final case class GbtParams(
     seed: Long = 42L,
     earlyStoppingRounds: Int = 0,
     /** rows hash-sampled for quantile cuts when a feature exceeds maxBin
-      * distinct values; bounded driver memory at any input scale. */
+      * distinct values; each partition ships at most this many rows per
+      * feature, so driver memory is bounded at any input scale. */
     sketchRows: Int = 65536,
     /** "reg:squarederror" (g = pred−y, h = 1) or "binary:logistic"
       * (g = σ(margin)−y, h = σ(1−σ)) — the two objectives the reference
@@ -88,51 +97,94 @@ object GbtTrainer {
   /** A growing tree node; `leftBins(f) ≤ splitBin` routes left. */
   private final case class Node(
       feat: Int, splitBin: Int, cond: Float, defaultLeft: Boolean,
-      var left: Int, var right: Int, var leaf: Double, var isLeaf: Boolean)
+      left: Int, right: Int, leaf: Double, isLeaf: Boolean)
 
   private def leafNode(w: Double): Node =
     Node(-1, -1, 0f, defaultLeft = false, -1, -1, w, isLeaf = true)
 
   /** One training row after quantization: bin index per feature
     * (−1 = missing), label, running prediction, and a deterministic
-    * fingerprint driving per-round subsampling. Not `private`: the
-    * generated encoder deserializer lives outside this object and needs
-    * constructor access. */
-  final case class Binned(
+    * fingerprint driving per-round subsampling. */
+  private final case class Binned(
       bins: Array[Int], label: Double, pred: Double, fp: Long)
 
   // ---------------------------------------------------------------- cuts
 
+  /** Row count of one distinct value and its sampling hash. */
+  private final class ValueRows(val hash: Long, var rows: Long) extends Serializable
+
+  private val byHashThenValue: Ordering[(Long, Double)] =
+    Ordering.Tuple2(Ordering.Long, Ordering.Double.TotalOrdering)
+
+  /** Sorts `rows` by (hash, value) and keeps the first `k`. */
+  private def keepSmallest(rows: ArrayBuffer[(Long, Double)], k: Int): ArrayBuffer[(Long, Double)] = {
+    rows.sortInPlace()(byHashThenValue)
+    if (rows.length > k) rows.dropRightInPlace(rows.length - k)
+    rows
+  }
+
   /** Per-feature ascending cut values (float32 like xgboost's
     * HistogramCuts): bin(v) = #{cuts ≤ float32(v)}, so the candidate
     * split "bins ≤ b left" is exactly "v < cuts(b)" — the comparison
-    * [[XgbBooster.predict]] replays at scoring time. */
+    * [[XgbBooster.predict]] replays at scoring time.
+    *
+    * At most three jobs: one `approx_count_distinct` aggregate over all
+    * features (two jobs when AQE stages its exchange), then one pass
+    * that keeps, per partition, every distinct value of a
+    * low-cardinality feature with its row count and hash, and the
+    * `sketchRows` smallest (hash, value) rows of any other feature. */
   def computeCuts(df: DataFrame, features: Seq[String], params: GbtParams): Array[Array[Float]] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    features.map { f =>
-      // cheap order-independent cardinality probe so a near-continuous
-      // feature never pulls an unbounded distinct() onto the driver
-      val approx = df.agg(approx_count_distinct(col(f)).as("c")).head().getLong(0)
-      if (approx <= params.maxBin * 2L) {
-        val distinct = df.select(col(f).cast("double")).na.drop()
-          .distinct().as[Double].collect().map(_.toFloat).distinct.sorted
+    // order-independent cardinality probe, so a near-continuous feature
+    // never pulls an unbounded distinct set onto the driver
+    val approx = df.select(features.map(f => approx_count_distinct(col(f))): _*).head()
+    val lowCard = features.indices.map(approx.getLong(_) <= params.maxBin * 2L).toArray
+    val k = params.sketchRows
+    val parts = df.select(features.flatMap { f =>
+        val v = col(f).cast("double")
+        Seq(v, abs(xxhash64(v, lit(params.seed))))
+      }: _*).rdd.mapPartitions { it =>
+        val values = lowCard.map(_ => scala.collection.mutable.HashMap.empty[Double, ValueRows])
+        val sample = lowCard.map(_ => ArrayBuffer.empty[(Long, Double)])
+        it.foreach { row =>
+          var i = 0
+          while (i < lowCard.length) {
+            if (!row.isNullAt(2 * i) && !row.getDouble(2 * i).isNaN) {
+              val v = row.getDouble(2 * i)
+              if (lowCard(i)) values(i).getOrElseUpdate(v, new ValueRows(row.getLong(2 * i + 1), 0L)).rows += 1
+              else {
+                sample(i) += ((row.getLong(2 * i + 1), v))
+                if (sample(i).length >= 2 * k) keepSmallest(sample(i), k)
+              }
+            }
+            i += 1
+          }
+        }
+        Iterator.single((values, sample.map(keepSmallest(_, k))))
+      }.collect()
+    features.indices.map { i =>
+      if (lowCard(i)) {
+        val values = scala.collection.mutable.HashMap.empty[Double, ValueRows]
+        parts.foreach(_._1(i).foreach { case (v, c) =>
+          values.getOrElseUpdate(v, new ValueRows(c.hash, 0L)).rows += c.rows })
+        // SQL's distinct folds −0.0 into 0.0
+        val distinct = values.keys.toArray.map(v => if (v == 0.0) 0f else v.toFloat).distinct.sorted
         if (distinct.length <= params.maxBin) distinct.drop(1)
-        else quantileCuts(df, f, params)
-      } else quantileCuts(df, f, params)
+        else {
+          // the sketchRows smallest-hash rows, counted out of the value counts
+          var taken = 0L
+          quantileCuts(values.toSeq.map { case (v, c) => ((c.hash, v), c.rows) }
+            .sortBy(_._1)(byHashThenValue)
+            .takeWhile { case (_, rows) => val keep = taken < k; taken += rows; keep }
+            .map(_._1._2), params)
+        }
+      } else quantileCuts(keepSmallest(ArrayBuffer.from(parts.iterator.flatMap(_._2(i))), k).map(_._2).toSeq, params)
     }.toArray
   }
 
   /** Evenly spaced ranks of a deterministic hash-sample (deviation note
     * in the object Scaladoc; xgboost uses a weighted sketch here). */
-  private def quantileCuts(df: DataFrame, f: String, params: GbtParams): Array[Float] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sampled = df.select(col(f).cast("double").as("v"))
-      .na.drop()
-      .withColumn("h", abs(xxhash64(col("v"), lit(params.seed))))
-      .orderBy("h").limit(params.sketchRows)
-      .select("v").as[Double].collect().map(_.toFloat).distinct.sorted
+  private def quantileCuts(sampledRows: Seq[Double], params: GbtParams): Array[Float] = {
+    val sampled = sampledRows.map(_.toFloat).distinct.sorted.toArray
     if (sampled.length <= 1) return Array.empty
     val n = math.min(params.maxBin - 1, sampled.length - 1)
     (1 to n).map(i => sampled((i.toLong * (sampled.length - 1) / n).toInt)).distinct.toArray
@@ -154,17 +206,16 @@ object GbtTrainer {
 
   /** Walk the partial tree with bin indices; returns the node id the row
     * currently sits in, or −1 once it reaches a finished leaf. */
-  private def nodeOf(nodes: java.util.ArrayList[Node], bins: Array[Int]): Int = {
+  private def nodeOf(tree: Array[Node], bins: Array[Int]): Int = {
     var n = 0
-    while (!nodes.get(n).isLeaf && nodes.get(n).left != -1) {
-      val nd = nodes.get(n)
+    while (!tree(n).isLeaf && tree(n).left != -1) {
+      val nd = tree(n)
       val b = bins(nd.feat)
       n = if (b == -1) { if (nd.defaultLeft) nd.left else nd.right }
           else if (b <= nd.splitBin) nd.left else nd.right
     }
-    if (nodes.get(n).isLeaf) -1 else n
+    if (tree(n).isLeaf) -1 else n
   }
-
   private final case class Best(
       gain: Double, feat: Int, bin: Int, defaultLeft: Boolean,
       gl: Double, hl: Double, gr: Double, hr: Double)
@@ -220,34 +271,28 @@ object GbtTrainer {
   def train(df: DataFrame, labelCol: String, features: Seq[String],
             params: GbtParams = GbtParams(),
             evalDf: Option[DataFrame] = None): XgbBooster = {
-    val spark = df.sparkSession
     val cuts = computeCuts(df, features, params)
     val trainRows = binRows(df, labelCol, features, cuts, params)
-    val evalRows = evalDf.map(e => binRows(e, labelCol, features, cuts, params))
-    try trainBinned(spark, trainRows, evalRows, cuts, features, params)
-    finally {
-      trainRows.unpersist(blocking = false)
-      evalRows.foreach(_.unpersist(blocking = false))
-    }
+    // the eval rows serve early stopping only
+    val evalRows = evalDf.filter(_ => params.earlyStoppingRounds > 0)
+      .map(binRows(_, labelCol, features, cuts, params))
+    trainBinned(trainRows, evalRows, cuts, features, params)
   }
 
+  /** Quantized rows, persisted lazily: the first job that reads them
+    * (round 0's first histogram pass) materializes the cache. */
   private def binRows(df: DataFrame, labelCol: String, features: Seq[String],
-                      cuts: Array[Array[Float]], params: GbtParams): Dataset[Binned] = {
-    val spark = df.sparkSession
-    import spark.implicits._
+                      cuts: Array[Array[Float]], params: GbtParams): RDD[Binned] = {
     val base = params.baseMargin
-    val bcCuts = spark.sparkContext.broadcast(cuts)
     val nf = features.length
-    val ds = df
-      .select(col(labelCol).cast("double").as("y") +:
-        features.zipWithIndex.map { case (f, i) => col(f).cast("double").as(s"f$i") }: _*)
-      .map { row =>
+    df.select(col(labelCol).cast("double") +: features.map(f => col(f).cast("double")): _*)
+      .rdd.map { row =>
         val bins = new Array[Int](nf)
         var fp = 0xcbf29ce484222325L // FNV-1a over the quantized row
         var i = 0
         while (i < nf) {
           val v = if (row.isNullAt(i + 1)) Double.NaN else row.getDouble(i + 1)
-          bins(i) = binOf(v, bcCuts.value(i))
+          bins(i) = binOf(v, cuts(i))
           fp = (fp ^ bins(i)) * 0x100000001b3L
           i += 1
         }
@@ -255,8 +300,7 @@ object GbtTrainer {
         fp = (fp ^ java.lang.Double.doubleToLongBits(y)) * 0x100000001b3L
         Binned(bins, y, base, fp)
       }
-    ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
-    ds
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Mix a row fingerprint with the round number → [0,1) uniform; the
@@ -270,11 +314,9 @@ object GbtTrainer {
     ((x >>> 11).toDouble / (1L << 53).toDouble) < p.subsample
   }
 
-  private def trainBinned(spark: SparkSession, rows0: Dataset[Binned],
-                          eval0: Option[Dataset[Binned]],
+  private def trainBinned(rows0: RDD[Binned], eval0: Option[RDD[Binned]],
                           cuts: Array[Array[Float]], features: Seq[String],
                           p: GbtParams): XgbBooster = {
-    import spark.implicits._
     val logistic = p.objective == "binary:logistic"
     val nf = features.length
     val nBins = cuts.map(_.length + 2) // [missing][bin 0..len]
@@ -285,81 +327,74 @@ object GbtTrainer {
 
     var rows = rows0
     var evalRows = eval0
-    val trees = scala.collection.mutable.ArrayBuffer.empty[java.util.ArrayList[Node]]
+    // a predecessor stays cached until the first job that reads its
+    // successor has materialized it
+    var staleRows: Option[RDD[Binned]] = None
+    val trees = ArrayBuffer.empty[java.util.ArrayList[Node]]
     var bestMae = Double.MaxValue
     var bestRound = -1
     var round = 0
     var stop = false
 
-    while (round < p.numRound && !stop) {
+    try while (round < p.numRound && !stop) {
       val nodes = new java.util.ArrayList[Node]()
       nodes.add(Node(-1, -1, 0f, defaultLeft = false, -1, -1, 0.0, isLeaf = false))
       var frontier: Seq[Int] = Seq(0)
 
       var depth = 0
       while (depth <= p.maxDepth && frontier.nonEmpty) {
-        val bcNodes = spark.sparkContext.broadcast(nodes)
-        val frontierIdx = frontier.zipWithIndex.toMap
-        val bcFrontier = spark.sparkContext.broadcast(frontierIdx)
+        val tree = nodes.toArray(new Array[Node](0))
+        val frontierOf = Array.fill(tree.length)(-1)
+        frontier.zipWithIndex.foreach { case (n, fi) => frontierOf(n) = fi }
+        val width = frontier.size * slots
         val roundNow = round
         val atMaxDepth = depth == p.maxDepth
 
-        // ONE pass: per-partition dense histograms over the frontier,
-        // emitted sparse, then a bounded groupBy — the map-side combine
-        // keeps the shuffle at O(frontier × Σbins) regardless of rows.
-        val hist = rows.mapPartitions { it =>
-          val fIdx = bcFrontier.value
-          val nd = bcNodes.value
-          val g = new Array[Double](fIdx.size * slots)
-          val h = new Array[Double](fIdx.size * slots)
+        // ONE job: each partition's dense histograms over the frontier,
+        // shipped as its nonzero (slot, g, h) triples
+        val parts = rows.mapPartitions { it =>
+          val g = new Array[Double](width)
+          val h = new Array[Double](width)
           it.foreach { r =>
             if (sampleKeep(r.fp, roundNow, p)) {
-              val node = nodeOf(nd, r.bins)
-              if (node >= 0) fIdx.get(node).foreach { fi =>
+              val node = nodeOf(tree, r.bins)
+              if (node >= 0 && frontierOf(node) >= 0) {
                 val (grad, hess) =
                   if (logistic) {
                     val pr = 1.0 / (1.0 + math.exp(-r.pred))
                     (pr - r.label, pr * (1.0 - pr))
                   } else (r.pred - r.label, 1.0)
+                val base = frontierOf(node) * slots
                 var f = 0
                 while (f < nf) {
-                  val slot = fi * slots + slotOf(f) + (r.bins(f) + 1)
+                  val slot = base + slotOf(f) + (r.bins(f) + 1)
                   g(slot) += grad; h(slot) += hess
                   f += 1
                 }
               }
             }
           }
-          g.indices.iterator.filter(h(_) > 0).map(s => (s, g(s), h(s)))
-        }.toDF("slot", "g", "h")
-          .groupBy("slot").agg(sum("g").as("g"), sum("h").as("h"))
-          .as[(Int, Double, Double)].collect()
+          val nz = (0 until width).filter(h(_) > 0).toArray
+          Iterator.single((nz, nz.map(g(_)), nz.map(h(_))))
+        }.collect()
+        staleRows.foreach(_.unpersist(blocking = false))
+        staleRows = None
 
-        // unpersist (not destroy): a lost cached partition may replay
-        // this stage's lineage and re-fetch the broadcast
-        bcNodes.unpersist(); bcFrontier.unpersist()
-
-        // reassemble per-node [feat][bin] matrices
-        val byNode = Array.fill(frontier.size)(
-          (Array.tabulate(nf)(f => new Array[Double](nBins(f))),
-           Array.tabulate(nf)(f => new Array[Double](nBins(f)))))
-        hist.foreach { case (slot, gv, hv) =>
-          val fi = slot / slots
-          val rest = slot % slots
-          val f = {
-            var lo = 0; var hi = nf - 1
-            while (lo < hi) { val mid = (lo + hi + 1) >>> 1; if (slotOf(mid) <= rest) lo = mid else hi = mid - 1 }
-            lo
-          }
-          byNode(fi)._1(f)(rest - slotOf(f)) += gv
-          byNode(fi)._2(f)(rest - slotOf(f)) += hv
+        // partitions added from 0.0 in partition-index order
+        val g = new Array[Double](width)
+        val h = new Array[Double](width)
+        parts.foreach { case (nz, gs, hs) =>
+          var j = 0
+          while (j < nz.length) { g(nz(j)) += gs(j); h(nz(j)) += hs(j); j += 1 }
         }
 
-        val next = scala.collection.mutable.ArrayBuffer.empty[Int]
+        val next = ArrayBuffer.empty[Int]
         frontier.zipWithIndex.foreach { case (nodeId, fi) =>
-          val (g, h) = byNode(fi)
-          val gTot = g(0).sum; val hTot = h(0).sum
-          val split = if (atMaxDepth || hTot == 0.0) None else bestSplit(g, h, cuts, p)
+          def slice(a: Array[Double]) = Array.tabulate(nf)(f =>
+            java.util.Arrays.copyOfRange(a, fi * slots + slotOf(f), fi * slots + slotOf(f + 1)))
+          val (gn, hn) = (slice(g), slice(h))
+          val gTot = gn(0).sum; val hTot = hn(0).sum
+          val split = if (atMaxDepth || hTot == 0.0) None else bestSplit(gn, hn, cuts, p)
           split match {
             case Some(b) =>
               val l = nodes.size()
@@ -380,44 +415,35 @@ object GbtTrainer {
       }
 
       trees += nodes
-
-      // fold the new tree into running predictions
-      rows = updatePreds(spark, rows, nodes, round)
-      evalRows = evalRows.map(e => updatePreds(spark, e, nodes, round))
+      val tree = nodes.toArray(new Array[Node](0))
+      staleRows = Some(rows)
+      rows = addTree(rows, tree, round)
 
       evalRows match {
-        case Some(e) if p.earlyStoppingRounds > 0 =>
-          // squared error: MAE on raw predictions. logistic: logloss on
-          // probabilities (xgboost's default metric), eps-clamped.
-          val metric =
-            if (logistic) {
-              val pr = greatest(least(
-                lit(1.0) / (lit(1.0) + exp(-$"pred")), lit(1.0 - 1e-16)),
-                lit(1e-16))
-              e.agg(avg(-($"label" * log(pr) +
-                (lit(1.0) - $"label") * log(lit(1.0) - pr)))).as[Double].head()
-            } else e.agg(avg(abs($"pred" - $"label"))).as[Double].head()
+        case Some(e) =>
+          evalRows = Some(addTree(e, tree, round))
+          val metric = try evalMetric(evalRows.get, logistic) finally e.unpersist(blocking = false)
           if (metric < bestMae) { bestMae = metric; bestRound = round }
           else if (round - bestRound >= p.earlyStoppingRounds) stop = true
-        case _ => bestRound = round
+        case None => bestRound = round
       }
       round += 1
+    } finally {
+      staleRows.foreach(_.unpersist(blocking = false))
+      rows.unpersist(blocking = false)
+      evalRows.foreach(_.unpersist(blocking = false))
     }
-
-    rows.unpersist(blocking = false)
-    evalRows.foreach(_.unpersist(blocking = false))
     toBooster(trees.take(bestRound + 1).toSeq, features, p)
   }
 
-  private def updatePreds(spark: SparkSession, rows: Dataset[Binned],
-                          nodes: java.util.ArrayList[Node], round: Int): Dataset[Binned] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(nodes)
+  /** `rows` with the finished tree's float32 leaf weight added to each
+    * prediction, persisted lazily so the next job that reads it pays
+    * for the update. */
+  private def addTree(rows: RDD[Binned], tree: Array[Node], round: Int): RDD[Binned] = {
     val updated = rows.map { r =>
       var n = 0
-      val nd = bc.value
-      while (!nd.get(n).isLeaf) {
-        val x = nd.get(n)
+      while (!tree(n).isLeaf) {
+        val x = tree(n)
         val b = r.bins(x.feat)
         n = if (b == -1) { if (x.defaultLeft) x.left else x.right }
             else if (b <= x.splitBin) x.left else x.right
@@ -425,16 +451,38 @@ object GbtTrainer {
       // add the float32-truncated weight — exactly what the packed
       // booster will score — so training-time predictions (and any
       // early-stopping decision) match the final model bitwise
-      r.copy(pred = r.pred + nd.get(n).leaf.toFloat.toDouble)
+      r.copy(pred = r.pred + tree(n).leaf.toFloat.toDouble)
     }
     // cut lineage periodically so 100 rounds don't stack 100 map stages
-    val persisted =
-      if ((round + 1) % 16 == 0) updated.localCheckpoint(eager = true)
-      else { updated.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); updated.count(); updated }
-    rows.unpersist(blocking = false)
-    persisted
+    if ((round + 1) % 16 == 0) updated.localCheckpoint()
+    else updated.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** The early-stopping metric in one job — squared error: MAE on raw
+    * predictions; logistic: logloss on eps-clamped probabilities
+    * (xgboost's default metric). Spark's `avg` arithmetic with a fixed
+    * order: each partition sums from 0.0 in row order, the driver adds
+    * the partition sums in partition-index order, and exp/log are
+    * StrictMath like Spark's `exp`/`log`. */
+  private def evalMetric(rows: RDD[Binned], logistic: Boolean): Double = {
+    val parts = rows.mapPartitions { it =>
+      var sum = 0.0
+      var n = 0L
+      it.foreach { r =>
+        sum += (
+          if (logistic) {
+            val pr = math.max(math.min(1.0 / (1.0 + StrictMath.exp(-r.pred)), 1.0 - 1e-16), 1e-16)
+            -(r.label * StrictMath.log(pr) + (1.0 - r.label) * StrictMath.log(1.0 - pr))
+          } else math.abs(r.pred - r.label))
+        n += 1
+      }
+      Iterator.single((sum, n))
+    }.collect()
+    var sum = 0.0
+    var n = 0L
+    parts.foreach { case (s, c) => sum += s; n += c }
+    sum / n.toDouble
+  }
   /** Pack driver-side nodes into the xgboost array layout [[XgbBooster]]
     * scores (leaves carry their value in `cond`; left == −1 marks a
     * leaf), float32-truncating leaf weights exactly like the serialized

@@ -20,8 +20,9 @@ import graft.functions.ScalarFunctions
   *    base_score=0.5, reg:squarederror, early_stopping_rounds=10).
   *    [[GbtTrainer]] re-implements xgboost's `hist` algorithm from the
   *    public equations (histogram split finding, two-direction missing
-  *    enumeration, −G/(H+λ) leaves) as one distributed aggregation per
-  *    tree level — certified tree-for-tree against an independent
+  *    enumeration, −G/(H+λ) leaves) with one collect per tree level,
+  *    partition histograms summed on the driver in partition-index
+  *    order — certified tree-for-tree against an independent
   *    single-node implementation (GbtTrainerSpec).
   *  - EXACT ARTIFACT: the R reference scores a saved model
   *    (run_model_V2.R:53,160-165). [[XgbBooster]] loads that very RDS
@@ -32,8 +33,9 @@ import graft.functions.ScalarFunctions
   *    x24_xgb_reference_model).
   *
   * At scale, scoring either way is a per-row map over the feature
-  * vector — embarrassingly parallel, no shuffle; training's shuffle is
-  * O(nodes × features × bins) per level, independent of row count.
+  * vector — embarrassingly parallel, no shuffle; training has no
+  * shuffle either: each level ships every partition's nonzero histogram
+  * slots to the driver, O(partitions × nonzero slots) per level.
   */
 object ImpactModel {
 

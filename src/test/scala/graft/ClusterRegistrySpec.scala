@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.operators.{ClusterRegistry, Dedup}
+import graft.operators.ClusterRegistry
 
 /** The persistent incremental dedup-cluster registry: after any
   * sequence of ingests, readLabels equals the from-scratch min-label
@@ -22,10 +20,17 @@ class ClusterRegistrySpec extends SparkTestBase {
     df.collect().map(r => r.getAs[Long]("doc_id") ->
       r.getAs[Long]("cluster_id")).toMap
 
-  /** from-scratch truth: hop+jump components over the union graph. */
-  private def truth(all: Seq[Long], es: Seq[(Long, Long)]) =
-    Dedup.nearDupGroupsDF(edgesDF(es), idsDF(all), "doc_id")
-      .select(col("doc_id"), col("group_id").as("cluster_id"))
+  /** from-scratch truth: plain-Scala min-label components of the union
+    * graph, independent of the DataFrame components code the registry
+    * runs on each batch. */
+  private def truth(all: Seq[Long], es: Seq[(Long, Long)]): Map[Long, Long] =
+    UnionFind.components(all, es)
+
+  /** A registry seeded with the from-scratch labels of a first corpus. */
+  private def writeSeed(all: Seq[Long], es: Seq[(Long, Long)], dir: String,
+                        nBuckets: Int): Unit =
+    ClusterRegistry.write(truth(all, es).toSeq.toDF("doc_id", "group_id"),
+      dir, nBuckets = nBuckets)
 
   test("incremental ingests ≡ from-scratch components, including bridge " +
       "merges and multi-level alias chains") {
@@ -34,9 +39,7 @@ class ClusterRegistrySpec extends SparkTestBase {
     // plus singleton 40
     val initIds = Seq(10L, 11L, 20L, 21L, 30L, 31L, 40L)
     val initEdges = Seq((10L, 11L), (20L, 21L), (30L, 31L))
-    ClusterRegistry.write(
-      truth(initIds, initEdges).withColumnRenamed("cluster_id", "group_id"),
-      dir, nBuckets = 8)
+    writeSeed(initIds, initEdges, dir, nBuckets = 8)
     assert(render(ClusterRegistry.readLabels(spark, dir)) ===
       Map(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L,
         30L -> 30L, 31L -> 30L, 40L -> 40L))
@@ -49,7 +52,7 @@ class ClusterRegistrySpec extends SparkTestBase {
     ClusterRegistry.ingestBatch(idsDF(b1Ids), edgesDF(b1Edges), dir,
       Some("b1"))
     val afterB1 = render(ClusterRegistry.readLabels(spark, dir))
-    val truthB1 = render(truth(initIds ++ b1Ids, initEdges ++ b1Edges))
+    val truthB1 = truth(initIds ++ b1Ids, initEdges ++ b1Edges)
     assert(afterB1 === truthB1)
     assert(afterB1(31L) === 20L && afterB1(50L) === 20L)
     assert(afterB1(10L) === 5L && afterB1(11L) === 5L)
@@ -65,7 +68,7 @@ class ClusterRegistrySpec extends SparkTestBase {
     val allIds = initIds ++ b1Ids ++ b2Ids
     val allEdges = initEdges ++ b1Edges ++ b2Edges
     val afterB2 = render(ClusterRegistry.readLabels(spark, dir))
-    assert(afterB2 === render(truth(allIds, allEdges)))
+    assert(afterB2 === truth(allIds, allEdges))
     assert(Seq(30L, 31L, 20L, 21L, 50L, 10L, 11L, 5L, 1L)
       .forall(afterB2(_) == 1L))
     assert(afterB2(40L) === 40L && afterB2(51L) === 51L)
@@ -86,17 +89,15 @@ class ClusterRegistrySpec extends SparkTestBase {
     ClusterRegistry.ingestBatch(idsDF(Seq(0L)), edgesDF(Seq((0L, 40L))),
       dir, Some("b3"))
     val afterB3 = render(ClusterRegistry.readLabels(spark, dir))
-    assert(afterB3 === render(truth(allIds :+ 0L, allEdges :+ ((0L, 40L)))))
+    assert(afterB3 === truth(allIds :+ 0L, allEdges :+ ((0L, 40L))))
     assert(afterB3(40L) === 0L)
   }
 
   test("keepers: per-cluster argmax quality, ties to the smallest id, " +
       "unscored docs lose to any scored member") {
     val dir = java.nio.file.Files.createTempDirectory("creg_keep").toString
-    ClusterRegistry.write(
-      truth(Seq(1L, 2L, 3L, 7L, 8L, 9L),
-        Seq((1L, 2L), (2L, 3L), (7L, 8L)))
-        .withColumnRenamed("cluster_id", "group_id"), dir, nBuckets = 4)
+    writeSeed(Seq(1L, 2L, 3L, 7L, 8L, 9L), Seq((1L, 2L), (2L, 3L), (7L, 8L)),
+      dir, nBuckets = 4)
     // cluster {1,2,3}: 2 and 3 tie on quality 5.0 → keeper 2; cluster
     // {7,8}: 8 is unscored → keeper 7 despite lower id being absent;
     // singleton 9 keeps itself
@@ -147,9 +148,7 @@ class ClusterRegistrySpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("creg_rand").toString
     val w0 = all.filter(wave(_) == 0)
     val e0 = edges.filter { case (a, b) => wave(a) == 0 && wave(b) == 0 }
-    ClusterRegistry.write(
-      truth(w0, e0).withColumnRenamed("cluster_id", "group_id"),
-      dir, nBuckets = 8)
+    writeSeed(w0, e0, dir, nBuckets = 8)
     var seenIds = w0
     var seenEdges = e0
     for (k <- 1 to 2) {
@@ -160,7 +159,7 @@ class ClusterRegistrySpec extends SparkTestBase {
       seenIds ++= wk
       seenEdges ++= ek
       assert(render(ClusterRegistry.readLabels(spark, dir)) ===
-        render(truth(seenIds, seenEdges)), s"diverged after wave $k")
+        truth(seenIds, seenEdges), s"diverged after wave $k")
     }
   }
 }

@@ -142,13 +142,16 @@ class GbtTrainerSpec extends SparkTestBase {
     (xs, ys)
   }
 
-  private def toDf(xs: Array[Array[Double]], ys: Array[Double]) = {
+  private def localDf(xs: Array[Array[Double]], ys: Array[Double]) = {
     val nf = xs.head.length
     val rows = xs.zip(ys).toSeq.map { case (x, y) => (x.toSeq, y) }
     rows.toDF("x", "y")
       .select((0 until nf).map(f => col("x")(f).as(s"f$f")) :+ col("y").as("y"): _*)
-      .repartition(7) // force multi-partition partial aggregation
   }
+
+  // force multi-partition histograms
+  private def toDf(xs: Array[Array[Double]], ys: Array[Double], parts: Int = 7) =
+    localDf(xs, ys).repartition(parts)
 
   private def assertSameTrees(b: XgbBooster, ts: Seq[SingleNode.T]): Unit = {
     assert(b.trees.length == ts.length)
@@ -341,5 +344,75 @@ class GbtTrainerSpec extends SparkTestBase {
     assert(dump(b1) == dump(b2), "hash subsampling must be run-deterministic")
     val bFull = GbtTrainer.train(toDf(xs, ys), "y", feats, p.copy(subsample = 1.0))
     assert(dump(b1) != dump(bFull), "subsample should actually drop rows")
+  }
+
+  /** Train/eval split of `fixture`: every fourth row is held out. */
+  private def split(xs: Array[Array[Double]], ys: Array[Double]) = {
+    val (tr, ev) = xs.indices.partition(_ % 4 != 0)
+    ((tr.map(xs(_)).toArray, tr.map(ys(_)).toArray), (ev.map(xs(_)).toArray, ev.map(ys(_)).toArray))
+  }
+
+  test("partition count and AQE do not change the booster (dyadic data)") {
+    // integer features and labels: gradients are the 0.5 base plus
+    // float32 leaf weights minus an integer, dyadic rationals short
+    // enough that every histogram and metric sum over these 400 rows is
+    // exact in double, so any difference is an order dependence in the
+    // trainer itself
+    val (xs, ys) = fixture(400, 4, missingEvery = 9)
+    val ((xsT, ysT), (xsE, ysE)) = split(xs, ys)
+    val feats = (0 until 4).map(i => s"f$i")
+    val p = GbtParams(numRound = 4, maxDepth = 4, eta = 0.5, gamma = 0.1,
+      subsample = 0.8, earlyStoppingRounds = 2)
+    def dump(b: XgbBooster) = b.trees.toSeq.map(t =>
+      (t.feat.toSeq, t.cond.toSeq, t.left.toSeq, t.right.toSeq, t.defaultLeft.toSeq))
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    val runs = try for (aqe <- Seq("true", "false"); parts <- Seq(1, 3, 7)) yield {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      s"aqe=$aqe parts=$parts" -> dump(GbtTrainer.train(toDf(xsT, ysT, parts), "y", feats, p,
+        evalDf = Some(toDf(xsE, ysE, parts))))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    assert(runs.head._2.nonEmpty && runs.head._2.exists(_._1.length > 1))
+    runs.tail.foreach { case (name, trees) =>
+      assert(trees == runs.head._2, s"$name differs from ${runs.head._1}")
+    }
+  }
+
+  test("job-count guard: at most 3 jobs for the cuts and maxDepth + 2 per round") {
+    val (xs, ys) = fixture(400, 4, missingEvery = 9)
+    val ((xsT, ysT), (xsE, ysE)) = split(xs, ys)
+    val p = GbtParams(numRound = 3, maxDepth = 3, eta = 0.3, gamma = 0.0,
+      subsample = 0.8, earlyStoppingRounds = 3)
+    // listener events arrive in order, so once the closing mark job is
+    // seen, every job the training ran has been counted
+    val mark = "gbt-job-guard-mark"
+    val groups = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.synchronized {
+          groups += Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        }
+    }
+    val sc = spark.sparkContext
+    def markJob(): Unit = {
+      sc.setJobGroup(mark, mark)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    val (trainDf, evalDf) = (localDf(xsT, ysT), localDf(xsE, ysE))
+    sc.addSparkListener(listener)
+    val booster = try {
+      markJob()
+      val b = GbtTrainer.train(trainDf, "y", (0 until 4).map(i => s"f$i"), p, Some(evalDf))
+      markJob()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (groups.synchronized(groups.count(_ == mark)) < 2 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      b
+    } finally sc.removeSparkListener(listener)
+    val marks = groups.zipWithIndex.collect { case (g, i) if g == mark => i }
+    assert(marks.length == 2, s"mark jobs seen: ${marks.length}")
+    val jobs = marks(1) - marks(0) - 1
+    assert(booster.trees.exists(_.feat.length == (1 << (p.maxDepth + 1)) - 1),
+      "the fixture should grow a full-depth tree")
+    assert(jobs <= 3 + p.numRound * (p.maxDepth + 2), s"$jobs jobs")
   }
 }
