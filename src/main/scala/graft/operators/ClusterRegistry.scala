@@ -36,7 +36,8 @@ import org.apache.spark.sql.functions._
   * over member ids and labels), so the alias relation is a strictly
   * decreasing pointer forest — resolution (log-round pointer jumping
   * over the alias table alone, ≪ corpus) terminates at the global
-  * component minimum.
+  * component minimum. Every read resolves labels through one private
+  * join ([[canonical]]); [[keepers]] ranks by [[Dedup.keeperMax]].
   *
   * Replay semantics: labels and aliases are NOT idempotent under
   * re-landing (a replayed batch would duplicate label rows and could
@@ -83,41 +84,52 @@ object ClusterRegistry {
   /** The alias relation resolved to its transitive targets —
     * (old_label, canonical). Log-round pointer jumping over the alias
     * table ALONE (one row per historical merge — ≪ corpus); chains
-    * are strictly decreasing so this terminates. */
+    * are strictly decreasing so this terminates. The load counts the
+    * aliases that do not decrease (a cycle needs one), each round the
+    * targets that still MOVE, both inside their own checkpoint jobs
+    * ([[Dedup.checkpointCounting]]): no job beyond the checkpoints.
+    * `maxRounds` bounds the work; a cycle fails at once. */
   def resolvedAliases(spark: SparkSession, path: String,
                       maxRounds: Int = 50): DataFrame = {
-    var a = spark.read.parquet(s"$path/aliases")
-      .select(col("old_label"), col("new_label")).localCheckpoint()
+    val (loaded, increasing) = Dedup.checkpointCounting(
+      spark.read.parquet(s"$path/aliases"),
+      col("new_label") >= col("old_label"), col("old_label"), col("new_label"))
+    var a = loaded
     var round = 0
     var done = false
-    while (!done && round < maxRounds) {
-      val jumped = a.as("x")
-        .join(a.as("y"), col("x.new_label") === col("y.old_label"), "left")
-        .select(col("x.old_label").as("old_label"),
-          coalesce(col("y.new_label"), col("x.new_label")).as("new_label"),
-          (col("y.new_label").isNotNull).as("moved"))
-        .localCheckpoint()
-      done = jumped.where(col("moved")).isEmpty
-      a = jumped.select("old_label", "new_label")
+    while (increasing == 0L && !done && round < maxRounds) {
+      val (jumped, moved) = Dedup.checkpointCounting(
+        a.as("x").join(a.as("y"), col("x.new_label") === col("y.old_label"), "left"),
+        col("y.new_label").isNotNull,
+        col("x.old_label").as("old_label"),
+        coalesce(col("y.new_label"), col("x.new_label")).as("new_label"))
+      done = moved == 0L
+      a = jumped
       round += 1
     }
     require(done,
-      s"alias resolution did not converge in $maxRounds rounds — " +
-        "the alias forest is corrupt (a cycle means a merge INCREASED " +
-        "a label, which write paths never do)")
+      s"the alias forest is corrupt: $increasing alias rows do not decrease " +
+        s"their label (a cycle needs one; write paths never write one), and " +
+        s"resolution stopped unconverged after $round of $maxRounds rounds")
     a
   }
+
+  /** `rows` with `label` replaced by its canonical value: the one
+    * alias-resolution join — a broadcast left join against the small
+    * resolved-alias side; a label no alias names is already canonical. */
+  private def canonical(spark: SparkSession, path: String,
+                        rows: DataFrame): DataFrame =
+    rows.join(broadcast(resolvedAliases(spark, path)),
+        col("label") === col("old_label"), "left")
+      .withColumn("label", coalesce(col("new_label"), col("label")))
 
   /** Every ingested document's CANONICAL cluster id — the persisted
     * labels resolved through the alias relation. One corpus-labels
     * scan + one join against the small resolved-alias side. */
   def readLabels(spark: SparkSession, path: String): DataFrame = {
     val (_, idCol) = registryMeta(spark, path)
-    spark.read.parquet(s"$path/labels")
-      .join(broadcast(resolvedAliases(spark, path)),
-        col("label") === col("old_label"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("new_label"), col("label")).as("cluster_id"))
+    canonical(spark, path, spark.read.parquet(s"$path/labels"))
+      .select(col("id").as(idCol), col("label").as("cluster_id"))
   }
 
   /** Canonical labels for a bounded id set — the O(batch) lookup: the
@@ -131,13 +143,10 @@ object ClusterRegistry {
     val buckets = idsL
       .select(pmod(hash(col("id")), lit(nBuckets)).as("lb"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/labels")
-      .where(col("lb").isin(buckets: _*))
-      .join(idsL, Seq("id"), "left_semi")
-      .join(broadcast(resolvedAliases(spark, path)),
-        col("label") === col("old_label"), "left")
-      .select(col("id"),
-        coalesce(col("new_label"), col("label")).as("label"))
+    canonical(spark, path, spark.read.parquet(s"$path/labels")
+        .where(col("lb").isin(buckets: _*))
+        .join(idsL, Seq("id"), "left_semi"))
+      .select(col("id"), col("label"))
   }
 
   /** Ingest one batch: `batchIds` are the new documents (never seen
@@ -204,26 +213,24 @@ object ClusterRegistry {
     * is any (id, quality) relation the pipeline already maintains
     * (lengths, an x02 score, an x81 head, an x43 LM score) — at
     * 100 TB itself an at-rest table, so this is one table⋈table join
-    * keyed on the id plus one partial-aggregable `max(struct)` per
-    * cluster: the mega-cluster collapses map-side, nothing windows
-    * or sorts corpus-wide. Returns (cluster_id, keeper_id,
-    * keeper_quality, n_members). Docs missing from `quality` rank
-    * below every scored member (null quality loses, ties fall to the
-    * id). */
+    * keyed on the id plus the one partial-aggregable keeper aggregate
+    * ([[Dedup.keeperMax]]) per cluster: the mega-cluster collapses
+    * map-side, nothing windows or sorts corpus-wide. Returns
+    * (cluster_id, keeper_id, keeper_quality, n_members). Docs missing
+    * from `quality` rank below every scored member (null quality
+    * loses, ties fall to the id). */
   def keepers(spark: SparkSession, path: String, quality: DataFrame,
               idCol: String = "doc_id",
               qualityCol: String = "quality"): DataFrame = {
     val (_, regIdCol) = registryMeta(spark, path)
     val q = quality.select(col(idCol).cast("long").as("__kid"),
-      col(qualityCol).cast("double").as("__kq"))
+      col(qualityCol).as("__kq"))
     readLabels(spark, path)
       .join(q, col(regIdCol) === col("__kid"), "left")
       .groupBy(col("cluster_id"))
-      .agg(max(struct(
-          coalesce(col("__kq"), lit(Double.NegativeInfinity)).as("q"),
-          (-col(regIdCol)).as("nid"))).as("best"),
+      .agg(Dedup.keeperMax(col("__kq"), col(regIdCol)).as("best"),
         count(lit(1)).as("n_members"))
-      .select(col("cluster_id"), (-col("best.nid")).as("keeper_id"),
+      .select(col("cluster_id"), (-col("best.neg_id")).as("keeper_id"),
         col("best.q").as("keeper_quality"), col("n_members"))
   }
 
@@ -237,12 +244,8 @@ object ClusterRegistry {
     * is rewritten. */
   def compact(spark: SparkSession, path: String): Unit = {
     Compaction.compactPartitionedValueDir(spark, s"$path/labels", Seq("lb")) {
-      spark.read.parquet(s"$path/labels")
-        .join(broadcast(resolvedAliases(spark, path)),
-          col("label") === col("old_label"), "left")
-        .select(col("id"),
-          coalesce(col("new_label"), col("label")).as("label"),
-          col("lb"))
+      canonical(spark, path, spark.read.parquet(s"$path/labels"))
+        .select(col("id"), col("label"), col("lb"))
     }
     Compaction.compactValueDir(spark, s"$path/aliases")(
       emptyAliases(spark))

@@ -79,18 +79,8 @@ object Dedup {
     * the default distinct. */
   def shingles(docs: DataFrame, n: Int = 3, idCol: String = "doc_id",
                textCol: String = "text", dedupe: Boolean = true): DataFrame = {
-    // the word array binds once per row (TextOps.bindOnce) — captured
-    // inline, the shingle lambda re-split the text per shingle,
-    // turning every consumer of this builder O(tokens²)
-    val shingleArr = TextOps.bindOnce(split(trim(col(textCol)), "\\s+")) {
-      words =>
-        when(size(words) < n, array(concat_ws(" ", words)))
-          .otherwise(transform(
-            sequence(lit(0), size(words) - n),
-            i => concat_ws(" ", slice(words, i + 1, lit(n)))))
-    }
     val exploded = docs
-      .withColumn("shingle", explode(shingleArr))
+      .withColumn("shingle", explode(TextOps.wordNgrams(col(textCol), n)))
       .select(col(idCol), col("shingle"))
     if (dedupe) exploded.distinct() else exploded
   }
@@ -838,10 +828,10 @@ object Dedup {
     * `localCheckpoint`ed ONCE up front so an expensive upstream
     * candidate-pair plan (LSH banding) is never recomputed per round,
     * and each round's label table is checkpointed to truncate lineage.
-    * Convergence detection is folded into the hop's materialization via
-    * an accumulator (changed-row count piggybacks the checkpoint job) —
-    * no separate full-table scan per round. Accumulator over-count on
-    * task retry only costs one extra (no-op) round, never a wrong stop.
+    * Convergence is read from the hop's own checkpoint job
+    * ([[checkpointCounting]]): the count of labels the hop moved
+    * is observed while the table materializes — no separate scan and
+    * no second action per round.
     *
     * Returns (idCol, group_id, keep) for every id in `allIds`. */
   def nearDupGroupsDF(pairs: DataFrame, allIds: DataFrame,
@@ -855,12 +845,6 @@ object Dedup {
   def nearDupGroupsDFWithRounds(pairs: DataFrame, allIds: DataFrame,
                                 idCol: String = "doc_id",
                                 maxRounds: Int = 50): (DataFrame, Int) = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = pairs.sparkSession
-    val labelSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("label", LongType, nullable = false)))
     // materialize the symmetrized edges once — every round joins this
     val sym = pairs
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
@@ -872,27 +856,17 @@ object Dedup {
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
-      val changed = spark.sparkContext.longAccumulator(s"cc_changed_r$round")
       val neighborMin = sym
         .join(labels.select(col("id").as("dst"), col("label").as("dst_label")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min("dst_label").as("nbr_label"))
-      // HOP, with the convergence check folded into the checkpoint
-      // job: the narrow map that counts changed rows runs inside the
-      // materialization — no second scan of the label table
-      val hopRows = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-        .rdd.mapPartitions { it =>
-          it.map { r =>
-            val lbl = r.getLong(2)
-            if (lbl != r.getLong(1)) changed.add(1L)
-            Row(r.getLong(0), lbl)
-          }
-        }
-      val hop = spark.createDataFrame(hopRows, labelSchema).localCheckpoint()
+      val (hop, moved) = checkpointCounting(
+        labels.join(neighborMin, Seq("id"), "left")
+          .select(col("id"), col("label").as("old"),
+            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")),
+        col("label") =!= col("old"), col("id"), col("label"))
       round += 1
-      if (changed.value == 0L) {
+      if (moved == 0L) {
         converged = true // closed-neighborhood fixpoint == component min
         labels = hop
       } else {
@@ -913,6 +887,32 @@ object Dedup {
       (col("id") === col("label")).as("keep")), round)
   }
 
+  /** `df.select(cols)` as a local checkpoint, plus how many rows of
+    * `df` satisfy `cond`: the fixpoint read of both label loops, an
+    * Observation on the checkpoint's own job (no second action). The
+    * wait for it is bounded, so an unreported count fails, not hangs.
+    * The checkpoint comes back re-wrapped (lazily, no job) without the
+    * size estimate `localCheckpoint` keeps: every join multiplies its
+    * sides', so a loop joining its own checkpoint would square it per
+    * round and stall planning long before `maxRounds`. */
+  private[graft] def checkpointCounting(df: DataFrame, cond: Column,
+                                        cols: Column*): (DataFrame, Long) = {
+    val seen = org.apache.spark.sql.Observation()
+    val out = df.observe(seen, count_if(cond)).select(cols: _*).localCheckpoint()
+    val wait = scala.concurrent.duration.Duration(10, "minutes")
+    val n = scala.concurrent.Await.result(seen.future, wait).getLong(0)
+    (df.sparkSession.createDataFrame(out.rdd, out.schema), n)
+  }
+
+  /** The keeper rule, one partial-aggregable aggregate: argmax quality,
+    * null quality pinned to −∞ (not left to either engine's null
+    * ordering inside struct comparison), ties to the smallest id (the
+    * largest −id). Yields struct (q, neg_id): the keeper is `-neg_id`. */
+  private[graft] def keeperMax(quality: Column, id: Column): Column =
+    max(struct(
+      coalesce(quality.cast("double"), lit(Double.NegativeInfinity)).as("q"),
+      (-id.cast("long")).as("neg_id")))
+
   /** Near-dup RESOLUTION by quality (the NeMo-Curator / BigScience
     * fuzzy-dedup keeper rule): collapse candidate pairs into connected
     * components, then keep the HIGHEST-quality document of each
@@ -926,12 +926,9 @@ object Dedup {
     * Scale shape: component labels come from the log-round hop+jump
     * [[nearDupGroupsDF]]; the keeper decision then costs ONE keyed
     * 1:1 join (labels ⋈ quality on the id) plus ONE partial-aggregable
-    * groupBy — `max(struct(quality, -id))` combines map-side, so a
-    * mega-component (the templated-page blob) collapses per partition
-    * before its reducer, never concentrating the corpus on one key —
-    * and ONE join back keyed on group_id (the keepers table has one
-    * row per component, AQE-sized to broadcast in the normal case).
-    * Nothing corpus-sized sorts or windows.
+    * groupBy ([[keeperMax]]) and ONE join back keyed on group_id (the
+    * keepers table has one row per component, AQE-sized to broadcast
+    * in the normal case). Nothing corpus-sized sorts or windows.
     *
     * Returns (idCol, group_id, keep, keeper_id) for every id in
     * `docs`; singletons keep themselves. */
@@ -939,20 +936,11 @@ object Dedup {
                       idCol: String = "doc_id", maxRounds: Int = 50): DataFrame = {
     val groups = nearDupGroupsDF(pairs, docs.select(col(idCol)), idCol, maxRounds)
       .select(col(idCol), col("group_id"))
-    // null quality loses to any real score (and a tie of nulls falls
-    // to the id): pin it with -inf rather than leaning on either
-    // engine's null-ordering inside struct comparison
     val labeled = groups.join(
-      docs.select(col(idCol),
-        coalesce(col(qualityCol).cast("double"),
-          lit(Double.NegativeInfinity)).as("_q")), Seq(idCol))
-    // argmax(quality, tie → min id) as a partial-aggregable struct max:
-    // struct compares field-by-field, so (-id) turns the id tie into
-    // "largest -id" = smallest id. No window, no per-group sort.
+      docs.select(col(idCol), col(qualityCol).as("_q")), Seq(idCol))
     val keepers = labeled
       .groupBy("group_id")
-      .agg(max(struct(col("_q").as("q"),
-        (-col(idCol).cast("long")).as("neg_id"))).as("best"))
+      .agg(keeperMax(col("_q"), col(idCol)).as("best"))
       .select(col("group_id"), (-col("best.neg_id")).as("keeper_id"))
     labeled.join(keepers, Seq("group_id"))
       .select(col(idCol), col("group_id"),

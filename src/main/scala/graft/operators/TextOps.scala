@@ -21,6 +21,17 @@ object TextOps {
   private[graft] def bindOnce(c: Column)(f: Column => Column): Column =
     element_at(transform(array(c), f), 1)
 
+  /** Word n-grams of `text` (fewer than `n` words: the whole run as one
+    * gram). The words bind once ([[bindOnce]]): captured inline, the
+    * slice lambda re-split the text per gram, O(tokens²). */
+  private[graft] def wordNgrams(text: Column, n: Int): Column =
+    bindOnce(split(trim(text), "\\s+")) { words =>
+      when(size(words) < n, array(concat_ws(" ", words)))
+        .otherwise(transform(
+          sequence(lit(0), size(words) - n),
+          i => concat_ws(" ", slice(words, i + 1, lit(n)))))
+    }
+
   /** Canonical text normalization for dedup/cleaning pipelines:
     * strip control characters, collapse runs of whitespace to single
     * spaces, trim, lowercase. Idempotent. */
@@ -420,26 +431,17 @@ object TextOps {
     * degenerate short docs.
     *
     * The n-gram multiset of one document never crosses rows, so this is
-    * a pure projection: build the shingle array (same construction as
-    * [[Dedup.shingles]]) and compare `array_distinct` size against
-    * total size in place. Map-only — zero shuffle at any corpus size,
-    * where the earlier explode→groupBy paid a full shuffle of every
-    * n-gram occurrence. */
+    * a pure projection: build the shingle array ([[wordNgrams]], the
+    * array [[Dedup.shingles]] explodes) and compare `array_distinct`
+    * size against total size in place. Map-only — zero shuffle at any
+    * corpus size, where the earlier explode→groupBy paid a full
+    * shuffle of every n-gram occurrence. */
   def repetitionRatio(docs: DataFrame, n: Int = 2, idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    // words and the shingle array each bind once per row (the inline
-    // capture re-split the text per shingle: O(tokens²))
-    val sh = bindOnce(split(trim(col(textCol)), "\\s+")) { words =>
-      when(size(words) < n, array(concat_ws(" ", words)))
-        .otherwise(transform(
-          sequence(lit(0), size(words) - n),
-          i => concat_ws(" ", slice(words, i + 1, lit(n)))))
-    }
+                      textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
-      bindOnce(sh)(s =>
+      bindOnce(wordNgrams(col(textCol), n))(s =>
         lit(1.0) - size(array_distinct(s)).cast("double") / size(s).cast("double"))
         .as("rep_ratio"))
-  }
 
   /** C4/RefinedWeb-style LINE-level dedup: a line (newline-separated
     * span) that occurs anywhere else in the corpus keeps only its

@@ -134,6 +134,55 @@ class ClusterRegistrySpec extends SparkTestBase {
       Seq((7L, 7L)))
   }
 
+  /** A registry over ids 0..k whose aliases/ holds `aliases` as
+    * written, bypassing the ingest path's decreasing-label contract. */
+  private def registryWithAliases(tag: String, k: Long,
+                                  aliases: Seq[(Long, Long)]): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"creg_$tag").toString
+    ClusterRegistry.write((0L to k).map(i => (i, i)).toDF("doc_id", "group_id"),
+      dir, nBuckets = 4)
+    aliases.toDF("old_label", "new_label").repartition(1)
+      .write.mode("overwrite").parquet(s"$dir/aliases")
+    dir
+  }
+
+  test("a cyclic alias relation fails resolution as a corrupt forest") {
+    val dir = registryWithAliases("cycle", 3L, Seq((1L, 2L), (2L, 3L), (3L, 1L)))
+    val e = intercept[IllegalArgumentException] {
+      ClusterRegistry.readLabels(spark, dir).collect()
+    }
+    assert(e.getMessage.contains("the alias forest is corrupt"), e.getMessage)
+  }
+
+  test("job guard: alias resolution runs no job beyond its checkpoints") {
+    // the chain k → k-1 → … → 0 resolves in ~log2(k) + 1 jumping rounds
+    val k = 16L
+    val dir = registryWithAliases("chain", k, (1L to k).map(i => (i, i - 1)))
+    val (resolved, window, executions) =
+      jobsBetweenMarks(ClusterRegistry.resolvedAliases(spark, dir))
+    val ran = window.flatMap(j => Option(j._2)).distinct
+      .map(id => executions.getOrElse(id, s"execution $id"))
+    assert(ran.nonEmpty && ran.forall(_.startsWith("localCheckpoint")),
+      s"resolution ran a job outside its checkpoints: $ran")
+    // outside any SQL execution: at most the alias table's schema read
+    assert(window.count(_._2 == null) <= 1, s"untracked jobs: $window")
+    val rounds = ran.size - 1 // the first checkpoint holds the raw aliases
+    assert(rounds >= 2 && rounds <= 6, s"a $k-level chain took $rounds rounds")
+    assert(resolved.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (1L to k).map(_ -> 0L).toMap)
+  }
+
+  test("a 4096-level alias chain resolves with a bounded plan size estimate") {
+    // each round self-joins the last checkpoint; an estimate carried
+    // across rounds would square per round and stall planning
+    val k = 4096L
+    val dir = registryWithAliases("deep", k, (1L to k).map(i => (i, i - 1)))
+    val resolved = ClusterRegistry.resolvedAliases(spark, dir)
+    assert(resolved.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength <= 256)
+    assert(resolved.where($"new_label" =!= 0L).isEmpty)
+    assert(resolved.count() === k)
+  }
+
   test("randomized equivalence: 30 docs, arbitrary edges, three ingest " +
       "waves ≡ from-scratch") {
     // deterministic 'random' graph: edge (i, j) when (i*31 + j*17) % 7

@@ -382,35 +382,10 @@ class GbtTrainerSpec extends SparkTestBase {
     val ((xsT, ysT), (xsE, ysE)) = split(xs, ys)
     val p = GbtParams(numRound = 3, maxDepth = 3, eta = 0.3, gamma = 0.0,
       subsample = 0.8, earlyStoppingRounds = 3)
-    // listener events arrive in order, so once the closing mark job is
-    // seen, every job the training ran has been counted
-    val mark = "gbt-job-guard-mark"
-    val groups = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.synchronized {
-          groups += Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        }
-    }
-    val sc = spark.sparkContext
-    def markJob(): Unit = {
-      sc.setJobGroup(mark, mark)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
     val (trainDf, evalDf) = (localDf(xsT, ysT), localDf(xsE, ysE))
-    sc.addSparkListener(listener)
-    val booster = try {
-      markJob()
-      val b = GbtTrainer.train(trainDf, "y", (0 until 4).map(i => s"f$i"), p, Some(evalDf))
-      markJob()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (groups.synchronized(groups.count(_ == mark)) < 2 && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      b
-    } finally sc.removeSparkListener(listener)
-    val marks = groups.zipWithIndex.collect { case (g, i) if g == mark => i }
-    assert(marks.length == 2, s"mark jobs seen: ${marks.length}")
-    val jobs = marks(1) - marks(0) - 1
+    val (booster, window, _) = jobsBetweenMarks(
+      GbtTrainer.train(trainDf, "y", (0 until 4).map(i => s"f$i"), p, Some(evalDf)))
+    val jobs = window.length
     assert(booster.trees.exists(_.feat.length == (1 << (p.maxDepth + 1)) - 1),
       "the fixture should grow a full-depth tree")
     assert(jobs <= 3 + p.numRound * (p.maxDepth + 2), s"$jobs jobs")

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Count the at-rest mechanisms of ROADMAP aim 2 in main Scala sources.
+"""Count the mechanisms of ROADMAP aim 2 in main Scala sources.
 
 Usage: python3 tools/mechanisms.py [REPO_ROOT]
 
@@ -16,11 +16,17 @@ MECHANISMS = [
      re.compile(r"_append_\S*_(ok|staging)|_appendtmp_staging")),
     ("swap names (__compact_tmp, __compact_old)",
      re.compile(r"__compact_(tmp|old)")),
-    ('java.io.tmpdir spellings',
-     re.compile(r'System\.getProperty\("java\.io\.tmpdir"\)')),
+    ("java.io.tmpdir uses (property, createTemp*)",
+     re.compile(r'System\.getProperty\("java\.io\.tmpdir"\)'
+                r"|\bcreateTemp(Directory|File)\(")),
     ("estate gate call sites (ensureBuilt/built)",
      re.compile(r"^(?!\s*(private\s+)?def\s).*\b(ensureBuilt|built)\(")),
     ("localCheckpoint sites", re.compile(r"\.localCheckpoint\(")),
+    ("loop convergence reads (accum/observe/isEmpty)",
+     re.compile(r"\blongAccumulator\(|\bObservation\(|\)\.isEmpty\b")),
+    ("argmax aggregates (max(struct(...)))",
+     re.compile(r"^(?!\s*(//|\*)).*\bmax\(struct\(")),
+    ("keeper null pins (coalesce to -inf)", re.compile(r"Double\.NegativeInfinity")),
 ]
 
 
