@@ -7,6 +7,7 @@ import graft.functions.GeoFunctions
 import graft.hazard.Windfield
 import graft.impact.{ImpactModel, TriggerReport, Triggers}
 import graft.publish.Payloads
+import graft.util.Bounded
 
 /** The full forecast dataflow assembled as lazy logical plans
   * (SURVEY.md §3.1): tracks → windfield → per-municipality hazard →
@@ -16,8 +17,12 @@ import graft.publish.Payloads
   * execution: the windfield streams the centroid grid against the
   * broadcast track nodes, so its pair work spreads over the grid's
   * partitions rather than one task per member. Actions happen only at
-  * sinks, and at the trigger step, which collects one row per member
-  * once and returns the trigger tables as local relations.
+  * sinks and in the small-data tail, where every table is at most
+  * municipalities × members rows: the trigger step collects one row per
+  * member once and returns the trigger tables as local relations, the
+  * tail's tables are read on one partition ([[graft.util.Bounded]]),
+  * and the payload builders and `Landfall.evaluate` evaluate when
+  * called.
   */
 object Forecast {
 
@@ -77,10 +82,11 @@ object Forecast {
   def triggers(impact: DataFrame): TriggerReport = Triggers.report(impact)
 
   /** K2 payload values: per-municipality ensemble-mean damaged houses,
-    * densified to every pcode. */
+    * densified to every pcode. The bounded impact table is read on one
+    * partition, so the mean plans no exchange. */
   def exposureValues(impact: DataFrame, pcodes: DataFrame): DataFrame =
     Payloads.densify(
-      impact.groupBy("Mun_Code").agg(avg("damage_num").as("amount"))
+      Bounded.onePartition(impact).groupBy("Mun_Code").agg(avg("damage_num").as("amount"))
         .withColumnRenamed("Mun_Code", "placeCode"),
       pcodes, "amount")
 }

@@ -3,6 +3,8 @@ package graft.impact
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Bounded
+
 /** The legacy R path's damage-probability reporting
   * (lib_r/damage_probability.R — SURVEY.md §3.3: W9/A11/A12 ops):
   *   - per-municipality ensemble percentile of damaged houses
@@ -16,10 +18,13 @@ object DamageProbability {
 
   /** Per-municipality table at an exceedance percentile: for each
     * Mun_Code the damage value exceeded with probability `p` across
-    * members, plus P(damage ≥ threshold) as a whole percent. */
+    * members, plus P(damage ≥ threshold) as a whole percent. The
+    * impact table is bounded (municipalities × members rows), so it is
+    * read on one partition: the aggregate, and a sort of its result,
+    * plan no exchange. */
   def municipalityTable(impact: DataFrame, percentile: Double,
                         threshold: Double): DataFrame =
-    impact.groupBy("Mun_Code").agg(
+    Bounded.onePartition(impact).groupBy("Mun_Code").agg(
       expr(s"percentile(damage_num, ${1 - percentile})").as("damage_at_percentile"),
       round(avg(when(col("damage_num") >= threshold, 100.0).otherwise(0.0)), 0)
         .as("prob_over_threshold_pct"),

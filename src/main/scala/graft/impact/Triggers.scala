@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Bounded
+
 /** The four trigger tables of one forecast, as local relations:
   * collecting or writing them runs no further Spark job. */
 final case class TriggerReport(dref: DataFrame, cerf: DataFrame,
@@ -23,7 +25,11 @@ final case class TriggerReport(dref: DataFrame, cerf: DataFrame,
   * per-member aggregate carrying a conditional total and row count per
   * scope (at most one row per member), collected once; step 3 then runs
   * on the driver over those few rows. The per-table entry points are
-  * views of that pass.
+  * views of that pass. The impact table is at most municipalities ×
+  * members rows, so the pass reads it on one partition
+  * ([[Bounded.onePartition]]): the dedup window and both aggregates plan
+  * no exchange, and the collect runs two jobs (the broadcast of the
+  * one-row Average aggregate, and the pass).
   *
   * Expected input columns: Mun_Code: string, ens_id: int,
   * damage_pct: double (predicted % damaged), damage_num: double
@@ -108,7 +114,7 @@ object Triggers {
   /** All four trigger tables from one pass over the impact table. */
   def report(impact: DataFrame): TriggerReport = {
     val spark = impact.sparkSession
-    val deduped = dedupKeepMax(impact)
+    val deduped = dedupKeepMax(Bounded.onePartition(impact))
     val province = concat(substring(col("Mun_Code"), 1, 6), lit("00000"))
     val provinces = (StartProbabilities.keys ++ HiProbabilities.keys).toSeq.distinct
     val scopes: Seq[(String, Column)] =

@@ -2,7 +2,7 @@ package graft.publish
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,6 +40,17 @@ object Landfall {
     * Returns (stateDf, annotatedTrackDf):
     *   state: storm_id, landfall_code, lead_time_hours, lead_time
     *   track: input + vmax_1min, first_landfall, closest_to_land
+    *
+    * Evaluates when called: the per-storm window pass (and with it the
+    * whole upstream track plan) runs once, into an eager
+    * `localCheckpoint`, and both results read that materialization.
+    * Every window column is a per-storm constant, so the state is one
+    * row per storm of it: the pass also numbers each storm's rows by
+    * time, and the state keeps row 1, with no further exchange or
+    * aggregate. (Numbering after the checkpoint would shuffle again:
+    * under AQE a checkpoint does not know its `storm_id` partitioning.)
+    * The track is not collected: the checkpoint stays distributed,
+    * whatever its size.
     */
   def evaluate(track: DataFrame, forecastTime: Timestamp): (DataFrame, DataFrame) = {
     val byStorm = Window.partitionBy("storm_id")
@@ -58,16 +69,14 @@ object Landfall {
       .withColumn("closest_time",
         min(when(col("dist_to_land_km") === col("min_dist"), col("time"))).over(byStorm))
       .withColumn("closest_to_land", col("time") === col("closest_time"))
+      .withColumn("storm_row", row_number().over(byStorm.orderBy("time")))
+      .localCheckpoint()
 
+    // the first landfall point's time is first_land_time itself, so the
+    // reference time is the landfall, else the closest approach
     val state = annotated0
-      .groupBy("storm_id")
-      .agg(
-        first(col("first_land_time"), ignoreNulls = true).as("first_land_time"),
-        min("min_dist").as("min_dist"),
-        max("max_lon").as("max_lon"),
-        min(when(col("first_landfall"), col("time"))).as("landfall_t"),
-        min("closest_time").as("closest_t"))
-      .withColumn("ref_time", coalesce(col("landfall_t"), col("closest_t")))
+      .where(col("storm_row") === 1)
+      .withColumn("ref_time", coalesce(col("first_land_time"), col("closest_time")))
       .withColumn("hours0",
         (floor((unix_timestamp(col("ref_time")) - unix_timestamp(lit(forecastTime))) / 3600)
           - LatencyCorrectionH).cast("int"))
@@ -87,7 +96,7 @@ object Landfall {
         "min_dist", "first_land_time")
 
     val annotated = annotated0.drop(
-      "first_land_time", "min_dist", "max_lon", "closest_time")
+      "first_land_time", "min_dist", "max_lon", "closest_time", "storm_row")
     (state, annotated)
   }
 }

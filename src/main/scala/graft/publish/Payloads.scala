@@ -1,16 +1,23 @@
 package graft.publish
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Bounded
 
 /** K2/K3: exposure-layer and track JSON assembly (SURVEY.md §2.2,
   * reference forecast_process.py:848-872, 1160-1233, 1666-1769).
   *
-  * The payloads are tiny (one row per municipality, ~1.6k) — the Spark
-  * job's role is to ASSEMBLE them relationally (collect_list of
-  * structs → to_json) so the expensive upstream stays distributed; the
-  * HTTP POST itself is a driver-side adapter outside the engine
-  * (SURVEY.md §2.14).
+  * Each builder evaluates when it is called, as
+  * [[graft.impact.Triggers.report]] does: it collects its input once
+  * ([[Bounded.gathered]]) and renders the document over the resulting
+  * one-row local relation (sorted array of structs → to_json), so the
+  * JSON is Spark's own bytes and collecting the returned frame runs no
+  * job. That is bounded by
+  * construction: every input row ends up in the one document (~1.6k
+  * municipalities, or one track's 3-hourly points). The expensive
+  * upstream stays distributed; the HTTP POST itself is a driver-side
+  * adapter outside the engine (SURVEY.md §2.14).
   */
 object Payloads {
 
@@ -22,14 +29,13 @@ object Payloads {
                     eventName: String, adminLevel: Int = 3,
                     country: String = "PHL",
                     disasterType: String = "typhoon"): DataFrame =
-    values
-      // sort_array over (placeCode, amount) structs: collect_list order
-      // is partition-dependent; sorting makes the payload deterministic
-      .agg(sort_array(collect_list(struct(
-        col("placeCode"), round(col("amount"), 2).as("amount")))).as("exposurePlaceCodes"))
+    Bounded.gathered(values.select(col("placeCode"), round(col("amount"), 2).as("amount")),
+      "places")
       .select(to_json(struct(
         lit(country).as("countryCodeISO3"),
-        col("exposurePlaceCodes"),
+        // sorting the (placeCode, amount) structs makes the document
+        // independent of the input's row order
+        sort_array(col("places")).as("exposurePlaceCodes"),
         lit(adminLevel).as("adminLevel"),
         lit(leadTime).as("leadTime"),
         lit(indicator).as("dynamicIndicator"),
@@ -45,21 +51,20 @@ object Payloads {
       hour(col("time")) % 3 === 0 && minute(col("time")) === 0)
     // chronological order made deterministic by sorting (time, point)
     // pairs, then projecting the points back out
-    threeHourly
-      .agg(array_sort(collect_list(struct(
+    Bounded.gathered(threeHourly.select(
         col("time").as("t"),
         struct(
           col("lat"), col("lon"),
           date_format(col("time"), "MM-dd-yyyy HH:mm:ss").as("timestampOfTrackpoint"),
           round(col("vmax_1min"), 2).as("windspeed"),
           col("first_landfall").as("firstLandfall"),
-          col("closest_to_land").as("closestToLand")).as("p")))).as("sorted"))
-      .select(transform(col("sorted"), x => x("p")).as("trackpointDetails"))
+          col("closest_to_land").as("closestToLand")).as("p")), "points")
       .select(to_json(struct(
         lit(country).as("countryCodeISO3"),
         lit(leadTime).as("leadTime"),
         lit(eventName).as("eventName"),
-        col("trackpointDetails"))).as("payload"))
+        transform(array_sort(col("points")), x => x("p")).as("trackpointDetails")))
+        .as("payload"))
   }
 
   /** No-event heartbeat (pipeline.py:148-220): zero-filled layers for

@@ -1,58 +1,21 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 
-import graft.geo.SpatialJoin
-import graft.hazard.CentroidGrid
-import graft.impact.{GbtParams, ImpactModel}
 import graft.publish.Payloads
-import graft.rain.Rainfall
-import graft.tracks.TrackPrep
 
 /** End-to-end pipeline test (SURVEY.md §5.2 item 4): synthetic
   * 5-member storm → resample → windfield → per-municipality hazard →
   * rain zonal stats → features → GBT → ensemble aggregation →
-  * triggers → exposure payload. Asserts structural invariants at each
-  * stage, on the shapes the reference's CSV/JSON artifacts have.
+  * triggers → exposure payload ([[ForecastFixture]]). Asserts
+  * structural invariants at each stage, on the shapes the reference's
+  * CSV/JSON artifacts have.
   */
-class ForecastE2ESpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  // 4 square "municipalities" tiling (13..15)x(122..124)
-  private lazy val polygons = Seq(
-    ("PH051000000", "POLYGON ((122 13, 123 13, 123 14, 122 14, 122 13))"),
-    ("PH052000000", "POLYGON ((123 13, 124 13, 124 14, 123 14, 123 13))"),
-    ("PH161000000", "POLYGON ((122 14, 123 14, 123 15, 122 15, 122 14))"),
-    ("PH162000000", "POLYGON ((123 14, 124 14, 124 15, 123 15, 123 14))"))
-    .toDF("admin_code", "wkt")
-
-  private lazy val centroids = CentroidGrid.generate(spark, 122.0, 13.0, 124.0, 15.0, 0.1)
-  private lazy val centroidAdmin = SpatialJoin.centroidAdminMap(centroids, polygons).cache()
-
-  // 5-member ensemble: small lat offsets per member, 6-hourly, crossing the box
-  private lazy val tracks = {
-    val rows = for {
-      ens <- 0 until 5
-      step <- 0 until 6
-    } yield ("HAGIBIS", ens, ts(f"2024-01-01 ${step * 6}%02d:00:00"),
-      13.0 + step * 0.4 + ens * 0.05, 125.0 - step * 0.6,
-      960.0 + ens, 1010.0, 0.0)
-    rows.toDF("storm_id", "ens_id", "time", "lat", "lon",
-      "central_pressure", "environmental_pressure", "radius_max_wind")
-  }
+class ForecastE2ESpec extends SparkTestBase with ForecastFixture {
 
   test("end-to-end: tracks → windfield → hazard → impact → triggers → payload") {
-    // W4: 30-min resample
-    val resampled = TrackPrep.resample(tracks,
-      Seq("lat", "lon", "central_pressure", "environmental_pressure", "radius_max_wind"))
     assert(resampled.count() == 5 * 61)   // 30h at 30-min steps + 1
 
-    // X1-X5 + J2/A1/A2/X8: per-municipality hazard
-    val hazard = Forecast.municipalHazard(resampled, centroids, centroidAdmin).cache()
     val hz = hazard.collect()
     assert(hz.nonEmpty)
     assert(hazard.select("ens_id").distinct().count() == 5)
@@ -61,37 +24,9 @@ class ForecastE2ESpec extends SparkTestBase {
     // invariant: min distance ≤ mean-ish sanity — every mun within the box
     assert(hz.forall(_.getAs[Double]("HAZ_dis_track_min") < 1000.0))
 
-    // rainfall cube: 2 cells × 3 timesteps × 3 members
-    val cube = (for {
-      num <- 0 until 3; t <- 0 until 3
-      (la, lo) <- Seq((13.5, 122.5), (14.5, 123.5))
-    } yield (ts(f"2024-01-01 0$t:00:00"), la, lo, num, 10.0 * t + num))
-      .toDF("time", "lat", "lon", "number", "precip")
-    val cellIds = Rainfall.withCellId(Rainfall.ensembleMedian(cube), res = 0.5)
-    // map rain cells to admins via their own (coarse) cell→admin map:
-    val rainCentroids = cellIds.select("centroid_id", "lat", "lon").distinct()
-    val rainAdmin = SpatialJoin.centroidAdminMap(rainCentroids, polygons)
-    val rain = Rainfall.adminRainfall(cellIds, rainAdmin)
-      .select(col("admin_code").as("Mun_Code"),
-        col("max_rain").as("HAZ_rainfall_max_6h"))
     assert(rain.count() > 0)
 
-    // features + tiny model
-    val indicators = Seq(
-      ("PH051000000", 1000.0), ("PH052000000", 2000.0),
-      ("PH161000000", 1500.0), ("PH162000000", 800.0))
-      .toDF("Mun_Code", "VUL_Housing_Units")
-    val feats = Forecast.features(hazard, rain, indicators)
-    val featCols = Seq("HAZ_v_max", "HAZ_v_max_3", "HAZ_dis_track_min",
-      "HAZ_rainfall_max_6h", "VUL_Housing_Units")
-    // synthetic label to fit on (damage grows with wind)
-    val trainDf = feats.withColumn("DAM_perc_dmg",
-      least(lit(100.0), pow(col("HAZ_v_max"), 2) / 50.0))
-    val model = ImpactModel.train(trainDf, features = featCols,
-      params = GbtParams(numRound = 8, maxDepth = 3, eta = 0.3, gamma = 0.1))
-    val impact = ImpactModel.predict(model, feats, features = featCols).cache()
-
-    assert(impact.count() == feats.count())
+    assert(impact.count() == features.count())
     assert(impact.where(col("damage_pct") < 0 || col("damage_pct") > 100).count() == 0)
 
     // triggers: all four tables produce rows with the contract columns
@@ -102,20 +37,15 @@ class ForecastE2ESpec extends SparkTestBase {
     assert(rep.start.count() <= 15 && rep.hi.count() <= 3)
 
     // exposure payload over all pcodes
-    val pcodes = polygons.select(col("admin_code").as("pcode"))
     val values = Forecast.exposureValues(impact, pcodes)
     assert(values.count() == 4)
     val json = Payloads.exposureLayer(values, "houses_affected", "24-hour", "HAGIBIS")
       .collect().head.getString(0)
     assert(json.contains("\"dynamicIndicator\":\"houses_affected\""))
     assert(json.contains("PH051000000"))
-
-    hazard.unpersist(); impact.unpersist()
   }
 
   test("hazard partitioning: no collect-driven loops, one row per (storm, ens, mun)") {
-    val resampled = TrackPrep.resample(tracks,
-      Seq("lat", "lon", "central_pressure", "environmental_pressure", "radius_max_wind"))
     val hazard = Forecast.municipalHazard(resampled, centroids, centroidAdmin)
     val dup = hazard.groupBy("storm_id", "ens_id", "Mun_Code")
       .count().where(col("count") > 1).count()

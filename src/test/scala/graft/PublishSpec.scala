@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.publish.{Landfall, Payloads}
@@ -82,6 +83,60 @@ class PublishSpec extends SparkTestBase {
     assert(!json.contains("03:30:00"))
     assert(json.contains("\"firstLandfall\":true"))
     assert(json.contains("\"closestToLand\":true"))
+  }
+
+  private def layer(values: DataFrame) =
+    Payloads.exposureLayer(values, "houses_affected", "24-hour", "molave")
+      .collect().head.getString(0)
+  private def layerDoc(places: String) =
+    s"""{"countryCodeISO3":"PHL","exposurePlaceCodes":[$places],"adminLevel":3,""" +
+      """"leadTime":"24-hour","dynamicIndicator":"houses_affected","disasterType":"typhoon",""" +
+      """"eventName":"molave"}"""
+  private def trackDoc(points: String) =
+    s"""{"countryCodeISO3":"PHL","leadTime":"24-hour","eventName":"molave","trackpointDetails":[$points]}"""
+
+  test("K2 exposure layer over no values is one document with no places") {
+    assert(layer(Seq.empty[(String, Double)].toDF("placeCode", "amount")) == layerDoc(""))
+  }
+
+  test("K2 exposure layer: a null amount is zero-filled by densify, omitted without it") {
+    val pcodes = Seq("PH001", "PH002", "PH003").toDF("pcode")
+    val sparse = Seq(("PH002", None), ("PH003", Some(7.456)), ("PH009", Some(1.0)))
+      .toDF("placeCode", "dmg")
+    assert(layer(Payloads.densify(sparse, pcodes, "dmg")) == layerDoc(
+      """{"placeCode":"PH001","amount":0.0},{"placeCode":"PH002","amount":0.0},""" +
+        """{"placeCode":"PH003","amount":7.46}"""))
+    assert(layer(Seq(("PH001", Some(2.0)), ("PH002", None)).toDF("placeCode", "amount")) ==
+      layerDoc("""{"placeCode":"PH001","amount":2.0},{"placeCode":"PH002"}"""))
+  }
+
+  test("K3 track payload: a track with no 3-hourly point has no trackpoints") {
+    val track = Seq(
+      (ts("2024-01-02 01:00:00"), 14.0, 125.0, 55.0, true, false),
+      (ts("2024-01-02 03:30:00"), 14.1, 125.1, 56.0, false, true))
+      .toDF("time", "lat", "lon", "vmax_1min", "first_landfall", "closest_to_land")
+      .withColumn("storm_id", lit("S1"))
+    assert(Payloads.trackPayload(track, "molave", "24-hour").collect().head.getString(0) ==
+      trackDoc(""))
+  }
+
+  test("K3 track payload: two storms sharing a timestamp order by the point") {
+    val track = Seq(
+      ("S2", ts("2024-01-02 06:00:00"), 15.5, 124.0, 40.004, false, false),
+      ("S1", ts("2024-01-02 06:00:00"), 14.25, 125.5, 61.126, true, false),
+      ("S1", ts("2024-01-02 03:00:00"), 14.0, 126.0, 58.0, false, false),
+      ("S2", ts("2024-01-02 09:00:00"), 15.75, 123.5, 42.0, false, true))
+      .toDF("storm_id", "time", "lat", "lon", "vmax_1min", "first_landfall", "closest_to_land")
+    assert(Payloads.trackPayload(track, "molave", "24-hour").collect().head.getString(0) ==
+      trackDoc(
+        """{"lat":14.0,"lon":126.0,"timestampOfTrackpoint":"01-02-2024 03:00:00",""" +
+        """"windspeed":58.0,"firstLandfall":false,"closestToLand":false},""" +
+        """{"lat":14.25,"lon":125.5,"timestampOfTrackpoint":"01-02-2024 06:00:00",""" +
+        """"windspeed":61.13,"firstLandfall":true,"closestToLand":false},""" +
+        """{"lat":15.5,"lon":124.0,"timestampOfTrackpoint":"01-02-2024 06:00:00",""" +
+        """"windspeed":40.0,"firstLandfall":false,"closestToLand":false},""" +
+        """{"lat":15.75,"lon":123.5,"timestampOfTrackpoint":"01-02-2024 09:00:00",""" +
+        """"windspeed":42.0,"firstLandfall":false,"closestToLand":true}"""))
   }
 
   test("J7 densify zero-fills missing pcodes; no-event heartbeat all zeros") {
