@@ -124,7 +124,7 @@ object BenchAnn {
     import graft.operators.IvfIndex
     def inertia(rounds: Int): (Double, Long, Double) = {
       // lloydIterate is PARTLY eager (each round's bounded centroid
-      // table localCheckpoints, which runs that round's corpus pass),
+      // table is truncated, which runs that round's corpus pass),
       // and the final assign + this inertia aggregation are lazy — so
       // BOTH lloydIterate and the aggregation must sit inside the
       // timed block for the wall to cover all rounds

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Bench.timed
 import graft.operators.Dedup
+import graft.util.Stage
 
 /** Dedup-at-scale benchmark: 1M synthetic documents (deterministic
   * word salad from md5-derived vocabulary, ~2% planted near-dups)
@@ -73,13 +74,10 @@ object BenchDedup {
             (conv(substring(md5(concat(col("seed").cast("string"), lit("_"),
               i.cast("string"))), 1, 6), 16, 10).cast("long") % 10000).cast("string")))))
       .select(col("id").as("doc_id"), col("text"))
-    val (_, tIndex) = timed {
-      Dedup.minhashSignaturesOnePass(docs, n = 3, numPerm = 16)
-        .localCheckpoint().count()
+    val (corpusSigs, tIndex) = timed {
+      Stage.truncate(Dedup.minhashSignaturesOnePass(docs, n = 3, numPerm = 16))
     }
-    val corpusSigs = Dedup.minhashSignaturesOnePass(docs, n = 3, numPerm = 16)
-      .localCheckpoint()
-    val corpusSets = Dedup.shingleHashSets(docs, n = 3).localCheckpoint()
+    val corpusSets = Stage.truncate(Dedup.shingleHashSets(docs, n = 3))
     val (nIngest, tIngest) = timed {
       Dedup.incrementalNearDups(batch, corpusSigs, corpusSets,
         n = 3, bands = 4, rowsPer = 4, threshold = 0.8).count()

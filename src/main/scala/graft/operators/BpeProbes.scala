@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expressions.BpeOps
 import graft.sources.Tables
+import graft.util.Stage
 
 /** Certification probes for the BPE tokenizer (graft.operators.Bpe):
   * encode, train, token-budget chunking and token-budget packing, each
@@ -346,28 +347,21 @@ object BpeProbes {
     Probe("x72_token_pipeline",
       (s, d) => {
         graft.GraftExtensions.register(s)
-        // Lineage truncation (the x123/x38 lesson), not cross-run
-        // caching: the normalize kernel feeds both the keeper agg and
-        // the join-back, and the (slim) token-count relation is
+        // the normalize kernel feeds both the keeper agg and the
+        // join-back, and the (slim) token-count relation is
         // re-referenced by the budget fill AND the packing join —
         // lazily composed, the BPE tokenCount kernel re-scans the
-        // corpus per reference. The normalized corpus is CORPUS-SIZED,
-        // so it materializes through the at-rest parquet write
-        // ([[Materialize]] — the cleaned-corpus-artifact shape a real
-        // assemble job pays anyway), not localCheckpoint's
-        // executor-pinned non-recomputable blocks; the slim per-doc
-        // counts relation stays a localCheckpoint (three numeric
-        // columns — the bounded-intermediate tool is right there).
-        val docs = Materialize.toParquet(Tables.documents(s, d)
+        // corpus per reference. The normalized corpus is corpus-sized
+        // (at rest); the per-doc counts are three numeric columns.
+        val docs = Stage.atRest(Tables.documents(s, d)
           .select(col("doc_id"), col("lang"),
             TextOps.normalizeText(col("text")).as("text")),
           "x72_normalized")
         val keep = docs.groupBy(md5(col("text")).as("h"))
           .agg(min(col("doc_id")).as("doc_id"))
         val deduped = docs.join(keep.select("doc_id"), Seq("doc_id"))
-        val counted = deduped.select(col("doc_id"), col("lang"),
-          Bpe.tokenCount(col("text"), FixedMerges).cast("long").as("n_toks"))
-          .localCheckpoint()
+        val counted = Stage.truncate(deduped.select(col("doc_id"), col("lang"),
+          Bpe.tokenCount(col("text"), FixedMerges).cast("long").as("n_toks")))
         val sel = Sampling.tokenBudgetSelect(
           counted.withColumn("score", col("n_toks").cast("double")),
           budget = 30000L, scoreCol = "score", tokenCol = "n_toks")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Persistent near-duplicate CLUSTER IDENTITY, updated incrementally —
   * the at-rest registry that turns the pair/ingest machinery (x06 LSH
   * candidates, x32 incremental near-dups, x105 connected components)
@@ -86,19 +88,19 @@ object ClusterRegistry {
     * table ALONE (one row per historical merge — ≪ corpus); chains
     * are strictly decreasing so this terminates. The load counts the
     * aliases that do not decrease (a cycle needs one), each round the
-    * targets that still MOVE, both inside their own checkpoint jobs
-    * ([[Dedup.checkpointCounting]]): no job beyond the checkpoints.
+    * targets that still MOVE, both inside the jobs that materialize
+    * them ([[graft.util.Stage]]): no job beyond the checkpoints.
     * `maxRounds` bounds the work; a cycle fails at once. */
   def resolvedAliases(spark: SparkSession, path: String,
                       maxRounds: Int = 50): DataFrame = {
-    val (loaded, increasing) = Dedup.checkpointCounting(
+    val (loaded, increasing) = Stage.truncate(
       spark.read.parquet(s"$path/aliases"),
       col("new_label") >= col("old_label"), col("old_label"), col("new_label"))
     var a = loaded
     var round = 0
     var done = false
     while (increasing == 0L && !done && round < maxRounds) {
-      val (jumped, moved) = Dedup.checkpointCounting(
+      val (jumped, moved) = Stage.truncate(
         a.as("x").join(a.as("y"), col("x.new_label") === col("y.old_label"), "left"),
         col("y.new_label").isNotNull,
         col("x.old_label").as("old_label"),
@@ -162,16 +164,14 @@ object ClusterRegistry {
     val spark = batchIds.sparkSession
     Compaction.appendWithMarker(spark, path, doneMarker) { staging =>
       val (nBuckets, _) = registryMeta(spark, path)
-      val bset = batchIds
-        .select(col(batchIds.columns.head).cast("long").as("id"))
-        .distinct().localCheckpoint()
-      val e = edges.select(col(aCol).cast("long").as("a"),
-        col(bCol).cast("long").as("b")).distinct().localCheckpoint()
+      val bset = Stage.truncate(batchIds
+        .select(col(batchIds.columns.head).cast("long").as("id")).distinct())
+      val e = Stage.truncate(edges.select(col(aCol).cast("long").as("a"),
+        col(bCol).cast("long").as("b")).distinct())
       val endpoints = e.select(col("a").as("id"))
         .union(e.select(col("b").as("id"))).distinct()
       val touched = endpoints.join(bset, Seq("id"), "left_anti")
-      val corpusLabels = lookupLabels(spark, path, touched)
-        .localCheckpoint()
+      val corpusLabels = Stage.truncate(lookupLabels(spark, path, touched))
       val missing = touched.join(corpusLabels, Seq("id"), "left_anti")
       require(missing.isEmpty,
         "ingest edges touch corpus ids the registry has never seen: " +
@@ -188,8 +188,8 @@ object ClusterRegistry {
         .select(col("na").as("id_a"), col("nb").as("id_b"))
       val miniNodes = bset.select(col("id"))
         .union(corpusLabels.select(col("label").as("id"))).distinct()
-      val groups = Dedup.nearDupGroupsDF(miniE, miniNodes, "id")
-        .select(col("id"), col("group_id")).localCheckpoint()
+      val groups = Stage.truncate(Dedup.nearDupGroupsDF(miniE, miniNodes, "id")
+        .select(col("id"), col("group_id")))
       groups.join(bset, Seq("id"))
         .select(col("id"), col("group_id").as("label"))
         .withColumn("lb", pmod(hash(col("id")), lit(nBuckets)))

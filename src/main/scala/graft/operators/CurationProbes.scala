@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.Stage
 
 /** Certification probes for the URL-curation and corpus-assembly
   * operators (x60–x64). URLs are synthesized from `doc_id` arithmetic
@@ -236,17 +237,16 @@ object CurationProbes {
         // (CCNet scores shards to disk, then tiers); without it both
         // scoreBuckets branches (threshold training + labeling)
         // re-run the full lmScore window+joins over the corpus
-        val scored = TextOps.lmScore(docs, contexts, bigrams, vocab, k = 1.0)
-          .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-          .localCheckpoint()
+        val scored = Stage.truncate(TextOps.lmScore(docs, contexts, bigrams, vocab, k = 1.0)
+          .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
         // the per-lang threshold TABLE is bounded (|langs| rows) but
         // its two-phase-percentile derivation is a 74-exchange subplan
         // re-instantiated into the final label plan (60 re-references
         // of the score table in the before-plan) — materialize it so
         // the labeling force is one broadcast join (the deployment
         // shape: thresholds persist, arrivals tier against them)
-        val thr = Sampling.scoreBucketThresholds(scored, "lm_score", "lang")
-          .localCheckpoint()
+        val thr = Stage.truncate(
+          Sampling.scoreBucketThresholds(scored, "lm_score", "lang"))
         Sampling.labelByThresholds(scored, thr, "lm_score", "lang")
           .select(col("doc_id"), col("lang"), col("lm_score"), col("bucket"))
           .orderBy("doc_id")

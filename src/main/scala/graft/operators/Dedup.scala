@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH near-dup, SimHash, n-gram Jaccard.
   *
@@ -791,14 +793,12 @@ object Dedup {
                                idCol: String = "doc_id",
                                textCol: String = "text",
                                fpp: Double = 0.01): DataFrame = {
-    // localCheckpoint: the eval shingle relation feeds THREE actions
-    // (the sizing count, the bloom build, the final join) — one
-    // materialization instead of three runs of the shingle kernel,
-    // and the count over the checkpointed partitions is near-free.
-    // The eval side is dimension-sized by contract, so the
-    // materialized rows are small.
-    val eh = shingleRows(eval, n, idCol, textCol, "eval_id").localCheckpoint()
-    val bytes = bloomBytes(eh, eh.count(), fpp)
+    // the eval shingle relation feeds the bloom build and the final
+    // join, and its row count sizes the bloom: one materialization
+    // that counts its rows in the same job. The eval side is
+    // dimension-sized by contract, so the materialized rows are small.
+    val (eh, evalRows) = Stage.truncate(shingleRows(eval, n, idCol, textCol, "eval_id"), lit(true))
+    val bytes = bloomBytes(eh, evalRows, fpp)
     val th = shingleRows(train, n, idCol, textCol, "train_id")
       .where(call_function("bloom_might_contain", lit(bytes), col("h")))
     overlapCounts(th, eh, minOverlap)
@@ -825,13 +825,12 @@ object Dedup {
     * hop, one label⋈label self-join for the jump. The jump join's probe
     * side keys skew toward popular labels as components collapse — AQE
     * skew-join splitting handles that. The symmetrized edge list is
-    * `localCheckpoint`ed ONCE up front so an expensive upstream
-    * candidate-pair plan (LSH banding) is never recomputed per round,
-    * and each round's label table is checkpointed to truncate lineage.
-    * Convergence is read from the hop's own checkpoint job
-    * ([[checkpointCounting]]): the count of labels the hop moved
-    * is observed while the table materializes — no separate scan and
-    * no second action per round.
+    * truncated ONCE up front so an expensive upstream candidate-pair
+    * plan (LSH banding) is never recomputed per round, and each round's
+    * label table is truncated too ([[graft.util.Stage]]). Convergence
+    * is read from the hop's own materializing job: the count of labels
+    * the hop moved is observed while the table materializes — no
+    * separate scan and no second action per round.
     *
     * Returns (idCol, group_id, keep) for every id in `allIds`. */
   def nearDupGroupsDF(pairs: DataFrame, allIds: DataFrame,
@@ -846,13 +845,12 @@ object Dedup {
                                 idCol: String = "doc_id",
                                 maxRounds: Int = 50): (DataFrame, Int) = {
     // materialize the symmetrized edges once — every round joins this
-    val sym = pairs
+    val sym = Stage.truncate(pairs
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
       .union(pairs
-        .select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
-      .localCheckpoint()
-    var labels = allIds.select(col(idCol).cast("long").as("id"))
-      .withColumn("label", col("id")).localCheckpoint()
+        .select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst"))))
+    var labels = Stage.truncate(allIds.select(col(idCol).cast("long").as("id"))
+      .withColumn("label", col("id")))
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -860,7 +858,7 @@ object Dedup {
         .join(labels.select(col("id").as("dst"), col("label").as("dst_label")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min("dst_label").as("nbr_label"))
-      val (hop, moved) = checkpointCounting(
+      val (hop, moved) = Stage.truncate(
         labels.join(neighborMin, Seq("id"), "left")
           .select(col("id"), col("label").as("old"),
             least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")),
@@ -874,34 +872,16 @@ object Dedup {
         // Labels are always ids of vertices in `allIds`, so the self-join
         // hits; coalesce guards edge endpoints outside the id universe.
         // label(w) ≤ w by monotonicity, so no least() needed.
-        labels = hop
+        labels = Stage.truncate(hop
           .join(hop.select(col("id").as("jid"), col("label").as("jlabel")),
             col("label") === col("jid"), "left")
-          .select(col("id"), coalesce(col("jlabel"), col("label")).as("label"))
-          .localCheckpoint()
+          .select(col("id"), coalesce(col("jlabel"), col("label")).as("label")))
       }
     }
     require(converged, s"connected components did not converge in $maxRounds rounds" +
       " (log-round hop+jump: this bounds component diameter by ~2^" + (maxRounds - 1) + ")")
     (labels.select(col("id").as(idCol), col("label").as("group_id"),
       (col("id") === col("label")).as("keep")), round)
-  }
-
-  /** `df.select(cols)` as a local checkpoint, plus how many rows of
-    * `df` satisfy `cond`: the fixpoint read of both label loops, an
-    * Observation on the checkpoint's own job (no second action). The
-    * wait for it is bounded, so an unreported count fails, not hangs.
-    * The checkpoint comes back re-wrapped (lazily, no job) without the
-    * size estimate `localCheckpoint` keeps: every join multiplies its
-    * sides', so a loop joining its own checkpoint would square it per
-    * round and stall planning long before `maxRounds`. */
-  private[graft] def checkpointCounting(df: DataFrame, cond: Column,
-                                        cols: Column*): (DataFrame, Long) = {
-    val seen = org.apache.spark.sql.Observation()
-    val out = df.observe(seen, count_if(cond)).select(cols: _*).localCheckpoint()
-    val wait = scala.concurrent.duration.Duration(10, "minutes")
-    val n = scala.concurrent.Await.result(seen.future, wait).getLong(0)
-    (df.sparkSession.createDataFrame(out.rdd, out.schema), n)
   }
 
   /** The keeper rule, one partial-aggregable aggregate: argmax quality,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** DSIR — Data Selection via Importance Resampling (Xie et al.,
   * NeurIPS 2023): pick raw-corpus documents whose hashed-n-gram
   * distribution looks like a TARGET corpus (wiki/books), by importance
@@ -57,14 +59,13 @@ object Dsir {
                         numBuckets: Int = 1 << 16,
                         textCol: String = "text",
                         fastHash: Boolean = false): (DataFrame, DataFrame) = {
-    val both = docs
+    val both = Stage.truncate(docs
       .select(isTarget.as("_t"), explode(QualityClassifier.termArray(col(textCol))).as("term"))
       .select(col("_t"), QualityClassifier.hashedFeature(col("term"), numBuckets,
         fastHash, salt = "dsir_").as("f"))
       .groupBy("f")
       .agg(sum(when(col("_t"), 1L).otherwise(0L)).as("ct"),
-        sum(when(!col("_t"), 1L).otherwise(0L)).as("cr"))
-      .localCheckpoint()
+        sum(when(!col("_t"), 1L).otherwise(0L)).as("cr")))
     (both.where(col("ct") > 0).select(col("f"), col("ct").as("c")),
       both.where(col("cr") > 0).select(col("f"), col("cr").as("c")))
   }
@@ -79,24 +80,22 @@ object Dsir {
     // Materialize both count tables BEFORE fanning out (each feeds a
     // total and a join below — without this, every consumer re-runs
     // the corpus scan behind the counts; measured as most of x75's
-    // first wall). Bounded at numBuckets rows by construction, so
-    // this is a KB-scale localCheckpoint, not a corpus cache. The
-    // output is checkpointed too: it is the MODEL — ≤ numBuckets rows
+    // first wall). Bounded at numBuckets rows by construction. The
+    // output is materialized too: it is the MODEL — ≤ numBuckets rows
     // that every scoring pass broadcasts.
-    val tc = targetCounts.localCheckpoint()
-    val rc = rawCounts.localCheckpoint()
+    val tc = Stage.truncate(targetCounts)
+    val rc = Stage.truncate(rawCounts)
     val tTot = tc.agg(sum("c").as("t_tot"))
     val rTot = rc.agg(sum("c").as("r_tot"))
     val buckets = spark(targetCounts).range(numBuckets).select(col("id").as("f"))
-    buckets
+    Stage.truncate(buckets
       .join(broadcast(tc.withColumnRenamed("c", "ct")), Seq("f"), "left")
       .join(broadcast(rc.withColumnRenamed("c", "cr")), Seq("f"), "left")
       .crossJoin(broadcast(tTot))
       .crossJoin(broadcast(rTot))
       .select(col("f"),
         (log((coalesce(col("ct"), lit(0L)) + lit(k)) / (col("t_tot") + d)) -
-         log((coalesce(col("cr"), lit(0L)) + lit(k)) / (col("r_tot") + d))).as("lr"))
-      .localCheckpoint()
+         log((coalesce(col("cr"), lit(0L)) + lit(k)) / (col("r_tot") + d))).as("lr")))
   }
 
   private def spark(df: DataFrame) = df.sparkSession

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.Stage
 
 /** Certification probes for the training-data extension surface
   * (text analysis, dedup, similarity) — each runs the REAL operator
@@ -1525,23 +1526,19 @@ object ExtensionProbes {
         val scored = all.select(col("doc_id"), col("text"),
           TextOps.qualityScore(col("text")).as("quality"),
           TextOps.wsTokenCount(col("text")).as("ws_tokens"))
-        // Materialize = lineage truncation, NOT caching across runs:
         // `filtered` feeds the dedup keeper set AND the join back, and
         // `exactKept` is re-referenced by the signature, shingle and
         // survivor branches — lazily composed, the quality kernel
         // re-scans the tripled corpus ~6× and the 166 KB plan makes
         // AQE replanning the wall-time driver (the x123 lesson). Both
-        // are CORPUS-SIZED, so they go through the at-rest parquet
-        // write ([[Materialize]]) — the cleaned-corpus-artifact
-        // materialization a real curation job pays — rather than
-        // localCheckpoint's executor-pinned, non-recomputable blocks.
-        val filtered = Materialize.toParquet(scored
+        // are corpus-sized, so they materialize at rest.
+        val filtered = Stage.atRest(scored
           .where(col("quality") >= 0.87 && col("ws_tokens") >= 30),
           "x38_filtered")
         val keepIds = Dedup.exactDedup(filtered.select("doc_id", "text"))
           .select(col("keep_id").as("doc_id"))
         val exactKept =
-          Materialize.toParquet(filtered.join(keepIds, "doc_id"), "x38_kept")
+          Stage.atRest(filtered.join(keepIds, "doc_id"), "x38_kept")
         val sig = Dedup.minhashSignaturesOnePass(exactKept, n = 3, numPerm = 8)
         val pairs = Dedup.lshCandidatePairs(
           Dedup.lshBuckets(sig, bands = 4, rowsPer = 2))

@@ -73,8 +73,8 @@ object IndexCache {
 
   /** The directory of estate `name`: `<java.io.tmpdir>/graft_<name>`.
     * Estates gated by a session's catalog table rather than by
-    * [[built]] (the x42 shingle index, the x98 corpus artifact) take
-    * their path from here. */
+    * [[built]] (the x42 shingle index, the x98 corpus artifact) and
+    * `Stage.atRest`'s per-call directories take their path from here. */
   def dir(name: String): String = {
     require(name.matches("[A-Za-z0-9._-]+"), s"invalid estate name: $name")
     s"${System.getProperty("java.io.tmpdir")}/graft_$name"

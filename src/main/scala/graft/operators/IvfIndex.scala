@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** IVF (inverted-file) approximate nearest neighbor: a k-means coarse
   * quantizer partitions the vectors into `nlist` cells; a query scans
   * only the `nprobe` nearest cells. The third similarity path next to
@@ -104,9 +106,9 @@ object IvfIndex {
     * table + the partial-aggregable min(struct) argmin over
     * corpus × nlist rows + one bounded (cell, dim) aggregation —
     * nothing corpus-sized ever sorts or windows, and the loop count
-    * is a constant. Each round's centroid table localCheckpoints
-    * (bounded, ≤ nlist rows) so downstream lineage does not replay
-    * prior rounds' corpus passes.
+    * is a constant. Each round's centroid table (bounded, ≤ nlist
+    * rows) is truncated so downstream lineage does not replay prior
+    * rounds' corpus passes.
     *
     * A cell that loses every member simply drops out of the next
     * centroid table (k can shrink — the standard behavior of Lloyd
@@ -119,12 +121,11 @@ object IvfIndex {
                    vecCol: String = "embedding"): (DataFrame, DataFrame) = {
     require(nlist >= 1, s"nlist must be positive: $nlist")
     require(rounds >= 1, s"rounds must be positive: $rounds")
-    var cents = meanCentroids(hashCells(embs, nlist, idCol), "cell0", vecCol)
-      .localCheckpoint()
+    var cents = Stage.truncate(meanCentroids(hashCells(embs, nlist, idCol), "cell0", vecCol))
     var assigned = assign(embs, cents, idCol, vecCol)
     var r = 1
     while (r < rounds) {
-      cents = meanCentroids(assigned, "cell", vecCol).localCheckpoint()
+      cents = Stage.truncate(meanCentroids(assigned, "cell", vecCol))
       assigned = assign(embs, cents, idCol, vecCol)
       r += 1
     }

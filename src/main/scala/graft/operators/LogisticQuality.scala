@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Trained logistic-regression quality filter — the linear-model
   * sibling of the NB [[QualityClassifier]]: a curation head over
   * deterministic per-document signals, trained DISTRIBUTIVELY by
@@ -19,8 +21,8 @@ import org.apache.spark.sql.functions._
   * itself stays unrounded: with an exactly-representable learning
   * rate it is deterministic double arithmetic over round-6 inputs.
   *
-  * Scale shape: `iters` scans of a localCheckpoint'ed projection
-  * (features materialize once); each scan's shuffle is ONE 4-double
+  * Scale shape: `iters` scans of a truncated projection (features
+  * materialize once); each scan's shuffle is ONE 4-double
   * partial-aggregate row per partition; the driver holds 4 doubles.
   */
 object LogisticQuality {
@@ -52,9 +54,8 @@ object LogisticQuality {
             textCol: String = "text",
             charsCol: String = "n_chars"): Array[Double] = {
     require(iters > 0, s"iters must be positive: $iters")
-    val f = docs.select((col(idCol) +: label.cast("double").as("y") +:
-        featureCols(textCol, charsCol)): _*)
-      .localCheckpoint()
+    val f = Stage.truncate(docs.select((col(idCol) +: label.cast("double").as("y") +:
+        featureCols(textCol, charsCol)): _*))
     var w = Array(0.0, 0.0, 0.0, 0.0)
     for (_ <- 1 to iters) {
       val e = sigmoid(zOf(w)) - col("y")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Temperature-mixture planning served ENTIRELY off at-rest artifacts
   * (probe x138) — the daily mixture job with ZERO corpus passes at
   * decision time.
@@ -77,7 +79,7 @@ object MixturePlan {
     // the bounded quota relation is consumed twice (the provisioning
     // check below AND the selection join) — materialize it once so the
     // rollup read-and-quota chain is not re-derived at force time
-    val q = quotas.localCheckpoint()
+    val q = Stage.truncate(quotas)
     val over = q.where(col("quota") > k)
       .select(col(strataCol), col("quota")).limit(5).collect()
     require(over.isEmpty,

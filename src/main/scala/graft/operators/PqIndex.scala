@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Product quantization (PQ) — the ANN compression path that makes
   * 100 TB of embeddings searchable from RAM: each D-dim vector is
   * split into `m` subvectors, each subvector quantized to one of
@@ -279,12 +281,11 @@ object PqIndex {
   def writeIndex(embs: DataFrame, path: String, nlist: Int,
                  m: Int, ksub: Int, dim: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    // localCheckpoint (bounded nlist rows) so the three consumers in
+    // materialized (bounded nlist rows) so the three consumers in
     // writeIndexTables (vectors-write broadcast, centroids write,
     // build stats) don't each replay the corpus-wide mean aggregation
-    val cents = IvfIndex.meanCentroids(
-      IvfIndex.hashCells(embs, nlist, idCol), "cell0", vecCol)
-      .localCheckpoint()
+    val cents = Stage.truncate(IvfIndex.meanCentroids(
+      IvfIndex.hashCells(embs, nlist, idCol), "cell0", vecCol))
     val assigned = IvfIndex.assign(embs, cents, idCol, vecCol)
     writeIndexTables(embs, assigned, cents, path, m, ksub, dim, idCol, vecCol)
   }
@@ -318,7 +319,7 @@ object PqIndex {
     val d = partitionedDims(embs, dim / m, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cb = codebookFromDims(d, ksub, idCol).localCheckpoint()
+      val cb = Stage.truncate(codebookFromDims(d, ksub, idCol))
       // materialize the assignment ONCE (the vectors table), then
       // feed the codes join and the build stats from the at-rest
       // copy — the corpus × nlist argmin is never replayed

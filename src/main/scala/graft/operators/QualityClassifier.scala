@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** fastText-style TRAINED quality classifier, re-expressed
   * relationally: multinomial Naive Bayes with add-k smoothing over
   * HASHED word + adjacent-bigram features. This is the "train a linear
@@ -91,13 +93,11 @@ object QualityClassifier {
     // sums of the per-feature counts (Σ_f c_pos = Σ_rows y — identical
     // integers), so they derive from the bounded counts table instead
     // of a second full kernel pass over the training corpus. The
-    // counts table (≤ numBuckets rows) is localCheckpoint-materialized
-    // so its two consumers (the model broadcast and the totals) don't
-    // each re-run the explode+hash scan — lineage truncation within
-    // one call, recomputed from the inputs on every call.
-    val counts = rows.groupBy("f")
-      .agg(sum(col("y")).as("c_pos"), sum(lit(1L) - col("y")).as("c_neg"))
-      .localCheckpoint()
+    // counts table (≤ numBuckets rows) is materialized so its two
+    // consumers (the model broadcast and the totals) don't each re-run
+    // the explode+hash scan.
+    val counts = Stage.truncate(rows.groupBy("f")
+      .agg(sum(col("y")).as("c_pos"), sum(lit(1L) - col("y")).as("c_neg")))
     val totals = counts
       .agg(sum(col("c_pos")).as("t_pos"), sum(col("c_neg")).as("t_neg"))
     (counts, totals)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Generic ranking surfaces over the `top_k_struct` bounded-heap
   * aggregate ([[graft.expressions.TopKStruct]]): grouped top-k
   * selection and reciprocal-rank fusion of retriever rankings.
@@ -139,12 +141,12 @@ object Ranking {
     * streaming aggregation (unlike [[rrfFuse]] and
     * [[evalBinaryRetrieval]], whose StreamingSpec twins run the same
     * plan over a stream). Re-rank per micro-batch via foreachBatch.
-    * EAGER: the bounded pool and each round's picks are
-    * localCheckpoint-materialized at call time (lineage truncation —
-    * the lazy unrolled plan re-instantiates the caller's upstream DAG
-    * O(2^k) times and AQE replanning over it dominates wall time), so
-    * the returned frame reads materialized rounds, recomputed from the
-    * inputs on every call.
+    * EAGER: the bounded pool and each round's picks are materialized
+    * at call time ([[Stage.truncate]] — the lazy unrolled plan
+    * re-instantiates the caller's upstream DAG O(2^k) times and AQE
+    * replanning over it dominates wall time), so the returned frame
+    * reads materialized rounds, recomputed from the inputs on every
+    * call.
     *
     * Scale shape: `k` driver-loop rounds (the GBT/WordPiece bounded
     * driver-loop precedent), each a keyed join of the remaining pool
@@ -167,15 +169,12 @@ object Ranking {
     // query-stage boundary, so with a composed chain upstream (x123:
     // two ANN index joins + RRF fusion) PLANNING dominates execution
     // (measured: 8.6s of inter-job driver gaps vs 1.9s in jobs; the
-    // formatted plan was 3.0 MB). localCheckpoint materializes the
-    // bounded pool once and truncates the lineage — every round now
-    // reads a leaf relation (still computed from the parquet inputs on
-    // every call; nothing persists across runs).
-    val pool = candidates
+    // formatted plan was 3.0 MB). Materializing the bounded pool once
+    // makes every round read a leaf relation.
+    val pool = Stage.truncate(candidates
       .select(col(qIdCol), col(idCol), col(relCol).cast("double").as("_rel"))
       .join(codes.select(col(idCol), col("q_codes").as("_c")), Seq(idCol))
-      .select(col(qIdCol), col(idCol), col("_rel"), col("_c"))
-      .localCheckpoint()
+      .select(col(qIdCol), col(idCol), col("_rel"), col("_c")))
     // per-query argmax by (score DESC, id ASC): numeric ids take the
     // codegen'd max(struct(_mmr, −id)) DeclarativeAggregate (the hot
     // path — k of these run per call); any other orderable id type
@@ -200,15 +199,15 @@ object Ranking {
           .select(col(qIdCol), col("_tk").getItem(0).as("_b"))
           .select(col(qIdCol), col("_b").getField(idCol).as(idCol),
             col("_b._mmr").as("mmr"), lit(round).as("round"))
-    // Each round's picked set (≤ Q·r rows) is checkpointed too: round
+    // Each round's picked set (≤ Q·r rows) is truncated too: round
     // r references picked_{r-1} twice (anti-join + penalty join), so
     // without truncation the plan still grows ~3^k even over a
     // materialized pool. k bounded extra jobs for a constant-size
     // per-round plan.
-    var picked = argmaxPick(
+    var picked = Stage.truncate(argmaxPick(
       pool.select(col(qIdCol), col(idCol),
         (lit(lambda) * col("_rel") - lit(1.0 - lambda) * lit(0.0))
-          .as("_mmr")), 1).localCheckpoint()
+          .as("_mmr")), 1))
     for (r <- 2 to k) {
       val remaining = pool.join(picked.select(col(qIdCol), col(idCol)),
         Seq(qIdCol, idCol), "left_anti")
@@ -223,7 +222,7 @@ object Ranking {
         .select(col(qIdCol), col(idCol),
           (lit(lambda) * col("_rel2") - lit(1.0 - lambda) * col("_pen"))
             .as("_mmr"))
-      picked = picked.unionByName(argmaxPick(scored, r)).localCheckpoint()
+      picked = Stage.truncate(picked.unionByName(argmaxPick(scored, r)))
     }
     picked.select(col(qIdCol), col(idCol), col("mmr"),
       col("round").cast("int").as("round"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Similarity search over an embedding column (`Array[Float]`).
   *
   * Two paths:
@@ -91,13 +93,12 @@ object Similarity {
   def writeInt8Index(embs: DataFrame, path: String, nlist: Int,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): Unit = {
-    // centroids localCheckpoint (bounded nlist rows) so the two
-    // consumers below don't each replay the hash-cells corpus pass;
-    // assigned persists across its two actions (codes join + build
-    // stats) so the corpus × nlist argmin runs ONCE per build
-    val cents = IvfIndex.meanCentroids(
-      IvfIndex.hashCells(embs, nlist, idCol), "cell0", vecCol)
-      .localCheckpoint()
+    // centroids (bounded nlist rows) materialize so the two consumers
+    // below don't each replay the hash-cells corpus pass; assigned
+    // persists across its two actions (codes join + build stats) so
+    // the corpus × nlist argmin runs ONCE per build
+    val cents = Stage.truncate(IvfIndex.meanCentroids(
+      IvfIndex.hashCells(embs, nlist, idCol), "cell0", vecCol))
     val assigned = IvfIndex.assign(embs, cents, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

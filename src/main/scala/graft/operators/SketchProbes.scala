@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.Stage
 
 /** Certification probes for the AT-REST sketch artifacts — the
   * frequency members of the at-rest family (the HLL distinct-count
@@ -703,38 +704,33 @@ object SketchProbes {
         // branches over five frozen artifacts — each was a sequential
         // run of bounded AQE stages (59 jobs end to end), so they run
         // CONCURRENTLY and each materializes its bounded result rows
-        // (≤ |langs| + a few) via localCheckpoint; the union of the
-        // materialized branches is row-identical to the sequential
-        // union it replaces.
-        val fSel = () => MixturePlan.planAndSelect(s, roDir, stDir,
+        // (≤ |langs| + a few); the union of the materialized branches
+        // is row-identical to the sequential union it replaces.
+        val fSel = () => Stage.truncate(MixturePlan.planAndSelect(s, roDir, stDir,
             targetTotal = 120)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_sel"),
             sum("doc_id").as("id_sum"))
           .select(lit("mixture").as("metric"), col("lang").as("key"),
             col("n_sel").cast("double").as("v1"),
-            col("id_sum").cast("double").as("v2"))
-          .localCheckpoint()
+            col("id_sum").cast("double").as("v2")))
         val fKept = () => {
           val thr = HistogramSketch.thresholdFromSketch(s, hDir, 0.5)
-          HistogramSketch.curateByQuantile(lens(batch), hDir,
+          Stage.truncate(HistogramSketch.curateByQuantile(lens(batch), hDir,
               q = 0.5, precomputedThr = Some(thr))
             .groupBy("lang").agg(count(lit(1)).as("n_kept"))
             .select(lit("curate").as("metric"), col("lang").as("key"),
-              col("n_kept").cast("double").as("v1"), lit(thr).as("v2"))
-            .localCheckpoint()
+              col("n_kept").cast("double").as("v1"), lit(thr).as("v2")))
         }
-        val fStats = () => Rollup.readRollup(s, roDir)
+        val fStats = () => Stage.truncate(Rollup.readRollup(s, roDir)
           .select(lit("corpus").as("metric"), col("lang").as("key"),
             col("n").cast("double").as("v1"),
-            col("sum_v").cast("double").as("v2"))
-          .localCheckpoint()
-        val fAudit = () => Manifest.diff(s, maDir, mbDir)
+            col("sum_v").cast("double").as("v2")))
+        val fAudit = () => Stage.truncate(Manifest.diff(s, maDir, mbDir)
           .groupBy("status").agg(count(lit(1)).as("n"))
           .select(lit("audit").as("metric"), col("status").as("key"),
-            col("n").cast("double").as("v1"), lit(0.0).as("v2"))
-          .localCheckpoint()
-        overlap(() => drift.localCheckpoint(), fSel, fKept, fStats, fAudit)
+            col("n").cast("double").as("v1"), lit(0.0).as("v2")))
+        overlap(() => Stage.truncate(drift), fSel, fKept, fStats, fAudit)
           .reduce(_.unionAll(_)).orderBy("metric", "key")
       },
       Some("""WITH d0 AS (

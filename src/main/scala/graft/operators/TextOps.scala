@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** Text analysis for large-scale training-data pipelines: token
   * counting, quality scoring, language ID, document fingerprinting.
   * All pure column expressions (codegen'd, no UDFs) so they run at
@@ -213,8 +215,7 @@ object TextOps {
     // per-doc pairing window over the whole reference corpus
     // (measured as 3 independent ~1.6s single-task window stages in
     // x70's profile at sf0.1).
-    val bigrams = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
+    val bigrams = Stage.truncate(bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     // c1 = bigram rows starting with w1 = Σ_w2 c12 — derived from the
     // materialized table, value-identical to counting bg directly
     val contexts = bigrams.groupBy("w1").agg(sum("c12").as("c1"))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Stage
+
 /** The landfall state machine (SURVEY.md §2.11, reference
   * forecast_process.py:655-879) — the pipeline's only genuinely
   * stateful/branching control flow, isolated as a pure function over a
@@ -42,8 +44,8 @@ object Landfall {
     *   track: input + vmax_1min, first_landfall, closest_to_land
     *
     * Evaluates when called: the per-storm window pass (and with it the
-    * whole upstream track plan) runs once, into an eager
-    * `localCheckpoint`, and both results read that materialization.
+    * whole upstream track plan) runs once, into one truncation
+    * ([[Stage.truncate]]), and both results read that materialization.
     * Every window column is a per-storm constant, so the state is one
     * row per storm of it: the pass also numbers each storm's rows by
     * time, and the state keeps row 1, with no further exchange or
@@ -55,7 +57,7 @@ object Landfall {
   def evaluate(track: DataFrame, forecastTime: Timestamp): (DataFrame, DataFrame) = {
     val byStorm = Window.partitionBy("storm_id")
 
-    val annotated0 = track
+    val annotated0 = Stage.truncate(track
       .withColumn("vmax_1min", col("vmax") / 0.88)
       // W7: first time on land per storm
       .withColumn("first_land_time",
@@ -69,8 +71,7 @@ object Landfall {
       .withColumn("closest_time",
         min(when(col("dist_to_land_km") === col("min_dist"), col("time"))).over(byStorm))
       .withColumn("closest_to_land", col("time") === col("closest_time"))
-      .withColumn("storm_row", row_number().over(byStorm.orderBy("time")))
-      .localCheckpoint()
+      .withColumn("storm_row", row_number().over(byStorm.orderBy("time"))))
 
     // the first landfall point's time is first_land_time itself, so the
     // reference time is the landfall, else the closest approach

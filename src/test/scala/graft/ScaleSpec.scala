@@ -47,16 +47,4 @@ class ScaleSpec extends SparkTestBase {
       spark.sql("DROP TABLE bucket_a"); spark.sql("DROP TABLE bucket_b")
     }
   }
-
-  test("checkpoint materializes once and replays from parquet") {
-    import graft.util.Checkpoints
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_mat").toString
-    val path = Checkpoints.cyclePath(base, "2024010100", "windfield")
-    var computes = 0
-    def compute = { computes += 1; (1 to 10).map(i => (i, i * 2.0)).toDF("k", "v") }
-    val first = Checkpoints.materialize(spark, path)(compute)
-    assert(first.count() == 10 && computes == 1)
-    val second = Checkpoints.materialize(spark, path)(compute)
-    assert(second.count() == 10 && computes == 1)   // skip-if-exists
-  }
 }

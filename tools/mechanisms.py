@@ -11,6 +11,31 @@ import os
 import re
 import sys
 
+CHECKPOINT = re.compile(r"(\w*)\s*\.localCheckpoint\(")
+
+
+def rdd_names(lines):
+    """Names a file declares as RDDs: typed `: RDD[`, or a val/var bound to
+    a map/filter/mapPartitions of one."""
+    text = "".join(lines)
+    names = set(re.findall(r"\b(\w+)\s*:\s*RDD\[", text))
+    derived = re.compile(r"\b(?:val|var)\s+(\w+)\s*=\s*(\w+)\s*\."
+                         r"(?:map|mapPartitions|filter|flatMap)\b")
+    while True:
+        more = {a for a, b in derived.findall(text) if b in names} - names
+        if not more:
+            return names
+        names |= more
+
+
+def checkpoint_lines(lines, rdd):
+    """Lines with a `.localCheckpoint(` whose receiver is (`rdd`) or is not
+    (not `rdd`) a known RDD; a receiver on an earlier line is a DataFrame."""
+    names = rdd_names(lines)
+    return sum(1 for line in lines for m in [CHECKPOINT.search(line)]
+               if m and (m.group(1) in names) == rdd)
+
+
 MECHANISMS = [
     ("marker/staging names (_append_*_ok, *_staging)",
      re.compile(r"_append_\S*_(ok|staging)|_appendtmp_staging")),
@@ -21,7 +46,10 @@ MECHANISMS = [
                 r"|\bcreateTemp(Directory|File)\(")),
     ("estate gate call sites (ensureBuilt/built)",
      re.compile(r"^(?!\s*(private\s+)?def\s).*\b(ensureBuilt|built)\(")),
-    ("localCheckpoint sites", re.compile(r"\.localCheckpoint\(")),
+    ("DataFrame localCheckpoint sites", lambda lines: checkpoint_lines(lines, rdd=False)),
+    ("RDD localCheckpoint sites", lambda lines: checkpoint_lines(lines, rdd=True)),
+    ("stat-reset re-wraps (createDataFrame(<x>.rdd)",
+     re.compile(r"createDataFrame\(\s*[\w.]+\.rdd\b")),
     ("loop convergence reads (accum/observe/isEmpty)",
      re.compile(r"\blongAccumulator\(|\bObservation\(|\)\.isEmpty\b")),
     ("argmax aggregates (max(struct(...)))",
@@ -43,7 +71,10 @@ def main():
             with open(path, encoding="utf-8") as fh:
                 lines = fh.readlines()
             for name, rx in MECHANISMS:
-                n = sum(1 for line in lines if rx.search(line))
+                if callable(rx):
+                    n = rx(lines)
+                else:
+                    n = sum(1 for line in lines if rx.search(line))
                 if n:
                     hits[name][os.path.relpath(path, src)] = n
     print(f"{'mechanism':48} {'files':>5} {'lines':>5}")

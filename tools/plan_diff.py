@@ -3,11 +3,12 @@
 
     python3 tools/plan_diff.py OLD_DIR NEW_DIR
 
-Each directory holds one <probe>.txt per probe. Three run-specific ids
-are masked: expression ids (`#123`) and exchange ids (`plan_id=45`),
-which count what the session built before the probe, and JVM identity
-hashes (`[B@6f5d292c`, a byte-array literal). Prints one line per
-probe: `same`, `differs` followed by the first differing line of each
+Each directory holds one <probe>.txt per probe. Run-specific ids are
+masked: expression ids (`#123`), exchange ids (`plan_id=45`) and RDD ids
+(`MapPartitionsRDD[144]`), which count what the session built before the
+probe, and JVM identity hashes (`[B@6f5d292c`, a byte-array literal) and
+lambda class addresses (`$$Lambda$4172/0x00007f4b35293310`). Prints one
+line per probe: `same`, `differs` followed by the first differing line of each
 side, or `only in OLD`/`only in NEW`. Exits 1 when any probe differs or
 is missing on one side.
 """
@@ -16,7 +17,8 @@ import re
 import sys
 
 RUN_IDS = [(re.compile(r"#\d+"), "#"), (re.compile(r"plan_id=\d+"), "plan_id="),
-           (re.compile(r"@[0-9a-f]+\b"), "@")]
+           (re.compile(r"RDD\[\d+\]"), "RDD[]"), (re.compile(r"@[0-9a-f]+\b"), "@"),
+           (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda")]
 
 
 def plans(d):
