@@ -1,15 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType}
 
-/** SparkSessionExtensions wiring: the engine's domain functions as
-  * first-class SQL functions, composed from NATIVE Catalyst
-  * expressions (Sin/Cos/Pow/CaseWhen/...), so
-  * `spark.sql("SELECT haversine_km(...)")` plans exactly like the
-  * DataFrame helpers — whole-stage codegen, constant folding, no UDF.
+import graft.functions.{GeoFunctions, ScalarFunctions}
+import graft.hazard.Windfield
+
+/** SparkSessionExtensions wiring: the engine's SQL surface. The domain
+  * functions are their DataFrame helpers' expressions, so
+  * `spark.sql("SELECT haversine_km(...)")` plans exactly like
+  * `GeoFunctions.haversineKm` — whole-stage codegen, constant folding,
+  * no UDF. The kernels take their parameters as literals. The DataFrame
+  * helpers build these expressions directly and need no registration.
   *
   * Usage:
   *   SparkSession.builder().withExtensions(new GraftExtensions)
@@ -38,7 +43,6 @@ object GraftExtensions {
     builder(exprs)
   }
 
-  private def d(v: Double): Expression = Literal(v)
   private def litInt(fn: String, e: Expression): Int = e match {
     case Literal(v: Int, _: IntegerType) => v
     case other => throw new IllegalArgumentException(
@@ -50,85 +54,26 @@ object GraftExtensions {
     case other => throw new IllegalArgumentException(
       s"$fn expects a literal string parameter, got $other")
   }
-  private def plus(es: Expression*): Expression = es.reduceLeft(Add(_, _))
-  private def times(es: Expression*): Expression = es.reduceLeft(Multiply(_, _))
 
-  /** Great-circle km — same formula as GeoFunctions.haversineKm. */
-  private def haversine(lat1: Expression, lon1: Expression,
-                        lat2: Expression, lon2: Expression): Expression = {
-    val dLat = Divide(ToRadians(Subtract(lat2, lat1)), d(2))
-    val dLon = Divide(ToRadians(Subtract(lon2, lon1)), d(2))
-    val a = plus(
-      Pow(Sin(dLat), d(2)),
-      times(Cos(ToRadians(lat1)), Cos(ToRadians(lat2)), Pow(Sin(dLon), d(2))))
-    Multiply(d(2 * GeoFunctionsRadius), Asin(Sqrt(a)))
-  }
-  private val GeoFunctionsRadius = graft.functions.GeoFunctions.EarthRadiusKm
-
-  private def caseWhen(branches: Seq[(Expression, Expression)],
-                       otherwise: Expression): Expression =
-    CaseWhen(branches, Some(otherwise))
+  /** A domain function: its Column helper over the call's arguments, so
+    * SQL and the DataFrame API share one formula. */
+  private def domain(name: String, arity: Int)(
+      f: Seq[Column] => Column): (String, Int, Seq[Expression] => Expression) =
+    (name, arity, args => expression(f(args.map(column))))
 
   /** (name, arity, catalyst builder). */
   val functions: Seq[(String, Int, Seq[Expression] => Expression)] = Seq(
-
-    ("haversine_km", 4, { case Seq(a, b, c, e) => haversine(a, b, c, e) }),
-
-    ("flat_earth_km", 4, { case Seq(lat1, lon1, lat2, lon2) =>
-      Multiply(Sqrt(plus(
-        Pow(Subtract(lat2, lat1), d(2)), Pow(Subtract(lon2, lon1), d(2)))), d(111.0)) }),
-
-    ("normalize_lon", 2, { case Seq(lon, center) =>
-      // ((lon - center + 180) % 360 + 360) % 360 - 180 + center
-      Add(Subtract(Remainder(Add(Remainder(
-        Add(Subtract(lon, center), d(180)), d(360)), d(360)), d(360)), d(180)), center) }),
-
-    ("pagasa_category", 1, { case Seq(kph) =>
-      caseWhen(Seq(
-        LessThan(kph, d(62)) -> Literal("TD"),
-        LessThan(kph, d(88)) -> Literal("TS"),
-        LessThan(kph, d(117)) -> Literal("STS"),
-        LessThan(kph, d(185)) -> Literal("TY")), Literal("STY")) }),
-
-    ("saffir_simpson", 1, { case Seq(ms) =>
-      caseWhen(Seq(
-        LessThan(ms, d(18)) -> Literal(-1),
-        LessThan(ms, d(33)) -> Literal(0),
-        LessThan(ms, d(43)) -> Literal(1),
-        LessThan(ms, d(50)) -> Literal(2),
-        LessThan(ms, d(59)) -> Literal(3),
-        LessThan(ms, d(71)) -> Literal(4)), Literal(5)) }),
-
-    ("estimate_rmw_nm", 1, { case Seq(pcen) =>
-      val knots  = graft.functions.ScalarFunctions.RmwKnots
-      val values = graft.functions.ScalarFunctions.RmwValues
-      knots.indices.map[Expression] { i =>
-        val s0 = if (i > 0) 1.0 / (knots(i) - knots(i - 1)) else 0.0
-        val s1 = if (i + 1 < knots.length) 1.0 / (knots(i + 1) - knots(i)) else 0.0
-        Multiply(d(values(i)), Greatest(Seq(d(0.0),
-          Subtract(Subtract(d(1.0),
-            Multiply(d(s0), Greatest(Seq(d(0.0), Subtract(d(knots(i)), pcen))))),
-            Multiply(d(s1), Greatest(Seq(d(0.0), Subtract(pcen, d(knots(i))))))))))
-      }.reduceLeft(Add(_, _)) }),
-
-    ("affected_population", 1, { case Seq(x) =>
-      caseWhen(Seq(
-        IsNull(x) -> Literal.create(null, LongType),
-        LessThan(x, d(1)) -> Literal(0L)),
-        Cast(Floor(Multiply(Exp(d(6.80943612231606)),
-          Pow(x, d(0.46982114400549513)))), LongType)) }),
-
-    ("holland_b", 6, { case Seq(v, penv, pcen, prev, lat, tstep) =>
-      val pd = Subtract(penv, pcen)
-      val holXX = Multiply(d(0.6), Subtract(d(1.0), Divide(pd, d(215))))
-      val raw = plus(
-        times(d(-4.4e-5), pd, pd),
-        Multiply(d(0.01), pd),
-        Divide(Multiply(d(0.03), Subtract(pcen, prev)), tstep),
-        UnaryMinus(Multiply(d(0.014), Abs(lat))),
-        Multiply(d(0.15), Pow(v, holXX)),
-        d(1.0))
-      Least(Seq(Greatest(Seq(raw, d(1.0))), d(2.5))) }),
+    domain("haversine_km", 4) { case Seq(a, b, c, e) => GeoFunctions.haversineKm(a, b, c, e) },
+    domain("flat_earth_km", 4) { case Seq(a, b, c, e) => GeoFunctions.flatEarthKm(a, b, c, e) },
+    domain("normalize_lon", 2) { case Seq(lon, center) => GeoFunctions.normalizeLon(lon, center) },
+    domain("pagasa_category", 1) { case Seq(kph) => ScalarFunctions.pagasaCategory(kph) },
+    domain("saffir_simpson", 1) { case Seq(ms) => ScalarFunctions.saffirSimpson(ms) },
+    domain("estimate_rmw_nm", 1) { case Seq(pcen) => ScalarFunctions.estimateRmwNm(pcen) },
+    domain("affected_population", 1) { case Seq(x) => ScalarFunctions.affectedPopulation(x) },
+    domain("holland_b", 6) { case Seq(v, penv, pcen, prev, lat, tstep) =>
+      Windfield.holB(v, penv, pcen, prev, lat, tstep) },
+    domain("holland_wind", 6) { case Seq(dist, rmax, b, penv, pcen, lat) =>
+      Windfield.statHolland(dist, rmax, b, penv, pcen, lat) },
 
     ("graft_dot_product", 2, { case Seq(a, b) =>
       graft.expressions.DotProduct(a, b) }),
@@ -219,50 +164,6 @@ object GraftExtensions {
     ("top_k_struct", 3, { case Seq(c, kE, Literal(d: Boolean, BooleanType)) =>
       graft.expressions.TopKStruct(c, litInt("top_k_struct", kE), d) }),
 
-    // bpe_tokens(text, table-key-literal, space-mark-literal): real BPE
-    // tokenization under a registered compiled merge table (the table
-    // itself is serialized into the expression — see BpeOps).
-    ("bpe_tokens", 3, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType),
-        Literal(b: Boolean, BooleanType)) =>
-      graft.expressions.BpeTokens(t, graft.expressions.BpeOps.resolve(k.toString), b) }),
-
-    // bpe_token_ids(text, table-key-literal, vocab-key-literal):
-    // encode + vocabulary-id mapping in one pass (UNK → -1).
-    ("bpe_token_ids", 3, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType),
-        Literal(v: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      graft.expressions.BpeTokenIds(t, graft.expressions.BpeOps.resolve(k.toString),
-        graft.expressions.BpeVocab.resolve(v.toString)) }),
-
-    // unigram_tokens(text, model-key-literal): unigram-LM Viterbi
-    // segmentation under a registered trained model (UnigramLm).
-    ("unigram_tokens", 2, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      graft.expressions.UnigramTokens(t,
-        graft.expressions.UnigramOps.resolve(k.toString)) }),
-
-    // unigram_token_ids(text, model-key-literal): segment + map to
-    // sorted-vocabulary ids in one pass (UNK → -1).
-    ("unigram_token_ids", 2, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      graft.expressions.UnigramTokenIds(t,
-        graft.expressions.UnigramOps.resolve(k.toString)) }),
-
-    // wordpiece_tokens(text, model-key-literal): BERT-style greedy
-    // longest-match segmentation under a registered WordPiece vocab.
-    ("wordpiece_tokens", 2, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      graft.expressions.WordpieceTokens(t,
-        graft.expressions.WordpieceOps.resolve(k.toString)) }),
-
-    // wordpiece_token_ids(text, model-key-literal): segment + map to
-    // sorted-vocabulary ids in one pass ([UNK] is a vocab entry).
-    ("wordpiece_token_ids", 2, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      graft.expressions.WordpieceTokenIds(t,
-        graft.expressions.WordpieceOps.resolve(k.toString)) }),
-
     // regexp_like_cached(str, pattern): regexp_like for non-literal
     // patterns with a per-JVM compile cache (joined-column patterns
     // recompile per row in stock Spark — see RegexCachedOps).
@@ -275,47 +176,14 @@ object GraftExtensions {
     ("robots_glob_match", 2, { case Seq(s, p) =>
       graft.expressions.RobotsGlobMatch(s, p) }),
 
-    // langid_score_text(norm_text, model-key-literal, n, numBuckets):
-    // map-only multiclass NB language-ID scoring against a registered
-    // broadcast model — trigram extraction + salted-md5 bucketing +
-    // per-language fold in ONE kernel call (see LangIdScoreOps) —
-    // struct<lang_pred, lid_score, n_grams>.
-    ("langid_score_text", 4, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType),
-        nE, bE) =>
-      graft.expressions.LangIdScoreText(t,
-        graft.expressions.LangIdScoreOps.resolve(k.toString),
-        litInt("langid_score_text", nE),
-        litInt("langid_score_text", bE)) }),
-
-    // keyword_counts(text, automaton-key-literal): one-pass
-    // Aho-Corasick multi-pattern occurrence counts (all occurrences,
-    // overlapping included), array<int> in pattern-declaration order.
-    ("keyword_counts", 2, { case Seq(t,
-        Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      graft.expressions.KeywordCounts(t,
-        graft.expressions.AhoCorasickOps.resolve(k.toString)) }),
-
     // bpe_unmap(text): invert the GPT-2 byte-level mapping (mapped
     // codepoints → bytes → UTF-8) — the byte-level detokenize tail.
     ("bpe_unmap", 1, { case Seq(t) => graft.expressions.BpeUnmap(t) }),
 
     // xgb_score(features, path-literal): scores the reference's
     // operational xgboost artifact (parsed from its RDS) in codegen.
-    // A "<mem:…>" tag instead of a path resolves a freshly-trained
-    // in-memory booster (GbtTrainer) through XgbScore's registry.
     ("xgb_score", 2, { case Seq(f, Literal(p: org.apache.spark.unsafe.types.UTF8String, StringType)) =>
-      graft.expressions.XgbScore.resolve(f, p.toString) }),
-
-    ("holland_wind", 6, { case Seq(dist, rmax, b, penv, pcen, lat) =>
-      val fCor = Multiply(d(2 * 0.0000729), Sin(ToRadians(Abs(lat))))
-      val rCor = times(d(500.0), dist, fCor)
-      val rMaxNorm = Pow(Divide(rmax, dist), b)
-      val term = plus(
-        times(Divide(Multiply(d(100.0), b), d(1.15)), rMaxNorm,
-          Subtract(penv, pcen), Exp(UnaryMinus(rMaxNorm))),
-        Multiply(rCor, rCor))
-      Subtract(Sqrt(Greatest(Seq(d(0.0), term))), rCor) }),
+      graft.expressions.XgbScore(f, graft.impact.XgbBooster.load(p.toString)) }),
   )
 
   /** Register on an already-built session (tests, notebooks). Only the

@@ -23,9 +23,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * the join removes the false positives
   * (see `Dedup.contaminationBloomPruned`).
   *
-  * The serialized filter arrives as a binary literal (extracted at
-  * registration, `GraftExtensions`), is deserialized ONCE here on the
-  * driver, and rides into generated code as a reference object —
+  * The serialized filter arrives as a constructor argument, is
+  * deserialized ONCE here on the driver, and rides into generated
+  * code as a reference object —
   * never per row.
   */
 case class BloomMightContain(child: Expression, bloomBytes: Array[Byte])

@@ -1,8 +1,6 @@
 package graft.expressions
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -179,23 +177,6 @@ object BpeOps {
     new BpeTable(merges.map(_._1).toArray, merges.map(_._2).toArray, byteLevel)
   }
 
-  // Driver-side registry so the table can be named by a literal key in
-  // SQL function calls (same pattern as XgbScore's in-memory boosters);
-  // the table itself is serialized into the expression, so executors
-  // never consult the registry.
-  private val registry = new ConcurrentHashMap[String, BpeTable]()
-  private val nextId = new AtomicInteger(0)
-  def register(table: BpeTable): String = {
-    val key = s"mem:bpe:${nextId.incrementAndGet()}"
-    registry.put(key, table)
-    key
-  }
-  def resolve(key: String): BpeTable = {
-    val t = registry.get(key)
-    require(t != null, s"no BPE table registered under '$key'")
-    t
-  }
-
   /** A word as its Unicode codepoints (the encode starting state —
     * also the trainer's initial token list). */
   def initialTokens(word: String): Array[String] = {
@@ -323,23 +304,7 @@ final class BpeVocab(val tokens: Array[String]) extends Serializable {
   def size: Int = tokens.length
 }
 
-object BpeVocab {
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, BpeVocab]()
-  private val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
-  def register(v: BpeVocab): String = {
-    val key = s"mem:bpevocab:${nextId.incrementAndGet()}"
-    registry.put(key, v)
-    key
-  }
-  def resolve(key: String): BpeVocab = {
-    val v = registry.get(key)
-    require(v != null, s"no BPE vocabulary registered under '$key'")
-    v
-  }
-}
-
-/** bpe_tokens(text, table-key-literal, space-mark-literal) →
+/** `Bpe.tokens(text, merges, spaceMark)` →
   * array<string>. Map-only, codegen'd; the compiled table rides as a
   * generated-class reference object. */
 case class BpeTokens(child: Expression, table: BpeOps.BpeTable,
@@ -366,7 +331,7 @@ case class BpeTokens(child: Expression, table: BpeOps.BpeTable,
     copy(child = newChild)
 }
 
-/** bpe_token_ids(text, table-key-literal, vocab-key-literal) →
+/** `Bpe.tokenIds(text, merges, vocab)` →
   * array<int>: encode and map to vocabulary ids in one pass — the
   * interchange form a training-data pipeline actually ships. Tokens
   * absent from the vocabulary map to -1 (UNK marker; happens only

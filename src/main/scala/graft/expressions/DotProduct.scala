@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst dot product over two numeric arrays with FULL
@@ -80,10 +81,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Column-API entry point — resolves through the FunctionRegistry
-    * (GraftExtensions registers `graft_dot_product` on every engine
-    * session), sidestepping the private[sql] Column(Expression)
-    * constructor. */
+  /** Column-API entry point. */
   def dotProduct(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dot_product", a, b)
+    column(DotProduct(expression(a), expression(b)))
 }

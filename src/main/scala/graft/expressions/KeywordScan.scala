@@ -1,8 +1,5 @@
 package graft.expressions
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -25,9 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The compiled automaton is held by the expression and ships to
   * executors as a generated-class reference object (the BpeTable
-  * pattern); a driver-side registry names it by literal key so the
-  * kernel is callable from SQL. Automaton size is O(total pattern
-  * chars) — a 100k-entry dictionary is a few MB, broadcast-shaped.
+  * pattern). Automaton size is O(total pattern chars) — a 100k-entry
+  * dictionary is a few MB, broadcast-shaped.
   */
 object AhoCorasickOps {
 
@@ -117,26 +113,9 @@ object AhoCorasickOps {
 
   def scan(text: UTF8String, a: Automaton): GenericArrayData =
     new GenericArrayData(a.counts(text.toString))
-
-  // Driver-side registry so the automaton can be named by a literal
-  // key in SQL function calls (the BpeOps pattern); the automaton
-  // itself is serialized into the expression, so executors never
-  // consult the registry.
-  private val registry = new ConcurrentHashMap[String, Automaton]()
-  private val nextId = new AtomicInteger(0)
-  def register(a: Automaton): String = {
-    val key = s"mem:ac:${nextId.incrementAndGet()}"
-    registry.put(key, a)
-    key
-  }
-  def resolve(key: String): Automaton = {
-    val a = registry.get(key)
-    require(a != null, s"no keyword automaton registered under '$key'")
-    a
-  }
 }
 
-/** keyword_counts(text, automaton-key-literal) → array<int> of
+/** `TextOps.keywordCounts(text, keywords)` → array<int> of
   * occurrence counts in pattern-declaration order. Map-only,
   * codegen'd. */
 case class KeywordCounts(child: Expression, automaton: AhoCorasickOps.Automaton)

@@ -128,74 +128,10 @@ object LangIdScoreOps {
     }
     InternalRow(model.langsU8(bestIdx), bestScore, n.toLong)
   }
-
-  /** Most models a driver keeps registered at once. A long-lived
-    * driver that retrains per micro-batch holds at most this many
-    * numBuckets·L tables; older ones evict LRU. NOTE the lifecycle:
-    * `resolve` runs at ANALYSIS time only (the function builder turns
-    * the key literal into the Model object, which then rides inside
-    * the expression) — a running plan never touches the registry
-    * again, so eviction can only affect a NEW analysis that
-    * references an old key string (e.g. SQL text or a view built >64
-    * registrations ago); such callers re-register and re-derive the
-    * key. */
-  val MaxRegisteredModels = 64
-  // access-order LinkedHashMap = LRU; guarded by its own monitor
-  private val registry =
-    new java.util.LinkedHashMap[String, Model](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Model]): Boolean =
-        size() > MaxRegisteredModels
-    }
-  // identity fast-path in FRONT of the content hash: re-registering
-  // the SAME instance (a driver caching its trained model) must stay
-  // O(1), not re-hash numBuckets·L doubles per micro-batch. Weak keys
-  // (Model equality over Array fields is reference equality) so the
-  // map never outlives the models it indexes.
-  private val byInstance = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[Model, String]())
-  /** Keyed by a CONTENT hash, not instance identity: a driver that
-    * retrains per micro-batch on stationary data re-derives the same
-    * table and reuses one entry instead of leaking a numBuckets·L
-    * copy per retrain; genuinely-new models rotate through the
-    * bounded LRU above. Same-instance re-registration short-circuits
-    * through the identity map (refreshing LRU recency). */
-  def register(m: Model): String = {
-    val cached = byInstance.get(m)
-    if (cached != null) {
-      registry.synchronized { registry.put(cached, m) } // refresh recency
-      return cached
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    def putD(d: Double): Unit = {
-      bb.clear(); bb.putDouble(d); md.update(bb.array())
-    }
-    m.langs.foreach { l => md.update(l.getBytes("UTF-8")); md.update(0: Byte) }
-    m.priors.foreach(putD)
-    m.llr.foreach(_.foreach(putD))
-    val key = "mem:lid:" + md.digest().map("%02x".format(_)).mkString
-    registry.synchronized { registry.put(key, m) }
-    byInstance.put(m, key)
-    key
-  }
-  def resolve(key: String): Model = registry.synchronized {
-    val m = registry.get(key)
-    require(m != null, s"no langid model registered under '$key' — " +
-      s"never registered, unregistered, or evicted after " +
-      s"$MaxRegisteredModels newer registrations; re-register the model " +
-      "(resolve runs at analysis time only, so this can only affect a " +
-      "NEW analysis referencing an old key string)")
-    m
-  }
-  /** Drop a model eagerly (e.g. a micro-batch driver that knows the
-    * retrain superseded it) instead of waiting for LRU eviction. */
-  def unregister(key: String): Unit =
-    registry.synchronized { registry.remove(key) }
 }
 
-/** langid_score_text(normalized_text, model-key-literal, n, numBuckets)
-  * → struct<lang_pred, lid_score, n_grams>. */
+/** `LangId.predictMapOnly`'s kernel over normalized text →
+  * struct<lang_pred, lid_score, n_grams>. */
 case class LangIdScoreText(child: Expression, model: LangIdScoreOps.Model,
                            n: Int, numBuckets: Int)
     extends UnaryExpression {

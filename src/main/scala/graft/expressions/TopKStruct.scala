@@ -4,12 +4,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, Expression, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Bounded per-group top-k as a PARTIAL-AGGREGABLE aggregate — the
@@ -140,4 +142,10 @@ case class TopKStruct(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): TopKStruct =
     copy(child = newChild)
+}
+
+object TopKStruct {
+  /** The `k` best `row` structs per group, as an aggregate column. */
+  def of(row: Column, k: Int, firstDesc: Boolean): Column =
+    column(TopKStruct(expression(row), k, firstDesc).toAggregateExpression())
 }

@@ -1,7 +1,6 @@
 package graft.expressions
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -11,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.UnigramLm
 
-/** `unigram_tokens(text, model-key-literal)` → array<string>: split on
-  * whitespace, Viterbi-segment each word under the registered
+/** `UnigramLm.tokens(text, model)` → array<string>: split on
+  * whitespace, Viterbi-segment each word under the given
   * unigram-LM model (integer-lattice scores — see
   * [[graft.operators.UnigramLm]]), pieces flattened in order. Map-only
   * codegen; the model ships as a generated-class reference object. */
@@ -26,19 +25,6 @@ object UnigramOps {
         UnigramLm.viterbi(w, model).foreach(p => out += UTF8String.fromString(p))
     }
     new GenericArrayData(out.result().toArray[Any])
-  }
-
-  private val registry = new ConcurrentHashMap[String, UnigramLm.Model]()
-  private val nextId = new AtomicInteger(0)
-  def register(m: UnigramLm.Model): String = {
-    val key = s"mem:ulm:${nextId.incrementAndGet()}"
-    registry.put(key, m)
-    key
-  }
-  def resolve(key: String): UnigramLm.Model = {
-    val m = registry.get(key)
-    require(m != null, s"no unigram model registered under '$key'")
-    m
   }
 }
 
@@ -57,7 +43,7 @@ case class UnigramTokens(child: Expression, model: UnigramLm.Model)
     copy(child = newChild)
 }
 
-/** `unigram_token_ids(text, model-key-literal)` → array<int>: segment
+/** `UnigramLm.tokenIds(text, model)` → array<int>: segment
   * and map each piece to its vocabulary id in the SAME pass — the
   * interchange form a training pipeline ships (the BpeTokenIds
   * sibling). The id contract: vocabulary pieces sorted ascending,

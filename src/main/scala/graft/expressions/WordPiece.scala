@@ -1,7 +1,6 @@
 package graft.expressions
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -11,10 +10,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.WordPiece
 
-/** `wordpiece_tokens(text, model-key-literal)` → array<string>:
+/** `WordPiece.tokens(text, model)` → array<string>:
   * pre-tokenize with the BPE prelude pattern (letter runs, single
   * digits, single punctuation — the SAME word boundaries the trainer
-  * counted), greedy-longest-match each word against the registered
+  * counted), greedy-longest-match each word against the model's
   * WordPiece vocabulary (`##` continuations, whole word → `[UNK]` on
   * any unmatched position), pieces flattened in order. Map-only
   * codegen; the model ships as a generated-class reference object
@@ -29,19 +28,6 @@ object WordpieceOps {
         .foreach(p => out += UTF8String.fromString(p))
     }
     new GenericArrayData(out.result().toArray[Any])
-  }
-
-  private val registry = new ConcurrentHashMap[String, WordPiece.Model]()
-  private val nextId = new AtomicInteger(0)
-  def register(m: WordPiece.Model): String = {
-    val key = s"mem:wp:${nextId.incrementAndGet()}"
-    registry.put(key, m)
-    key
-  }
-  def resolve(key: String): WordPiece.Model = {
-    val m = registry.get(key)
-    require(m != null, s"no wordpiece model registered under '$key'")
-    m
   }
 }
 
@@ -60,7 +46,7 @@ case class WordpieceTokens(child: Expression, model: WordPiece.Model)
     copy(child = newChild)
 }
 
-/** `wordpiece_token_ids(text, model-key-literal)` → array<int>:
+/** `WordPiece.tokenIds(text, model)` → array<int>:
   * segment and map each piece to its vocabulary id in the same pass.
   * Id contract: vocabulary entries (including `[UNK]`) sorted
   * ascending by UTF-8 byte order, ids 0..V−1 — every output id is

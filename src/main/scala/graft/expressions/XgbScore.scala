@@ -10,24 +10,20 @@ import graft.impact.XgbBooster
 
 /** xgb_score(features array<double>, '<model.RDS>') → double.
   *
-  * Scores the loaded booster inside whole-stage codegen: the model is
+  * Scores the booster inside whole-stage codegen: the model is
   * attached to the generated class as a reference object (the same
   * mechanism literals use), so scoring is a virtual call per row with
   * zero serialization on the hot path. The tree walk itself is ~50–300
   * pointer-chases over primitive arrays — map-only, no shuffle, scales
   * linearly with rows.
   *
-  * `modelPath` doubles as the expression's identity for plan
-  * canonicalization; in-memory boosters (e.g. freshly trained by
-  * [[graft.impact.GbtTrainer]]) pass a synthetic tag plus the booster
-  * itself via [[XgbScore.inMemory]].
+  * The booster is a constructor argument and rides to executors inside
+  * the serialized expression: a freshly trained one (e.g. from
+  * [[graft.impact.GbtTrainer]]) is passed as is, the SQL form loads
+  * its artifact path once through [[XgbBooster.load]].
   */
-case class XgbScore(child: Expression, modelPath: String,
-                    preloaded: Option[XgbBooster] = None)
+case class XgbScore(child: Expression, model: XgbBooster)
     extends UnaryExpression {
-
-  @transient private lazy val model: XgbBooster =
-    preloaded.getOrElse(XgbBooster.load(modelPath))
 
   override def dataType: DataType = DoubleType
 
@@ -47,36 +43,4 @@ case class XgbScore(child: Expression, modelPath: String,
 
   override protected def withNewChildInternal(newChild: Expression): XgbScore =
     copy(child = newChild)
-}
-
-object XgbScore {
-  /** Driver-side registry of in-memory boosters (e.g. freshly trained
-    * by [[graft.impact.GbtTrainer]]). The tag is the expression's
-    * identity for plan canonicalization, so two different models never
-    * collapse to one cached plan; the booster itself rides to executors
-    * inside the serialized expression, exactly like the path-loaded
-    * case. Entries are tiny (packed primitive arrays, ~100 KB for the
-    * reference's 100×depth-8 model) and bounded by the number of models
-    * trained in a session, so no eviction is needed. */
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, XgbBooster]()
-  private val nextId = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Register `model`, returning the tag to pass as xgb_score's second
-    * argument (in place of an artifact path). */
-  def register(model: XgbBooster): String = {
-    val tag = s"<mem:${nextId.incrementAndGet()}>"
-    registry.put(tag, model)
-    tag
-  }
-
-  /** FunctionRegistry entry point: a "<mem:…>" tag resolves through the
-    * registry (analysis happens on the driver, where it was issued);
-    * anything else is an artifact path loaded lazily executor-side. */
-  def resolve(child: Expression, pathOrTag: String): XgbScore =
-    if (pathOrTag.startsWith("<mem:")) {
-      val m = registry.get(pathOrTag)
-      require(m != null, s"no in-memory booster registered under $pathOrTag")
-      XgbScore(child, pathOrTag, Some(m))
-    } else XgbScore(child, pathOrTag)
 }

@@ -9,15 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object ScalarFunctions {
 
-  // ---- F4: unit conversions -------------------------------------------
-  object Units {
-    val KnToMs     = 0.514444                 // knots → m/s
-    val MsToKmh    = 3.6
-    val TenMinToOneMin = 1.0 / 0.88           // 10-min avg wind → 1-min
-    val NmToKm     = 1.852
-    val MsToMph    = 2.23693629
-  }
-
   // ---- F5: category binning -------------------------------------------
   /** PAGASA category from km/h sustained wind
     * (forecast_process.py:845-847: cut on [0,62,88,117,185,inf]). */

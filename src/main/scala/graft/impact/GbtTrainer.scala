@@ -510,8 +510,8 @@ object GbtTrainer {
       p.objective)
   }
 
-  /** Margin → probability for binary:logistic boosters:
-    * `sigmoid(xgb_score(features, tag))`. */
+  /** Margin → probability for binary:logistic boosters: the sigmoid
+    * of the booster's raw score. */
   def sigmoid(margin: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.lit(1.0) /
       (org.apache.spark.sql.functions.lit(1.0) +

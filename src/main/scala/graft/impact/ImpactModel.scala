@@ -3,6 +3,7 @@ package graft.impact
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
 import graft.expressions.XgbScore
 import graft.functions.ScalarFunctions
@@ -81,7 +82,7 @@ object ImpactModel {
     * regressor (xgb_model_v1.R:267: classif.xgboost with
     * objective="binary:logistic", nrounds=50) — e.g. a binary
     * `impact_threshold_passed` label. Returns a margin-scale booster;
-    * probabilities are `GbtTrainer.sigmoid(xgb_score(...))`, the same
+    * probabilities are `GbtTrainer.sigmoid` of its score, the same
     * per-row map-only scoring path as the regressor. */
   def trainClassifier(train: DataFrame, labelCol: String,
                       features: Seq[String] = FeatureCols,
@@ -96,7 +97,7 @@ object ImpactModel {
     * clip negatives to 0, cap at 100 (F9); zero damage beyond the
     * 300 km wind-damage radius (P11, settings.py:188); damaged-house
     * count (F7); affected population (F6). Scoring runs inside
-    * whole-stage codegen via the registered `xgb_score` function —
+    * whole-stage codegen as an [[XgbScore]] expression over `model` —
     * the same traversal x24 certifies on the operational artifact. */
   def predict(model: XgbBooster, data: DataFrame,
               features: Seq[String] = FeatureCols,
@@ -107,7 +108,7 @@ object ImpactModel {
     // XgbBooster routes NaN via each node's default direction).
     val featArray = array(features.map(f =>
       coalesce(col(f).cast("double"), lit(Double.NaN))): _*)
-    val score = call_function("xgb_score", featArray, lit(XgbScore.register(model)))
+    val score = column(XgbScore(expression(featArray), model))
     data
       .withColumn("damage_pct",
         when(col("HAZ_dis_track_min") > windDamageRadiusKm, 0.0)

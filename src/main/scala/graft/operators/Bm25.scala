@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.{TopKStruct, WordCounts}
 
 /** BM25 keyword retrieval (Robertson/Spärck Jones; the Lucene
   * always-positive idf variant) — the "pull every document matching
@@ -37,7 +40,7 @@ object Bm25 {
     require(terms.nonEmpty, "BM25 needs at least one query term")
     val termLits = array(terms.distinct.map(t => lit(t.toLowerCase)): _*)
     docs
-      .select(col(idCol), call_function("word_counts", col(textCol)).as("_wc"))
+      .select(col(idCol), column(WordCounts(expression(col(textCol)))).as("_wc"))
       .select(col(idCol),
         aggregate(map_values(col("_wc")), lit(0L), (acc, x) => acc + x).as("dl"),
         explode(map_filter(col("_wc"),
@@ -110,7 +113,6 @@ object Bm25 {
                qIdCol: String = "q_id", termsCol: String = "terms",
                maxVocab: Int = 100000): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.GraftExtensions.register(docs.sparkSession)
     val (qterms, vocab) = collectVocab(queries, qIdCol, termsCol, maxVocab)
     val hits = termHits(docs, vocab, idCol, textCol)
     val stats = docs
@@ -161,9 +163,7 @@ object Bm25 {
       .groupBy(col(qIdCol), col(idCol))
       .agg(round(sum("_contrib"), 6).as("bm25"), count(lit(1)).as("n_hit"))
     pair.groupBy(col(qIdCol))
-      .agg(call_function("top_k_struct",
-        struct(col("bm25"), col(idCol), col("n_hit")), lit(k), lit(true))
-        .as("_tk"))
+      .agg(TopKStruct.of(struct(col("bm25"), col(idCol), col("n_hit")), k, true).as("_tk"))
       .select(col(qIdCol), posexplode(col("_tk")).as(Seq("_p", "_r")))
       .select(col(qIdCol),
         col("_r").getField(idCol).as(idCol),
@@ -200,9 +200,8 @@ object Bm25 {
     * no tokens emit nothing (they still count in the stats rows). */
   private def fullPostings(docs: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs
-      .select(col(idCol), call_function("word_counts", col(textCol)).as("_wc"))
+      .select(col(idCol), column(WordCounts(expression(col(textCol)))).as("_wc"))
       .select(col(idCol),
         aggregate(map_values(col("_wc")), lit(0L), (acc, x) => acc + x).as("dl"),
         explode(col("_wc")).as(Seq("word", "tf")))
@@ -329,7 +328,6 @@ object Bm25 {
                         maxVocab: Int = 100000): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val spark = queries.sparkSession
-    graft.GraftExtensions.register(spark)
     val (qterms, vocab) = collectVocab(queries, qIdCol, termsCol, maxVocab)
     val (nBuckets, idName) = indexMeta(spark, path)
     import spark.implicits._
@@ -396,7 +394,7 @@ object Bm25 {
                      idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
     require(idfs.nonEmpty, "BM25 model has no terms")
-    val scored = TextOps.bindOnce(call_function("word_counts", col(textCol))) { wc =>
+    val scored = TextOps.bindOnce(column(WordCounts(expression(col(textCol))))) { wc =>
       TextOps.bindOnce(
         aggregate(map_values(wc), lit(0L), (acc, x) => acc + x)) { dl =>
         val norm = lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl / lit(avgdl))

@@ -5,8 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => fn}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
-import graft.expressions.BpeOps
+import graft.expressions.{BpeOps, BpeTokenIds, BpeTokens, BpeUnmap, BpeVocab}
 
 /** Trainable byte-pair encoding over a corpus — the real tokenizer the
   * LLM-data extension suite budgets with (`x01`'s `preTokenCount` is
@@ -196,17 +197,8 @@ object Bpe {
     if (c != 0) c else utf8Compare(a._2, b._2)
   }
 
-  // compile+register once per distinct merge list — repeated calls
-  // (bench warmups, probe re-runs) reuse the registered table instead
-  // of growing the registry
-  private val tableKeys =
-    new java.util.concurrent.ConcurrentHashMap[(Seq[(String, String)], Boolean), String]()
-  private def tableKey(merges: Seq[(String, String)], byteLevel: Boolean): String =
-    tableKeys.computeIfAbsent((merges.toList, byteLevel),
-      k => BpeOps.register(BpeOps.compile(k._1, k._2)))
-
-  /** Token array of `text` under `merges` (compiled + validated once
-    * per distinct merge list). Map-only codegen'd scan — see
+  /** Token array of `text` under `merges` (compiled and validated
+    * here, on the driver). Map-only codegen'd scan — see
     * [[graft.expressions.BpeOps]] for the contract. With `byteLevel`,
     * the GPT-2 byte-level alphabet: pre-tokens start as their UTF-8
     * bytes mapped to printable codepoints (merges then cross
@@ -215,8 +207,7 @@ object Bpe {
   def tokens(text: Column, merges: Seq[(String, String)],
              spaceMark: Boolean = false,
              byteLevel: Boolean = false): Column =
-    call_function("bpe_tokens", text, lit(tableKey(merges, byteLevel)),
-      lit(spaceMark))
+    column(BpeTokens(expression(text), BpeOps.compile(merges, byteLevel), spaceMark))
 
   /** Real-token count (the exact replacement for the `preTokenCount`
     * proxy; null text stays null). */
@@ -241,7 +232,7 @@ object Bpe {
     * were split across merges. */
   def detokenizeBytes(toks: Column): Column =
     when(toks.isNull, lit(null).cast("string"))
-      .otherwise(call_function("bpe_unmap", concat_ws("", toks)))
+      .otherwise(column(BpeUnmap(expression(concat_ws("", toks)))))
 
   /** The byte-level base alphabet: all 256 mapped byte chars in UTF-8
     * byte order — fixed, corpus-independent (contrast [[baseChars]]). */
@@ -272,22 +263,15 @@ object Bpe {
   def vocab(base: Seq[String], merges: Seq[(String, String)]): Seq[String] =
     base ++ merges.map { case (l, r) => l + r }
 
-  private val vocabKeys =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], String]()
-
   /** Token-ID array of `text` — encode and id-map in one map-only
     * codegen pass. Tokens outside the vocabulary become -1 (UNK);
     * with a vocabulary built by [[baseChars]]+[[vocab]] over the same
     * corpus, no -1 can occur. */
   def tokenIds(text: Column, merges: Seq[(String, String)],
                vocabTokens: Seq[String],
-               byteLevel: Boolean = false): Column = {
-    val vKey = vocabKeys.computeIfAbsent(vocabTokens.toList,
-      v => graft.expressions.BpeVocab.register(
-        new graft.expressions.BpeVocab(v.toArray)))
-    call_function("bpe_token_ids", text, lit(tableKey(merges, byteLevel)),
-      lit(vKey))
-  }
+               byteLevel: Boolean = false): Column =
+    column(BpeTokenIds(expression(text), BpeOps.compile(merges, byteLevel),
+      new BpeVocab(vocabTokens.toArray)))
 
   /** Ranked merges as a DataFrame (merge_rank, lhs, rhs) — persist as
     * parquet / a catalog table and broadcast-join or re-compile on

@@ -172,7 +172,6 @@ object BpeProbes {
     // (pre-tokenization, rank-order passes, space marking) end to end
     Probe("x50_bpe_encode",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.documents(s, d)
           .withColumn("__toks",
             Bpe.tokens(TextOps.normalizeText(col("text")), FixedMerges,
@@ -204,7 +203,6 @@ object BpeProbes {
     // rank) re-derived independently in SQL and joined token-by-token
     Probe("x56_bpe_token_ids",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.normalizeText(col("text")).as("text"))
         val voc = Bpe.vocab(Bpe.baseChars(docs), FixedMerges)
@@ -251,7 +249,6 @@ object BpeProbes {
     // or re-spaces a character diverges from it ---------------------
     Probe("x59_bpe_roundtrip",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.documents(s, d)
           .select(col("doc_id"),
             Bpe.detokenize(Bpe.tokens(
@@ -271,7 +268,6 @@ object BpeProbes {
     // under a fixed table, x51 the trained table; this closes the loop)
     Probe("x55_bpe_trained_counts",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.normalizeText(col("text")).as("text"))
         val merges = Bpe.train(docs, numMerges = 24)
@@ -285,7 +281,6 @@ object BpeProbes {
     // tokens, chunk text reassembled from space-marked tokens ------------
     Probe("x52_chunk_by_tokens",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Bpe.chunkByTokens(
             Tables.documents(s, d)
               .select(col("doc_id"), TextOps.normalizeText(col("text")).as("text")),
@@ -314,7 +309,6 @@ object BpeProbes {
     // whitespace-proxy twin) --------------------------------------------
     Probe("x53_pack_by_tokens",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Sampling.packSequences(
             Tables.documents(s, d)
               .select(col("doc_id"), col("lang"),
@@ -346,7 +340,6 @@ object BpeProbes {
     // composition, the shape a real assemble-a-training-set job runs
     Probe("x72_token_pipeline",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         // the normalize kernel feeds both the keeper agg and the
         // join-back, and the (slim) token-count relation is
         // re-referenced by the budget fill AND the packing join —
@@ -409,7 +402,6 @@ object BpeProbes {
     // mis-unmapped diverges) ----------------------------------------
     Probe("x69_bpe_byte_level",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val id = col("doc_id")
         val base = when(id % 5 === 0, "the theatre")
           .when(id % 5 === 1, "café déjà vu")

@@ -244,7 +244,6 @@ object CleaningProbes {
     // automaton replaces with one O(len) pass -----------------------
     Probe("x84_keyword_scan",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val kws = Seq("scan", "an", "fast table", "value part", "t", "zzzq")
         TextOps.keywordTag(Tables.documents(s, d), kws)
           .select(col("doc_id"),
@@ -306,7 +305,6 @@ object CleaningProbes {
     // variants collapse to one canonical form --------------------------
     Probe("x106_dedup_normalize",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val suffix = when(col("doc_id") % 2 === 0,
             lit(" Café NAÏVE No.42, Ärger!"))
           .otherwise(lit(" cafe naive no 00 arger"))
@@ -342,7 +340,6 @@ object CleaningProbes {
     // fraction, and the empty-text zero contract ---------------------
     Probe("x102_char_entropy",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         TextOps.charEntropySignals(Tables.documents(s, d))
           .orderBy("doc_id")
       },

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
+import graft.expressions.UnicodeNormalize
 import graft.sources.Tables
 import graft.util.Stage
 
@@ -326,7 +328,6 @@ object CurationProbes {
     // Int8AnnSpec gates the file-level PartitionFilters ---------------
     Probe("x73_int8_ivf_at_rest",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         // build ONCE per corpus (x41's amortization contract):
         // value-sensitive fingerprint (count+key-sum alone would serve
@@ -411,7 +412,6 @@ object CurationProbes {
     // centroids ------------------------------------------------------
     Probe("x104_int8_index_append",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val tag = IndexCache.corpusTag("x104", d, embs,
           Seq("vec_id", "embedding"))
@@ -495,7 +495,6 @@ object CurationProbes {
     // (the ProbeQueries rounding contract) ---------------------------
     Probe("x107_index_staleness_stats",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val tag = IndexCache.corpusTag("x107", d, embs,
           Seq("vec_id", "embedding"))
@@ -555,7 +554,6 @@ object CurationProbes {
     // one-file-per-cell layout claim is pinned by CompactionSpec ----
     Probe("x109_int8_index_compacted",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val tag = IndexCache.corpusTag("x109", d, embs,
           Seq("vec_id", "embedding"))
@@ -640,7 +638,6 @@ object CurationProbes {
     // shape, not just one query ------------------------------------
     Probe("x111_ann_join",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val dir = IndexCache.annInt8Index(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
@@ -720,7 +717,6 @@ object CurationProbes {
     // both rank rules engine-for-engine on the same index chain -----
     Probe("x115_triplet_mining",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val dir = IndexCache.annInt8Index(s, d)
         val anchors = embs.where(col("vec_id") % 40 === 5)
@@ -816,7 +812,6 @@ object CurationProbes {
     // fullwidth/angstrom fold under NFKC but not NFC) ----------------
     Probe("x65_unicode_normalize",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val id = col("doc_id")
         val mark = when(id % 5 === 0, "éclair") // e + combining acute
           .when(id % 5 === 1, "ﬁle")             // fi ligature
@@ -825,12 +820,9 @@ object CurationProbes {
           .otherwise("Ångstrom")                 // angstrom sign
         Tables.documents(s, d)
           .select(id,
-            call_function("unicode_normalize", col("text"), lit("NFC"))
-              .as("nfc_text"),
-            call_function("unicode_normalize", mark, lit("NFC"))
-              .as("nfc_mark"),
-            call_function("unicode_normalize", mark, lit("NFKC"))
-              .as("nfkc_mark"))
+            column(UnicodeNormalize(expression(col("text")), "NFC")).as("nfc_text"),
+            column(UnicodeNormalize(expression(mark), "NFC")).as("nfc_mark"),
+            column(UnicodeNormalize(expression(mark), "NFKC")).as("nfkc_mark"))
           .orderBy("doc_id")
       },
       Some("""SELECT doc_id, nfc_normalize(text) AS nfc_text,
@@ -851,7 +843,6 @@ object CurationProbes {
     // the regex strings ARE the certified contract ------------------
     Probe("x66_pii_redact",
       (s, d) => {
-        graft.GraftExtensions.register(s)   // pii_scan kernel
         val id = col("doc_id")
         val aug = concat(col("text"),
           lit(" ip "), ((id % 200) + 1).cast("string"),
@@ -993,7 +984,6 @@ object CurationProbes {
     // two indexes genuinely share) and the fusion arithmetic --------
     Probe("x118_rrf_fusion",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val dir8 = IndexCache.annInt8Index(s, d)
         val dirP = IndexCache.annPqIndex(s, d)
@@ -1150,7 +1140,6 @@ object CurationProbes {
     // the x111 retriever chain, the qrels, and both metric chains ---
     Probe("x119_retrieval_eval",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val dir8 = IndexCache.annInt8Index(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
@@ -1271,7 +1260,6 @@ object CurationProbes {
     // raw doubles, no rounding anywhere ------------------------------
     Probe("x121_mmr_rerank",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val dir8 = IndexCache.annInt8Index(s, d)
         val queries = embs.where(col("vec_id") % 50 === 3)
@@ -1408,7 +1396,6 @@ object CurationProbes {
     // discounts) ----------------------------------------------------
     Probe("x123_retrieval_flagship",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val dir8 = IndexCache.annInt8Index(s, d)
         val dirP = IndexCache.annPqIndex(s, d)

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
+import graft.expressions.{BloomMightContain, MinHashSignature, ShingleHashes, SortedIntersectCount, SpanGramHashes}
 import graft.util.Stage
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -124,13 +126,12 @@ object Dedup {
     * (graft.expressions.MinHashSignature) — a map-only scan with NO
     * shingle explosion and NO shuffle. This is the scale path: at
     * 100 TB the only shuffle left in MinHash+LSH dedup is the band
-    * bucket join. Requires `GraftExtensions.register`. */
+    * bucket join. */
   def minhashSignaturesOnePass(docs: DataFrame, n: Int = 3, numPerm: Int = 16,
                                idCol: String = "doc_id",
                                textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
-      call_function("minhash_signature", col(textCol), lit(n), lit(numPerm))
-        .as("minhash"))
+      column(MinHashSignature(expression(col(textCol)), n, numPerm)).as("minhash"))
 
   /** One-pass shingle SETS as sorted distinct 60-bit md5 hashes —
     * the per-document Jaccard operand, kept as one array row instead
@@ -138,7 +139,7 @@ object Dedup {
   def shingleHashSets(docs: DataFrame, n: Int = 3, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
-      call_function("shingle_hashes", col(textCol), lit(n)).as("sh_hashes"))
+      column(ShingleHashes(expression(col(textCol)), n)).as("sh_hashes"))
 
   /** Exact n-gram Jaccard for candidate pairs from the one-pass
     * shingle-hash sets: |A∩B| by sorted-array merge, |A∪B| by sizes.
@@ -158,7 +159,7 @@ object Dedup {
     val a = setsA.select(col(idCol).as(idA), col("sh_hashes").as("ha"))
     val b = setsB.select(col(idCol).as(idB), col("sh_hashes").as("hb"))
     pairs.join(a, Seq(idA)).join(b, Seq(idB))
-      .withColumn("n_inter", call_function("sorted_intersect_count", col("ha"), col("hb")))
+      .withColumn("n_inter", column(SortedIntersectCount(expression(col("ha")), expression(col("hb")))))
       .withColumn("jaccard", col("n_inter").cast("double") /
         (size(col("ha")) + size(col("hb")) - col("n_inter")))
       .select(idA, idB, "jaccard")
@@ -304,7 +305,7 @@ object Dedup {
     * sharing at least `minOverlap` word n-gram shingles, both sides
     * shingled from text. `maxShingleDf` prunes shingles whose TRAIN-side
     * document frequency exceeds it ([[dropHotKeys]]); the default keeps
-    * every shingle (exact semantics). Requires GraftExtensions. */
+    * every shingle (exact semantics). */
   def contamination(train: DataFrame, eval: DataFrame, n: Int = 3,
                     minOverlap: Long = 3, idCol: String = "doc_id",
                     textCol: String = "text",
@@ -329,7 +330,7 @@ object Dedup {
     * minOverlap=1). The eval text is shingled ONCE: each (eval_id, h)
     * row carries its doc's shingle-set ARRAY SIZE as `eval_total`,
     * which rides the grouping of [[overlapCounts]] — no second eval
-    * scan and no extra aggregation. Requires GraftExtensions. */
+    * scan and no extra aggregation. */
   def contaminationFraction(train: DataFrame, eval: DataFrame, n: Int = 3,
                             minFrac: Double = 0.5, idCol: String = "doc_id",
                             textCol: String = "text"): DataFrame = {
@@ -360,7 +361,7 @@ object Dedup {
     * shingle index); scoring explodes the doc shingles ONCE carrying
     * the set size alongside, one keyed join on the 60-bit hash, one
     * per-doc agg. For a zero-shuffle scoring pass see
-    * [[noveltyScoreBloom]]. Requires GraftExtensions. */
+    * [[noveltyScoreBloom]]. */
   def noveltyScore(docs: DataFrame, ref: DataFrame, n: Int = 3,
                    idCol: String = "doc_id",
                    textCol: String = "text"): DataFrame = {
@@ -460,11 +461,11 @@ object Dedup {
                         textCol: String = "text"): DataFrame =
     docs
       .select(col(idCol),
-        call_function("shingle_hashes", col(textCol), lit(n)).as("sh"))
+        column(ShingleHashes(expression(col(textCol)), n)).as("sh"))
       .select(col(idCol),
         size(col("sh")).cast("long").as("n_shingles"),
         size(filter(col("sh"), h =>
-          call_function("bloom_might_contain", lit(bloomBytes), h)))
+          column(BloomMightContain(expression(h), bloomBytes))))
           .cast("long").as("n_matched"))
       .select(col(idCol), col("n_matched"), col("n_shingles"),
         when(col("n_shingles") > 0,
@@ -526,13 +527,12 @@ object Dedup {
                          idCol: String = "doc_id", textCol: String = "text",
                          evalTextCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(train.sparkSession)
     // per-position salted 60-bit gram hashes via the one-pass codegen
     // kernel — bit- and position-identical to the relational
     // slice+join+md5-hex chain it replaces (SpanHashKernelSpec)
     def gramRows(df: DataFrame, id: Column, tc: String): DataFrame =
       df.select(id.as("_gid"), posexplode(
-        call_function("span_gram_hashes", col(tc), lit(k), lit("sd_")))
+        column(SpanGramHashes(expression(col(tc)), k, "sd_")))
         .as(Seq("s", "h")))
     val evalHashes = gramRows(eval, lit(0L), evalTextCol)
       .select("h").distinct()
@@ -786,8 +786,7 @@ object Dedup {
     * corpus shingles that collide with the bloom ever reach the
     * shuffle. The result is EXACT — blooms have no false negatives,
     * and the equi-join discards the false positives — so this is
-    * certified against the same oracle as the unpruned scan (x35).
-    * Requires GraftExtensions. */
+    * certified against the same oracle as the unpruned scan (x35). */
   def contaminationBloomPruned(train: DataFrame, eval: DataFrame,
                                n: Int = 3, minOverlap: Long = 3,
                                idCol: String = "doc_id",
@@ -800,7 +799,7 @@ object Dedup {
     val (eh, evalRows) = Stage.truncate(shingleRows(eval, n, idCol, textCol, "eval_id"), lit(true))
     val bytes = bloomBytes(eh, evalRows, fpp)
     val th = shingleRows(train, n, idCol, textCol, "train_id")
-      .where(call_function("bloom_might_contain", lit(bytes), col("h")))
+      .where(column(BloomMightContain(expression(col("h")), bytes)))
     overlapCounts(th, eh, minOverlap)
   }
 

@@ -102,7 +102,6 @@ object EmbeddingProbes {
     // trajectory, not just the last assignment -----------------------
     Probe("x101_kmeans_rounds",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val (cents, assigned) = IvfIndex.lloydIterate(embs, nlist = 8,
           rounds = 3)
@@ -120,7 +119,6 @@ object EmbeddingProbes {
     // decision over the FINAL assignment ----------------------------
     Probe("x103_semantic_dedup_kmeans",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Dedup.semanticDedupKMeans(Tables.embeddings(s, d), nlist = 8,
             rounds = 3, tau = 0.25)
           .orderBy("vec_id")
@@ -193,7 +191,6 @@ object EmbeddingProbes {
     // MatryoshkaAtRestSpec gates the file-level PartitionFilters ----
     Probe("x100_matryoshka_at_rest",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val t = EmbeddingOps.truncateNormalize(
             Tables.embeddings(s, d), dims = 16)
           .select(col("vec_id"), col("embedding_t"))

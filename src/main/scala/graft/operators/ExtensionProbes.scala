@@ -129,7 +129,6 @@ object ExtensionProbes {
     // TextOps.fingerprint -----------------------------------------------
     Probe("x04_fingerprint",
       (s, d) => {
-        graft.GraftExtensions.register(s)   // rolling_fingerprint kernel
         Tables.documents(s, d)
           .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
           .orderBy("doc_id")
@@ -164,7 +163,6 @@ object ExtensionProbes {
         // one-pass codegen kernel: map-only, no shingle explode, no
         // shuffle — same values as the relational reference path
         // (DedupSpec asserts the equivalence).
-        graft.GraftExtensions.register(s)
         Dedup.minhashSignaturesOnePass(Tables.documents(s, d), n = 3, numPerm = 8)
           .select(col("doc_id"),
             element_at(col("minhash"), 1).as("mh0"),
@@ -209,7 +207,6 @@ object ExtensionProbes {
         // per-document scans (no exploded-shingle shuffle); the only
         // shuffles are the band-bucket self-join and the candidate-pair
         // joins — both proportional to candidates, not corpus size.
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val sig = Dedup.minhashSignaturesOnePass(docs, n = 3, numPerm = 8)
         val pairs = Dedup.lshCandidatePairs(
@@ -259,7 +256,6 @@ object ExtensionProbes {
     // window over the cross product ------------------------------------
     Probe("x33_nearest_scalar",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val t = graft.sources.Tables
         RangeJoin.nearestByValue(t.supplier(s, d), t.customer(s, d),
           "s_acctbal", "c_acctbal", "c_custkey")
@@ -278,7 +274,6 @@ object ExtensionProbes {
     // batch; < 400 the indexed corpus) -----------------------------------
     Probe("x32_incremental_dedup",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val corpus = docs.where(col("doc_id") < 400)
         val batch = docs.where(col("doc_id") >= 400)
@@ -341,7 +336,6 @@ object ExtensionProbes {
         // one-pass codegen kernel (map-only, no k-gram explode);
         // MinHashKernelSpec asserts equivalence with the relational
         // winnowingFingerprints reference.
-        graft.GraftExtensions.register(s)
         TextOps.winnowingFingerprintSets(Tables.documents(s, d), k = 8, w = 4)
           .select(col("doc_id"),
             size(col("fps")).cast("long").as("n_fp"),
@@ -404,7 +398,6 @@ object ExtensionProbes {
     // TfIdf.topKeywords: corpus-weighted keyword extraction -------------
     Probe("x14_tfidf_keywords",
       (s, d) => {
-        graft.GraftExtensions.register(s)   // word_counts kernel
         TfIdf.topKeywords(Tables.documents(s, d), k = 3)
           .select(col("doc_id"), col("rank"), col("word"),
             round(col("score"), 6).as("score"))
@@ -460,7 +453,6 @@ object ExtensionProbes {
     // Dedup.contamination: train/eval shingle-overlap leakage scan ------
     Probe("x16_contamination",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val train = docs.where(col("doc_id") % 2 === 0)
         val eval = docs.where(col("doc_id") % 2 === 1)
@@ -483,7 +475,6 @@ object ExtensionProbes {
     // several (eval,train) pairs shift or drop vs x16).
     Probe("x25_contamination_pruned",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val train = docs.where(col("doc_id") % 2 === 0)
         val eval = docs.where(col("doc_id") % 2 === 1)
@@ -520,7 +511,6 @@ object ExtensionProbes {
     // within-cell pairs and keep flags all mirrorable op-for-op -------
     Probe("x29_semantic_dedup",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Dedup.semanticDedup(Tables.embeddings(s, d), nlist = 8, tau = 0.25)
           .orderBy("vec_id")
       },
@@ -729,7 +719,6 @@ object ExtensionProbes {
     // Dedup.cosineNearDups (embedding near-duplicates) ------------------
     Probe("x10_cosine_neardups",
       (s, d) => {
-        graft.GraftExtensions.register(s)   // graft_dot_product resolution
         val embs = Tables.embeddings(s, d).where(col("vec_id") < 100)
         Dedup.cosineNearDups(embs, threshold = 0.2)
           .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
@@ -753,7 +742,6 @@ object ExtensionProbes {
     // both engines independently compute the recall@10-vs-exact bound.
     Probe("x22_lsh_topk",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val approx = Similarity.lshTopK(embs, queryId = 7, k = 10,
           planes = 16, bands = 8, dim = Some(64))
@@ -812,7 +800,6 @@ object ExtensionProbes {
     // of the data skipped) and still clears the recall@10 >= 0.8 bound.
     Probe("x23_ivf_topk",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val approx = IvfIndex.topKDeterministic(embs, queryId = 7, k = 10,
           nlist = 8, nprobe = 6)
@@ -880,7 +867,6 @@ object ExtensionProbes {
     // like x22/x23)
     Probe("x27_pq_topk",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val approx = PqIndex.adcTopK(embs, queryId = 3, k = 10,
           shortlist = 60, m = 32, ksub = 16, dim = 64, cacheKey = Some(d))
@@ -1266,7 +1252,6 @@ object ExtensionProbes {
     // oracle is the plain exact contamination SQL)
     Probe("x35_bloom_contamination",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val train = docs.where(col("doc_id") % 2 === 0)
         val eval = docs.where(col("doc_id") % 2 === 1)
@@ -1397,7 +1382,6 @@ object ExtensionProbes {
     // (prune first, score the survivors, rerank a shortlist) --------
     Probe("x37_ivf_pq_topk",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val approx = PqIndex.ivfPqTopK(embs, queryId = 3, k = 10,
           nlist = 8, nprobe = 6, shortlist = 60, m = 32, ksub = 16, dim = 64,
@@ -1517,7 +1501,6 @@ object ExtensionProbes {
     // the corpus.
     Probe("x38_curation_e2e",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d).select("doc_id", "text")
         val all = docs
           .union(docs.select(col("doc_id") + 1000000, col("text")))
@@ -1642,7 +1625,6 @@ object ExtensionProbes {
     // of m-byte codes and one that rebuilds the index per query ------
     Probe("x41_pq_index_at_rest",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         // build ONCE per corpus, then every query — including this
         // probe re-run — reads the index at rest: that amortization IS
@@ -1755,7 +1737,6 @@ object ExtensionProbes {
     // (hard-negative mining), not one query ------------------------
     Probe("x112_pq_ann_join",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val dir = IndexCache.annPqIndex(s, d)
         val queries = embs.where(col("vec_id") % 50 === 7)
@@ -1873,7 +1854,6 @@ object ExtensionProbes {
     // path reproduces the direct scan id-for-id --------------------
     Probe("x42_contamination_index",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val train = docs.where(col("doc_id") % 2 === 0)
         val eval = docs.where(col("doc_id") % 2 === 1)
@@ -1900,7 +1880,6 @@ object ExtensionProbes {
     // at-rest plan reproduces the direct scan id-for-id -------------
     Probe("x49_contamination_bucketed",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val train = docs.where(col("doc_id") % 2 === 0)
         val eval = docs.where(col("doc_id") % 2 === 1)
@@ -2038,7 +2017,6 @@ object ExtensionProbes {
     // the hit-list anti-join is AQE-sized, not hint-broadcast --------
     Probe("x46_decontaminate",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val train = docs.where(col("doc_id") % 2 === 0)
         val eval = docs.where(col("doc_id") % 2 === 1)

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.LangIdScoreText
 
 /** TRAINED language identification: multiclass multinomial Naive
   * Bayes with add-k smoothing over HASHED character n-grams — the
@@ -146,12 +149,9 @@ object LangId {
                      numBuckets: Int = 1 << 16, n: Int = 3,
                      idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
-    val key = graft.expressions.LangIdScoreOps.register(model)
     docs.select(col(idCol),
-        call_function("langid_score_text",
-          TextOps.normalizeText(col(textCol)), lit(key), lit(n),
-          lit(numBuckets)).as("_r"))
+        column(LangIdScoreText(expression(TextOps.normalizeText(col(textCol))),
+          model, n, numBuckets)).as("_r"))
       .select(col(idCol), col("_r.lang_pred").as("lang_pred"),
         col("_r.lid_score").as("lid_score"),
         // null TEXT yields a null struct; predict's contract is 0

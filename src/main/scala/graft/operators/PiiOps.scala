@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.PiiScan
 
 /** Structured PII accounting + redaction for training-data curation.
   *
@@ -96,7 +99,7 @@ object PiiOps {
     // x66's 2.2s sf0.1 wall). The DuckDB oracle still runs the
     // relational formulation verbatim — the pattern strings above
     // remain the certified cross-engine contract.
-    val s = call_function("pii_scan", col(textCol))
+    val s = column(PiiScan(expression(col(textCol))))
     val nEmail = coalesce(col("_pii.n_emails"), lit(0))
     val nIp = coalesce(col("_pii.n_ipv4"), lit(0))
     val nPhone = coalesce(col("_pii.n_phones"), lit(0))

@@ -162,7 +162,6 @@ object PipelineProbes {
     // margin ------------------------------------------------------------
     Probe("x134_registry_flagship",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val w0 = docs.where(col("doc_id") % 3 =!= 2)
         val w1 = docs.where(col("doc_id") % 3 === 2)
@@ -457,7 +456,6 @@ object PipelineProbes {
     // threshold — exact long dots, one IEEE divide, no rounding ------
     Probe("x142_semantic_registry_flagship",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val embs = Tables.embeddings(s, d)
         val w0 = embs.where(col("vec_id") % 3 =!= 2)
         val w1 = embs.where(col("vec_id") % 3 === 2)

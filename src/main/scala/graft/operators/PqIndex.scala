@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
+import graft.expressions.{PqAdcScore, PqCodesAdc, PqQueryTable, TopKStruct}
 import graft.util.Stage
 
 /** Product quantization (PQ) — the ANN compression path that makes
@@ -171,10 +173,8 @@ object PqIndex {
     // encode→join→sum path — see PqAdcScore); shortlist is a
     // TakeOrdered, so the whole query side is map-only, zero shuffle
     val spark = embs.sparkSession
-    graft.GraftExtensions.register(spark)
-    val adist = call_function("pq_adc",
-      col(vecCol).cast("array<double>"), lit(cbArr), lit(qtArr),
-      lit(m), lit(ksub), lit(dsub))
+    val adist = column(PqAdcScore(expression(col(vecCol).cast("array<double>")),
+      cbArr, qtArr, m, ksub, dsub))
     val short = embs.where(col(idCol) =!= queryId)
       .select(col(idCol), adist.as("adist"))
       .orderBy(col("adist").asc, col(idCol).asc)
@@ -573,7 +573,6 @@ object PqIndex {
       s"need k>=1, nprobe>=1, shortlist>=k; " +
         s"got k=$k nprobe=$nprobe shortlist=$shortlistN")
     val spark = queries.sparkSession
-    graft.GraftExtensions.register(spark)
     val cents = spark.read.parquet(s"$path/centroids")
     // driver-side bounded codebook collect (the topKFromIndex shape):
     // geometry AND values derive from the persisted artifact, so
@@ -603,18 +602,16 @@ object PqIndex {
       .crossJoin(broadcast(cents))
       .withColumn("qdist", IvfIndex.sqDist(col(vecCol), col("centroid")))
       .groupBy(col(qIdCol))
-      .agg(call_function("top_k_struct",
-        struct(col("qdist"), col("cell")), lit(nprobe), lit(false)).as("_pc"))
+      .agg(TopKStruct.of(struct(col("qdist"), col("cell")), nprobe, false).as("_pc"))
       .select(col(qIdCol), explode(col("_pc")).as("_r"))
       .select(col(qIdCol), col("_r.cell").as("cell"))
     // per-query ADC table: ONE map-only codegen pass per query row
     // (no dims explode, no codebook join, no groupBy pair)
     val qt = queries.select(col(qIdCol),
-      call_function("pq_qt", col(vecCol).cast("array<double>"),
-        lit(cbArr), lit(m), lit(ksub), lit(dsub)).as("_qt"))
+      column(PqQueryTable(expression(col(vecCol).cast("array<double>")),
+        cbArr, m, ksub, dsub)).as("_qt"))
     val probes = qcells.join(qt, Seq(qIdCol))
-    val adist = call_function("pq_codes_adc",
-      col("codes"), col("_qt"), lit(ksub))
+    val adist = column(PqCodesAdc(expression(col("codes")), expression(col("_qt")), ksub))
     val scored = spark.read.parquet(s"$path/codes")
       .join(probes, Seq("cell"))
       .select(col(qIdCol), col(idCol), col("cell"), adist.as("adist"))
@@ -631,9 +628,8 @@ object PqIndex {
     // the unique id tie-break keeps the set identical to a rank)
     val short = afterPairs
       .groupBy(col(qIdCol))
-      .agg(call_function("top_k_struct",
-        struct(col("adist"), col(idCol), col("cell")),
-        lit(shortlistN), lit(false)).as("_sl"))
+      .agg(TopKStruct.of(
+        struct(col("adist"), col(idCol), col("cell")), shortlistN, false).as("_sl"))
       .select(col(qIdCol), explode(col("_sl")).as("_r"))
       .select(col(qIdCol), col("_r").getField(idCol).as(idCol),
         col("_r.cell").as("cell"))
@@ -648,8 +644,7 @@ object PqIndex {
       .join(queries.select(col(qIdCol), col(vecCol).as("_qv")), Seq(qIdCol))
       .withColumn("sim", Similarity.cosine(col(vecCol), col("_qv")))
       .groupBy(col(qIdCol))
-      .agg(call_function("top_k_struct",
-        struct(col("sim"), col(idCol)), lit(k), lit(true)).as("_tk"))
+      .agg(TopKStruct.of(struct(col("sim"), col(idCol)), k, true).as("_tk"))
       .select(col(qIdCol), posexplode(col("_tk")).as(Seq("_p", "_r")))
       .select(col(qIdCol), col("_r").getField(idCol).as(idCol),
         col("_r.sim").as("sim"), (col("_p") + 1).cast("int").as("rank"))
@@ -691,10 +686,8 @@ object PqIndex {
     // PqAdcScore); the cell join stays a broadcast of nprobe cell ids,
     // so nothing corpus-sized ever moves
     val spark = embs.sparkSession
-    graft.GraftExtensions.register(spark)
-    val adist = call_function("pq_adc",
-      col(vecCol).cast("array<double>"), lit(cbArr), lit(qtArr),
-      lit(m), lit(ksub), lit(dsub))
+    val adist = column(PqAdcScore(expression(col(vecCol).cast("array<double>")),
+      cbArr, qtArr, m, ksub, dsub))
     val short = assigned.join(broadcast(probeCells), "cell")
       .where(col(idCol) =!= queryId)
       .select(col(idCol), adist.as("adist"))

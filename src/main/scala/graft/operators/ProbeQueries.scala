@@ -389,7 +389,6 @@ object ProbeQueries {
     // ext vector: brute-force cosine top-k ------------------------------
     Probe("q27_cosine_topk",
       (s, d) => { val t = T(s, d)
-        graft.GraftExtensions.register(s)   // graft_dot_product resolution
         val target = t.embs.where(col("vec_id") === 0).select(col("embedding").as("q"))
         val dot = Similarity.dot _
         t.embs.where(col("vec_id") =!= 0).crossJoin(broadcast(target))

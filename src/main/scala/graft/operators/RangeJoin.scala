@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.NearestValue
 
 /** Range (interval) join: points `v` against intervals `[lo, hi)`.
   *
@@ -65,8 +68,7 @@ object RangeJoin {
     require(pairs.nonEmpty, "nearestByValue: right side is empty")
     val values = pairs.map(_.getDouble(0))
     val keys = pairs.map(_.getLong(1))
-    graft.GraftExtensions.register(left.sparkSession)
-    left.withColumn(outCol, call_function("nearest_value",
-      col(leftVal).cast("double"), lit(values), lit(keys)))
+    left.withColumn(outCol,
+      column(NearestValue(expression(col(leftVal).cast("double")), values, keys)))
   }
 }

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
+import graft.expressions.{Int8Cosine, TopKStruct}
 import graft.util.Stage
 
 /** Generic ranking surfaces over the `top_k_struct` bounded-heap
@@ -30,10 +32,8 @@ object Ranking {
   def topKPerGroup(df: DataFrame, groupCol: String, scoreCol: String,
                    idCol: String, k: Int, desc: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.GraftExtensions.register(df.sparkSession)
     df.groupBy(col(groupCol))
-      .agg(call_function("top_k_struct",
-        struct(col(scoreCol), col(idCol)), lit(k), lit(desc)).as("_tk"))
+      .agg(TopKStruct.of(struct(col(scoreCol), col(idCol)), k, desc).as("_tk"))
       .select(col(groupCol), posexplode(col("_tk")).as(Seq("_p", "_r")))
       .select(col(groupCol),
         col("_r").getField(idCol).as(idCol),
@@ -63,7 +63,6 @@ object Ranking {
   def rrfFuse(a: DataFrame, b: DataFrame, k: Int, rrfK: Int = 60,
               qIdCol: String = "q_id", idCol: String = "vec_id"): DataFrame = {
     require(k >= 1 && rrfK >= 0, s"need k>=1, rrfK>=0: k=$k rrfK=$rrfK")
-    graft.GraftExtensions.register(a.sparkSession)
     val la = a.select(col(qIdCol), col(idCol), col("rank").as("_ra"))
     val lb = b.select(col(qIdCol), col(idCol), col("rank").as("_rb"))
     val fused = la.join(lb, Seq(qIdCol, idCol), "full_outer")
@@ -71,8 +70,7 @@ object Ranking {
         (coalesce(lit(1.0) / (lit(rrfK) + col("_ra")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(rrfK) + col("_rb")), lit(0.0))).as("rrf"))
     fused.groupBy(col(qIdCol))
-      .agg(call_function("top_k_struct",
-        struct(col("rrf"), col(idCol)), lit(k), lit(true)).as("_tk"))
+      .agg(TopKStruct.of(struct(col("rrf"), col(idCol)), k, true).as("_tk"))
       .select(col(qIdCol), posexplode(col("_tk")).as(Seq("_p", "_r")))
       .select(col(qIdCol),
         col("_r").getField(idCol).as(idCol),
@@ -160,7 +158,6 @@ object Ranking {
                 relCol: String = "rel"): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda in [0,1]: $lambda")
-    graft.GraftExtensions.register(candidates.sparkSession)
     // The pool (a BOUNDED Q·n relation by contract) is re-referenced by
     // every greedy round — 2 references per round plus the round-1
     // argmax — and `picked` references nest recursively, so the lazy
@@ -194,8 +191,7 @@ object Ranking {
       else
         scored
           .groupBy(col(qIdCol))
-          .agg(call_function("top_k_struct",
-            struct(col("_mmr"), col(idCol)), lit(1), lit(true)).as("_tk"))
+          .agg(TopKStruct.of(struct(col("_mmr"), col(idCol)), 1, true).as("_tk"))
           .select(col(qIdCol), col("_tk").getItem(0).as("_b"))
           .select(col(qIdCol), col("_b").getField(idCol).as(idCol),
             col("_b._mmr").as("mmr"), lit(round).as("round"))
@@ -217,7 +213,7 @@ object Ranking {
             col("_c").as("_sc")), Seq(qIdCol, "_sid")), Seq(qIdCol))
         .groupBy(col(qIdCol), col(idCol))
         .agg(max(col("_rel")).as("_rel2"),
-          max(call_function("int8_cosine", col("_c"), col("_sc")))
+          max(column(Int8Cosine(expression(col("_c")), expression(col("_sc")))))
             .as("_pen"))
         .select(col(qIdCol), col(idCol),
           (lit(lambda) * col("_rel2") - lit(1.0 - lambda) * col("_pen"))

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.RobotsGlobMatch
 
 /** Robots Exclusion Protocol (RFC 9309) for crawl-corpus curation:
   * parse per-host `robots.txt` into a rules table once, then decide
@@ -189,8 +192,6 @@ object Robots {
   def robotsFilter(urls: DataFrame, rules: DataFrame,
                    idCol: String = "doc_id",
                    urlCol: String = "url"): DataFrame = {
-    // for the linear-glob wildcard matcher (idempotent)
-    graft.GraftExtensions.register(urls.sparkSession)
     val host = TextOps.extractHost(col(urlCol))
     // path = everything from the first '/' after the authority; when
     // no path exists, "/" PLUS any "?query" tail (RFC 9309 matches
@@ -213,8 +214,8 @@ object Robots {
       .withColumn("_m",
         col("pattern").isNotNull &&
           when(col("isPrefix"), col("_path").startsWith(col("pattern")))
-            .otherwise(call_function("robots_glob_match",
-              col("_path"), col("pattern"))))
+            .otherwise(column(RobotsGlobMatch(
+              expression(col("_path")), expression(col("pattern"))))))
     joined
       .groupBy(col(idCol))
       .agg(

@@ -45,7 +45,6 @@ object SelectionProbes {
     // contribution on either engine) --------------------------------
     Probe("x74_bm25",
       (s, d) => {
-        graft.GraftExtensions.register(s)   // word_counts resolution
         Bm25.scores(Tables.documents(s, d),
             Seq("spark", "vector", "customer", "zzz"))
           .orderBy("doc_id")
@@ -154,7 +153,6 @@ object SelectionProbes {
     // single-window rank the two-phase implementation must match ----
     Probe("x76_cluster_sample",
       (s, d) => {
-        graft.GraftExtensions.register(s)   // graft_dot_product resolution
         Sampling.clusterBalancedSample(Tables.embeddings(s, d),
             nlist = 8, perCell = 40)
           .select(col("vec_id"), col("cell"), col("rank_in_cell"))
@@ -241,7 +239,6 @@ object SelectionProbes {
     // the per-eval-doc totals and the quotient threshold -------------
     Probe("x78_contamination_frac",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         val train = docs.where(col("doc_id") % 2 === 0)
         val eval = docs.where(col("doc_id") % 2 === 1)
@@ -300,7 +297,6 @@ object SelectionProbes {
     // quotient is pure deterministic per-row arithmetic ---------------
     Probe("x80_novelty",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
         Dedup.noveltyScore(docs.where(col("doc_id") % 2 === 1),
             docs.where(col("doc_id") % 2 === 0), n = 3)
@@ -538,7 +534,6 @@ object SelectionProbes {
     // contribution sums, and the per-query rank ---------------------
     Probe("x120_bm25_join",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         import s.implicits._
         val queries = Seq(
           (1L, Seq("spark", "vector")),
@@ -592,7 +587,6 @@ object SelectionProbes {
     // exercises the absent-term path through the pruned scan --------
     Probe("x122_bm25_index_at_rest",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         import s.implicits._
         val docs = Tables.documents(s, d)
         val tag = IndexCache.corpusTag("x122", d, docs, Seq("doc_id", "text"))

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
+import graft.expressions.{Int8Cosine, TopKStruct}
 import graft.util.Stage
 
 /** Similarity search over an embedding column (`Array[Float]`).
@@ -68,10 +70,9 @@ object Similarity {
     * three interpreted `aggregate(zip_with(...))` passes per pair,
     * with bit-identical values (exact long dots, one IEEE divide). */
   private def int8Cosine(codes: Column, qCodes: Column): Column =
-    call_function("int8_cosine", codes, qCodes)
+    column(Int8Cosine(expression(codes), expression(qCodes)))
 
-  /** The HOF formulation of [[int8Cosine]] — kept for sessions
-    * without GraftExtensions registration and as the semantic
+  /** The HOF formulation of [[int8Cosine]] — kept as the semantic
     * reference the kernel must match (Int8CosineSpec pins equality). */
   def int8CosineHof(codes: Column, qCodes: Column): Column =
     idot(codes, qCodes).cast("double") /
@@ -287,7 +288,6 @@ object Similarity {
                                idCol: String = "vec_id",
                                vecCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
-    graft.GraftExtensions.register(spark)
     val cents = spark.read.parquet(s"$path/centroids")
     val head = batch.select(col(vecCol)).head(1)
     if (head.nonEmpty) {
@@ -329,7 +329,6 @@ object Similarity {
                            vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && nprobe >= 1)
     val spark = queries.sparkSession
-    graft.GraftExtensions.register(spark)
     val cents = spark.read.parquet(s"$path/centroids")
     // per-query nprobe cell routing: Q × nlist broadcast cross join,
     // the nprobe smallest (qdist, cell) per query picked by the
@@ -342,8 +341,7 @@ object Similarity {
       .crossJoin(broadcast(cents))
       .withColumn("qdist", IvfIndex.sqDist(col(vecCol), col("centroid")))
       .groupBy(col(qIdCol))
-      .agg(call_function("top_k_struct",
-        struct(col("qdist"), col("cell")), lit(nprobe), lit(false)).as("_pc"))
+      .agg(TopKStruct.of(struct(col("qdist"), col("cell")), nprobe, false).as("_pc"))
       .select(col(qIdCol), explode(col("_pc")).as("_r"))
       .select(col(qIdCol), col("_r.cell").as("cell"))
     val probes = qcells.join(
@@ -363,8 +361,7 @@ object Similarity {
     // from the sorted array — (sim DESC, id ASC), the window rule
     afterPairs
       .groupBy(col(qIdCol))
-      .agg(call_function("top_k_struct",
-        struct(col("sim"), col(idCol)), lit(k), lit(true)).as("_tk"))
+      .agg(TopKStruct.of(struct(col("sim"), col(idCol)), k, true).as("_tk"))
       .select(col(qIdCol), posexplode(col("_tk")).as(Seq("_p", "_r")))
       .select(col(qIdCol), col("_r").getField(idCol).as(idCol),
         col("_r.sim").as("sim"),
@@ -472,8 +469,7 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.expressions.DotProduct.dotProduct(a, b)
 
-  /** The HOF formulation, kept for sessions without GraftExtensions
-    * registration and as the semantic reference for `dot`. */
+  /** The HOF formulation, kept as the semantic reference for `dot`. */
   def dotHof(a: Column, b: Column): Column = aggregate(
     zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
     lit(0.0), (acc, x) => acc + x)

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.TopKStruct
 
 /** At-rest STRATIFIED bottom-k-by-hash sample — the per-group sibling
   * of the uniform sample (x132): k uniformly random members of EVERY
@@ -54,12 +57,10 @@ object StratifiedSample {
                         strataCol: String,
                         payloadCols: Seq[String]): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.GraftExtensions.register(df.sparkSession)
     val fields = (col(idCol) +: payloadCols.map(col)).toSeq
     df.groupBy(col(strataCol))
-      .agg(call_function("top_k_struct",
-        struct((sampleKey(col(idCol)).as("skey") +: fields): _*),
-        lit(k), lit(false)).as("_tk"))
+      .agg(TopKStruct.of(
+        struct((sampleKey(col(idCol)).as("skey") +: fields): _*), k, false).as("_tk"))
       .select(col(strataCol), explode(col("_tk")).as("_r"))
       .select((col(strataCol) +: col("_r.skey").as("skey") +:
         col(s"_r.$idCol").as(idCol) +:
@@ -106,15 +107,13 @@ object StratifiedSample {
   private def mergeRows(rows: DataFrame, k: Int, idCol: String,
                         strataCol: String,
                         payloadCols: Seq[String]): DataFrame = {
-    graft.GraftExtensions.register(rows.sparkSession)
     val fields = (col(idCol) +: payloadCols.map(col)).toSeq
     // dedup by SAMPLE IDENTITY (stratum, skey, id) — replayed batches
     // collapse, and a drifted payload can't hold two of a stratum's k
     // slots (the x132 payload stance)
     rows.dropDuplicates(strataCol, "skey", idCol)
       .groupBy(col(strataCol))
-      .agg(call_function("top_k_struct",
-        struct((col("skey") +: fields): _*), lit(k), lit(false)).as("_tk"))
+      .agg(TopKStruct.of(struct((col("skey") +: fields): _*), k, false).as("_tk"))
       .select(col(strataCol), explode(col("_tk")).as("_r"))
       .select((col(strataCol) +: col("_r.skey").as("skey") +:
         col(s"_r.$idCol").as(idCol) +:

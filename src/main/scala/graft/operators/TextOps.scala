@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
+import graft.expressions.{AhoCorasickOps, CharEntropy, KeywordCounts, LowerCodepoint, RollingFingerprint, SpanGramHashes, UnicodeNormalize, WinnowingFps}
 import graft.util.Stage
 
 /** Text analysis for large-scale training-data pipelines: token
@@ -54,8 +56,7 @@ object TextOps {
     * Pure column expressions in the engine-portable Java∩RE2 subset
     * (probe x106); feed the result to `minhash_signature`/
     * `shingle_hashes` unchanged. NOT for display text — that is
-    * [[normalizeText]]'s job. Requires [[graft.GraftExtensions]]
-    * (the NFD kernel). */
+    * [[normalizeText]]'s job. */
   def dedupNormalize(text: Column): Column = {
     // \p{M} (ALL mark categories), not \p{Mn}: DuckDB's strip_accents
     // (utf8proc STRIPMARK) also removes spacing/enclosing marks —
@@ -65,9 +66,9 @@ object TextOps {
     // (Greek final sigma, Turkish dotless i) where the oracle lowers
     // per codepoint.
     val stripped = regexp_replace(
-      call_function("unicode_normalize", text, lit("NFD")),
+      column(UnicodeNormalize(expression(text), "NFD")),
       "\\p{M}", "")
-    val digits = regexp_replace(call_function("lower_cp", stripped),
+    val digits = regexp_replace(column(LowerCodepoint(expression(stripped))),
       "\\p{Nd}", "0")
     val punct = regexp_replace(digits, "[^\\p{L}\\p{N}\\s]", " ")
     trim(regexp_replace(punct, "\\s+", " "))
@@ -390,12 +391,12 @@ object TextOps {
     * `winnowingFingerprints` but computed per document by a single
     * codegen'd expression (graft.expressions.WinnowingFps) — map-only,
     * no k-gram explosion, no shuffle. Rows with no k-gram are dropped,
-    * matching the relational form. Requires GraftExtensions. */
+    * matching the relational form. */
   def winnowingFingerprintSets(docs: DataFrame, k: Int = 8, w: Int = 4,
                                idCol: String = "doc_id",
                                textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
-        call_function("winnowing_fps", col(textCol), lit(k), lit(w)).as("fps"))
+        column(WinnowingFps(expression(col(textCol)), k, w)).as("fps"))
       .where(size(col("fps")) > 0)
 
   /** PII-style redaction for corpus cleaning: emails, URLs and long
@@ -424,7 +425,7 @@ object TextOps {
     * and capturing the normalize inside the lambda re-ran the regex
     * per character, O(len²): together 74s at sf0.1 vs ~0.1s here. */
   def fingerprint(text: Column): Column =
-    call_function("rolling_fingerprint", text)
+    column(RollingFingerprint(expression(text), FingerprintMod))
 
   /** Repetition ratio — the duplicate-n-gram fraction used by
     * web-corpus quality filters (boilerplate and keyword-stuffed pages
@@ -599,7 +600,6 @@ object TextOps {
   def exactSpanDedup(docs: DataFrame, k: Int = 8, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(docs.sparkSession)
     // original tokens for reassembly (split in SQL so the rebuild path
     // stays positionally aligned with the kernel's word indexing)
     val woCol = filter(split(trim(col(textCol)), "\\s+"), w => w =!= "")
@@ -609,8 +609,8 @@ object TextOps {
     // slice+join+md5-hex chain it replaces (SpanHashKernelSpec), which
     // paid a per-gram array slice + string join + hex parse
     val grams = docs.select(col(idCol),
-      posexplode(call_function("span_gram_hashes",
-        col(textCol), lit(k), lit("ss_"))).as(Seq("s", "h")))
+      posexplode(column(SpanGramHashes(expression(col(textCol)), k, "ss_")))
+        .as(Seq("s", "h")))
     val keeper = grams.groupBy("h")
       .agg(min(struct(col(idCol), col("s"))).as("first"), count(lit(1)).as("c"))
       .where(col("c") > 1)
@@ -1021,15 +1021,6 @@ object TextOps {
 
   // --- Aho-Corasick keyword scan ----------------------------------------
 
-  // one registered automaton per distinct keyword list, not per call
-  // (the Bpe.tableKeys pattern)
-  private val acKeys =
-    new java.util.concurrent.ConcurrentHashMap[List[String], String]()
-  private def acKey(keywords: Seq[String]): String =
-    acKeys.computeIfAbsent(keywords.toList,
-      _ => graft.expressions.AhoCorasickOps.register(
-        graft.expressions.AhoCorasickOps.compile(keywords)))
-
   /** Per-pattern occurrence counts (ALL occurrences, overlapping
     * included) via the one-pass Aho-Corasick `keyword_counts` kernel —
     * the FlashText-style dictionary tagger: bad-word lists, topic
@@ -1037,10 +1028,9 @@ object TextOps {
     * a regex alternation is quadratic or rejected outright. Returns
     * array<int> in `keywords` declaration order. Matching is
     * case-sensitive char equality — lower the text column (and pass
-    * lowercased keywords) for the usual case-insensitive setup.
-    * Requires [[graft.GraftExtensions]] registered on the session. */
+    * lowercased keywords) for the usual case-insensitive setup. */
   def keywordCounts(text: Column, keywords: Seq[String]): Column =
-    call_function("keyword_counts", text, lit(acKey(keywords)))
+    column(KeywordCounts(expression(text), AhoCorasickOps.compile(keywords)))
 
   /** Dictionary tagging over a corpus: per document, the per-keyword
     * counts plus total hits and the matched keywords (declaration
@@ -1100,14 +1090,12 @@ object TextOps {
     * that work WITHOUT word structure (CJK, no-whitespace scripts,
     * binary-ish junk), complementing the word-shaped repetition
     * signals. One map-only codegen pass
-    * ([[graft.expressions.CharEntropyOps]]); requires
-    * [[graft.GraftExtensions]] registered. Output columns: entropy,
+    * ([[graft.expressions.CharEntropyOps]]). Output columns: entropy,
     * top_char_frac, n_distinct_chars, n_chars. */
   def charEntropySignals(docs: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text"): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs.select(col(idCol),
-        call_function("char_entropy", col(textCol)).as("_ce"))
+        column(CharEntropy(expression(col(textCol)))).as("_ce"))
       .select(col(idCol), col("_ce.entropy").as("entropy"),
         col("_ce.top_char_frac").as("top_char_frac"),
         col("_ce.n_distinct_chars").as("n_distinct_chars"),

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.WordCounts
 
 /** TF-IDF keyword extraction — corpus-level term weighting:
   *   tf(d, w)  = count of w in d,
@@ -27,7 +30,7 @@ object TfIdf {
   def termFrequencies(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
-      explode(call_function("word_counts", col(textCol))).as(Seq("word", "tf")))
+      explode(column(WordCounts(expression(col(textCol))))).as(Seq("word", "tf")))
 
   /** (word, idf) with smoothed inverse document frequency. `tf` rows
     * are (id, word)-unique by construction, so df is a plain COUNT —

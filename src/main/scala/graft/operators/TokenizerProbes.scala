@@ -44,7 +44,6 @@ object TokenizerProbes {
         val docs = Tables.documents(s, d)
         val model = UnigramLm.train(docs, vocabSize = 20,
           maxPieceLen = 3, emRounds = 1, minCount = 2)
-        graft.GraftExtensions.register(s)
         docs.select(col("doc_id"),
             UnigramLm.tokenIds(col("text"), model).as("ids"))
           .select(col("doc_id"),
@@ -73,7 +72,6 @@ object TokenizerProbes {
     // pattern applied to the third family --------------------------
     Probe("x110_wordpiece",
       (s, d) => {
-        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.normalizeText(col("text")).as("text"))
         val m = WordPiece.train(docs, numMerges = 16)

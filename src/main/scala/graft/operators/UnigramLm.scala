@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.{UnigramTokenIds, UnigramTokens}
 
 /** Unigram-LM tokenizer (Kudo 2018, the SentencePiece `unigram`
   * model) — the second real-world subword tokenizer family next to
@@ -206,31 +209,22 @@ object UnigramLm {
     trainOnTypes(wordTypeCounts(docs, textCol, maxWordTypes),
       vocabSize, maxPieceLen, emRounds, minCount)
 
-  // registry so the model is callable from SQL (the BpeOps pattern)
-  private val modelKeys =
-    new java.util.concurrent.ConcurrentHashMap[Model, String]()
-  private def modelKey(m: Model): String =
-    modelKeys.computeIfAbsent(m,
-      _ => graft.expressions.UnigramOps.register(m))
-
   /** Segment a text column: whitespace words, each Viterbi-segmented,
-    * pieces flattened in order — one map-only codegen pass. Requires
-    * [[graft.GraftExtensions]] registered on the session. */
+    * pieces flattened in order — one map-only codegen pass. */
   def tokens(text: Column, model: Model): Column =
-    call_function("unigram_tokens", text, lit(modelKey(model)))
+    column(UnigramTokens(expression(text), model))
 
   /** Segment + map to sorted-vocabulary ids in ONE pass (the
     * BpeTokenIds sibling; UNK → −1 for unknown-character fallback
-    * pieces). Requires [[graft.GraftExtensions]] registered. */
+    * pieces). */
   def tokenIds(text: Column, model: Model): Column =
-    call_function("unigram_token_ids", text, lit(modelKey(model)))
+    column(UnigramTokenIds(expression(text), model))
 
   /** Per-document segmentation summary: (id, n_pieces, seg) where
     * `seg` is the piece stream joined with single spaces. */
   def segmentDocs(docs: DataFrame, model: Model,
                   idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs.select(col(idCol),
         tokens(col(textCol), model).as("pieces"))
       .select(col(idCol),

@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
+
+import graft.expressions.{WordpieceTokenIds, WordpieceTokens}
 
 /** WordPiece tokenizer (Schuster & Nakajima 2012; the BERT tokenizer,
   * Devlin et al. 2019) — the third tokenizer family next to BPE
@@ -204,24 +207,16 @@ object WordPiece {
     out.toSeq
   }
 
-  // registry so the model is callable from SQL (the UnigramLm pattern)
-  private val modelKeys =
-    new java.util.concurrent.ConcurrentHashMap[Model, String]()
-  private def modelKey(m: Model): String =
-    modelKeys.computeIfAbsent(m,
-      _ => graft.expressions.WordpieceOps.register(m))
-
   /** Tokenize a text column: pre-tokens via the [[Bpe]] prelude, each
     * word greedy-segmented, pieces flattened in order — one map-only
-    * codegen pass against the broadcast vocabulary. Requires
-    * [[graft.GraftExtensions]] registered on the session. */
+    * codegen pass against the broadcast vocabulary. */
   def tokens(text: Column, model: Model): Column =
-    call_function("wordpiece_tokens", text, lit(modelKey(model)))
+    column(WordpieceTokens(expression(text), model))
 
   /** Segment + map to sorted-vocabulary ids in ONE pass (vocabulary
     * pieces sorted ascending by UTF-8 byte order, ids 0..V−1; `[UNK]`
     * is itself a vocabulary entry, so every output id is valid — the
     * BERT contract, unlike the BPE/unigram −1-UNK interchange). */
   def tokenIds(text: Column, model: Model): Column =
-    call_function("wordpiece_token_ids", text, lit(modelKey(model)))
+    column(WordpieceTokenIds(expression(text), model))
 }

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.kernel.ExpressionShim.{column, expression}
 
+import graft.expressions.XgbScore
 import graft.impact.XgbBooster
 import graft.sources.Tables
 
@@ -76,12 +78,11 @@ object XgbProbe {
 
       Seq(Probe("x24_xgb_reference_model",
         (s, d) => {
-          graft.GraftExtensions.register(s)
           val feats = array((0 until nf).map(j =>
             col("embedding")(j).cast("double") * lit(scales(j))): _*)
           Tables.embeddings(s, d)
             .select(col("vec_id"),
-              call_function("xgb_score", feats, lit(ModelPath)).as("p"))
+              column(XgbScore(expression(feats), booster)).as("p"))
             .select(col("vec_id"), round(col("p"), 6).as("pred"))
             .orderBy("vec_id")
         },

@@ -96,8 +96,7 @@ object ForecastStream {
     * surviving (eval, train) pair) — the batch core's
     * `Dedup.overlapCounts` over the stream's `Dedup.shingleRows`. Run in
     * update/complete mode. `trainShingles` must be (train_id, h) — e.g.
-    * a persisted `Dedup.writeShingleIndex` table. Requires
-    * GraftExtensions. */
+    * a persisted `Dedup.writeShingleIndex` table. */
   def contaminationStream(evalDocs: DataFrame, trainShingles: DataFrame,
                           n: Int = 3, minOverlap: Long = 3,
                           idCol: String = "doc_id",

@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{Bench, Engine, SparkEntry}
@@ -49,8 +49,18 @@ object Profile {
     case _ => throw new IllegalArgumentException(usage)
   }
 
+  /** The named probes (every probe when `names` is empty), looked up
+    * before any runs: an unknown name fails at once, listing them all. */
+  private def probes(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val queries = SparkEntry.queries
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown probe names: ${unknown.mkString(", ")}")
+    if (names.isEmpty) queries.toSeq.sortBy(_._1) else names.map(n => n -> queries(n))
+  }
+
   private def time(spark: SparkSession, sfDir: String, reps: Int,
                    names: Seq[String]): Unit = {
+    val fns = probes(names)
     Bench.warmUp(spark, sfDir)
     val events = ArrayBuffer[String]()
     def log(s: String): Unit = events.synchronized { events += s }
@@ -66,23 +76,20 @@ object Profile {
         log(f"  job ${e.jobId}%3d start t=${e.time}")
     }
     spark.sparkContext.addSparkListener(listener)
-    try (if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted)
-      .foreach { name =>
-        val fn = SparkEntry.queries(name)
-        (1 to reps).foreach { i =>
-          events.synchronized { events.clear() }
-          val wall = Bench.timed(Bench.force(fn(spark, sfDir)))._2
-          Thread.sleep(300) // let listener events drain
-          println(f"[profile] run $i $name wall=$wall%.2f s")
-          events.synchronized { events.foreach(println) }
-        }
+    try fns.foreach { case (name, fn) =>
+      (1 to reps).foreach { i =>
+        events.synchronized { events.clear() }
+        val wall = Bench.timed(Bench.force(fn(spark, sfDir)))._2
+        Thread.sleep(300) // let listener events drain
+        println(f"[profile] run $i $name wall=$wall%.2f s")
+        events.synchronized { events.foreach(println) }
       }
-    finally spark.sparkContext.removeSparkListener(listener)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def plan(spark: SparkSession, sfDir: String, outDir: String,
-                   names: Seq[String]): Unit = names.foreach { name =>
-    val df = SparkEntry.queries(name)(spark, sfDir)
+                   names: Seq[String]): Unit = probes(names).foreach { case (name, fn) =>
+    val df = fn(spark, sfDir)
     Bench.force(df)
     val txt = df.queryExecution.explainString(FormattedMode)
     if (outDir == "-") println(txt)
@@ -95,7 +102,7 @@ object Profile {
   }
 
   private def sizes(spark: SparkSession, sfDir: String): Unit =
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    probes(Nil).foreach { case (name, fn) =>
       try {
         val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
         println(s"[profile] $name ${txt.length}")

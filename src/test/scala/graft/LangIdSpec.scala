@@ -133,35 +133,4 @@ class LangIdSpec extends SparkTestBase {
       .orderBy("doc_id").collect().map(_.getString(1)).toSeq
     assert(a === b)
   }
-
-  test("model registry: content-hash dedup, LRU bound, unregister") {
-    import graft.expressions.LangIdScoreOps
-    def mk(tag: Double) = LangIdScoreOps.Model(
-      Array("xx"), Array(tag), Array(Array(tag, tag + 1)))
-
-    // two INSTANCES with identical content share one key — a driver
-    // retraining per micro-batch on stationary data doesn't leak
-    val k1 = LangIdScoreOps.register(mk(0.5))
-    val k2 = LangIdScoreOps.register(mk(0.5))
-    assert(k1 === k2)
-    assert(LangIdScoreOps.resolve(k1).priors(0) === 0.5)
-
-    // explicit unregister drops it eagerly
-    LangIdScoreOps.unregister(k1)
-    assertThrows[IllegalArgumentException](LangIdScoreOps.resolve(k1))
-
-    // genuinely-new models rotate through the bounded LRU: fill the
-    // registry, touch the first to refresh recency, then overflow by
-    // one — the UNTOUCHED second-oldest evicts, the touched one lives
-    val keys = (0 until LangIdScoreOps.MaxRegisteredModels)
-      .map(i => LangIdScoreOps.register(mk(1000.0 + i)))
-    LangIdScoreOps.resolve(keys.head)
-    val overflow = LangIdScoreOps.register(mk(9999.0))
-    assert(LangIdScoreOps.resolve(keys.head).priors(0) === 1000.0)
-    assert(LangIdScoreOps.resolve(overflow).priors(0) === 9999.0)
-    assertThrows[IllegalArgumentException](LangIdScoreOps.resolve(keys(1)))
-    keys.drop(2).foreach(LangIdScoreOps.unregister)
-    LangIdScoreOps.unregister(keys.head)
-    LangIdScoreOps.unregister(overflow)
-  }
 }

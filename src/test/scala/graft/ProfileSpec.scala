@@ -24,6 +24,16 @@ class ProfileSpec extends SparkTestBase {
     } finally { Files.deleteIfExists(file); Files.delete(dir) }
   }
 
+  test("plan checks every name before running any probe") {
+    val dir = Files.createTempDirectory("profile-plan")
+    try {
+      val e = intercept[IllegalArgumentException](
+        output("plan", sfDir, dir.toString, probe, "no_such_probe"))
+      assert(e.getMessage.contains("no_such_probe"), e.getMessage)
+      assert(dir.toFile.list().isEmpty)
+    } finally Files.delete(dir)
+  }
+
   test("time prints one wall line per rep and the stage lines") {
     val lines = output("time", sfDir, "1", probe)
     assert(lines.count(_.startsWith(s"[profile] run 1 $probe wall=")) === 1,

@@ -36,6 +36,22 @@ def checkpoint_lines(lines, rdd):
                if m and (m.group(1) in names) == rdd)
 
 
+def registries(lines):
+    """A `register` that returns a String key, in a file that also has the
+    `resolve` turning the key back into the artifact."""
+    text = "".join(lines)
+    if not re.search(r"\bdef resolve\(", text):
+        return 0
+    return len(re.findall(r"\bdef register\([^)]*\)\s*:\s*String\b", text))
+
+
+def memo_caches(lines):
+    """A `computeIfAbsent` whose value is a registry key: `.register(`
+    within the next two lines."""
+    return sum(1 for i, line in enumerate(lines) if "computeIfAbsent(" in line
+               and any(".register(" in x for x in lines[i:i + 3]))
+
+
 MECHANISMS = [
     ("marker/staging names (_append_*_ok, *_staging)",
      re.compile(r"_append_\S*_(ok|staging)|_appendtmp_staging")),
@@ -55,6 +71,15 @@ MECHANISMS = [
     ("argmax aggregates (max(struct(...)))",
      re.compile(r"^(?!\s*(//|\*)).*\bmax\(struct\(")),
     ("keeper null pins (coalesce to -inf)", re.compile(r"Double\.NegativeInfinity")),
+    ("kernels called by name (call_function()", re.compile(r"\bcall_function\(")),
+    ("GraftExtensions.register( outside Engine", re.compile(r"GraftExtensions\.register\("),
+     lambda f: f not in ("Engine.scala", "GraftExtensions.scala")),
+    ("string-keyed artifact registries", registries),
+    ("registry key memos (computeIfAbsent->register)", memo_caches),
+    ("formula trees built in GraftExtensions", re.compile(
+        r"\b(Add|Subtract|Multiply|Divide|Remainder|Pow|Exp|Sqrt|Sin|Cos|Asin|"
+        r"ToRadians|Floor|Greatest|Least|CaseWhen)\("),
+     lambda f: f == "GraftExtensions.scala"),
 ]
 
 
@@ -62,7 +87,7 @@ def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
     src = os.path.join(root, "src", "main")
-    hits = {name: {} for name, _ in MECHANISMS}
+    hits = {m[0]: {} for m in MECHANISMS}
     for d, _, files in os.walk(src):
         for f in sorted(files):
             if not f.endswith(".scala"):
@@ -70,7 +95,9 @@ def main():
             path = os.path.join(d, f)
             with open(path, encoding="utf-8") as fh:
                 lines = fh.readlines()
-            for name, rx in MECHANISMS:
+            for name, rx, *only in MECHANISMS:
+                if only and not only[0](f):
+                    continue
                 if callable(rx):
                     n = rx(lines)
                 else:
@@ -78,7 +105,7 @@ def main():
                 if n:
                     hits[name][os.path.relpath(path, src)] = n
     print(f"{'mechanism':48} {'files':>5} {'lines':>5}")
-    for name, _ in MECHANISMS:
+    for name, *_ in MECHANISMS:
         per_file = hits[name]
         print(f"{name:48} {len(per_file):5} {sum(per_file.values()):5}")
         for path in sorted(per_file):
